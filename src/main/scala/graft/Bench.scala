@@ -150,9 +150,14 @@ object Bench {
     // r15 item 7): the harness reads a ~2 KB tail of stdout where one
     // stray WARN after the JSON truncates it mid-object (r14's artifact
     // recorded parsed:null); BENCH_LINE.json is immune to log framing.
-    // Subset runs write it too — the line itself says full:null.
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_LINE.json"), line + "\n")
+    // Subset runs write it too — the line itself says full:null. A
+    // failed write must not cost the stdout line as well.
+    val linePath = java.nio.file.Paths.get("BENCH_LINE.json")
+    try java.nio.file.Files.writeString(linePath, line + "\n")
+    catch {
+      case e: java.io.IOException =>
+        System.err.println(s"[bench] could not write ${linePath.toAbsolutePath}: $e")
+    }
     println(line)
   }
 }

@@ -147,11 +147,13 @@ object ScaleProbe {
 
   /** The accum-stream cadence at scale, image family (the one VERDICT
     * r11 named): build the corpus index, then flag+absorb 13 re-upload
-    * waves with the stream's maxLegs=24 budget — compaction must
-    * ENGAGE (13 absorbs × 2 legs + 2 base legs crosses 24) and the
-    * post-compaction probe must cost the same as the pre-compaction
-    * one. Prints per-wave flag/absorb seconds, the compaction events
-    * with their cost, and a final whole-batch probe timing. */
+    * waves under the streams' shared leg budget
+    * ([[operators.AccumIndex.LegBudget]], 24) — compaction must ENGAGE
+    * (each fingerprint wave adds 3 legs: bands, hashMin, hashes, so 3
+    * base legs + 7 absorbs reach 24) and the post-compaction probe must
+    * cost the same as the pre-compaction one. Prints per-wave
+    * flag/absorb seconds, the compaction events with their cost, and a
+    * final whole-batch probe timing. */
   private def accumProbe(spark: SparkSession, d: String): Unit = {
     import graft.operators.Multimodal
     val docs = Tables.documents(spark, d).select("doc_id", "text")
@@ -174,17 +176,15 @@ object ScaleProbe {
       flagS += (System.nanoTime() - tf) / 1e9
       operators.Lifecycle.release(flagged)
       val ta = System.nanoTime()
-      val absorbed = Multimodal.absorbIntoFingerprintIndex(idx, wave)
-      idx =
-        if (absorbed.cached.length >= 24) {
-          nCompact += 1
-          val tc = System.nanoTime()
-          val c = Multimodal.compactFingerprintIndex(absorbed)
-          println(f"ACCUM $d compaction#$nCompact at wave $w: " +
-            f"legs ${absorbed.cached.length}%d→${c.cached.length}%d " +
-            f"in ${(System.nanoTime() - tc) / 1e9}%.1f s")
-          c
-        } else absorbed
+      val absorbed = idx.absorb(wave)
+      val tc = System.nanoTime()
+      idx = absorbed.budgeted(operators.AccumIndex.LegBudget)
+      if (idx ne absorbed) {
+        nCompact += 1
+        println(f"ACCUM $d compaction#$nCompact at wave $w: " +
+          f"legs ${absorbed.legs.length}%d→${idx.legs.length}%d " +
+          f"in ${(System.nanoTime() - tc) / 1e9}%.1f s")
+      }
       absorbS += (System.nanoTime() - ta) / 1e9
     }
     val tp = System.nanoTime()
@@ -192,11 +192,11 @@ object ScaleProbe {
     val probed = (System.nanoTime() - tp) / 1e9
     operators.Lifecycle.release(probe)
     newImgs.unpersist(blocking = false)
-    Multimodal.releaseFingerprintIndex(idx)
+    idx.release()
     println(f"ACCUM $d image: new=$nNew%d waves=$waves " +
       f"flag=${flagS}%.1f s absorb=${absorbS}%.1f s " +
       f"compactions=$nCompact total=${(System.nanoTime() - t0) / 1e9}%.1f s " +
-      f"final_probe=${probed}%.1f s legs=${idx.cached.length}")
+      f"final_probe=${probed}%.1f s legs=${idx.legs.length}")
   }
 
   def main(args: Array[String]): Unit = {

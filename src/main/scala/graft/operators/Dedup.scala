@@ -24,23 +24,6 @@ import graft.functions.Hashing
   */
 object Dedup {
 
-  /** Tolerant reads of an index's durable absorb watermark: a save
-    * written BEFORE the watermark existed has no `meta` table (corpus
-    * index) or no `last_batch_id` column (the other families) — both
-    * load as -1 ("nothing absorbed yet", every batch replays, absorb is
-    * guarded/idempotent), instead of failing the documented
-    * durable-restart contract on the first post-upgrade restart. */
-  private[operators] object IndexMeta {
-    def lastBatchId(meta: DataFrame): Long =
-      if (meta.columns.contains("last_batch_id"))
-        meta.head().getAs[Long]("last_batch_id")
-      else -1L
-    def lastBatchId(spark: org.apache.spark.sql.SparkSession,
-                    metaPath: String): Long =
-      try lastBatchId(spark.read.parquet(metaPath))
-      catch { case _: org.apache.spark.sql.AnalysisException => -1L }
-  }
-
   /** Materialize `result` eagerly (localCheckpoint, REGISTERED with
     * [[Lifecycle]] so harness loops can free the blocks deterministically
     * instead of waiting for a driver GC), then drop the operator's
@@ -385,66 +368,49 @@ object Dedup {
     materializeThenRelease(best, shingles)
   }
 
-  /** Precomputed corpus-side state for incremental dedup at STREAMING
-    * cadence: the band index, the shingle table (verification side),
-    * and per-doc sizes — persisted and materialized ONCE so every
-    * micro-batch pays only batch-sized work. This is the state a
-    * production pipeline keeps in a table store between ingests; here
-    * it lives as cached frames for the stream's lifetime. Pair with
-    * [[flagAgainstCorpusIndex]]; release with [[releaseCorpusIndex]]
-    * when the stream stops. */
-  /** `cached` tracks every persisted leg (the base triple plus one
-    * (bands, shingles, sizes) triple per wave folded in by
-    * [[absorbIntoCorpusIndex]]): the index frames become lazy UNIONS
-    * of legs after an absorb, and unpersisting a union is a silent
-    * no-op — release must walk the legs.
-    *
-    * `lastBatchId` is the absorb WATERMARK for streaming callers: the
-    * highest `foreachBatch` batchId already folded in (-1 = none).
-    * A checkpoint replay (crash after the sink write + absorb but
-    * before the commit marker) re-delivers a batch the index already
-    * contains; re-flagging it would match the batch against its own
-    * absorbed copy and re-absorbing would double-count, so the accum
-    * streams skip any batchId at or below the watermark. It persists
-    * through [[saveCorpusIndex]]/[[loadCorpusIndex]], which is what
-    * makes a re-seed-from-durable-save restart safe. */
-  case class CorpusIndex(bands: DataFrame, shingles: DataFrame, sizes: DataFrame,
-                         cached: Seq[DataFrame] = Nil, lastBatchId: Long = -1L)
+  /** Corpus-side state for incremental dedup at STREAMING cadence — the
+    * text family of [[AccumIndex]]: the minhash band index, the shingle
+    * table (verification side) and per-doc sizes, persisted and
+    * materialized once so every micro-batch pays only batch-sized work.
+    * Build with [[buildCorpusIndex]], probe arriving batches with
+    * [[flagAgainstCorpusIndex]], fold them in with `absorb` (a FROZEN
+    * index flags every wave against the original corpus only, so a
+    * near-dup of an EARLIER wave's document sails through). The shingle
+    * table is the durable truth: bands and sizes derive from it
+    * deterministically ([[bandsOf]] ∘ [[minhashSignatures]], seeded
+    * permutations), so a reloaded index probes identically. */
+  final case class CorpusIndex(frames: Seq[DataFrame],
+                               override val legs: Seq[DataFrame],
+                               lastBatchId: Long = -1L)
+      extends LegIndex[CorpusIndex] {
+    def bands: DataFrame = frames(0)
+    def shingles: DataFrame = frames(1)
+    def sizes: DataFrame = frames(2)
+    def tables: Seq[(String, DataFrame)] = Seq("shingles" -> shingles)
+    def withLastBatchId(batchId: Long): CorpusIndex = copy(lastBatchId = batchId)
+    protected def leg(sh: DataFrame): Seq[DataFrame] = corpusLeg(sh)
+    protected def withLegs(f: Seq[DataFrame], l: Seq[DataFrame]): CorpusIndex =
+      copy(frames = f, legs = l)
+  }
+
+  /** (bands, shingles, sizes): bands and sizes both derive from the
+    * shingle cache, so the two of them are the chain tails. */
+  private def corpusLeg(shingles: DataFrame): Seq[DataFrame] = {
+    val sh = AccumIndex.persist(shingles)
+    val bands = AccumIndex.persist(bandsOf(minhashSignatures(sh)))
+    val sizes = AccumIndex.persist(sh.groupBy("doc_id").agg(count(lit(1)).as("n")))
+    AccumIndex.fill(bands, sizes)
+    Seq(bands, sh, sizes)
+  }
 
   def buildCorpusIndex(corpusShingles: DataFrame): CorpusIndex = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sh = corpusShingles.persist(lvl)
-    val bands = bandsOf(minhashSignatures(sh)).persist(lvl)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n")).persist(lvl)
-    // Materialize up front (bounded metadata actions): the first
-    // micro-batch must not absorb the corpus build.
-    bands.count()
-    sizes.count()
-    CorpusIndex(bands, sh, sizes, Seq(bands, sh, sizes))
+    val l = corpusLeg(corpusShingles)
+    CorpusIndex(l, l)
   }
 
-  /** Fold an ingest wave's shingles INTO the index — the text face of
-    * the accumulating-index family ([[Similarity.absorbIvfBatch]],
-    * [[Multimodal.absorbIntoFingerprintIndex]]): a FROZEN index flags every
-    * wave against the original corpus only, so a near-dup of an
-    * EARLIER wave's document sails through. The wave's bands, shingle
-    * rows, and sizes persist as their own legs under lazy unions —
-    * per-wave cost is the wave's own signature build, no corpus
-    * re-materialization; a long-running stream compacts legs (or, in
-    * production, rebuilds from the durable shingle/signature table,
-    * which is also the restart story). Release the FINAL index only
-    * (successors share legs with superseded values). */
-  def absorbIntoCorpusIndex(index: CorpusIndex, waveShingles: DataFrame): CorpusIndex = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sh = waveShingles.persist(lvl)
-    val bands = bandsOf(minhashSignatures(sh)).persist(lvl)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n")).persist(lvl)
-    bands.count()
-    sizes.count()
-    CorpusIndex(index.bands.unionByName(bands),
-      index.shingles.unionByName(sh), index.sizes.unionByName(sizes),
-      index.cached ++ Seq(bands, sh, sizes), index.lastBatchId)
-  }
+  def loadCorpusIndex(spark: org.apache.spark.sql.SparkSession,
+                      path: String): CorpusIndex =
+    AccumIndex.load(spark, path)(s => buildCorpusIndex(s.table("shingles")))
 
   /** Flag one NEW batch against a prebuilt [[CorpusIndex]] — identical
     * semantics to [[minhashLshAgainstCorpus]] (band-collision
@@ -481,97 +447,52 @@ object Dedup {
     materializeThenRelease(best, bsh)
   }
 
-  def releaseCorpusIndex(index: CorpusIndex): Unit = {
-    val legs = if (index.cached.nonEmpty) index.cached
-      else Seq(index.bands, index.shingles, index.sizes)
-    legs.foreach(_.unpersist(blocking = false))
-  }
-
-  /** Compact a many-leg index (one leg triple per absorbed wave) back
-    * to one persisted leg per frame: materialize the lazy unions into
-    * fresh caches, then release every superseded leg. Probe results
-    * are unchanged — the union is materialized, not re-derived; cost
-    * is one scan of the cached legs per frame, no shingle or minhash
-    * recomputation. The accum stream calls this once `cached` exceeds
-    * its leg budget, so per-probe union fanout (and block-manager
-    * entry count) stays bounded on an unbounded stream. No-op on an
-    * unabsorbed index (its frames ARE the legs — re-persisting and
-    * then releasing them would drop the only copy). */
-  def compactCorpusIndex(index: CorpusIndex): CorpusIndex =
-    if (index.cached.length <= 3) index
-    else {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val bands = index.bands.persist(lvl)
-      val sh = index.shingles.persist(lvl)
-      val sizes = index.sizes.persist(lvl)
-      bands.count()
-      sh.count()
-      sizes.count()
-      index.cached.foreach(_.unpersist(blocking = false))
-      CorpusIndex(bands, sh, sizes, Seq(bands, sh, sizes), index.lastBatchId)
-    }
-
-  /** Durable restart contract, made real: the shingle table IS the
-    * index's source of truth — bands and sizes derive from it
-    * deterministically ([[bandsOf]] ∘ [[minhashSignatures]], seeded
-    * permutations). Save writes it once as parquet (absorbed waves
-    * included — the lazy union flattens into the file);
-    * [[loadCorpusIndex]] rebuilds the in-memory index from the table
-    * after a process restart, and the reloaded index probes
-    * identically (CorpusIndexLifecycleSpec pins it). At 100 TB this
-    * is the table a fleet of ingest jobs shares: in-memory index =
-    * process state, parquet shingle table = the recoverable truth. */
-  def saveCorpusIndex(index: CorpusIndex, path: String): Unit = {
-    index.shingles.write.mode("overwrite").parquet(s"$path/shingles")
-    val spark = index.shingles.sparkSession
-    import spark.implicits._
-    // The absorb watermark rides along: a restart that re-seeds from
-    // this save must keep skipping the batches it already folded in.
-    Seq(index.lastBatchId).toDF("last_batch_id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  def loadCorpusIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String): CorpusIndex = {
-    buildCorpusIndex(spark.read.parquet(s"$path/shingles"))
-      .copy(lastBatchId = IndexMeta.lastBatchId(spark, s"$path/meta"))
-  }
-
   // --------------------------------- incremental EMBEDDING near-dup
 
-  /** Prebuilt hyperplane-LSH band index over a normalized embedding
-    * corpus — the vector face of [[CorpusIndex]] /
-    * [[Multimodal.FingerprintIndex]], completing the accumulating-index
-    * family across modalities: build once, probe arriving batches with
-    * [[flagAgainstEmbeddingIndex]], fold flagged waves in with
-    * [[absorbIntoEmbeddingIndex]], compact with
-    * [[compactEmbeddingIndex]], release with
-    * [[releaseEmbeddingIndex]]. `dim` is captured at build time (the
-    * seeded hyperplanes are a function of it); `cached` tracks the
-    * persisted legs (bands + vectors per wave) because the index
-    * frames become lazy unions after an absorb. */
-  /** Same `lastBatchId` absorb-watermark contract as [[CorpusIndex]]. */
-  case class EmbeddingIndex(bands: DataFrame, vectors: DataFrame, dim: Int,
-                            cached: Seq[DataFrame] = Nil, lastBatchId: Long = -1L)
-
-  def buildEmbeddingIndex(emb: DataFrame, dim: Int): EmbeddingIndex = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = Similarity.normalizedNonZero(emb).persist(lvl)
-    val bands = Similarity.bandedIds(e, dim).persist(lvl)
-    // bands ← e is a lineage chain: one count fills both caches (r16).
-    bands.count()
-    EmbeddingIndex(bands, e, dim, Seq(bands, e))
+  /** Hyperplane-LSH band index over a normalized embedding corpus — the
+    * vector family of [[AccumIndex]]: build with [[buildEmbeddingIndex]],
+    * probe with [[flagAgainstEmbeddingIndex]], fold waves in with
+    * `absorb`. `dim` is captured at build time (the seeded hyperplanes
+    * are a function of it); the normalized vector table is the durable
+    * truth and the bands re-derive from it at load. */
+  final case class EmbeddingIndex(frames: Seq[DataFrame],
+                                  override val legs: Seq[DataFrame],
+                                  dim: Int, lastBatchId: Long = -1L)
+      extends LegIndex[EmbeddingIndex] {
+    def bands: DataFrame = frames(0)
+    def vectors: DataFrame = frames(1)
+    def tables: Seq[(String, DataFrame)] = Seq("vectors" -> vectors)
+    override def params: Seq[(String, Long)] = Seq("dim" -> dim.toLong)
+    def withLastBatchId(batchId: Long): EmbeddingIndex = copy(lastBatchId = batchId)
+    override protected def truth(emb: DataFrame): DataFrame =
+      Similarity.normalizedNonZero(emb)
+    protected def leg(e: DataFrame): Seq[DataFrame] = embeddingLeg(e, dim)
+    protected def withLegs(f: Seq[DataFrame], l: Seq[DataFrame]): EmbeddingIndex =
+      copy(frames = f, legs = l)
   }
 
-  def absorbIntoEmbeddingIndex(index: EmbeddingIndex,
-                               newEmb: DataFrame): EmbeddingIndex = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = Similarity.normalizedNonZero(newEmb).persist(lvl)
-    val bands = Similarity.bandedIds(e, index.dim).persist(lvl)
-    bands.count() // fills e's cache through the lineage chain (r16)
-    EmbeddingIndex(index.bands.unionByName(bands),
-      index.vectors.unionByName(e), index.dim,
-      index.cached ++ Seq(bands, e), index.lastBatchId)
+  /** (bands, vectors) from normalized vectors: bands ← vectors is one
+    * lineage chain. */
+  private def embeddingLeg(normalized: DataFrame, dim: Int): Seq[DataFrame] = {
+    val e = AccumIndex.persist(normalized)
+    val bands = AccumIndex.persist(Similarity.bandedIds(e, dim))
+    AccumIndex.fill(bands)
+    Seq(bands, e)
+  }
+
+  def buildEmbeddingIndex(emb: DataFrame, dim: Int): EmbeddingIndex = {
+    val l = embeddingLeg(Similarity.normalizedNonZero(emb), dim)
+    EmbeddingIndex(l, l, dim)
+  }
+
+  def loadEmbeddingIndex(spark: org.apache.spark.sql.SparkSession,
+                         path: String): EmbeddingIndex = {
+    graft.functions.DotProduct.register(spark)
+    AccumIndex.load(spark, path) { s =>
+      val dim = s.param("dim").toInt
+      val l = embeddingLeg(s.table("vectors"), dim)
+      EmbeddingIndex(l, l, dim)
+    }
   }
 
   /** Flag one NEW embedding batch against the index: banded candidates
@@ -601,51 +522,6 @@ object Dedup {
       .filter(col("rn") === 1)
       .select(col("vec_new"), col("vec_old").as("best_match"), col("cosine"))
     materializeThenRelease(best, e)
-  }
-
-  def releaseEmbeddingIndex(index: EmbeddingIndex): Unit = {
-    val legs = if (index.cached.nonEmpty) index.cached
-      else Seq(index.bands, index.vectors)
-    legs.foreach(_.unpersist(blocking = false))
-  }
-
-  /** Leg compaction — the vector face of [[compactCorpusIndex]]:
-    * probe-identical, collapses to one persisted leg per frame, no-op
-    * on an unabsorbed index. */
-  def compactEmbeddingIndex(index: EmbeddingIndex): EmbeddingIndex =
-    if (index.cached.length <= 2) index
-    else {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val bands = index.bands.persist(lvl)
-      val e = index.vectors.persist(lvl)
-      bands.count()
-      e.count()
-      index.cached.foreach(_.unpersist(blocking = false))
-      EmbeddingIndex(bands, e, index.dim, Seq(bands, e), index.lastBatchId)
-    }
-
-  /** Durable restart contract — the normalized vector table (plus the
-    * dim that seeds the hyperplanes) is the source of truth; bands
-    * re-derive deterministically at load. */
-  def saveEmbeddingIndex(index: EmbeddingIndex, path: String): Unit = {
-    index.vectors.write.mode("overwrite").parquet(s"$path/vectors")
-    val spark = index.vectors.sparkSession
-    import spark.implicits._
-    Seq((index.dim, index.lastBatchId)).toDF("dim", "last_batch_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  def loadEmbeddingIndex(spark: org.apache.spark.sql.SparkSession,
-                         path: String): EmbeddingIndex = {
-    graft.functions.DotProduct.register(spark)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val meta = spark.read.parquet(s"$path/meta")
-    val dim = meta.head().getAs[Int]("dim")
-    val e = spark.read.parquet(s"$path/vectors").persist(lvl)
-    val bands = Similarity.bandedIds(e, dim).persist(lvl)
-    bands.count() // fills e's cache through the lineage chain (r16)
-    EmbeddingIndex(bands, e, dim, Seq(bands, e),
-      IndexMeta.lastBatchId(meta))
   }
 
   /** SimHash: 60-bit signature from md5-derived word hashes (term

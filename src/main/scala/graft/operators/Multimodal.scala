@@ -1555,23 +1555,18 @@ object Multimodal {
 
   // ------------------------------------ incremental (streaming) image dedup
 
-  /** Prebuilt aHash band index over a corpus of image hashes — the
-    * long-lived state of incremental image dedup (the image twin of
-    * [[Dedup.CorpusIndex]]): build once, probe per ingest batch with
-    * [[flagAgainstFingerprintIndex]], release with [[releaseFingerprintIndex]]
-    * when the stream stops. */
-  /** `maxHamming` is captured AT BUILD TIME: the band layout is a
-    * function of the threshold, so probing with a different value
-    * would compute band keys over different bit ranges and silently
-    * lose every collision — the probe therefore reads the threshold
-    * from the index instead of taking a second parameter. `cached`
-    * tracks every persisted leg (the base pair plus one (bands,
-    * hashes) pair per absorbed wave): `bands`/`hashes` become lazy
-    * UNIONS of cached legs after [[absorbIntoFingerprintIndex]], and
-    * unpersisting a union frame is a silent no-op — release must walk
-    * the legs. */
-  /** Same `lastBatchId` absorb-watermark contract as
-    * [[graft.operators.Dedup.CorpusIndex]].
+  /** Fingerprint band index over a corpus of 64-bit image/audio hashes —
+    * the media family of [[AccumIndex]]: build with
+    * [[buildFingerprintIndex]], probe each ingest batch with
+    * [[flagAgainstFingerprintIndex]], fold waves in with `absorb` (a
+    * FROZEN index compares every batch against the original corpus, so
+    * a re-upload of an EARLIER wave's upload sails through). The raw
+    * hash table is the durable truth.
+    *
+    * `maxHamming` is captured AT BUILD TIME: the band layout is a
+    * function of the threshold, so probing with a different value would
+    * compute band keys over different bit ranges and silently lose
+    * every collision — the probe reads the threshold from the index.
     *
     * DISTINCT-HASH COMPRESSION (the round-12 10× probe finding — the
     * same cliff [[imageNearDup]] closed in round 11, reproduced in the
@@ -1584,12 +1579,38 @@ object Multimodal {
     * squared, and best-match semantics survive exactly because every
     * member of an index hash sits at the SAME Hamming distance from a
     * probe hash — (min hamming, then min img_id) over images equals
-    * (min hamming, then min member) over hashes. `hashes` keeps the
-    * raw rows as the durable source of truth for save/load. */
-  case class FingerprintIndex(bands: DataFrame, hashMin: DataFrame,
-                              hashes: DataFrame, maxHamming: Int,
-                              cached: Seq[DataFrame] = Nil,
-                              lastBatchId: Long = -1L)
+    * (min hamming, then min member) over hashes. A hid may repeat
+    * across legs (the same fingerprint arriving in two waves): band
+    * candidates dedup at probe time and the best-match window minimizes
+    * over the duplicate rows, so the union stays probe-exact, and
+    * compaction re-aggregates to true distinct. */
+  final case class FingerprintIndex(frames: Seq[DataFrame],
+                                    override val legs: Seq[DataFrame],
+                                    maxHamming: Int, lastBatchId: Long = -1L)
+      extends LegIndex[FingerprintIndex] {
+    def bands: DataFrame = frames(0)
+    def hashMin: DataFrame = frames(1)
+    def hashes: DataFrame = frames(2)
+    def tables: Seq[(String, DataFrame)] = Seq("hashes" -> hashes)
+    override def params: Seq[(String, Long)] = Seq("max_hamming" -> maxHamming.toLong)
+    def withLastBatchId(batchId: Long): FingerprintIndex = copy(lastBatchId = batchId)
+    protected def leg(raw: DataFrame): Seq[DataFrame] = fingerprintLeg(raw, maxHamming)
+    protected def withLegs(f: Seq[DataFrame], l: Seq[DataFrame]): FingerprintIndex =
+      copy(frames = f, legs = l)
+
+    /** Compaction re-aggregates to TRUE distinct across legs (a hid
+      * absorbed by several waves collapses back to one row, min over
+      * members) and re-derives its band keys — cheap, the distinct set is
+      * small by construction; raw hashes just re-materialize their union. */
+    override protected def compacted(): Seq[DataFrame] = {
+      val hm = AccumIndex.persist(hashMin.groupBy("hid", "b0", "b1", "b2", "b3")
+        .agg(min(col("min_img")).as("min_img")))
+      val b = AccumIndex.persist(hashBands(hm, maxHamming))
+      val h = AccumIndex.persist(hashes)
+      AccumIndex.fill(b, h)
+      Seq(b, hm, h)
+    }
+  }
 
   /** The 64-bit hash identity packed from the four stored 16-bit words
     * — shared by [[imageNearDup]]'s compression and the index legs. */
@@ -1598,62 +1619,34 @@ object Multimodal {
       .bitwiseOR(shiftleft(col("b2"), 32))
       .bitwiseOR(shiftleft(col("b3"), 48))
 
-  /** One compressed index leg from a raw (img_id, b0..b3) frame: the
-    * distinct-hash min-member table and its band keys, both persisted
-    * and materialized (bounded metadata actions — a probe must never
-    * re-run the leg build). */
-  private def fingerprintLeg(raw: DataFrame, maxHamming: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val h = raw.persist(lvl)
-    val hm = h.select(col("img_id"), hidCol.as("hid"),
+  /** Exact-side band keys (hid, band_idx, bval) of a distinct-hash table. */
+  private def hashBands(hm: DataFrame, maxHamming: Int): DataFrame =
+    exactBandKeys(hm.select(col("hid").as("img_id"), col("b0"), col("b1"),
+        col("b2"), col("b3")), maxHamming)
+      .withColumnsRenamed(Map("img_id" -> "hid"))
+
+  /** One compressed index leg (bands, hashMin, hashes) from a raw
+    * (img_id, b0..b3) frame: bands ← hashMin ← hashes is one lineage
+    * chain. */
+  private def fingerprintLeg(raw: DataFrame, maxHamming: Int): Seq[DataFrame] = {
+    val h = AccumIndex.persist(raw)
+    val hm = AccumIndex.persist(h.select(col("img_id"), hidCol.as("hid"),
         col("b0"), col("b1"), col("b2"), col("b3"))
       .groupBy("hid", "b0", "b1", "b2", "b3")
-      .agg(min(col("img_id")).as("min_img"))
-      .persist(lvl)
-    val bands = exactBandKeys(
-        hm.select(col("hid").as("img_id"), col("b0"), col("b1"),
-          col("b2"), col("b3")), maxHamming)
-      .withColumnsRenamed(Map("img_id" -> "hid"))
-      .persist(lvl)
-    // ONE materialization: bands ← hm ← h is a lineage chain, so
-    // counting the tail populates all three caches (r16 — the two
-    // extra cached-count jobs were pure scheduling overhead).
-    bands.count()
-    (bands, hm, h)
+      .agg(min(col("img_id")).as("min_img")))
+    val bands = AccumIndex.persist(hashBands(hm, maxHamming))
+    AccumIndex.fill(bands)
+    Seq(bands, hm, h)
   }
 
   def buildFingerprintIndex(corpusHashes: DataFrame, maxHamming: Int): FingerprintIndex = {
-    val (bands, hm, h) = fingerprintLeg(corpusHashes, maxHamming)
-    FingerprintIndex(bands, hm, h, maxHamming, Seq(bands, hm, h))
+    val l = fingerprintLeg(corpusHashes, maxHamming)
+    FingerprintIndex(l, l, maxHamming)
   }
 
-  /** Fold a new wave's fingerprints INTO the index — the media twin of
-    * [[Similarity.absorbIvfBatch]], closing the same defect class: a
-    * FROZEN index compares every batch against the original corpus
-    * forever, so a re-upload of an EARLIER wave's upload sails through
-    * unflagged. The wave's hashes and band keys are persisted and
-    * materialized as their own legs and the index's `bands`/`hashes`
-    * become lazy unions over all legs — probing scans every cached leg
-    * (no recomputation, no corpus-sized re-materialization per
-    * absorb; per-wave cost is the wave's own band build). A very long
-    * stream should compact legs periodically (in production the
-    * fingerprint table is durable storage and the index rebuilds from
-    * it at restart — which is also the recovery story: the in-memory
-    * index is process state, the parquet fingerprint table is the
-    * source of truth). Release the FINAL index with
-    * [[releaseFingerprintIndex]]; superseded index values share their legs
-    * with the successor, so only the last one must be released. */
-  def absorbIntoFingerprintIndex(index: FingerprintIndex, newHashes: DataFrame): FingerprintIndex = {
-    val (nb, nm, nh) = fingerprintLeg(newHashes, index.maxHamming)
-    // A hid may repeat across legs (the same fingerprint arriving in two
-    // waves): band candidates dedup at probe time and the best-match
-    // window minimizes over the duplicate rows, so the union stays
-    // probe-exact; compaction re-aggregates to true distinct.
-    FingerprintIndex(index.bands.unionByName(nb),
-      index.hashMin.unionByName(nm), index.hashes.unionByName(nh),
-      index.maxHamming, index.cached ++ Seq(nb, nm, nh), index.lastBatchId)
-  }
+  def loadFingerprintIndex(spark: SparkSession, path: String): FingerprintIndex =
+    AccumIndex.load(spark, path)(s =>
+      buildFingerprintIndex(s.table("hashes"), s.param("max_hamming").toInt))
 
   /** Flag one NEW image batch against a prebuilt [[FingerprintIndex]]: banded
     * candidates (new bands × corpus bands — recall-exact for the
@@ -1706,64 +1699,6 @@ object Multimodal {
       .join(bestHash, Seq("hid_n"))
       .select(col("img_id").as(idOut), col("best_match"), col("hamming"))
     Dedup.materializeThenRelease(best, nh, nd)
-  }
-
-  def releaseFingerprintIndex(index: FingerprintIndex): Unit = {
-    val legs = if (index.cached.nonEmpty) index.cached
-      else Seq(index.bands, index.hashMin, index.hashes)
-    legs.foreach(_.unpersist(blocking = false))
-  }
-
-  /** Compact a many-leg index back to one persisted leg per frame —
-    * the image twin of [[Dedup.compactCorpusIndex]]: materialize the
-    * lazy unions, release the superseded legs, probe results
-    * unchanged. No-op on an unabsorbed index (its frames ARE the only
-    * cached copies). */
-  def compactFingerprintIndex(index: FingerprintIndex): FingerprintIndex =
-    if (index.cached.length <= 3) index
-    else {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      // Re-aggregate to TRUE distinct across legs (a hid absorbed by
-      // several waves collapses back to one row, min over members) and
-      // re-derive its band keys — cheap, the distinct set is small by
-      // construction; raw hashes just re-materialize their union.
-      val hm = index.hashMin
-        .groupBy("hid", "b0", "b1", "b2", "b3")
-        .agg(min(col("min_img")).as("min_img"))
-        .persist(lvl)
-      val bands = exactBandKeys(
-          hm.select(col("hid").as("img_id"), col("b0"), col("b1"),
-            col("b2"), col("b3")), index.maxHamming)
-        .withColumnsRenamed(Map("img_id" -> "hid"))
-        .persist(lvl)
-      val h = index.hashes.persist(lvl)
-      bands.count() // materializes hm through the lineage chain too
-      h.count()     // independent frame (the raw-hash union)
-      index.cached.foreach(_.unpersist(blocking = false))
-      FingerprintIndex(bands, hm, h, index.maxHamming, Seq(bands, hm, h),
-        index.lastBatchId)
-    }
-
-  /** Durable restart contract — the image twin of
-    * [[Dedup.saveCorpusIndex]]: the fingerprint table (plus the
-    * build-time threshold, which FIXES the band layout) is the source
-    * of truth; bands derive deterministically. Save flattens absorbed
-    * waves into one parquet table; [[loadFingerprintIndex]] rebuilds the
-    * in-memory index after a restart and probes identically. */
-  def saveFingerprintIndex(index: FingerprintIndex, path: String): Unit = {
-    index.hashes.write.mode("overwrite").parquet(s"$path/hashes")
-    val spark = index.hashes.sparkSession
-    import spark.implicits._
-    Seq((index.maxHamming, index.lastBatchId))
-      .toDF("max_hamming", "last_batch_id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  def loadFingerprintIndex(spark: SparkSession, path: String): FingerprintIndex = {
-    val meta = spark.read.parquet(s"$path/meta")
-    buildFingerprintIndex(spark.read.parquet(s"$path/hashes"),
-      meta.head().getAs[Int]("max_hamming"))
-      .copy(lastBatchId = graft.operators.Dedup.IndexMeta.lastBatchId(meta))
   }
 
   /** The base image of every doc (img_id = 2·doc_id, delta 0) — the

@@ -53,12 +53,6 @@ object Regression {
         count(lit(1)).as("n_test"))
   }
 
-  /** F7 — scalar prediction ŷ = b0 + b1·x as a relational op (the
-    * coefficients come from a 1-row frame, not driver-side constants). */
-  def predict(df: DataFrame, coef: DataFrame, x: String): DataFrame =
-    df.crossJoin(broadcast(coef))
-      .withColumn("yhat", col("b0") + col("b1") * col(x))
-
   /** K5 — the Lambda's HTTP response envelope (reference
     * `lambda_function_final.py:94-109`): statusCode 200, a Content-Type
     * header, and a JSON body `{"RMSE": [r], "Model Coefficients":

@@ -233,30 +233,56 @@ object Similarity {
 
   // ------------------------------- incremental IVF index maintenance
 
-  /** Prebuilt IVF coarse index — the long-lived serving state of the
-    * similarity family (the [[Dedup.CorpusIndex]] / FingerprintIndex pattern
-    * applied to centroids): `centroids` is the frozen data-seeded
-    * coarse quantizer, `corpusStats` the per-list membership
-    * statistics (cid, old_size, sim_sum) where `sim_sum` is the EXACT
-    * DECIMAL(18,6) sum of the members' rounded assignment similarities
-    * — a sum, not a mean, so absorbing batches stays associative
-    * (decimal sums add exactly; a stored rounded mean could not be
-    * recombined without drift). Build once with [[buildIvfIndex]],
-    * report each arriving batch with [[ivfReassign]] — which assigns
-    * ONLY the batch, the corpus is never rescanned — fold accepted
-    * batches into the list statistics with [[absorbIvfBatch]] (the
-    * quantizer stays frozen; only the membership accounting advances,
-    * so the NEXT batch's growth/drift reads against everything already
-    * absorbed, not the original build), and release with
-    * [[releaseIvfIndex]] when the serving loop re-trains. */
-  /** Same `lastBatchId` absorb-watermark contract as
-    * [[graft.operators.Dedup.CorpusIndex]] — and MORE load-bearing
-    * here: the stats are merged per-list aggregates with no vector ids
-    * retained, so a replayed batch cannot be anti-joined away; the
+  /** IVF coarse index — the serving state of the similarity family as
+    * an [[AccumIndex]]: `centroids` is the frozen data-seeded coarse
+    * quantizer, `corpusStats` the per-list membership statistics (cid,
+    * old_size, sim_sum) where `sim_sum` is the EXACT DECIMAL(18,6) sum of
+    * the members' rounded assignment similarities — a sum, not a mean,
+    * so absorbing batches stays associative (decimal sums add exactly; a
+    * stored rounded mean could not be recombined without drift). Build
+    * once with [[buildIvfIndex]], report each arriving batch with
+    * [[ivfReassign]] — which assigns ONLY the batch, the corpus is never
+    * rescanned — and fold accepted batches into the list statistics with
+    * `absorb` (the quantizer stays frozen; only the membership accounting
+    * advances, so the NEXT batch's growth/drift reads against everything
+    * already absorbed, not the original build). State is
+    * O(|centroids|) whatever the stream's lifetime.
+    *
+    * The absorb watermark is MORE load-bearing here than in the other
+    * families: the stats are merged per-list aggregates with no vector
+    * ids retained, so a replayed batch cannot be anti-joined away; the
     * watermark is the only way to keep a checkpoint replay from
-    * double-counting old_size/sim_sum. */
-  case class IvfIndex(centroids: DataFrame, corpusStats: DataFrame,
-                      centStride: Long, lastBatchId: Long = -1L)
+    * double-counting old_size/sim_sum. `corpusStats` is not derivable
+    * from the centroids, so both frames are durable tables (decimal sums
+    * round-trip bit-exact through parquet's DECIMAL(18,6)). */
+  final case class IvfIndex(centroids: DataFrame, corpusStats: DataFrame,
+                            centStride: Long, lastBatchId: Long = -1L)
+      extends AccumIndex[IvfIndex] {
+    def frames: Seq[DataFrame] = Seq(centroids, corpusStats)
+    def tables: Seq[(String, DataFrame)] =
+      Seq("centroids" -> centroids, "stats" -> corpusStats)
+    override def params: Seq[(String, Long)] = Seq("cent_stride" -> centStride)
+    def withLastBatchId(batchId: Long): IvfIndex = copy(lastBatchId = batchId)
+
+    /** Associative by construction — absorbing b1 then b2 yields
+      * bit-identical `corpusStats` to absorbing b1 ∪ b2 once
+      * (IvfMaintenanceSpec pins it), so a serving loop can fold batches
+      * at any cadence. Cost is the batch assignment + a |centroids|-row
+      * merge; the superseded statistics are released. */
+    def absorb(newEmb: DataFrame): IvfIndex = {
+      val added = listStats(normalized(newEmb), centroids)
+        .select(col("cid"), col("old_size").as("added"),
+          col("sim_sum").as("batch_sum"))
+      val zeroSum = lit(BigDecimal(0)).cast(SimSumType)
+      val merged = corpusStats.join(added, Seq("cid"), "full_outer")
+        .select(col("cid"),
+          (coalesce(col("old_size"), lit(0L)) + coalesce(col("added"), lit(0L)))
+            .as("old_size"),
+          (coalesce(col("sim_sum"), zeroSum) + coalesce(col("batch_sum"), zeroSum))
+            .cast(SimSumType).as("sim_sum"))
+      copy(corpusStats = AccumIndex.swap(corpusStats, merged))
+    }
+  }
 
   private val SimSumType = org.apache.spark.sql.types.DecimalType(18, 6)
 
@@ -269,19 +295,25 @@ object Similarity {
         sum(col("cd").cast(SimSumType)).cast(SimSumType).as("sim_sum"))
 
   def buildIvfIndex(emb: DataFrame, centStride: Long): IvfIndex = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = normalized(emb).persist(lvl)
-    val cent = e.filter(pmod(col("vec_id"), lit(centStride)) === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv")).persist(lvl)
-    // Materialize up front (bounded metadata actions): the first
-    // arriving batch must not absorb the corpus assignment pass. One
-    // count suffices — stats ← cent is a lineage chain, so counting
-    // stats fills the centroid cache too (r16).
-    val stats = listStats(e, cent).persist(lvl)
-    stats.count()
+    val e = AccumIndex.persist(normalized(emb))
+    val cent = AccumIndex.persist(e.filter(pmod(col("vec_id"), lit(centStride)) === 0)
+      .select(col("vec_id").as("cid"), col("v").as("cv")))
+    // Materialize up front: the first arriving batch must not absorb the
+    // corpus assignment pass. stats ← cent is one lineage chain.
+    val stats = AccumIndex.persist(listStats(e, cent))
+    AccumIndex.fill(stats)
     e.unpersist(blocking = false)
     IvfIndex(cent, stats, centStride)
   }
+
+  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
+                   path: String): IvfIndex =
+    AccumIndex.load(spark, path) { s =>
+      val cent = AccumIndex.persist(s.table("centroids"))
+      val stats = AccumIndex.persist(s.table("stats"))
+      AccumIndex.fill(cent, stats)
+      IvfIndex(cent, stats, s.param("cent_stride"))
+    }
 
   /** Report one arriving batch against a prebuilt [[IvfIndex]] WITHOUT
     * rebuilding it: assign only the new vectors to the frozen
@@ -317,69 +349,6 @@ object Similarity {
         when(addedN > 0,
           round(col("batch_sum").cast("double") / col("added"), 6))
           .as("mean_sim_new"))
-  }
-
-  /** Fold an accepted batch INTO the index state: list sizes and the
-    * exact decimal similarity sums advance; the coarse quantizer stays
-    * frozen. Associative by construction — absorbing b1 then b2 yields
-    * bit-identical `corpusStats` to absorbing b1 ∪ b2 once (decimal
-    * sums add exactly; IvfMaintenanceSpec pins it) — so a serving loop
-    * can fold batches at any cadence and the NEXT [[ivfReassign]]
-    * reads growth/drift against everything already absorbed rather
-    * than comparing every batch to the original build forever. Returns
-    * the advanced index and releases the superseded statistics; cost
-    * is the batch assignment + a |centroids|-row merge. */
-  def absorbIvfBatch(index: IvfIndex, newEmb: DataFrame): IvfIndex = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val added = listStats(normalized(newEmb), index.centroids)
-      .select(col("cid"), col("old_size").as("added"),
-        col("sim_sum").as("batch_sum"))
-    val zeroSum = lit(BigDecimal(0)).cast(SimSumType)
-    val merged = index.corpusStats.join(added, Seq("cid"), "full_outer")
-      .select(col("cid"),
-        (coalesce(col("old_size"), lit(0L)) + coalesce(col("added"), lit(0L)))
-          .as("old_size"),
-        (coalesce(col("sim_sum"), zeroSum) + coalesce(col("batch_sum"), zeroSum))
-          .cast(SimSumType).as("sim_sum"))
-      .persist(lvl)
-    merged.count()
-    index.corpusStats.unpersist(blocking = false)
-    IvfIndex(index.centroids, merged, index.centStride, index.lastBatchId)
-  }
-
-  def releaseIvfIndex(index: IvfIndex): Unit = {
-    index.centroids.unpersist(blocking = false)
-    index.corpusStats.unpersist(blocking = false)
-  }
-
-  /** Durable restart contract — the vector twin of
-    * [[Dedup.saveCorpusIndex]]: unlike the dedup indexes, `corpusStats`
-    * is NOT derivable from the saved frames alone (it folds every
-    * absorbed batch), so both frames land in parquet along with the
-    * stride that seeded the quantizer. [[loadIvfIndex]] re-persists
-    * them after a restart; absorb/reassign continue from exactly the
-    * folded state (decimal sums round-trip bit-exact through parquet's
-    * DECIMAL(18,6)). */
-  def saveIvfIndex(index: IvfIndex, path: String): Unit = {
-    index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    index.corpusStats.write.mode("overwrite").parquet(s"$path/stats")
-    val spark = index.centroids.sparkSession
-    import spark.implicits._
-    Seq((index.centStride, index.lastBatchId))
-      .toDF("cent_stride", "last_batch_id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  def loadIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                   path: String): IvfIndex = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val meta = spark.read.parquet(s"$path/meta")
-    val cent = spark.read.parquet(s"$path/centroids").persist(lvl)
-    val stats = spark.read.parquet(s"$path/stats").persist(lvl)
-    cent.count()
-    stats.count()
-    IvfIndex(cent, stats, meta.head().getAs[Long]("cent_stride"),
-      Dedup.IndexMeta.lastBatchId(meta))
   }
 
   /** Distributed k-means (Lloyd's iterations) over the embedding column —
@@ -1118,40 +1087,51 @@ object Similarity {
   // ---------------------------------- accumulating sketch-ANN serving index
 
   /** Accumulating binary-sketch retrieval index — the SERVING face of
-    * [[hammingAnnTopK]] and the newest member of the accumulating-index
-    * family ([[graft.operators.Dedup.CorpusIndex]] /
-    * [[graft.operators.Multimodal.FingerprintIndex]] / [[IvfIndex]]):
-    * the corpus's normalized vectors + 64-bit sign sketches persist as
-    * cached legs; arriving query batches broadcast-scan the sketches
-    * (xor+popcount prefilter at `maxHamming`, exact-cosine re-rank);
-    * accepted batches ABSORB so later queries retrieve against
-    * everything already ingested. Same `cached`-legs / compaction /
-    * `lastBatchId` absorb-watermark / durable save-load contract as
-    * the other index types. */
-  case class SketchIndex(sketches: DataFrame, vectors: DataFrame, dim: Int,
-                         maxHamming: Int, cached: Seq[DataFrame] = Nil,
-                         lastBatchId: Long = -1L)
+    * [[hammingAnnTopK]] as an [[AccumIndex]]: the corpus's normalized
+    * vectors + 64-bit sign sketches persist as cached legs; arriving
+    * query batches broadcast-scan the sketches (xor+popcount prefilter
+    * at `maxHamming`, exact-cosine re-rank); accepted batches ABSORB so
+    * later queries retrieve against everything already ingested. The
+    * normalized vector table is the durable truth (sketches re-derive
+    * from the seeded hyperplanes). */
+  final case class SketchIndex(frames: Seq[DataFrame],
+                               override val legs: Seq[DataFrame],
+                               dim: Int, maxHamming: Int, lastBatchId: Long = -1L)
+      extends LegIndex[SketchIndex] {
+    def sketches: DataFrame = frames(0)
+    def vectors: DataFrame = frames(1)
+    def tables: Seq[(String, DataFrame)] = Seq("vectors" -> vectors)
+    override def params: Seq[(String, Long)] =
+      Seq("dim" -> dim.toLong, "max_hamming" -> maxHamming.toLong)
+    def withLastBatchId(batchId: Long): SketchIndex = copy(lastBatchId = batchId)
+    override protected def truth(emb: DataFrame): DataFrame = normalizedNonZero(emb)
+    protected def leg(e: DataFrame): Seq[DataFrame] = sketchLeg(e, dim)
+    protected def withLegs(f: Seq[DataFrame], l: Seq[DataFrame]): SketchIndex =
+      copy(frames = f, legs = l)
+  }
 
-  /** One persisted leg (sketches + vectors) from an ALREADY-normalized
-    * (vec_id, v) frame — shared by build, absorb and load. */
-  private def sketchLeg(e0: DataFrame, dim: Int): (DataFrame, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = e0.persist(lvl)
-    val sk = binarySketch(e, dim).persist(lvl)
-    sk.count() // sk ← e is a lineage chain: one count fills both (r16)
-    (sk, e)
+  /** (sketches, vectors) from normalized vectors: sketches ← vectors is
+    * one lineage chain. */
+  private def sketchLeg(normalized: DataFrame, dim: Int): Seq[DataFrame] = {
+    val e = AccumIndex.persist(normalized)
+    val sk = AccumIndex.persist(binarySketch(e, dim))
+    AccumIndex.fill(sk)
+    Seq(sk, e)
   }
 
   def buildSketchIndex(emb: DataFrame, dim: Int, maxHamming: Int): SketchIndex = {
-    val (sk, e) = sketchLeg(normalizedNonZero(emb), dim)
-    SketchIndex(sk, e, dim, maxHamming, Seq(sk, e))
+    val l = sketchLeg(normalizedNonZero(emb), dim)
+    SketchIndex(l, l, dim, maxHamming)
   }
 
-  def absorbIntoSketchIndex(index: SketchIndex, newEmb: DataFrame): SketchIndex = {
-    val (sk, e) = sketchLeg(normalizedNonZero(newEmb), index.dim)
-    SketchIndex(index.sketches.unionByName(sk), index.vectors.unionByName(e),
-      index.dim, index.maxHamming, index.cached ++ Seq(sk, e),
-      index.lastBatchId)
+  def loadSketchIndex(spark: org.apache.spark.sql.SparkSession,
+                      path: String): SketchIndex = {
+    graft.functions.DotProduct.register(spark)
+    AccumIndex.load(spark, path) { s =>
+      val dim = s.param("dim").toInt
+      val l = sketchLeg(s.table("vectors"), dim)
+      SketchIndex(l, l, dim, s.param("max_hamming").toInt)
+    }
   }
 
   /** Top-k retrieval of one QUERY batch against the index: the query
@@ -1187,49 +1167,6 @@ object Similarity {
     val ranked = heapTopK(scored, "query_id", "cosine", "vec_id", k)
       .select(col("query_id"), col("rn"), col("vec_id"), col("cosine"))
     Dedup.materializeThenRelease(ranked, qe)
-  }
-
-  def releaseSketchIndex(index: SketchIndex): Unit = {
-    val legs = if (index.cached.nonEmpty) index.cached
-      else Seq(index.sketches, index.vectors)
-    legs.foreach(_.unpersist(blocking = false))
-  }
-
-  /** Leg compaction — probe-identical, collapses to one persisted leg
-    * per frame, no-op on an unabsorbed index. */
-  def compactSketchIndex(index: SketchIndex): SketchIndex =
-    if (index.cached.length <= 2) index
-    else {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val sk = index.sketches.persist(lvl)
-      val e = index.vectors.persist(lvl)
-      sk.count()
-      e.count()
-      index.cached.foreach(_.unpersist(blocking = false))
-      SketchIndex(sk, e, index.dim, index.maxHamming, Seq(sk, e),
-        index.lastBatchId)
-    }
-
-  /** Durable restart contract — the normalized vector table is the
-    * source of truth (sketches re-derive from the seeded hyperplanes);
-    * dim/threshold/absorb-watermark ride in the meta sidecar. */
-  def saveSketchIndex(index: SketchIndex, path: String): Unit = {
-    index.vectors.write.mode("overwrite").parquet(s"$path/vectors")
-    val spark = index.vectors.sparkSession
-    import spark.implicits._
-    Seq((index.dim, index.maxHamming, index.lastBatchId))
-      .toDF("dim", "max_hamming", "last_batch_id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  def loadSketchIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String): SketchIndex = {
-    graft.functions.DotProduct.register(spark)
-    val meta = spark.read.parquet(s"$path/meta")
-    val dim = meta.head().getAs[Int]("dim")
-    val (sk, e) = sketchLeg(spark.read.parquet(s"$path/vectors"), dim)
-    SketchIndex(sk, e, dim, meta.head().getAs[Int]("max_hamming"),
-      Seq(sk, e), Dedup.IndexMeta.lastBatchId(meta))
   }
 
   /** Reciprocal-rank fusion (Cormack et al., SIGIR 2009) of a keyword

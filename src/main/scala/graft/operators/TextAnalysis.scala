@@ -1355,51 +1355,60 @@ object TextAnalysis {
 
   // ------------------------------------ accumulating DSIR selection
 
-  /** The DSIR feature state as an ACCUMULATING index — continuous data
-    * selection at ingestion cadence: the TARGET histogram is frozen at
-    * build (the curated reference distribution does not grow), while
-    * the RAW histogram absorbs every arriving wave, so importance
-    * weights sharpen as raw coverage accumulates. State is two
-    * ≤`buckets`-row histograms — broadcastable at ANY corpus size, and
-    * each absorb materializes a fresh merged histogram and releases
-    * the old one, so the index is O(1) legs by construction (no
-    * compaction budget needed, unlike the band indexes). Absorb is
-    * count-addition — associative/commutative but NOT idempotent, so
-    * the streaming face guards replays with the family's
+  /** The DSIR feature state as an [[graft.operators.AccumIndex]] —
+    * continuous data selection at ingestion cadence: the TARGET
+    * histogram is frozen at build (the curated reference distribution
+    * does not grow), while the RAW histogram absorbs every arriving
+    * wave, so importance weights sharpen as raw coverage accumulates.
+    * State is two ≤`buckets`-row histograms — broadcastable at ANY
+    * corpus size, and each absorb materializes a fresh merged histogram
+    * and releases the old one, so the index is single-leg by
+    * construction. Absorb is count-addition — associative/commutative
+    * but NOT idempotent, so the streaming face guards replays with the
     * `lastBatchId` watermark. */
-  case class DsirIndex(rawHist: DataFrame, tgtHist: DataFrame, buckets: Int,
-                       lastBatchId: Long = -1L)
+  final case class DsirIndex(rawHist: DataFrame, tgtHist: DataFrame, buckets: Int,
+                             lastBatchId: Long = -1L)
+      extends AccumIndex[DsirIndex] {
+    def frames: Seq[DataFrame] = Seq(rawHist, tgtHist)
+    def tables: Seq[(String, DataFrame)] = Seq("raw" -> rawHist, "tgt" -> tgtHist)
+    override def params: Seq[(String, Long)] = Seq("buckets" -> buckets.toLong)
+    def withLastBatchId(batchId: Long): DsirIndex = copy(lastBatchId = batchId)
+
+    /** Fold a wave's token counts into the raw histogram: one keyed sum
+      * over ≤2·buckets rows. */
+    def absorb(wave: DataFrame): DsirIndex = {
+      val waveHist = bucketTokens(wave, buckets).groupBy("b")
+        .agg(count(lit(1)).as("cr"))
+      copy(rawHist = AccumIndex.swap(rawHist, rawHist.unionByName(waveHist)
+        .groupBy("b").agg(sum(col("cr")).as("cr"))))
+    }
+  }
 
   private def bucketTokens(docs: DataFrame, buckets: Int): DataFrame =
     docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .select(col("doc_id"),
         (graft.functions.Hashing.md5Long(col("word")) % buckets).as("b"))
 
-  private val DsirLvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
   /** Freeze the target histogram; seed the raw histogram from the
     * corpus available at build time. */
   def buildDsirIndex(target: DataFrame, seedRaw: DataFrame,
                      buckets: Int): DsirIndex = {
-    val tgt = bucketTokens(target, buckets).groupBy("b")
-      .agg(count(lit(1)).as("ct")).persist(DsirLvl)
-    val raw = bucketTokens(seedRaw, buckets).groupBy("b")
-      .agg(count(lit(1)).as("cr")).persist(DsirLvl)
-    tgt.count(); raw.count()
+    val tgt = AccumIndex.persist(bucketTokens(target, buckets).groupBy("b")
+      .agg(count(lit(1)).as("ct")))
+    val raw = AccumIndex.persist(bucketTokens(seedRaw, buckets).groupBy("b")
+      .agg(count(lit(1)).as("cr")))
+    AccumIndex.fill(tgt, raw)
     DsirIndex(raw, tgt, buckets)
   }
 
-  /** Fold a wave's token counts into the raw histogram: one keyed sum
-    * over ≤2·buckets rows, materialized, old leg released. */
-  def absorbIntoDsirIndex(index: DsirIndex, wave: DataFrame): DsirIndex = {
-    val waveHist = bucketTokens(wave, index.buckets).groupBy("b")
-      .agg(count(lit(1)).as("cr"))
-    val merged = index.rawHist.unionByName(waveHist).groupBy("b")
-      .agg(sum(col("cr")).as("cr")).persist(DsirLvl)
-    merged.count()
-    index.rawHist.unpersist(blocking = false)
-    index.copy(rawHist = merged)
-  }
+  def loadDsirIndex(spark: org.apache.spark.sql.SparkSession,
+                    path: String): DsirIndex =
+    AccumIndex.load(spark, path) { s =>
+      val raw = AccumIndex.persist(s.table("raw"))
+      val tgt = AccumIndex.persist(s.table("tgt"))
+      AccumIndex.fill(raw, tgt)
+      DsirIndex(raw, tgt, s.param("buckets").toInt)
+    }
 
   /** Score a wave against the CURRENT index state (pre-absorb — the
     * accum-family convention): the same micro-unit log-ratio chain as
@@ -1432,108 +1441,59 @@ object TextAnalysis {
         (col("sm") > 0L).cast("long").as("selected"))
   }
 
-  def releaseDsirIndex(index: DsirIndex): Unit = {
-    index.rawHist.unpersist(blocking = false)
-    index.tgtHist.unpersist(blocking = false)
-  }
-
-  /** Durable save/load — the restart story: two tiny parquet
-    * histograms + the absorb watermark. */
-  def saveDsirIndex(index: DsirIndex, path: String): Unit = {
-    index.rawHist.coalesce(1).write.mode("overwrite").parquet(s"$path/raw")
-    index.tgtHist.coalesce(1).write.mode("overwrite").parquet(s"$path/tgt")
-    val spark = index.rawHist.sparkSession
-    import spark.implicits._
-    Seq((index.buckets.toLong, index.lastBatchId))
-      .toDF("buckets", "last_batch_id").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  def loadDsirIndex(spark: org.apache.spark.sql.SparkSession,
-                    path: String): DsirIndex = {
-    val meta = spark.read.parquet(s"$path/meta")
-    val raw = spark.read.parquet(s"$path/raw").persist(DsirLvl)
-    val tgt = spark.read.parquet(s"$path/tgt").persist(DsirLvl)
-    raw.count(); tgt.count()
-    DsirIndex(raw, tgt, meta.head().getAs[Long]("buckets").toInt,
-      Dedup.IndexMeta.lastBatchId(meta))
-  }
-
   // ------------------------------------ accumulating KMV cardinality
 
-  /** Per-source KMV cardinality sketch as an ACCUMULATING index — the
-    * sketch face of the family ([[graft.operators.Dedup.CorpusIndex]],
-    * `FingerprintIndex`, the IVF stats): a per-ingest dataset card
-    * ("how many distinct trigrams has each source contributed so
-    * far?") maintained incrementally, O(sources·k) state total.
+  /** Per-source KMV cardinality sketch as an [[graft.operators.AccumIndex]]
+    * — a per-ingest dataset card ("how many distinct trigrams has each
+    * source contributed so far?") maintained incrementally, O(sources·k)
+    * state total.
     *
-    * What makes this leg of the family special: KMV merge is set-union
-    * followed by k-min — associative, commutative AND IDEMPOTENT.
-    * Re-absorbing a checkpoint-replayed batch is an algebraic no-op
-    * (the k smallest of S ∪ B ∪ B are the k smallest of S ∪ B), so
-    * exactly-once state needs NO absorb watermark — where every other
-    * index in the family needs the `lastBatchId` guard to avoid
-    * double-counting, this one is replay-safe by construction
-    * (KmvIdempotenceSpec pins it; the watermark field is kept for
-    * uniform save/load plumbing and to skip redundant replay WORK).
-    *
-    * State is a single tiny frame (source, sk) — every absorb merges
+    * KMV merge is set-union followed by k-min — associative, commutative
+    * AND IDEMPOTENT. Re-absorbing a checkpoint-replayed batch is an
+    * algebraic no-op (the k smallest of S ∪ B ∪ B are the k smallest of
+    * S ∪ B), so exactly-once state needs NO absorb watermark — this one
+    * is replay-safe by construction (KmvIdempotenceSpec pins it; the
+    * watermark only skips redundant replay WORK). Every absorb merges
     * eagerly (one groupBy over O(sources·k) exploded longs), so the
-    * index is always exactly one leg: absorb IS compaction here, and
-    * no leg budget is needed. */
-  case class KmvIndex(sketch: DataFrame, k: Int, lastBatchId: Long = -1L)
+    * index is always exactly one leg. */
+  final case class KmvIndex(sketch: DataFrame, k: Int, lastBatchId: Long = -1L)
+      extends AccumIndex[KmvIndex] {
+    def frames: Seq[DataFrame] = Seq(sketch)
+    def tables: Seq[(String, DataFrame)] = Seq("sketch" -> sketch)
+    override def params: Seq[(String, Long)] = Seq("k" -> k.toLong)
+    def withLastBatchId(batchId: Long): KmvIndex = copy(lastBatchId = batchId)
 
-  def buildKmvIndex(docs: DataFrame, k: Int): KmvIndex = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    /** Batch-side k-min (the only corpus-sized work, fully distributed),
+      * then an eager O(sources·k) re-merge. Set semantics throughout
+      * (the explode→distinct before the final k-min), which is what buys
+      * the idempotence above. */
+    def absorb(docs: DataFrame): KmvIndex =
+      copy(sketch = AccumIndex.swap(sketch, sketch.unionByName(kmvSketch(docs, k))
+        .select(col("source"), explode(col("sk")).as("h")).distinct()
+        .groupBy("source").agg(kminAgg(k)(col("h")).as("sk"))))
+  }
+
+  /** Per-source k-min sketch of the docs' distinct trigram hashes. */
+  private def kmvSketch(docs: DataFrame, k: Int): DataFrame =
     // fanOut: a single-file scan otherwise single-threads the explode
-    val sk = sourceTrigrams(graft.Tables.fanOut(docs))
+    sourceTrigrams(graft.Tables.fanOut(docs))
       .select(col("source"), graft.functions.Hashing.md5Long(col("word")).as("h"))
       .distinct()
-      .groupBy("source").agg(kminAgg(k)(col("h")).as("sk")).persist(lvl)
-    sk.count()
+      .groupBy("source").agg(kminAgg(k)(col("h")).as("sk"))
+
+  def buildKmvIndex(docs: DataFrame, k: Int): KmvIndex = {
+    val sk = AccumIndex.persist(kmvSketch(docs, k))
+    AccumIndex.fill(sk)
     KmvIndex(sk, k)
   }
 
-  /** Fold a document batch into the sketch: batch-side k-min (the only
-    * corpus-sized work, fully distributed), then an eager O(sources·k)
-    * re-merge. Set semantics throughout (the explode→distinct before
-    * the final k-min), which is what buys the idempotence above. */
-  def absorbIntoKmvIndex(index: KmvIndex, docs: DataFrame): KmvIndex = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val batch = sourceTrigrams(graft.Tables.fanOut(docs))
-      .select(col("source"), graft.functions.Hashing.md5Long(col("word")).as("h"))
-      .distinct()
-      .groupBy("source").agg(kminAgg(index.k)(col("h")).as("sk"))
-    val merged = index.sketch.unionByName(batch)
-      .select(col("source"), explode(col("sk")).as("h")).distinct()
-      .groupBy("source").agg(kminAgg(index.k)(col("h")).as("sk")).persist(lvl)
-    merged.count()
-    index.sketch.unpersist(blocking = false)
-    KmvIndex(merged, index.k, index.lastBatchId)
-  }
-
-  def releaseKmvIndex(index: KmvIndex): Unit =
-    index.sketch.unpersist(blocking = false)
-
-  /** Durable restart contract (family-uniform): the sketch frame IS the
-    * whole state — parquet out, reload, re-persist. */
-  def saveKmvIndex(index: KmvIndex, path: String): Unit = {
-    index.sketch.write.mode("overwrite").parquet(s"$path/sketch")
-    val spark = index.sketch.sparkSession
-    import spark.implicits._
-    Seq((index.k.toLong, index.lastBatchId)).toDF("k", "last_batch_id")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
   def loadKmvIndex(spark: org.apache.spark.sql.SparkSession,
-                   path: String): KmvIndex = {
-    val meta = spark.read.parquet(s"$path/meta")
-    val sk = spark.read.parquet(s"$path/sketch")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sk.count()
-    KmvIndex(sk, meta.head().getAs[Long]("k").toInt,
-      Dedup.IndexMeta.lastBatchId(meta))
-  }
+                   path: String): KmvIndex =
+    AccumIndex.load(spark, path) { s =>
+      val sk = AccumIndex.persist(s.table("sketch"))
+      AccumIndex.fill(sk)
+      KmvIndex(sk, s.param("k").toInt)
+    }
 
   /** The md5Long hash domain: 15 hex chars = 60 bits. 2⁶⁰ is a power
     * of two, hence exactly representable as a double — the estimator's

@@ -442,7 +442,7 @@ object PipelinePack {
       val idx = Dedup.buildCorpusIndex(Dedup.wordShingles(docs.filter(!pred)))
       val out = Dedup.flagAgainstCorpusIndex(
         Dedup.wordShingles(docs.filter(pred)), idx, JACCARD_MIN)
-      Dedup.releaseCorpusIndex(idx) // out is already checkpointed
+      idx.release() // out is already checkpointed
       out.orderBy("doc_new")
     },
     // Batch twin of StreamOps.driftMonitorStream: md5-assigned ingest
@@ -522,7 +522,7 @@ object PipelinePack {
           emb.filter(pmod(col("vec_id"), lit(10L)) === IVF_BATCH_REM))
         .orderBy("cid")
       val materialized = graft.operators.Lifecycle.checkpoint(out)
-      Similarity.releaseIvfIndex(idx)
+      idx.release()
       materialized
     },
     // SELF-ACCUMULATING IVF maintenance (the batch face of
@@ -532,15 +532,14 @@ object PipelinePack {
     // index would compare every wave against the original build.
     "q_st_ivf_accum" -> { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val idx = Similarity.absorbIvfBatch(
-        Similarity.buildIvfIndex(
-          emb.filter(pmod(col("vec_id"), lit(10L)) < 8L), CENT_STRIDE),
-        emb.filter(pmod(col("vec_id"), lit(10L)) === 8L))
+      val idx = Similarity.buildIvfIndex(
+        emb.filter(pmod(col("vec_id"), lit(10L)) < 8L), CENT_STRIDE)
+        .absorb(emb.filter(pmod(col("vec_id"), lit(10L)) === 8L))
       val out = Similarity.ivfReassign(idx,
           emb.filter(pmod(col("vec_id"), lit(10L)) === 9L))
         .orderBy("cid")
       val materialized = graft.operators.Lifecycle.checkpoint(out)
-      Similarity.releaseIvfIndex(idx)
+      idx.release()
       materialized
     },
     // Incremental EMBEDDING near-dup: a frozen hyperplane-LSH band
@@ -553,7 +552,7 @@ object PipelinePack {
         emb.filter(pmod(col("vec_id"), lit(10L)) =!= INC_REM), DIM)
       val out = Dedup.flagAgainstEmbeddingIndex(
         emb.filter(pmod(col("vec_id"), lit(10L)) === INC_REM), idx, COS_MIN)
-      Dedup.releaseEmbeddingIndex(idx)
+      idx.release()
       out.orderBy("vec_new")
     },
     // SELF-ACCUMULATING embedding near-dup (the batch face of
@@ -576,10 +575,9 @@ object PipelinePack {
         col("embedding"))
       val w2 = m1.select(col("vec_id"), expr(mix).as("embedding"))
         .select((col("vec_id") + 2 * WAVE).as("vec_id"), col("embedding"))
-      val idx = Dedup.absorbIntoEmbeddingIndex(
-        Dedup.buildEmbeddingIndex(emb, DIM), w1)
+      val idx = Dedup.buildEmbeddingIndex(emb, DIM).absorb(w1)
       val out = Dedup.flagAgainstEmbeddingIndex(w2, idx, COS_MIN)
-      Dedup.releaseEmbeddingIndex(idx)
+      idx.release()
       out.orderBy("vec_new")
     },
     // SELF-ACCUMULATING sketch-ANN serving (the batch face of
@@ -602,10 +600,9 @@ object PipelinePack {
         col("embedding"))
       val w2 = m1.select(col("vec_id"), expr(mix).as("embedding"))
         .select((col("vec_id") + 2 * WAVE).as("vec_id"), col("embedding"))
-      val idx = Similarity.absorbIntoSketchIndex(
-        Similarity.buildSketchIndex(emb, DIM, HAM_ANN_MAX), w1)
+      val idx = Similarity.buildSketchIndex(emb, DIM, HAM_ANN_MAX).absorb(w1)
       val out = Similarity.topKAgainstSketchIndex(w2, idx, TOPK)
-      Similarity.releaseSketchIndex(idx) // out is already checkpointed
+      idx.release() // out is already checkpointed
       out.orderBy("query_id", "rn")
     },
     // LSH banding quality vs the exact-jaccard ground truth: candidate
@@ -1382,7 +1379,7 @@ object PipelinePack {
         Multimodal.imageAHash(s,
           Multimodal.packReuploadImages(s, docs.filter(pred))).toDF(),
         idx)
-      Multimodal.releaseFingerprintIndex(idx) // out is already checkpointed
+      idx.release() // out is already checkpointed
       out.orderBy("img_new")
     },
     // SELF-ACCUMULATING KMV cardinality card (the batch face of
@@ -1408,21 +1405,20 @@ object PipelinePack {
       val s1 = graft.operators.Lifecycle.checkpoint(
         TextAnalysis.scoreAgainstDsirIndex(idx0, wave(1))
           .withColumn("wave", lit(1L)))
-      val idx1 = TextAnalysis.absorbIntoDsirIndex(idx0, wave(1))
+      val idx1 = idx0.absorb(wave(1))
       val s2 = TextAnalysis.scoreAgainstDsirIndex(idx1, wave(2))
         .withColumn("wave", lit(2L))
       val out = s1.unionByName(s2)
         .select(col("wave"), col("doc_id"), col("n_tokens"),
           col("dsir_score"), col("selected"))
         .orderBy("wave", "doc_id")
-      Dedup.materializeThenRelease(out, idx1.rawHist, idx1.tgtHist)
+      Dedup.materializeThenRelease(out, idx1.legs: _*)
     },
     "q_st_kmv_accum" -> { (s, d) =>
       val docs = Tables.documents(s, d).select("doc_id", "text", "source")
       def wave(r: Int) = docs.filter(pmod(col("doc_id"), lit(3)) === r)
-      val idx = TextAnalysis.absorbIntoKmvIndex(
-        TextAnalysis.absorbIntoKmvIndex(
-          TextAnalysis.buildKmvIndex(wave(0), KMV_K), wave(1)), wave(2))
+      val idx = TextAnalysis.buildKmvIndex(wave(0), KMV_K)
+        .absorb(wave(1)).absorb(wave(2))
       val exact = TextAnalysis.sourceTrigrams(Tables.fanOut(docs))
         .groupBy("source").agg(count(lit(1)).as("n_exact"))
       val out = TextAnalysis.kmvCardinalityReport(idx)
@@ -1432,7 +1428,7 @@ object PipelinePack {
           round(abs(col("est_distinct") - col("n_exact")) / col("n_exact"), 6)
             .as("rel_err"))
         .orderBy("source")
-      Dedup.materializeThenRelease(out, idx.sketch)
+      Dedup.materializeThenRelease(out, idx.legs: _*)
     },
     // SELF-ACCUMULATING incremental text dedup (the batch face of
     // StreamOps.incrementalDedupAccumStream): wave 1 re-arrivals carry
@@ -1450,30 +1446,28 @@ object PipelinePack {
         (col("doc_id") + lit(2 * WAVE)).as("doc_id"),
         concat(col("text"),
           lit(" zzwaveone tagone zzwavetwo tagtwo")).as("text"))
-      val idx = Dedup.absorbIntoCorpusIndex(
-        Dedup.buildCorpusIndex(Dedup.wordShingles(docs)),
-        Dedup.wordShingles(w1))
+      val idx = Dedup.buildCorpusIndex(Dedup.wordShingles(docs))
+        .absorb(Dedup.wordShingles(w1))
       val out = Dedup.flagAgainstCorpusIndex(Dedup.wordShingles(w2), idx,
         JACCARD_MIN)
-      Dedup.releaseCorpusIndex(idx) // out is already checkpointed
+      idx.release() // out is already checkpointed
       out.orderBy("doc_new")
     },
     // SELF-ACCUMULATING incremental image dedup (the batch face of
     // StreamOps.imageNearDupAccumStream): the corpus index ABSORBS
     // wave 1's fingerprints before wave 2 probes, so wave-2 re-uploads
     // can best-match wave-1 uploads — the match a frozen index can
-    // never produce (the media twin of absorbIvfBatch's defect class).
+    // never produce (the media twin of the IVF absorb's defect class).
     "q_st_image_accum" -> { (s, d) =>
       val docs = Tables.documents(s, d)
       val pred = pmod(col("doc_id"), lit(INC_MOD)) === INC_REM
-      val idx = Multimodal.absorbIntoFingerprintIndex(
-        Multimodal.buildFingerprintIndex(baseImageHashWFixture(s, d), IMG_HAMMING_MAX),
-        Multimodal.imageAHash(s,
+      val idx = Multimodal.buildFingerprintIndex(baseImageHashWFixture(s, d), IMG_HAMMING_MAX)
+        .absorb(Multimodal.imageAHash(s,
           Multimodal.packImageWave(s, docs.filter(pred), 1)).toDF())
       val out = Multimodal.flagAgainstFingerprintIndex(
         Multimodal.imageAHash(s,
           Multimodal.packImageWave(s, docs.filter(pred), 2)).toDF(), idx)
-      Multimodal.releaseFingerprintIndex(idx) // out is already checkpointed
+      idx.release() // out is already checkpointed
       out.orderBy("img_new")
     },
     // Incremental AUDIO dedup THROUGH the streaming-cadence machinery
@@ -1492,7 +1486,7 @@ object PipelinePack {
         Multimodal.audioFingerprint(s,
           Multimodal.packReuploadAudio(s, docs.filter(pred))).toDF(),
         idx, idOut = "clip_new")
-      Multimodal.releaseFingerprintIndex(idx) // out is already checkpointed
+      idx.release() // out is already checkpointed
       out.select(col("clip_new"), col("best_match"), col("hamming"))
         .orderBy("clip_new")
     },
@@ -1505,16 +1499,15 @@ object PipelinePack {
     "q_st_audio_accum" -> { (s, d) =>
       val docs = Tables.documents(s, d)
       val sel = docs.filter(pmod(col("doc_id"), lit(INC_MOD)) === INC_REM)
-      val idx = Multimodal.absorbIntoFingerprintIndex(
-        Multimodal.buildFingerprintIndex(
-          audioBaseFingerprintFixture(s, d), AUD_HAMMING_MAX),
-        Multimodal.audioFingerprint(s,
+      val idx = Multimodal.buildFingerprintIndex(
+          audioBaseFingerprintFixture(s, d), AUD_HAMMING_MAX)
+        .absorb(Multimodal.audioFingerprint(s,
           Multimodal.packAudioWave(s, sel, 1)).toDF())
       val out = Multimodal.flagAgainstFingerprintIndex(
         Multimodal.audioFingerprint(s,
           Multimodal.packAudioWave(s, sel, 2)).toDF(), idx,
         idOut = "clip_new")
-      Multimodal.releaseFingerprintIndex(idx) // out is already checkpointed
+      idx.release() // out is already checkpointed
       out.select(col("clip_new"), col("best_match"), col("hamming"))
         .orderBy("clip_new")
     },

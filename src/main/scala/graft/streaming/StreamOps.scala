@@ -1,9 +1,13 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 import graft.functions.Num
+import graft.operators.{AccumIndex, Dedup, Lifecycle, Multimodal, Similarity, TextAnalysis}
 
 /** Structured Streaming surface. The reference is batch-only (`@daily`
   * Airflow reruns, SURVEY.md §2.13); these are the streaming-idiomatic
@@ -163,47 +167,19 @@ object StreamOps {
       }
       .start()
 
-  /** Incremental corpus-vs-batch dedup at STREAMING cadence — the
-    * streaming face of [[graft.operators.Dedup.minhashLshAgainstCorpus]]
-    * (round-6 verdict #8): new documents arrive as a parquet file
-    * stream (one staged file per ingest wave), and each micro-batch is
-    * flagged against a PREBUILT corpus band index inside `foreachBatch`
-    * — the standard bridge, because each flagging is a batch join
-    * pipeline. Per-ingest cost ∝ the micro-batch (bands + candidate
-    * joins); the corpus state is built once before the stream starts
-    * and never recomputed. Flagged best-match rows append to a parquet
-    * sink; each batch's checkpoint blocks are freed as soon as its rows
-    * are written, so an unbounded stream accumulates no state beyond
-    * the corpus index. Caller stops the query and releases the index
-    * ([[graft.operators.Dedup.releaseCorpusIndex]]).
-    *
-    * Exactly-once across failure/restart: `foreachBatch` gives
-    * at-least-once delivery — a crash after the sink write but before
-    * the checkpoint commit re-executes the batch on restart — so the
-    * write is IDEMPOTENT per `batchId` ([[idempotentParquetWrite]]): a
-    * re-executed batch overwrites its own partition directory instead
-    * of appending duplicates. Pass `checkpointDir` to make restarts
-    * resume from the recorded offsets (StreamingSpec kills a run
-    * mid-feed, deletes the commit marker to force a true batch
-    * re-execution, restarts, and asserts equality with the
-    * uninterrupted run). */
-  def incrementalDedupStream(spark: SparkSession, stagingDir: String,
-                             schema: org.apache.spark.sql.types.StructType,
-                             index: graft.operators.Dedup.CorpusIndex,
-                             minJ: Double, outPath: String,
-                             checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withCheckpoint(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stagingDir)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val flagged = graft.operators.Dedup.flagAgainstCorpusIndex(
-            graft.operators.Dedup.wordShingles(batch), index, minJ)
-          idempotentParquetWrite(flagged, outPath, batchId)
-          graft.operators.Lifecycle.release(flagged)
-        },
-      checkpointDir).start()
+  /** One staged-wave stream: each trigger takes one new file off
+    * `stagingDir` (one file per ingest wave) and runs `body(batch,
+    * batchId)` inside `foreachBatch` — the standard bridge, because each
+    * step is a batch join pipeline. */
+  private def stagedStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                           checkpointDir: Option[String])
+                          (body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val w = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(stagingDir)
+      .writeStream.outputMode("append")
+      .foreachBatch(body)
+    checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()
+  }
 
   /** Idempotent per-micro-batch parquet write: each batch overwrites
     * its OWN `batch_id=<id>` partition directory, so a re-executed
@@ -213,16 +189,60 @@ object StreamOps {
     * exactly-once bridge for a deterministic batch function. The
     * partition-style directory name makes a plain
     * `spark.read.parquet(outPath)` discover `batch_id` as a column
-    * (which wave produced each row — useful lineage in itself). */
-  private def idempotentParquetWrite(batch: DataFrame, outPath: String,
-                                     batchId: Long): Unit =
-    batch.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+    * (which wave produced each row — useful lineage in itself).
+    *
+    * Then the result's own checkpoint blocks are freed, so an unbounded
+    * stream accumulates no state beyond its index: a probe that
+    * materializes (the flag and top-k probes) returns a bare checkpoint.
+    * A lazy result owns no blocks — releasing it would free the
+    * checkpoints of its INPUTS — so it is left alone. */
+  private def idempotentParquetWrite(out: DataFrame, outPath: String,
+                                     batchId: Long): Unit = {
+    out.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+    if (out.queryExecution.analyzed.isInstanceOf[LogicalRDD]) Lifecycle.release(out)
+  }
 
-  private def withCheckpoint(
-      w: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-      checkpointDir: Option[String])
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    checkpointDir.fold(w)(d => w.option("checkpointLocation", d))
+  /** [[stagedStream]] probing a FROZEN index: each micro-batch's probe
+    * result is written with [[idempotentParquetWrite]]. */
+  private def probeStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                          outPath: String, checkpointDir: Option[String])
+                         (probe: DataFrame => DataFrame): StreamingQuery =
+    stagedStream(spark, stagingDir, schema, checkpointDir) { (batch, batchId) =>
+      idempotentParquetWrite(probe(batch), outPath, batchId)
+    }
+
+  /** The raw-PNG payload batch as (img_id, b0..b3) aHash rows. */
+  private def imageHashes(spark: SparkSession)(batch: DataFrame): DataFrame = {
+    import spark.implicits._
+    Multimodal.imageAHash(spark, batch.as[Multimodal.ImageVariant]).toDF()
+  }
+
+  /** The raw-WAV payload batch as band-median fingerprint rows (REAL
+    * decode, so trimmed AND re-gained re-uploads still match). */
+  private def audioPrints(spark: SparkSession)(batch: DataFrame): DataFrame = {
+    import spark.implicits._
+    Multimodal.audioFingerprint(spark, batch.as[Multimodal.AudioClip]).toDF()
+  }
+
+  /** Incremental corpus-vs-batch dedup at STREAMING cadence — the
+    * streaming face of [[graft.operators.Dedup.minhashLshAgainstCorpus]]:
+    * each micro-batch of new documents is flagged against a PREBUILT
+    * corpus index, so per-ingest cost ∝ the micro-batch. The caller
+    * stops the query and releases the index.
+    *
+    * Exactly-once across failure/restart: `foreachBatch` gives
+    * at-least-once delivery — a crash after the sink write but before
+    * the checkpoint commit re-executes the batch on restart — so the
+    * write is IDEMPOTENT per `batchId` ([[idempotentParquetWrite]]).
+    * Pass `checkpointDir` to make restarts resume from the recorded
+    * offsets (StreamingSpec kills a run mid-feed, deletes the commit
+    * marker to force a true batch re-execution, restarts, and asserts
+    * equality with the uninterrupted run). */
+  def incrementalDedupStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                             index: Dedup.CorpusIndex, minJ: Double, outPath: String,
+                             checkpointDir: Option[String] = None): StreamingQuery =
+    probeStream(spark, stagingDir, schema, outPath, checkpointDir)(batch =>
+      Dedup.flagAgainstCorpusIndex(Dedup.wordShingles(batch), index, minJ))
 
   /** Distribution-drift MONITOR at streaming cadence — the data-quality
     * sentinel of a production ingest: each micro-batch (one staged
@@ -237,422 +257,172 @@ object StreamOps {
     * reference; the reference is never recomputed. Byte-identical to
     * the batch twin [[graft.operators.TextAnalysis.waveDriftReport]]
     * on the same waves (StreamingSpec pins the equality). */
-  def driftMonitorStream(spark: SparkSession, stagingDir: String,
-                         schema: org.apache.spark.sql.types.StructType,
+  def driftMonitorStream(spark: SparkSession, stagingDir: String, schema: StructType,
                          refHist: DataFrame, outPath: String,
-                         checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withCheckpoint(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stagingDir)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          idempotentParquetWrite(
-            graft.operators.TextAnalysis.klAgainstRef(refHist, batch),
-            outPath, batchId)
-        },
-      checkpointDir).start()
+                         checkpointDir: Option[String] = None): StreamingQuery =
+    probeStream(spark, stagingDir, schema, outPath, checkpointDir)(batch =>
+      TextAnalysis.klAgainstRef(refHist, batch))
 
   /** Incremental IMAGE near-dup at streaming cadence — the multimodal
-    * twin of [[incrementalDedupStream]]: new images (raw PNG payloads)
-    * arrive as a parquet file stream, and each micro-batch is aHashed
-    * and probed against a PREBUILT corpus band index
-    * ([[graft.operators.Multimodal.FingerprintIndex]]) inside `foreachBatch`.
-    * Per-ingest cost is the batch's codec pass + banded candidate joins
-    * against the index; the corpus state is built once before the
-    * stream starts. Best-match rows append to a parquet sink; each
-    * batch's checkpoint blocks are freed as soon as its rows are
-    * written. Caller stops the query and releases the index
-    * ([[graft.operators.Multimodal.releaseFingerprintIndex]]). */
-  def imageNearDupStream(spark: SparkSession, stagingDir: String,
-                         schema: org.apache.spark.sql.types.StructType,
-                         index: graft.operators.Multimodal.FingerprintIndex,
-                         outPath: String,
-                         checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withCheckpoint(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stagingDir)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          import spark.implicits._
-          val hashes = graft.operators.Multimodal.imageAHash(
-            spark, batch.as[graft.operators.Multimodal.ImageVariant]).toDF()
-          val flagged = graft.operators.Multimodal.flagAgainstFingerprintIndex(
-            hashes, index)
-          idempotentParquetWrite(flagged, outPath, batchId)
-          graft.operators.Lifecycle.release(flagged)
-        },
-      checkpointDir).start()
+    * twin of [[incrementalDedupStream]]: each micro-batch of raw PNG
+    * payloads is aHashed and probed against a PREBUILT corpus
+    * [[graft.operators.Multimodal.FingerprintIndex]]. */
+  def imageNearDupStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                         index: Multimodal.FingerprintIndex, outPath: String,
+                         checkpointDir: Option[String] = None): StreamingQuery =
+    probeStream(spark, stagingDir, schema, outPath, checkpointDir)(batch =>
+      Multimodal.flagAgainstFingerprintIndex(imageHashes(spark)(batch), index))
 
-  /** Incremental AUDIO near-dup at streaming cadence — the audio twin
-    * of [[imageNearDupStream]], completing the text/image/audio
-    * incremental-dedup triangle: new clips (raw WAV payloads) arrive
-    * as a parquet file stream, each micro-batch is fingerprinted
-    * ([[graft.operators.Multimodal.audioFingerprint]] — REAL decode,
-    * band-median bits, so trimmed AND re-gained re-uploads still
-    * match) and probed against a prebuilt corpus fingerprint band
-    * index. The index machinery is [[graft.operators.Multimodal.FingerprintIndex]]
-    * verbatim: audio fingerprints share the 4×16-bit [[graft.operators.Multimodal.ImageHash]]
-    * layout, so the banded probe is modality-agnostic. Best-match rows
-    * append per batch (idempotent per `batch_id` — same exactly-once
-    * bridge, StreamingSpec kill/restart-proves it). */
-  def audioNearDupStream(spark: SparkSession, stagingDir: String,
-                         schema: org.apache.spark.sql.types.StructType,
-                         index: graft.operators.Multimodal.FingerprintIndex,
-                         outPath: String,
-                         checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withCheckpoint(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stagingDir)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          import spark.implicits._
-          val hashes = graft.operators.Multimodal.audioFingerprint(
-            spark, batch.as[graft.operators.Multimodal.AudioClip]).toDF()
-          val flagged = graft.operators.Multimodal.flagAgainstFingerprintIndex(
-            hashes, index, idOut = "clip_new")
-          idempotentParquetWrite(flagged, outPath, batchId)
-          graft.operators.Lifecycle.release(flagged)
-        },
-      checkpointDir).start()
+  /** Incremental AUDIO near-dup at streaming cadence — the audio twin of
+    * [[imageNearDupStream]]: audio fingerprints share the 4×16-bit
+    * [[graft.operators.Multimodal.ImageHash]] layout, so the
+    * FingerprintIndex probe is modality-agnostic. */
+  def audioNearDupStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                         index: Multimodal.FingerprintIndex, outPath: String,
+                         checkpointDir: Option[String] = None): StreamingQuery =
+    probeStream(spark, stagingDir, schema, outPath, checkpointDir)(batch =>
+      Multimodal.flagAgainstFingerprintIndex(audioPrints(spark)(batch), index,
+        idOut = "clip_new"))
 
-  /** SELF-ACCUMULATING incremental image dedup: like
-    * [[imageNearDupStream]], but after each micro-batch is flagged
-    * against the index, its fingerprints are ABSORBED into the index
-    * ([[graft.operators.Multimodal.absorbIntoFingerprintIndex]]) — so a wave-2
-    * re-upload of a wave-1 upload is caught, which a frozen index can
-    * never do (the defect class [[Similarity.absorbIvfBatch]] closes
-    * for the vector index). Each batch is flagged BEFORE it is
-    * absorbed (its members must not match themselves at Hamming 0).
-    * `indexRef` holds the advancing index: seed it with the corpus
-    * build, release `indexRef.get()` after the stream stops
-    * (superseded values share their cached legs with the successor).
-    * The batch is hashed once per role (flag + absorb) — a production
-    * deployment lands fingerprints in a durable table instead and
-    * rebuilds the in-memory index from it at restart, which is also
-    * the recovery story for the absorbed state (the checkpoint only
-    * replays offsets, not process memory). */
-  def imageNearDupAccumStream(spark: SparkSession, stagingDir: String,
-                              schema: org.apache.spark.sql.types.StructType,
-                              indexRef: java.util.concurrent.atomic.AtomicReference[
-                                graft.operators.Multimodal.FingerprintIndex],
-                              outPath: String,
-                              checkpointDir: Option[String] = None,
-                              maxLegs: Int = 24)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withCheckpoint(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stagingDir)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          import spark.implicits._
-          // Absorb-watermark replay guard (shared by every accum
-          // stream): a batch at or below the index's lastBatchId was
-          // already flagged, written, AND absorbed before a crash ate
-          // the commit marker — the sink write precedes the absorb, so
-          // its partition is already correct. Re-running it would flag
-          // the batch against its own absorbed copy (self-matches at
-          // Hamming 0 / Jaccard 1 overwrite the partition with wrong
-          // rows) and double-count the absorb, so the replay is a
-          // complete no-op. Holds for a same-process restart (the ref
-          // kept the absorbed index) AND for a re-seed from a durable
-          // save taken after the absorb (the watermark persists
-          // through save/load).
-          if (batchId > indexRef.get().lastBatchId) {
-            def hashed = graft.operators.Multimodal.imageAHash(
-              spark, batch.as[graft.operators.Multimodal.ImageVariant]).toDF()
-            val flagged = graft.operators.Multimodal.flagAgainstFingerprintIndex(
-              hashed, indexRef.get())
-            idempotentParquetWrite(flagged, outPath, batchId)
-            graft.operators.Lifecycle.release(flagged)
-            val absorbed = graft.operators.Multimodal.absorbIntoFingerprintIndex(
-              indexRef.get(), hashed)
-            // Bound the leg count on an unbounded stream: past the budget,
-            // materialize the lazy unions into fresh single legs (probe
-            // results unchanged) so block-manager entries and per-probe
-            // union fanout stay O(1) in stream lifetime.
-            indexRef.set(
-              (if (absorbed.cached.length >= maxLegs)
-                graft.operators.Multimodal.compactFingerprintIndex(absorbed)
-              else absorbed).copy(lastBatchId = batchId))
-          }
-        },
-      checkpointDir).start()
+  /** The replay guard every accum stream runs: a batch at or below the
+    * index's `lastBatchId` was already written AND absorbed before a
+    * crash ate the commit marker — its partition is already correct, and
+    * re-running it would probe the batch against its own absorbed copy
+    * (self-matches at Hamming 0 / Jaccard 1 overwrite the partition with
+    * wrong rows) and double-count the absorb, so the replay is a
+    * complete no-op. Holds for a same-process restart (the ref kept the
+    * absorbed index) AND for a re-seed from a durable save taken after
+    * the absorb (the watermark persists through save/load). Otherwise
+    * `step` writes the batch's result and returns the advanced index,
+    * which `indexRef` takes with the watermark at this batch — only
+    * after the write, so a failed write leaves the batch to replay. */
+  private def guardedStream[I <: AccumIndex[I]](
+      spark: SparkSession, stagingDir: String, schema: StructType,
+      indexRef: AtomicReference[I], checkpointDir: Option[String])
+      (step: (I, DataFrame, Long) => I): StreamingQuery =
+    stagedStream(spark, stagingDir, schema, checkpointDir) { (batch, batchId) =>
+      if (batchId > indexRef.get().lastBatchId)
+        indexRef.set(step(indexRef.get(), batch, batchId).withLastBatchId(batchId))
+    }
 
-  /** SELF-ACCUMULATING incremental AUDIO dedup — the audio face of
-    * [[imageNearDupAccumStream]] (the two share the modality-agnostic
-    * [[graft.operators.Multimodal.FingerprintIndex]] over the 4×16-bit hash
-    * layout): each micro-batch of clips is fingerprinted, flagged
-    * against the index, landed idempotently (with the audio column
-    * names), then ABSORBED with the shared maxLegs compaction budget. */
-  def audioNearDupAccumStream(spark: SparkSession, stagingDir: String,
-                              schema: org.apache.spark.sql.types.StructType,
-                              indexRef: java.util.concurrent.atomic.AtomicReference[
-                                graft.operators.Multimodal.FingerprintIndex],
-                              outPath: String,
-                              checkpointDir: Option[String] = None,
-                              maxLegs: Int = 24)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withCheckpoint(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stagingDir)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          import spark.implicits._
-          // Absorb-watermark replay guard — see [[imageNearDupAccumStream]].
-          if (batchId > indexRef.get().lastBatchId) {
-            def hashed = graft.operators.Multimodal.audioFingerprint(
-              spark, batch.as[graft.operators.Multimodal.AudioClip]).toDF()
-            val flagged = graft.operators.Multimodal.flagAgainstFingerprintIndex(
-              hashed, indexRef.get(), idOut = "clip_new")
-            idempotentParquetWrite(flagged, outPath, batchId)
-            graft.operators.Lifecycle.release(flagged)
-            val absorbed = graft.operators.Multimodal.absorbIntoFingerprintIndex(
-              indexRef.get(), hashed)
-            indexRef.set(
-              (if (absorbed.cached.length >= maxLegs)
-                graft.operators.Multimodal.compactFingerprintIndex(absorbed)
-              else absorbed).copy(lastBatchId = batchId))
-          }
-        },
-      checkpointDir).start()
+  /** SELF-ACCUMULATING incremental curation — the one loop behind every
+    * accum stream: per micro-batch, after the replay guard, the
+    * `prep`ared batch is probed against the ADVANCING index and the
+    * result written idempotently; then the batch is ABSORBED, so later
+    * waves match against it too (a frozen index never catches a wave-2
+    * near-dup of a wave-1 arrival); then the index compacts once it
+    * holds `maxLegs` legs, probe-identically. A batch is probed BEFORE
+    * it is absorbed: it must not match itself. `indexRef` holds the
+    * advancing index — seed it with a build or
+    * [[graft.operators.AccumIndex.load]], and save / release
+    * `indexRef.get()` after the stream stops; the checkpoint replays
+    * offsets only, not process memory. */
+  def accumStream[I <: AccumIndex[I]](spark: SparkSession, stagingDir: String,
+                                      schema: StructType, indexRef: AtomicReference[I],
+                                      outPath: String, checkpointDir: Option[String] = None,
+                                      maxLegs: Int = AccumIndex.LegBudget)
+                                     (probe: (I, DataFrame) => DataFrame,
+                                      prep: DataFrame => DataFrame = identity)
+      : StreamingQuery =
+    guardedStream(spark, stagingDir, schema, indexRef, checkpointDir) {
+      (index, batch, batchId) =>
+        val in = prep(batch)
+        idempotentParquetWrite(probe(index, in), outPath, batchId)
+        index.absorb(in).budgeted(maxLegs)
+    }
 
-  /** SELF-ACCUMULATING incremental text dedup — the text face of
-    * [[imageNearDupAccumStream]]: each micro-batch of documents is
-    * flagged against the corpus index, then its shingles are ABSORBED
-    * ([[graft.operators.Dedup.absorbIntoCorpusIndex]]) so later waves
-    * also match against it. Flag-before-absorb keeps a batch from
-    * matching itself. Same `indexRef` / release / durable-table
-    * restart contract as the image variant. */
-  def incrementalDedupAccumStream(spark: SparkSession, stagingDir: String,
-                                  schema: org.apache.spark.sql.types.StructType,
-                                  indexRef: java.util.concurrent.atomic.AtomicReference[
-                                    graft.operators.Dedup.CorpusIndex],
+  /** [[accumStream]] over raw PNG payloads: aHash, flag against the
+    * [[graft.operators.Multimodal.FingerprintIndex]], absorb. */
+  def imageNearDupAccumStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                              indexRef: AtomicReference[Multimodal.FingerprintIndex],
+                              outPath: String, checkpointDir: Option[String] = None)
+      : StreamingQuery =
+    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
+      (i, h) => Multimodal.flagAgainstFingerprintIndex(h, i), imageHashes(spark))
+
+  /** [[accumStream]] over raw WAV payloads: fingerprint, flag (audio
+    * column names), absorb. */
+  def audioNearDupAccumStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                              indexRef: AtomicReference[Multimodal.FingerprintIndex],
+                              outPath: String, checkpointDir: Option[String] = None)
+      : StreamingQuery =
+    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
+      (i, h) => Multimodal.flagAgainstFingerprintIndex(h, i, idOut = "clip_new"),
+      audioPrints(spark))
+
+  /** [[accumStream]] over documents: shingle, flag against the
+    * [[graft.operators.Dedup.CorpusIndex]], absorb. */
+  def incrementalDedupAccumStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                                  indexRef: AtomicReference[Dedup.CorpusIndex],
                                   minJ: Double, outPath: String,
-                                  checkpointDir: Option[String] = None,
-                                  maxLegs: Int = 36)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withCheckpoint(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stagingDir)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // Absorb-watermark replay guard — see [[imageNearDupAccumStream]].
-          if (batchId > indexRef.get().lastBatchId) {
-            def shingled = graft.operators.Dedup.wordShingles(batch)
-            val flagged = graft.operators.Dedup.flagAgainstCorpusIndex(
-              shingled, indexRef.get(), minJ)
-            idempotentParquetWrite(flagged, outPath, batchId)
-            graft.operators.Lifecycle.release(flagged)
-            val absorbed = graft.operators.Dedup.absorbIntoCorpusIndex(
-              indexRef.get(), shingled)
-            // Same leg budget as the image variant: compaction keeps an
-            // unbounded stream's cached-leg count O(1), probe-identical.
-            indexRef.set(
-              (if (absorbed.cached.length >= maxLegs)
-                graft.operators.Dedup.compactCorpusIndex(absorbed)
-              else absorbed).copy(lastBatchId = batchId))
-          }
-        },
-      checkpointDir).start()
+                                  checkpointDir: Option[String] = None): StreamingQuery =
+    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
+      (i, sh) => Dedup.flagAgainstCorpusIndex(sh, i, minJ), Dedup.wordShingles(_))
 
-  /** SELF-ACCUMULATING EMBEDDING near-dup at streaming cadence — the
-    * vector face of [[incrementalDedupAccumStream]]: each arriving
-    * embedding batch is flagged against the hyperplane-LSH index
-    * ([[graft.operators.Dedup.flagAgainstEmbeddingIndex]] — banded
-    * candidates, exact-cosine verify), the flags land idempotently,
-    * then the batch is absorbed so later waves match against it too.
-    * Same leg budget / compaction / durable-table restart contract as
-    * the text variant. */
-  def embedNearDupAccumStream(spark: SparkSession, stagingDir: String,
-                              schema: org.apache.spark.sql.types.StructType,
-                              indexRef: java.util.concurrent.atomic.AtomicReference[
-                                graft.operators.Dedup.EmbeddingIndex],
+  /** [[accumStream]] over embeddings: banded candidates + exact-cosine
+    * verify against the [[graft.operators.Dedup.EmbeddingIndex]], absorb. */
+  def embedNearDupAccumStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                              indexRef: AtomicReference[Dedup.EmbeddingIndex],
                               minCos: Double, outPath: String,
-                              checkpointDir: Option[String] = None,
-                              maxLegs: Int = 24)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withCheckpoint(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stagingDir)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // Absorb-watermark replay guard — see [[imageNearDupAccumStream]].
-          if (batchId > indexRef.get().lastBatchId) {
-            val flagged = graft.operators.Dedup.flagAgainstEmbeddingIndex(
-              batch, indexRef.get(), minCos)
-            idempotentParquetWrite(flagged, outPath, batchId)
-            graft.operators.Lifecycle.release(flagged)
-            val absorbed = graft.operators.Dedup.absorbIntoEmbeddingIndex(
-              indexRef.get(), batch)
-            indexRef.set(
-              (if (absorbed.cached.length >= maxLegs)
-                graft.operators.Dedup.compactEmbeddingIndex(absorbed)
-              else absorbed).copy(lastBatchId = batchId))
-          }
-        },
-      checkpointDir).start()
+                              checkpointDir: Option[String] = None): StreamingQuery =
+    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
+      (i, b) => Dedup.flagAgainstEmbeddingIndex(b, i, minCos))
 
-  /** SELF-ACCUMULATING IVF maintenance at streaming cadence — the
-    * vector face of [[incrementalDedupAccumStream]]: each arriving
-    * embedding batch is scored against the ADVANCING index
-    * ([[graft.operators.Similarity.ivfReassign]] — the per-list
-    * staleness report a serving pipeline watches for re-centroid
-    * decisions), the report lands idempotently per `batch_id`, and the
-    * batch is absorbed ([[graft.operators.Similarity.absorbIvfBatch]])
-    * so the NEXT wave's growth/drift reads against everything already
-    * ingested, not the original build forever. No leg budget needed:
-    * absorb merges |centroids|-row stats and releases the superseded
-    * frame, so index state is O(|centroids|) regardless of stream
-    * lifetime. Restart: the in-memory index is process state — seed
-    * `indexRef` from [[graft.operators.Similarity.loadIvfIndex]] and
-    * save after ([[graft.operators.Similarity.saveIvfIndex]]); the
-    * checkpoint replays offsets only. */
-  def ivfMonitorAccumStream(spark: SparkSession, stagingDir: String,
-                            schema: org.apache.spark.sql.types.StructType,
-                            indexRef: java.util.concurrent.atomic.AtomicReference[
-                              graft.operators.Similarity.IvfIndex],
-                            outPath: String,
-                            checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withCheckpoint(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stagingDir)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // Absorb-watermark replay guard — see [[imageNearDupAccumStream]].
-          // Here it is the ONLY possible guard: corpusStats retains no
-          // vec_ids to anti-join a replayed batch away, so without the
-          // watermark a replay double-counts old_size/sim_sum forever.
-          if (batchId > indexRef.get().lastBatchId) {
-            idempotentParquetWrite(
-              graft.operators.Similarity.ivfReassign(indexRef.get(), batch),
-              outPath, batchId)
-            indexRef.set(graft.operators.Similarity.absorbIvfBatch(
-              indexRef.get(), batch).copy(lastBatchId = batchId))
-          }
-        },
-      checkpointDir).start()
+  /** [[accumStream]] as IVF maintenance: each embedding batch's per-list
+    * staleness report ([[graft.operators.Similarity.ivfReassign]] — what
+    * a serving pipeline watches for re-centroid decisions) is written,
+    * then the batch is absorbed, so the NEXT wave's growth/drift reads
+    * against everything already ingested. */
+  def ivfMonitorAccumStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                            indexRef: AtomicReference[Similarity.IvfIndex],
+                            outPath: String, checkpointDir: Option[String] = None)
+      : StreamingQuery =
+    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
+      Similarity.ivfReassign)
 
-  /** SELF-ACCUMULATING sketch-ANN SERVING stream — the retrieval face
-    * of [[embedNearDupAccumStream]]: each arriving embedding batch is
-    * answered top-k against the sketch index
-    * ([[graft.operators.Similarity.topKAgainstSketchIndex]] — query
-    * sketches broadcast, one xor+popcount pass over the corpus legs,
-    * exact-cosine re-rank), the answers land idempotently per
-    * `batch_id`, then the batch is ABSORBED
-    * ([[graft.operators.Similarity.absorbIntoSketchIndex]]) so later
-    * queries retrieve against everything already ingested — the
-    * "index the traffic" serving pattern. Same answer-before-absorb
-    * ordering (a batch must not retrieve itself), leg budget /
-    * compaction, `lastBatchId` replay guard, and durable
-    * save/load restart contract as the rest of the accum family. */
-  def hammingAnnAccumStream(spark: SparkSession, stagingDir: String,
-                            schema: org.apache.spark.sql.types.StructType,
-                            indexRef: java.util.concurrent.atomic.AtomicReference[
-                              graft.operators.Similarity.SketchIndex],
+  /** [[accumStream]] as sketch-ANN SERVING: each embedding batch is
+    * answered top-k against the [[graft.operators.Similarity.SketchIndex]]
+    * (query sketches broadcast, one xor+popcount pass, exact-cosine
+    * re-rank), then absorbed — the "index the traffic" pattern. */
+  def hammingAnnAccumStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                            indexRef: AtomicReference[Similarity.SketchIndex],
                             k: Int, outPath: String,
-                            checkpointDir: Option[String] = None,
-                            maxLegs: Int = 24)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withCheckpoint(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stagingDir)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // Absorb-watermark replay guard — see [[imageNearDupAccumStream]].
-          if (batchId > indexRef.get().lastBatchId) {
-            val ranked = graft.operators.Similarity.topKAgainstSketchIndex(
-              batch, indexRef.get(), k)
-            idempotentParquetWrite(ranked, outPath, batchId)
-            graft.operators.Lifecycle.release(ranked)
-            val absorbed = graft.operators.Similarity.absorbIntoSketchIndex(
-              indexRef.get(), batch)
-            indexRef.set(
-              (if (absorbed.cached.length >= maxLegs)
-                graft.operators.Similarity.compactSketchIndex(absorbed)
-              else absorbed).copy(lastBatchId = batchId))
-          }
-        },
-      checkpointDir).start()
+                            checkpointDir: Option[String] = None): StreamingQuery =
+    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
+      (i, b) => Similarity.topKAgainstSketchIndex(b, i, k))
 
-  /** SELF-ACCUMULATING KMV cardinality sentinel — the sketch face of
-    * the accumulating-index family, and the one member that is
-    * replay-safe WITHOUT the absorb watermark: KMV merge is set-union
-    * + k-min, which is IDEMPOTENT, so a checkpoint-replayed batch
-    * folds to the bit-identical sketch (the guard below only skips
-    * redundant WORK — correctness does not depend on it, and
-    * StreamingSpec re-absorbs a batch with the guard bypassed to pin
-    * exactly that). Each micro-batch of documents: absorb into the
-    * per-source trigram-cardinality sketch
-    * ([[graft.operators.TextAnalysis.absorbIntoKmvIndex]] — O(sources·k)
-    * state, absorb IS compaction), then land the post-absorb
-    * cardinality card idempotently (partition = batch_id, so the
-    * highest partition is the current dataset card). */
-  /** SELF-ACCUMULATING DSIR selection — continuous data selection at
-    * ingestion cadence: each arriving wave is SCORED against the
-    * current feature state (pre-absorb, the family convention), landed
-    * idempotently, then its token counts are absorbed into the raw
-    * histogram so later waves score against sharper importance
-    * weights. Absorb is count-addition (not idempotent), so the
-    * `lastBatchId` watermark guards checkpoint replays exactly like
-    * the dedup/image/audio/embedding/IVF members; the sink write
-    * precedes the absorb, so a replayed batch's partition is already
-    * correct and the replay is a complete no-op. State is two
-    * ≤buckets-row histograms — O(1) legs by construction. */
-  def dsirSelectionStream(spark: SparkSession, stagingDir: String,
-                          schema: org.apache.spark.sql.types.StructType,
-                          indexRef: java.util.concurrent.atomic.AtomicReference[
-                            graft.operators.TextAnalysis.DsirIndex],
-                          outPath: String,
-                          checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withCheckpoint(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stagingDir)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (batchId > indexRef.get().lastBatchId) {
-            val scored = graft.operators.TextAnalysis
-              .scoreAgainstDsirIndex(indexRef.get(), batch)
-            idempotentParquetWrite(scored, outPath, batchId)
-            indexRef.set(graft.operators.TextAnalysis
-              .absorbIntoDsirIndex(indexRef.get(), batch)
-              .copy(lastBatchId = batchId))
-          }
-        },
-      checkpointDir).start()
+  /** [[accumStream]] as continuous DSIR data selection: each wave is
+    * scored against the current feature state, then its token counts
+    * are absorbed into the raw histogram, so later waves score against
+    * sharper importance weights. */
+  def dsirSelectionStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                          indexRef: AtomicReference[TextAnalysis.DsirIndex],
+                          outPath: String, checkpointDir: Option[String] = None)
+      : StreamingQuery =
+    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
+      TextAnalysis.scoreAgainstDsirIndex)
 
-  def kmvCardinalityAccumStream(spark: SparkSession, stagingDir: String,
-                                schema: org.apache.spark.sql.types.StructType,
-                                indexRef: java.util.concurrent.atomic.AtomicReference[
-                                  graft.operators.TextAnalysis.KmvIndex],
-                                outPath: String,
-                                checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    withCheckpoint(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(stagingDir)
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (batchId > indexRef.get().lastBatchId) {
-            val absorbed = graft.operators.TextAnalysis
-              .absorbIntoKmvIndex(indexRef.get(), batch)
-              .copy(lastBatchId = batchId)
-            // Sink write BEFORE the watermark moves (the family-wide
-            // ordering): if the write throws, the ref is untouched and
-            // the replayed batch re-absorbs — harmless, KMV merge is
-            // idempotent — and re-writes. The inverted order would
-            // skip the replay and lose the batch's card forever.
-            idempotentParquetWrite(
-              graft.operators.TextAnalysis.kmvCardinalityReport(absorbed),
-              outPath, batchId)
-            indexRef.set(absorbed)
-          }
-        },
-      checkpointDir).start()
+  /** SELF-ACCUMULATING KMV cardinality sentinel: each micro-batch of
+    * documents is absorbed into the per-source trigram-cardinality
+    * sketch ([[graft.operators.TextAnalysis.KmvIndex]]), then the
+    * POST-absorb cardinality card lands idempotently (partition =
+    * batch_id, so the highest partition is the current dataset card) —
+    * the one stream that writes after absorbing, so it runs its own step
+    * under the shared replay guard. KMV merge is idempotent, so a
+    * replayed batch folds to the bit-identical sketch: the guard only
+    * skips redundant WORK (StreamingSpec re-absorbs a batch with the
+    * guard bypassed to pin exactly that), and a failed write leaves the
+    * ref untouched, so the replay re-absorbs harmlessly and re-writes. */
+  def kmvCardinalityAccumStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                                indexRef: AtomicReference[TextAnalysis.KmvIndex],
+                                outPath: String, checkpointDir: Option[String] = None)
+      : StreamingQuery =
+    guardedStream(spark, stagingDir, schema, indexRef, checkpointDir) {
+      (index, batch, batchId) =>
+        val absorbed = index.absorb(batch)
+        idempotentParquetWrite(TextAnalysis.kmvCardinalityReport(absorbed), outPath, batchId)
+        absorbed
+    }
 
   case class UserEvent(user_id: Long, value: Double)
   case class UserRunning(user_id: Long, n: Long, total: Double)

@@ -38,16 +38,15 @@ class IndexDurabilitySpec extends AnyFunSuite {
     // An unabsorbed index's frames ARE its only cached legs: compaction
     // must hand it back untouched (re-persist + release would drop the
     // only copy).
-    assert(Dedup.compactCorpusIndex(base) eq base)
-    val absorbed = Dedup.absorbIntoCorpusIndex(
-      Dedup.absorbIntoCorpusIndex(base, Dedup.wordShingles(wave(1))),
-      Dedup.wordShingles(wave(2)))
-    assert(absorbed.cached.length == 9)
+    assert(base.compact() eq base)
+    val absorbed = base.absorb(Dedup.wordShingles(wave(1)))
+      .absorb(Dedup.wordShingles(wave(2)))
+    assert(absorbed.legs.length == 9)
     val want = probeRows(absorbed)
-    val compacted = Dedup.compactCorpusIndex(absorbed)
-    assert(compacted.cached.length == 3)
+    val compacted = absorbed.compact()
+    assert(compacted.legs.length == 3)
     val got = probeRows(compacted)
-    Dedup.releaseCorpusIndex(compacted)
+    compacted.release()
     assert(got.nonEmpty && got == want)
     // Wave-2 best matches survive compaction (the absorbed state is
     // still in the index, just re-materialized).
@@ -56,15 +55,14 @@ class IndexDurabilitySpec extends AnyFunSuite {
 
   test("saveCorpusIndex/loadCorpusIndex: a reloaded index probes identically") {
     val path = tmp("corpusidx")
-    val absorbed = Dedup.absorbIntoCorpusIndex(
-      Dedup.buildCorpusIndex(Dedup.wordShingles(docs)),
-      Dedup.wordShingles(wave(2)))
+    val absorbed = Dedup.buildCorpusIndex(Dedup.wordShingles(docs))
+      .absorb(Dedup.wordShingles(wave(2)))
     val want = probeRows(absorbed)
-    Dedup.saveCorpusIndex(absorbed, path)
-    Dedup.releaseCorpusIndex(absorbed)
+    absorbed.save(path)
+    absorbed.release()
     val reloaded = Dedup.loadCorpusIndex(spark, path)
     val got = probeRows(reloaded)
-    Dedup.releaseCorpusIndex(reloaded)
+    reloaded.release()
     assert(got.nonEmpty && got == want)
     // The save flattened the absorbed wave into the table: wave-2 best
     // matches are reachable after restart.
@@ -83,15 +81,16 @@ class IndexDurabilitySpec extends AnyFunSuite {
     }
     val ref = new java.util.concurrent.atomic.AtomicReference(
       Dedup.buildCorpusIndex(Dedup.wordShingles(docs)))
-    val q = graft.streaming.StreamOps.incrementalDedupAccumStream(
-      spark, staging, wave(1).schema, ref, 0.6, outPath, maxLegs = 6)
+    val q = graft.streaming.StreamOps.accumStream(
+      spark, staging, wave(1).schema, ref, outPath, maxLegs = 6)(
+      (i, sh) => Dedup.flagAgainstCorpusIndex(sh, i, 0.6), Dedup.wordShingles(_))
     try q.processAllAvailable() finally q.stop()
-    assert(ref.get().cached.length <= 6,
-      s"leg budget not enforced: ${ref.get().cached.length} legs")
+    assert(ref.get().legs.length <= 6,
+      s"leg budget not enforced: ${ref.get().legs.length} legs")
     val streamed = spark.read.parquet(outPath).collect()
       .map(r => (r.getAs[Long]("doc_new"), r.getAs[Long]("best_match"),
         r.getAs[Double]("jaccard"))).toSet
-    Dedup.releaseCorpusIndex(ref.get())
+    ref.get().release()
     // Batch face without any compaction: identical flags.
     var idx = Dedup.buildCorpusIndex(Dedup.wordShingles(docs))
     val batch = (1 to 3).flatMap { w =>
@@ -99,10 +98,10 @@ class IndexDurabilitySpec extends AnyFunSuite {
       val out = Dedup.flagAgainstCorpusIndex(sh, idx, 0.6).collect()
         .map(r => (r.getAs[Long]("doc_new"), r.getAs[Long]("best_match"),
           r.getAs[Double]("jaccard")))
-      idx = Dedup.absorbIntoCorpusIndex(idx, sh)
+      idx = idx.absorb(sh)
       out
     }.toSet
-    Dedup.releaseCorpusIndex(idx)
+    idx.release()
     assert(streamed.nonEmpty && streamed == batch)
   }
 
@@ -120,16 +119,16 @@ class IndexDurabilitySpec extends AnyFunSuite {
 
   test("compactFingerprintIndex: probe-identical, legs collapse to 3, no-op when unabsorbed") {
     val base = Multimodal.buildFingerprintIndex(imgCorpus, 6)
-    assert(Multimodal.compactFingerprintIndex(base) eq base)
-    val absorbed = Multimodal.absorbIntoFingerprintIndex(base, imgWave(1))
+    assert(base.compact() eq base)
+    val absorbed = base.absorb(imgWave(1))
     // 3 legs per wave since the distinct-hash compression (bands +
     // hashMin + raw hashes).
-    assert(absorbed.cached.length == 6)
+    assert(absorbed.legs.length == 6)
     val want = imgProbe(absorbed)
-    val compacted = Multimodal.compactFingerprintIndex(absorbed)
-    assert(compacted.cached.length == 3)
+    val compacted = absorbed.compact()
+    assert(compacted.legs.length == 3)
     val got = imgProbe(compacted)
-    Multimodal.releaseFingerprintIndex(compacted)
+    compacted.release()
     assert(got.nonEmpty && got == want)
     assert(got.exists(_._2 % 4 == 1),
       "wave-1 best matches must survive compaction")
@@ -137,17 +136,16 @@ class IndexDurabilitySpec extends AnyFunSuite {
 
   test("saveFingerprintIndex/loadFingerprintIndex: reloaded index probes identically, threshold preserved") {
     val path = tmp("imgidx")
-    val absorbed = Multimodal.absorbIntoFingerprintIndex(
-      Multimodal.buildFingerprintIndex(imgCorpus, 6), imgWave(1))
+    val absorbed = Multimodal.buildFingerprintIndex(imgCorpus, 6).absorb(imgWave(1))
     val want = imgProbe(absorbed)
-    Multimodal.saveFingerprintIndex(absorbed, path)
-    Multimodal.releaseFingerprintIndex(absorbed)
+    absorbed.save(path)
+    absorbed.release()
     val reloaded = Multimodal.loadFingerprintIndex(spark, path)
     // The band layout is a function of the build threshold: a reload
     // that lost it would band different bit ranges and drop collisions.
     assert(reloaded.maxHamming == 6)
     val got = imgProbe(reloaded)
-    Multimodal.releaseFingerprintIndex(reloaded)
+    reloaded.release()
     assert(got.nonEmpty && got == want)
     assert(got.exists(_._2 % 4 == 1))
   }
@@ -170,14 +168,14 @@ class IndexDurabilitySpec extends AnyFunSuite {
 
   test("compactEmbeddingIndex: probe-identical, legs collapse to 2, no-op when unabsorbed") {
     val base = Dedup.buildEmbeddingIndex(emb, 64)
-    assert(Dedup.compactEmbeddingIndex(base) eq base)
-    val absorbed = Dedup.absorbIntoEmbeddingIndex(base, embWave(1))
-    assert(absorbed.cached.length == 4)
+    assert(base.compact() eq base)
+    val absorbed = base.absorb(embWave(1))
+    assert(absorbed.legs.length == 4)
     val want = embProbe(absorbed)
-    val compacted = Dedup.compactEmbeddingIndex(absorbed)
-    assert(compacted.cached.length == 2)
+    val compacted = absorbed.compact()
+    assert(compacted.legs.length == 2)
     val got = embProbe(compacted)
-    Dedup.releaseEmbeddingIndex(compacted)
+    compacted.release()
     assert(got.nonEmpty && got == want)
     assert(got.exists(m => m._2 >= 1000000L && m._2 < 2000000L),
       "wave-1 best matches must survive compaction")
@@ -185,15 +183,14 @@ class IndexDurabilitySpec extends AnyFunSuite {
 
   test("saveEmbeddingIndex/loadEmbeddingIndex: reloaded index probes identically") {
     val path = tmp("embidx")
-    val absorbed = Dedup.absorbIntoEmbeddingIndex(
-      Dedup.buildEmbeddingIndex(emb, 64), embWave(1))
+    val absorbed = Dedup.buildEmbeddingIndex(emb, 64).absorb(embWave(1))
     val want = embProbe(absorbed)
-    Dedup.saveEmbeddingIndex(absorbed, path)
-    Dedup.releaseEmbeddingIndex(absorbed)
+    absorbed.save(path)
+    absorbed.release()
     val reloaded = Dedup.loadEmbeddingIndex(spark, path)
     assert(reloaded.dim == 64)
     val got = embProbe(reloaded)
-    Dedup.releaseEmbeddingIndex(reloaded)
+    reloaded.release()
     assert(got.nonEmpty && got == want)
     assert(got.exists(m => m._2 >= 1000000L && m._2 < 2000000L))
   }
@@ -207,14 +204,14 @@ class IndexDurabilitySpec extends AnyFunSuite {
 
   test("compactSketchIndex: probe-identical, legs collapse to 2, no-op when unabsorbed") {
     val base = Similarity.buildSketchIndex(emb, 64, 20)
-    assert(Similarity.compactSketchIndex(base) eq base)
-    val absorbed = Similarity.absorbIntoSketchIndex(base, embWave(1))
-    assert(absorbed.cached.length == 4)
+    assert(base.compact() eq base)
+    val absorbed = base.absorb(embWave(1))
+    assert(absorbed.legs.length == 4)
     val want = annProbe(absorbed)
-    val compacted = Similarity.compactSketchIndex(absorbed)
-    assert(compacted.cached.length == 2)
+    val compacted = absorbed.compact()
+    assert(compacted.legs.length == 2)
     val got = annProbe(compacted)
-    Similarity.releaseSketchIndex(compacted)
+    compacted.release()
     assert(got.nonEmpty && got == want)
     assert(got.exists(m => m._3 >= 1000000L && m._3 < 2000000L),
       "wave-1 neighbours survive compaction")
@@ -222,17 +219,16 @@ class IndexDurabilitySpec extends AnyFunSuite {
 
   test("saveSketchIndex/loadSketchIndex: reloaded index answers identically, watermark preserved") {
     val path = tmp("annidx")
-    val absorbed = Similarity.absorbIntoSketchIndex(
-      Similarity.buildSketchIndex(emb, 64, 20), embWave(1))
+    val absorbed = Similarity.buildSketchIndex(emb, 64, 20).absorb(embWave(1))
       .copy(lastBatchId = 3L)
     val want = annProbe(absorbed)
-    Similarity.saveSketchIndex(absorbed, path)
-    Similarity.releaseSketchIndex(absorbed)
+    absorbed.save(path)
+    absorbed.release()
     val reloaded = Similarity.loadSketchIndex(spark, path)
     assert(reloaded.dim == 64 && reloaded.maxHamming == 20 &&
       reloaded.lastBatchId == 3L)
     val got = annProbe(reloaded)
-    Similarity.releaseSketchIndex(reloaded)
+    reloaded.release()
     assert(got.nonEmpty && got == want)
     assert(got.exists(m => m._3 >= 1000000L && m._3 < 2000000L))
   }
@@ -250,20 +246,44 @@ class IndexDurabilitySpec extends AnyFunSuite {
         (r.getAs[Long]("old_size"), r.getAs[java.math.BigDecimal]("sim_sum")))
         .toMap
     // Uninterrupted: build → absorb b1 → absorb b2.
-    val full = Similarity.absorbIvfBatch(
-      Similarity.absorbIvfBatch(Similarity.buildIvfIndex(corpus, 61L), b1), b2)
+    val full = Similarity.buildIvfIndex(corpus, 61L).absorb(b1).absorb(b2)
     val want = stats(full)
-    Similarity.releaseIvfIndex(full)
+    full.release()
     // Interrupted: absorb b1, save, RESTART (load), absorb b2.
-    val preSave = Similarity.absorbIvfBatch(
-      Similarity.buildIvfIndex(corpus, 61L), b1)
-    Similarity.saveIvfIndex(preSave, path)
-    Similarity.releaseIvfIndex(preSave)
-    val resumed = Similarity.absorbIvfBatch(
-      Similarity.loadIvfIndex(spark, path), b2)
+    val preSave = Similarity.buildIvfIndex(corpus, 61L).absorb(b1)
+    preSave.save(path)
+    preSave.release()
+    val resumed = Similarity.loadIvfIndex(spark, path).absorb(b2)
     val got = stats(resumed)
     assert(resumed.centStride == 61L)
-    Similarity.releaseIvfIndex(resumed)
+    resumed.release()
+    assert(got.nonEmpty && got == want)
+  }
+
+  test("a save that fails mid-write leaves the previous save whole") {
+    val path = tmp("ivfcrash")
+    val emb = Tables.embeddings(spark, TestSpark.sf0001)
+    val corpus = emb.filter(pmod(col("vec_id"), lit(10L)) < 6L)
+    val b1 = emb.filter(pmod(col("vec_id"), lit(10L)).isin(6L, 7L))
+    val b2 = emb.filter(pmod(col("vec_id"), lit(10L)).isin(8L, 9L))
+    def report(idx: Similarity.IvfIndex) =
+      Similarity.ivfReassign(idx, b2).collect().toSet
+    val saved = Similarity.buildIvfIndex(corpus, 61L).absorb(b1).copy(lastBatchId = 1L)
+    saved.save(path)
+    val want = report(saved)
+    // The next save's stats frame throws partway through its write:
+    // centroids are already written by then, stats only in part.
+    val crash = udf((cid: Long) =>
+      if (cid % 2 == 1) throw new IllegalStateException("crash mid-save") else cid)
+    val torn = saved.copy(lastBatchId = 2L,
+      corpusStats = saved.corpusStats.repartition(4)
+        .withColumn("cid", crash(col("cid"))))
+    intercept[Exception](torn.save(path))
+    saved.release()
+    val reloaded = Similarity.loadIvfIndex(spark, path)
+    assert(reloaded.lastBatchId == 1L)
+    val got = report(reloaded)
+    reloaded.release()
     assert(got.nonEmpty && got == want)
   }
 
@@ -273,20 +293,19 @@ class IndexDurabilitySpec extends AnyFunSuite {
     def wave(r: Int) = docs.filter(col("doc_id") % 3 === r)
     val path = s"${sys.props("java.io.tmpdir")}/graft_dsiridx_" +
       s"${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
-    val idx = TextAnalysis.absorbIntoDsirIndex(
-      TextAnalysis.buildDsirIndex(target, wave(0), 512), wave(1))
+    val idx = TextAnalysis.buildDsirIndex(target, wave(0), 512).absorb(wave(1))
       .copy(lastBatchId = 0L)
     def rows(i: TextAnalysis.DsirIndex) =
       TextAnalysis.scoreAgainstDsirIndex(i, wave(2)).collect()
         .map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("dsir_score")))
         .sortBy(_._1).toSeq
     val want = rows(idx)
-    TextAnalysis.saveDsirIndex(idx, path)
-    TextAnalysis.releaseDsirIndex(idx)
+    idx.save(path)
+    idx.release()
     val reloaded = TextAnalysis.loadDsirIndex(spark, path)
     assert(reloaded.lastBatchId == 0L && reloaded.buckets == 512)
     val got = rows(reloaded)
-    TextAnalysis.releaseDsirIndex(reloaded)
+    reloaded.release()
     assert(got.nonEmpty && got == want)
   }
 
@@ -299,7 +318,7 @@ class IndexDurabilitySpec extends AnyFunSuite {
     Dedup.wordShingles(docs.limit(50)).write.parquet(s"$cPath/shingles")
     val c = Dedup.loadCorpusIndex(spark, cPath)
     assert(c.lastBatchId == -1L, "missing meta must read as nothing-absorbed")
-    Dedup.releaseCorpusIndex(c)
+    c.release()
     // embedding index whose meta predates the last_batch_id column
     val ePath = s"$base/emb"
     graft.operators.Similarity.normalizedNonZero(emb.limit(50))
@@ -307,6 +326,6 @@ class IndexDurabilitySpec extends AnyFunSuite {
     Seq(64).toDF("dim").coalesce(1).write.parquet(s"$ePath/meta")
     val e = Dedup.loadEmbeddingIndex(spark, ePath)
     assert(e.lastBatchId == -1L, "missing column must read as nothing-absorbed")
-    Dedup.releaseEmbeddingIndex(e)
+    e.release()
   }
 }

@@ -22,7 +22,7 @@ class SimilaritySpec extends AnyFunSuite {
     val idx = Similarity.buildSketchIndex(emb, dim = 8, maxHamming = 64)
     val out = Similarity.topKAgainstSketchIndex(emb, idx, k = 2)
       .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id")))
-    Similarity.releaseSketchIndex(idx)
+    idx.release()
     // no NPE, no null cosines; zero-norm ids appear in no pair
     assert(out.nonEmpty)
     assert(!out.exists(p => p._1 == 1L || p._1 == 4L || p._2 == 1L || p._2 == 4L))
@@ -426,7 +426,7 @@ class SimilaritySpec extends AnyFunSuite {
         (r.getAs[Long]("old_size"), r.getAs[Long]("added"),
           r.getAs[Long]("new_size"), r.getAs[Double]("growth")))
       .toMap
-    Similarity.releaseIvfIndex(idx)
+    idx.release()
     // Fresh-build ground truth by brute force: the SAME frozen centroid
     // set (corpus-seeded), every union vector assigned to its nearest
     // centroid by raw inner product with cid-asc tie-break. The
@@ -472,11 +472,9 @@ class SimilaritySpec extends AnyFunSuite {
       idx.corpusStats.collect().map(r => r.getAs[Long]("cid") ->
         (r.getAs[Long]("old_size"), r.getAs[java.math.BigDecimal]("sim_sum")))
         .toMap
-    val seqIdx = Similarity.absorbIvfBatch(
-      Similarity.absorbIvfBatch(Similarity.buildIvfIndex(corpus, 61L), b1), b2)
+    val seqIdx = Similarity.buildIvfIndex(corpus, 61L).absorb(b1).absorb(b2)
     val sequential = stats(seqIdx)
-    val oneIdx = Similarity.absorbIvfBatch(
-      Similarity.buildIvfIndex(corpus, 61L), b1.unionAll(b2))
+    val oneIdx = Similarity.buildIvfIndex(corpus, 61L).absorb(b1.unionAll(b2))
     val combined = stats(oneIdx)
     assert(sequential.nonEmpty && sequential == combined)
     // And the absorbed state is what the NEXT reassign reads: a b2
@@ -484,11 +482,11 @@ class SimilaritySpec extends AnyFunSuite {
     // membership — old_size totals |corpus| + |b1|, not |corpus| (the
     // r9 defect: every batch compared against the original build
     // forever).
-    val b1Idx = Similarity.absorbIvfBatch(Similarity.buildIvfIndex(corpus, 61L), b1)
+    val b1Idx = Similarity.buildIvfIndex(corpus, 61L).absorb(b1)
     val report = Similarity.ivfReassign(b1Idx, b2).collect()
     assert(report.map(_.getAs[Long]("old_size")).sum == corpus.count() + b1.count())
     assert(report.map(_.getAs[Long]("added")).sum == b2.count())
-    Seq(seqIdx, oneIdx, b1Idx).foreach(Similarity.releaseIvfIndex)
+    Seq(seqIdx, oneIdx, b1Idx).foreach(_.release())
   }
 
   test("ivfReassign: arrivals to a zero-member list surface, not drop") {
@@ -579,7 +577,7 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val got = Dedup.flagAgainstEmbeddingIndex(batch, idx, 0.5).collect()
       .map(r => (r.getAs[Long]("vec_new"), r.getAs[Long]("best_match")))
-    Dedup.releaseEmbeddingIndex(idx)
+    idx.release()
     assert(got.nonEmpty && got.forall { case (nw, bm) => nw == 11L && bm != 99L })
   }
 }

@@ -129,7 +129,7 @@ class StreamingSpec extends AnyFunSuite {
         Dedup.wordShingles(newDocs), index, 0.6).collect()
       .map(r => (r.getAs[Long]("doc_new"), r.getAs[Long]("best_match"),
         r.getAs[Double]("jaccard"))).toSet
-    Dedup.releaseCorpusIndex(index)
+    index.release()
     // Batch face #2: the one-shot operator over the unioned corpus.
     val batchOp = Dedup.minhashLshAgainstCorpus(
         Dedup.wordShingles(corpus.union(newDocs)),
@@ -210,7 +210,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = rowSet(spark.read.parquet(outPath))
     val batch = rowSet(Multimodal.flagAgainstFingerprintIndex(
       Multimodal.imageAHash(spark, newImgs).toDF(), index))
-    Multimodal.releaseFingerprintIndex(index)
+    index.release()
     assert(streamed.nonEmpty, "planted re-uploads must match their base images")
     assert(streamed == batch)
   }
@@ -244,7 +244,7 @@ class StreamingSpec extends AnyFunSuite {
         Multimodal.audioFingerprint(spark, newClips).toDF(), index).collect()
       .map(r => (r.getAs[Long]("img_new"), r.getAs[Long]("best_match"),
         r.getAs[Long]("hamming"))).toSet
-    Multimodal.releaseFingerprintIndex(index)
+    index.release()
     assert(streamed.nonEmpty, "trimmed+gained re-uploads must match their base clips")
     assert(streamed == batch)
   }
@@ -264,13 +264,12 @@ class StreamingSpec extends AnyFunSuite {
       Multimodal.flagAgainstFingerprintIndex(w2, idx).collect()
         .map(r => (r.getAs[Long]("img_new"), r.getAs[Long]("best_match"),
           r.getAs[Long]("hamming"))).toSet
-    val absorbed = Multimodal.absorbIntoFingerprintIndex(
-      Multimodal.buildFingerprintIndex(base, 6), w1)
+    val absorbed = Multimodal.buildFingerprintIndex(base, 6).absorb(w1)
     val fresh = Multimodal.buildFingerprintIndex(base.unionByName(w1), 6)
     val got = rows(absorbed)
     val want = rows(fresh)
-    Multimodal.releaseFingerprintIndex(absorbed)
-    Multimodal.releaseFingerprintIndex(fresh)
+    absorbed.release()
+    fresh.release()
     assert(got.nonEmpty && got == want)
     // The accumulation must MATTER: some wave-2 re-upload's nearest
     // neighbour is its wave-1 sibling (img_id % 4 == 1), which a
@@ -308,17 +307,15 @@ class StreamingSpec extends AnyFunSuite {
         r.getAs[Long]("hamming"))).toSet
     // Batch face: wave 2 against corpus ∪ wave 1 (the q_st_image_accum
     // shape) — equality proves the stream really absorbed wave 1.
-    val batchIdx = Multimodal.absorbIntoFingerprintIndex(
-      Multimodal.buildFingerprintIndex(corpusHashes, 6),
-      Multimodal.imageAHash(spark,
-        Multimodal.packImageWave(spark, sel, 1)).toDF())
+    val batchIdx = Multimodal.buildFingerprintIndex(corpusHashes, 6).absorb(
+      Multimodal.imageAHash(spark, Multimodal.packImageWave(spark, sel, 1)).toDF())
     val batch = Multimodal.flagAgainstFingerprintIndex(
         Multimodal.imageAHash(spark,
           Multimodal.packImageWave(spark, sel, 2)).toDF(), batchIdx).collect()
       .map(r => (r.getAs[Long]("img_new"), r.getAs[Long]("best_match"),
         r.getAs[Long]("hamming"))).toSet
-    Multimodal.releaseFingerprintIndex(batchIdx)
-    Multimodal.releaseFingerprintIndex(ref.get())
+    batchIdx.release()
+    ref.get().release()
     assert(streamedW2.nonEmpty && streamedW2 == batch)
     assert(streamedW2.exists(_._2 % 4 == 1),
       "accumulation must surface wave-1 best matches")
@@ -340,14 +337,14 @@ class StreamingSpec extends AnyFunSuite {
       Dedup.flagAgainstCorpusIndex(Dedup.wordShingles(w2), idx, 0.6).collect()
         .map(r => (r.getAs[Long]("doc_new"), r.getAs[Long]("best_match"),
           r.getAs[Double]("jaccard"))).toSet
-    val absorbed = Dedup.absorbIntoCorpusIndex(
-      Dedup.buildCorpusIndex(Dedup.wordShingles(docs)), Dedup.wordShingles(w1))
+    val absorbed = Dedup.buildCorpusIndex(Dedup.wordShingles(docs))
+      .absorb(Dedup.wordShingles(w1))
     val fresh = Dedup.buildCorpusIndex(
       Dedup.wordShingles(docs.unionByName(w1)))
     val got = rows(absorbed)
     val want = rows(fresh)
-    Dedup.releaseCorpusIndex(absorbed)
-    Dedup.releaseCorpusIndex(fresh)
+    absorbed.release()
+    fresh.release()
     assert(got.nonEmpty && got == want)
     // The accumulation must MATTER: a wave-2 doc carries wave 1's tag
     // pair, so its best match is its wave-1 sibling — which a frozen
@@ -387,14 +384,14 @@ class StreamingSpec extends AnyFunSuite {
         r.getAs[Double]("jaccard"))).toSet
     // Batch face: wave 2 against corpus ∪ wave 1 (the q_st_dedup_accum
     // shape) — equality proves the stream really absorbed wave 1.
-    val batchIdx = Dedup.absorbIntoCorpusIndex(
-      Dedup.buildCorpusIndex(Dedup.wordShingles(docs)), Dedup.wordShingles(w1))
+    val batchIdx = Dedup.buildCorpusIndex(Dedup.wordShingles(docs))
+      .absorb(Dedup.wordShingles(w1))
     val batch = Dedup.flagAgainstCorpusIndex(
         Dedup.wordShingles(w2), batchIdx, 0.6).collect()
       .map(r => (r.getAs[Long]("doc_new"), r.getAs[Long]("best_match"),
         r.getAs[Double]("jaccard"))).toSet
-    Dedup.releaseCorpusIndex(batchIdx)
-    Dedup.releaseCorpusIndex(ref.get())
+    batchIdx.release()
+    ref.get().release()
     assert(streamedW2.nonEmpty && streamedW2 == batch)
     assert(streamedW2.exists(m => m._2 >= 1000000L && m._2 < 2000000L),
       "accumulation must surface wave-1 best matches")
@@ -427,19 +424,19 @@ class StreamingSpec extends AnyFunSuite {
     // Batch face: wave 1 against the seed, wave 2 against seed ∪ wave 1.
     val b0 = TextAnalysis.buildDsirIndex(target, wave(0), 512)
     val want1 = rows(TextAnalysis.scoreAgainstDsirIndex(b0, wave(1)))
-    val b1 = TextAnalysis.absorbIntoDsirIndex(b0, wave(1))
+    val b1 = b0.absorb(wave(1))
     val want2 = rows(TextAnalysis.scoreAgainstDsirIndex(b1, wave(2)))
     val got1 = rows(out.filter(col("batch_id") === 0L).drop("batch_id"))
     val got2 = rows(out.filter(col("batch_id") === 1L).drop("batch_id"))
-    TextAnalysis.releaseDsirIndex(b1)
-    TextAnalysis.releaseDsirIndex(ref.get())
+    b1.release()
+    ref.get().release()
     assert(got1.nonEmpty && got1 == want1)
     assert(got2.nonEmpty && got2 == want2)
     // accumulation is OBSERVABLE: scoring wave 2 against the frozen
     // seed instead must differ somewhere (else the absorb did nothing)
     val b0b = TextAnalysis.buildDsirIndex(target, wave(0), 512)
     val frozen2 = rows(TextAnalysis.scoreAgainstDsirIndex(b0b, wave(2)))
-    TextAnalysis.releaseDsirIndex(b0b)
+    b0b.release()
     assert(frozen2 != want2,
       "wave 2 must score against the accumulated raw histogram")
   }
@@ -454,19 +451,17 @@ class StreamingSpec extends AnyFunSuite {
     def hist(i: TextAnalysis.DsirIndex) = i.rawHist.collect()
       .map(r => (r.getAs[Long]("b"), r.getAs[Long]("cr"))).sortBy(_._1).toSeq
     // absorb is NOT idempotent — double-absorb really double-counts…
-    val once = TextAnalysis.absorbIntoDsirIndex(
-      TextAnalysis.buildDsirIndex(target, wave(0), 512), wave(1))
+    val once = TextAnalysis.buildDsirIndex(target, wave(0), 512).absorb(wave(1))
     val h1 = hist(once)
-    val twice = TextAnalysis.absorbIntoDsirIndex(once, wave(1))
+    val twice = once.absorb(wave(1))
     assert(hist(twice) != h1, "double absorb must double-count (not idempotent)")
-    TextAnalysis.releaseDsirIndex(twice)
+    twice.release()
     // …which is exactly why the stream's lastBatchId watermark skips
     // replayed batches entirely (same guard as dedup/image/audio).
-    val guarded = TextAnalysis.absorbIntoDsirIndex(
-      TextAnalysis.buildDsirIndex(target, wave(0), 512), wave(1))
+    val guarded = TextAnalysis.buildDsirIndex(target, wave(0), 512).absorb(wave(1))
       .copy(lastBatchId = 0L)
     assert(!(0L > guarded.lastBatchId), "batch 0 replay must be gated out")
-    TextAnalysis.releaseDsirIndex(guarded)
+    guarded.release()
   }
 
   test("self-accumulating KMV cardinality stream equals the one-shot sketch") {
@@ -499,8 +494,8 @@ class StreamingSpec extends AnyFunSuite {
     // the whole corpus — bit-identical, not approximately.
     val oneShot = TextAnalysis.buildKmvIndex(docs, 128)
     val batch = rows(TextAnalysis.kmvCardinalityReport(oneShot))
-    TextAnalysis.releaseKmvIndex(oneShot)
-    TextAnalysis.releaseKmvIndex(ref.get())
+    oneShot.release()
+    ref.get().release()
     assert(streamed.nonEmpty && streamed == batch)
   }
 
@@ -513,20 +508,18 @@ class StreamingSpec extends AnyFunSuite {
     def sketchRows(i: TextAnalysis.KmvIndex) = i.sketch.collect()
       .map(r => (r.getAs[String]("source"),
         r.getAs[scala.collection.Seq[Long]]("sk").toVector)).sortBy(_._1).toSeq
-    val once = TextAnalysis.absorbIntoKmvIndex(
-      TextAnalysis.buildKmvIndex(wave(0), 128), wave(1))
+    val once = TextAnalysis.buildKmvIndex(wave(0), 128).absorb(wave(1))
     // The replay the other accum indexes must GUARD against: absorbing
     // the identical batch again. KMV's set-union + k-min makes it a
     // no-op with no watermark involved.
-    val twice = TextAnalysis.absorbIntoKmvIndex(once, wave(1))
+    val twice = once.absorb(wave(1))
     val a = sketchRows(twice)
     // twice's merge consumed once's sketch frame (released in absorb) —
     // rebuild the single-absorb state fresh for the comparison.
-    val onceAgain = TextAnalysis.absorbIntoKmvIndex(
-      TextAnalysis.buildKmvIndex(wave(0), 128), wave(1))
+    val onceAgain = TextAnalysis.buildKmvIndex(wave(0), 128).absorb(wave(1))
     val b = sketchRows(onceAgain)
-    TextAnalysis.releaseKmvIndex(twice)
-    TextAnalysis.releaseKmvIndex(onceAgain)
+    twice.release()
+    onceAgain.release()
     assert(a.nonEmpty && a == b)
   }
 
@@ -536,18 +529,17 @@ class StreamingSpec extends AnyFunSuite {
     val base = s"${sys.props("java.io.tmpdir")}/graft_kmvdur_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
     val docs = Tables.documents(spark, TestSpark.sf0001)
       .select("doc_id", "text", "source")
-    val idx = TextAnalysis.absorbIntoKmvIndex(
-      TextAnalysis.buildKmvIndex(docs.filter(col("doc_id") % 3 === 0), 128),
-      docs.filter(col("doc_id") % 3 =!= 0)).copy(lastBatchId = 7L)
+    val idx = TextAnalysis.buildKmvIndex(docs.filter(col("doc_id") % 3 === 0), 128)
+      .absorb(docs.filter(col("doc_id") % 3 =!= 0)).copy(lastBatchId = 7L)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(_.toString).sorted.toSeq
     val before = rows(TextAnalysis.kmvCardinalityReport(idx))
-    TextAnalysis.saveKmvIndex(idx, base)
+    idx.save(base)
     val reloaded = TextAnalysis.loadKmvIndex(spark, base)
     val after = rows(TextAnalysis.kmvCardinalityReport(reloaded))
     assert(reloaded.k == 128 && reloaded.lastBatchId == 7L)
-    TextAnalysis.releaseKmvIndex(idx)
-    TextAnalysis.releaseKmvIndex(reloaded)
+    idx.release()
+    reloaded.release()
     assert(before.nonEmpty && before == after)
   }
 
@@ -578,19 +570,17 @@ class StreamingSpec extends AnyFunSuite {
       .filter(col("clip_new") >= 2 * Multimodal.WaveStride).collect()
       .map(r => (r.getAs[Long]("clip_new"), r.getAs[Long]("best_match"),
         r.getAs[Long]("hamming"))).toSet
-    Multimodal.releaseFingerprintIndex(ref.get())
+    ref.get().release()
     // Batch face: wave 2 against corpus ∪ wave 1 (the q_st_audio_accum
     // shape) — equality proves the stream really absorbed wave 1.
-    val batchIdx = Multimodal.absorbIntoFingerprintIndex(
-      Multimodal.buildFingerprintIndex(corpusHashes, 8),
-      Multimodal.audioFingerprint(spark,
-        Multimodal.packAudioWave(spark, sel, 1)).toDF())
+    val batchIdx = Multimodal.buildFingerprintIndex(corpusHashes, 8).absorb(
+      Multimodal.audioFingerprint(spark, Multimodal.packAudioWave(spark, sel, 1)).toDF())
     val batch = Multimodal.flagAgainstFingerprintIndex(
         Multimodal.audioFingerprint(spark,
           Multimodal.packAudioWave(spark, sel, 2)).toDF(), batchIdx).collect()
       .map(r => (r.getAs[Long]("img_new"), r.getAs[Long]("best_match"),
         r.getAs[Long]("hamming"))).toSet
-    Multimodal.releaseFingerprintIndex(batchIdx)
+    batchIdx.release()
     assert(streamedW2.nonEmpty && streamedW2 == batch)
     assert(streamedW2.exists(m =>
         m._2 >= Multimodal.WaveStride && m._2 < 2 * Multimodal.WaveStride),
@@ -625,15 +615,14 @@ class StreamingSpec extends AnyFunSuite {
       .filter(col("vec_new") >= 2000000L).collect()
       .map(r => (r.getAs[Long]("vec_new"), r.getAs[Long]("best_match"),
         r.getAs[Double]("cosine"))).toSet
-    Dedup.releaseEmbeddingIndex(ref.get())
+    ref.get().release()
     // Batch face: wave 2 against corpus ∪ wave 1 (the q_st_embed_accum
     // shape).
-    val batchIdx = Dedup.absorbIntoEmbeddingIndex(
-      Dedup.buildEmbeddingIndex(emb, dim), w1)
+    val batchIdx = Dedup.buildEmbeddingIndex(emb, dim).absorb(w1)
     val batch = Dedup.flagAgainstEmbeddingIndex(w2, batchIdx, 0.35).collect()
       .map(r => (r.getAs[Long]("vec_new"), r.getAs[Long]("best_match"),
         r.getAs[Double]("cosine"))).toSet
-    Dedup.releaseEmbeddingIndex(batchIdx)
+    batchIdx.release()
     assert(streamedW2.nonEmpty && streamedW2 == batch)
     assert(streamedW2.exists(m => m._2 >= 1000000L && m._2 < 2000000L),
       "accumulation must surface wave-1 best matches")
@@ -666,17 +655,16 @@ class StreamingSpec extends AnyFunSuite {
         Option(r.getAs[java.lang.Double]("mean_sim_new")))).toSet
     val streamedW2 = canon(spark.read.parquet(outPath)
       .filter(col("batch_id") === 1).drop("batch_id").collect())
-    Similarity.releaseIvfIndex(ref.get())
+    ref.get().release()
     // Batch face: wave-2 report against the index that absorbed wave 1
     // (the q_st_ivf_accum shape).
-    val batchIdx = Similarity.absorbIvfBatch(
-      Similarity.buildIvfIndex(corpus, 61L), b1)
+    val batchIdx = Similarity.buildIvfIndex(corpus, 61L).absorb(b1)
     val batch = canon(Similarity.ivfReassign(batchIdx, b2).collect())
     assert(streamedW2.nonEmpty && streamedW2 == batch)
     // The absorption must MATTER: wave 2's membership baseline counts
     // wave 1's arrivals, not just the corpus build.
     assert(streamedW2.toSeq.map(_._2).sum == corpus.count() + b1.count())
-    Similarity.releaseIvfIndex(batchIdx)
+    batchIdx.release()
   }
 
   test("self-accumulating sketch-ANN serving stream absorbs each wave before the next") {
@@ -707,15 +695,14 @@ class StreamingSpec extends AnyFunSuite {
       .filter(col("query_id") >= 2000000L).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rn"),
         r.getAs[Long]("vec_id"), r.getAs[Double]("cosine"))).toSet
-    Similarity.releaseSketchIndex(ref.get())
+    ref.get().release()
     // Batch face: wave-2 queries against corpus ∪ wave 1 (the
     // q_st_hamming_ann shape).
-    val batchIdx = Similarity.absorbIntoSketchIndex(
-      Similarity.buildSketchIndex(emb, dim, 20), w1)
+    val batchIdx = Similarity.buildSketchIndex(emb, dim, 20).absorb(w1)
     val batch = Similarity.topKAgainstSketchIndex(w2, batchIdx, 5).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("rn"),
         r.getAs[Long]("vec_id"), r.getAs[Double]("cosine"))).toSet
-    Similarity.releaseSketchIndex(batchIdx)
+    batchIdx.release()
     assert(streamedW2.nonEmpty && streamedW2 == batch)
     // The absorption must MATTER: wave-2 answers retrieve wave-1
     // siblings, which a frozen corpus index can never return.
@@ -789,7 +776,7 @@ class StreamingSpec extends AnyFunSuite {
       p => spark.read.parquet(p).select("doc_new", "best_match", "jaccard")
         .collect().toSeq
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted)
-    finally Dedup.releaseCorpusIndex(index)
+    finally index.release()
   }
 
   test("checkpoint recovery: killed DRIFT-MONITOR stream equals the uninterrupted run") {
@@ -842,7 +829,7 @@ class StreamingSpec extends AnyFunSuite {
         .collect().toSeq
         .map(r => (r.getAs[Long]("clip_new"), r.getAs[Long]("best_match"),
           r.getAs[Long]("hamming"))).sorted)
-    finally Multimodal.releaseFingerprintIndex(index)
+    finally index.release()
   }
 
   test("checkpoint recovery: killed IMAGE-DEDUP stream equals the uninterrupted run") {
@@ -866,7 +853,7 @@ class StreamingSpec extends AnyFunSuite {
         .collect().toSeq
         .map(r => (r.getAs[Long]("img_new"), r.getAs[Long]("best_match"),
           r.getAs[Long]("hamming"))).sorted)
-    finally Multimodal.releaseFingerprintIndex(index)
+    finally index.release()
   }
 
   /* Accum-stream recovery: the frozen-index tests above prove the SINK
@@ -917,8 +904,8 @@ class StreamingSpec extends AnyFunSuite {
         val q = graft.streaming.StreamOps.incrementalDedupAccumStream(
           spark, staging, wave(0).schema, ref, 0.6, out, Some(cp))
         try q.processAllAvailable() finally q.stop()
-        Dedup.saveCorpusIndex(ref.get(), idxPath)
-        Dedup.releaseCorpusIndex(ref.get())
+        ref.get().save(idxPath)
+        ref.get().release()
       },
       p => spark.read.parquet(p).select("doc_new", "best_match", "jaccard")
         .collect().toSeq
@@ -960,7 +947,7 @@ class StreamingSpec extends AnyFunSuite {
         .collect().toSeq
         .map(r => (r.getAs[Long]("clip_new"), r.getAs[Long]("best_match"),
           r.getAs[Long]("hamming"))).sorted)
-    finally refs.values.foreach(r => Multimodal.releaseFingerprintIndex(r.get()))
+    finally refs.values.foreach(r => r.get().release())
   }
 
   test("checkpoint recovery: killed ACCUM IVF-MONITOR stream re-seeded from its durable save equals the uninterrupted run") {
@@ -987,8 +974,8 @@ class StreamingSpec extends AnyFunSuite {
         val q = graft.streaming.StreamOps.ivfMonitorAccumStream(
           spark, staging, arriving.schema, ref, out, Some(cp))
         try q.processAllAvailable() finally q.stop()
-        Similarity.saveIvfIndex(ref.get(), idxPath)
-        Similarity.releaseIvfIndex(ref.get())
+        ref.get().save(idxPath)
+        ref.get().release()
       },
       p => spark.read.parquet(p)
         .select("batch_id", "cid", "old_size", "added", "new_size",
@@ -1026,8 +1013,8 @@ class StreamingSpec extends AnyFunSuite {
         val q = graft.streaming.StreamOps.imageNearDupAccumStream(
           spark, staging, newImgs.schema, ref, out, Some(cp))
         try q.processAllAvailable() finally q.stop()
-        Multimodal.saveFingerprintIndex(ref.get(), idxPath)
-        Multimodal.releaseFingerprintIndex(ref.get())
+        ref.get().save(idxPath)
+        ref.get().release()
       },
       p => spark.read.parquet(p).select("img_new", "best_match", "hamming")
         .collect().toSeq
@@ -1063,7 +1050,7 @@ class StreamingSpec extends AnyFunSuite {
         .collect().toSeq
         .map(r => (r.getAs[Long]("vec_new"), r.getAs[Long]("best_match"),
           r.getAs[Double]("cosine"))).sortBy(_.toString))
-    finally refs.values.foreach(r => Dedup.releaseEmbeddingIndex(r.get()))
+    finally refs.values.foreach(r => r.get().release())
   }
 
   test("checkpoint recovery: killed ACCUM SKETCH-ANN stream re-seeded from its durable save equals the uninterrupted run") {
@@ -1088,8 +1075,8 @@ class StreamingSpec extends AnyFunSuite {
         val q = graft.streaming.StreamOps.hammingAnnAccumStream(
           spark, staging, arriving.schema, ref, 5, out, Some(cp))
         try q.processAllAvailable() finally q.stop()
-        Similarity.saveSketchIndex(ref.get(), idxPath)
-        Similarity.releaseSketchIndex(ref.get())
+        ref.get().save(idxPath)
+        ref.get().release()
       },
       p => spark.read.parquet(p)
         .select("query_id", "rn", "vec_id", "cosine")

@@ -891,7 +891,7 @@ class TextSpec extends AnyFunSuite {
     val got = Multimodal.flagAgainstFingerprintIndex(batch, idx).collect()
       .map(r => (r.getAs[Long]("img_new"), r.getAs[Long]("best_match"),
         r.getAs[Long]("hamming"))).toSet
-    Multimodal.releaseFingerprintIndex(idx)
+    idx.release()
     assert(expect.nonEmpty && got == expect)
   }
 
