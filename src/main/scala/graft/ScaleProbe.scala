@@ -94,7 +94,7 @@ object ScaleProbe {
 
   /** The structural drivers the sizing formulas read, at one dir. */
   private def structure(spark: SparkSession, d: String): Unit = {
-    import graft.operators.{Graph, Multimodal}
+    import graft.operators.{Graph, Hamming, Multimodal}
     val und = Graph.tradeEdges(Tables.orders(spark, d), Tables.lineitem(spark, d))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b")).distinct()
@@ -108,7 +108,7 @@ object ScaleProbe {
       s"rankParts=${clamp(nNodes / 500000L + 1)} (cap=$cap)")
     val imgHashes = Multimodal.imageAHash(spark,
       Multimodal.packImageVariants(spark, Tables.documents(spark, d))).toDF()
-    val ib = Multimodal.bandedImageIds(imgHashes, 6)
+    val ib = Hamming.bandKeys(imgHashes, "img_id", Hamming.bandBits(6), Hamming.hid)
       .groupBy("band_idx", "bval").agg(count(lit(1)).as("c"))
       .agg(count(lit(1)).as("buckets"), max(col("c")).as("max_depth"),
         sum(col("c") * col("c")).as("sum_sq")).collect()(0)
@@ -140,8 +140,10 @@ object ScaleProbe {
       println(s"STRUCT $d $tag: buckets=${r.getLong(0)} " +
         s"max_depth=${r.getLong(1)} sum_bucket_sq=${r.getLong(2)}")
     }
-    bandStats(Multimodal.bandedImageIds(audHashes, 8), "audio_bands_pigeonhole(h=8)")
-    bandStats(Multimodal.exactBandKeys(audHashes, 8), "audio_bands_mih(h=8)")
+    bandStats(Hamming.bandKeys(audHashes, "img_id", Hamming.bandBits(8), Hamming.hid),
+      "audio_bands_pigeonhole(h=8)")
+    bandStats(Hamming.bandKeys(audHashes, "img_id", Hamming.layout(8), Hamming.hid),
+      "audio_bands_mih(h=8)")
     audHashes.unpersist(blocking = false)
   }
 

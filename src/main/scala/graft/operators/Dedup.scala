@@ -17,8 +17,9 @@ import graft.functions.Hashing
   *  - minhash: fixed-width signatures (16 mins in ONE groupBy pass — no
   *    per-permutation explosion), banded bucket join → candidates only,
   *    then exact-jaccard verification of the tiny candidate set.
-  *  - simhash: 60-bit signature per doc, 15-bit band join → hamming
-  *    filter. All integer arithmetic, engine-portable (md5-derived).
+  *  - simhash: 60-bit signature per doc, exact Hamming pairs through
+  *    the shared [[Hamming]] kernel. All integer arithmetic,
+  *    engine-portable (md5-derived).
   *  - embedding: exact pairwise for oracle-checkable semantics; the
   *    sub-quadratic path at scale is Similarity.annTopK's LSH buckets.
   */
@@ -507,7 +508,7 @@ object Dedup {
     val nb = Similarity.bandedIds(e, index.dim)
       .withColumnsRenamed(Map("vec_id" -> "vec_new"))
     val ob = index.bands.withColumnsRenamed(Map("vec_id" -> "vec_old"))
-    val cand = nb.join(ob, Seq("c", "cv"))
+    val cand = nb.join(ob, Seq("band_idx", "bval"))
       .select(col("vec_new"), col("vec_old")).distinct()
     val scored = cand
       .join(e.select(col("vec_id").as("vec_new"), col("v").as("vn")),
@@ -541,24 +542,14 @@ object Dedup {
       .select(col("doc_id"), col("simhash"))
   }
 
-  /** SimHash near-dup pairs: 15-bit band join (a ≤maxHamming-bit
-    * difference must leave ≥1 of 4 bands identical for maxHamming ≤ 3;
-    * for larger budgets it is a high-recall heuristic), then exact
-    * hamming ≤ maxHamming via bit_count(xor). */
+  /** SimHash near-dup pairs: every (doc_a < doc_b, hamming) whose
+    * signatures lie within `maxHamming` — [[Hamming.memberPairs]] over
+    * the distinct signatures, exact for every threshold (identical
+    * texts share a signature and pair on the diagonal). */
   def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
-    val sigs = simhashSignatures(docs)
-    val chunks = sigs.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map(c =>
-        struct(lit(c).as("c"), expr(s"(simhash >> ${15 * c}) & 32767").as("cv"))): _*)).as("ch"))
-      .select(col("doc_id"), col("simhash"), col("ch.c").as("c"), col("ch.cv").as("cv"))
-    val x = chunks.withColumnsRenamed(Map("doc_id" -> "doc_a", "simhash" -> "sig_a"))
-    val y = chunks.withColumnsRenamed(Map("doc_id" -> "doc_b", "simhash" -> "sig_b"))
-    x.join(y, Seq("c", "cv"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("CAST(bit_count(sig_a ^ sig_b) AS BIGINT)").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+    val (pairs, members, dh) = Hamming.memberPairs(
+      simhashSignatures(docs).withColumnRenamed("simhash", "hid"), "doc_id", maxHamming)
+    materializeThenRelease(pairs.toDF("doc_a", "doc_b", "hamming"), members, dh)
   }
 
   /** Duplicate-cluster resolution: connected components over near-dup
@@ -898,7 +889,7 @@ object Dedup {
     val e = Similarity.normalized(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bands = Similarity.bandedIds(e, dim)
-    val cand = bands.as("x").join(bands.as("y"), Seq("c", "cv"))
+    val cand = bands.as("x").join(bands.as("y"), Seq("band_idx", "bval"))
       .filter(col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
       .distinct()

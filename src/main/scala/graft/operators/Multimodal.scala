@@ -666,29 +666,34 @@ object Multimodal {
       val out = new java.io.ByteArrayOutputStream()
       val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(out)
       val writer = gifWriterTl.get()
-      writer.setOutput(ios)
-      writer.prepareWriteSequence(null)
-      var f = 0
-      val n = nFramesOf(docId)
-      while (f < n) {
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, grayPalette)
-        val raster = img.getRaster
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            raster.setSample(x, y, 0, grayAt(docId, f, x, y))
-            x += 1
+      // try/finally: see videoFrameHashes — a failed render must not
+      // leave this thread's writer bound to a half-written stream.
+      try {
+        writer.setOutput(ios)
+        writer.prepareWriteSequence(null)
+        var f = 0
+        val n = nFramesOf(docId)
+        while (f < n) {
+          val img = new java.awt.image.BufferedImage(
+            w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, grayPalette)
+          val raster = img.getRaster
+          var y = 0
+          while (y < h) {
+            var x = 0
+            while (x < w) {
+              raster.setSample(x, y, 0, grayAt(docId, f, x, y))
+              x += 1
+            }
+            y += 1
           }
-          y += 1
+          writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
+          f += 1
         }
-        writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-        f += 1
+        writer.endWriteSequence()
+      } finally {
+        writer.setOutput(null)
+        ios.close()
       }
-      writer.endWriteSequence()
-      writer.setOutput(null)
-      ios.close()
       out.toByteArray
     }
   }
@@ -783,22 +788,21 @@ object Multimodal {
       })
   }
 
-  /** Ingest-wave renders for the SELF-ACCUMULATING audio dedup
-    * fixture: wave w of each doc is a trim-4 re-render at gain w
-    * (clip_id = w·WaveStride + 2·doc_id; the 1e12 stride keeps wave
-    * labels disjoint from any fixture id — a 1e6 stride aliased against
-    * the 10× probe fixture's shifted doc_ids). Wave 2 differs from
-    * wave 1 only by
-    * the ×2 gain — which the band-median fingerprint is invariant to
-    * (up to saturation ties) — while both differ from the base clip by
-    * the trim, so wave 2's nearest corpus∪wave-1 neighbour is its
-    * wave-1 sibling: exactly the match a frozen index can never
-    * return. */
   /** Wave-label stride shared with the DuckDB oracles (PipelinePack
     * interpolates the same value): wave-w clip ids are w*WaveStride +
     * 2*doc_id, disjoint from base ids at any plausible fixture scale. */
   val WaveStride = 1000000000000L
 
+  /** Ingest-wave renders for the SELF-ACCUMULATING audio dedup
+    * fixture: wave w of each doc is a trim-4 re-render at gain w
+    * (clip_id = w·WaveStride + 2·doc_id; the 1e12 stride keeps wave
+    * labels disjoint from any fixture id — a 1e6 stride aliased against
+    * the 10× probe fixture's shifted doc_ids). Wave 2 differs from
+    * wave 1 only by the ×2 gain — which the band-median fingerprint
+    * is invariant to (up to saturation ties) — while both differ from
+    * the base clip by the trim, so wave 2's nearest corpus∪wave-1
+    * neighbour is its wave-1 sibling: exactly the match a frozen index
+    * can never return. */
   def packAudioWave(spark: SparkSession, docs: DataFrame,
                     wave: Int): Dataset[AudioClip] = {
     import spark.implicits._
@@ -911,8 +915,8 @@ object Multimodal {
     * scorecard columns at threshold 8 (see `q_mm_audio_neardup_quality`).
     * All-integer arithmetic, so the oracle replays it exactly. Emitted
     * in the shared [[ImageHash]] 4×16-bit-word layout so the SAME
-    * threshold-exact banded near-dup machinery ([[imageNearDup]],
-    * [[bandBits]]) runs unchanged over clips. Narrow per-partition
+    * threshold-exact Hamming machinery ([[imageNearDup]],
+    * [[Hamming]]) runs unchanged over clips. Narrow per-partition
     * decode, 5 longs out per clip. */
   def audioFingerprint(spark: SparkSession,
                        clips: Dataset[AudioClip]): Dataset[ImageHash] = {
@@ -1015,14 +1019,6 @@ object Multimodal {
     })
   }
 
-  /** 64-bit average hash (aHash) computed from the REAL decoded raster:
-    * nearest-neighbor-sample an 8×8 grid, then bit(cell) = 1 iff the
-    * cell is brighter than the grid mean (compared as 64·gray > Σgray —
-    * integer-exact, no division). Stored as four 16-bit words
-    * (b0..b3) — a STORAGE layout only; the near-dup join re-bands the
-    * 64 bits per threshold ([[bandBits]]) so candidate recall is exact
-    * for ANY maxHamming. Narrow per-partition decode, fixed-width
-    * output. */
   /** The 64-bit aHash of one DECODED raster as four 16-bit words —
     * shared by the still-image path ([[imageAHash]]) and the per-frame
     * video path ([[videoFrameHashes]]). */
@@ -1051,6 +1047,14 @@ object Multimodal {
     bands
   }
 
+  /** 64-bit average hash (aHash) computed from the REAL decoded raster:
+    * nearest-neighbor-sample an 8×8 grid, then bit(cell) = 1 iff the
+    * cell is brighter than the grid mean (compared as 64·gray > Σgray —
+    * integer-exact, no division). Stored as four 16-bit words
+    * (b0..b3) — a STORAGE layout only; the near-dup join re-bands the
+    * 64 bits per threshold ([[Hamming.layout]]) so candidate recall is
+    * exact for ANY maxHamming. Narrow per-partition decode,
+    * fixed-width output. */
   def imageAHash(spark: SparkSession, imgs: Dataset[ImageVariant]): Dataset[ImageHash] = {
     import spark.implicits._
     imgs.mapPartitions(_.map { m =>
@@ -1196,17 +1200,10 @@ object Multimodal {
     * fingerprint + a global fold — no pairwise stage anywhere. */
   def fingerprintRobustness(ahash: DataFrame, phash: DataFrame): DataFrame = {
     def pairHamming(h: DataFrame, out: String): DataFrame = {
-      val base = h.filter(col("img_id") % 2 === 0)
-        .select(expr("img_id div 2").as("doc_id"), col("b0").as("a0"),
-          col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
-      val noisy = h.filter(col("img_id") % 2 === 1)
-        .select(expr("img_id div 2").as("doc_id"), col("b0").as("c0"),
-          col("b1").as("c1"), col("b2").as("c2"), col("b3").as("c3"))
-      base.join(noisy, Seq("doc_id"))
-        .select(col("doc_id"),
-          (expr("bit_count(a0 ^ c0) + bit_count(a1 ^ c1)") +
-            expr("bit_count(a2 ^ c2) + bit_count(a3 ^ c3)"))
-            .cast("long").as(out))
+      def variant(parity: Int, hash: String) = h.filter(col("img_id") % 2 === parity)
+        .select(expr("img_id div 2").as("doc_id"), Hamming.hid.as(hash))
+      variant(0, "base").join(variant(1, "noisy"), Seq("doc_id"))
+        .select(col("doc_id"), Hamming.distance(col("base"), col("noisy")).as(out))
     }
     pairHamming(ahash, "ah").join(pairHamming(phash, "ph"), Seq("doc_id"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1250,112 +1247,35 @@ object Multimodal {
     })
   }
 
-  /** Exact-recall band layout for Hamming ≤ `maxHamming` over the
-    * 64-bit aHash: maxHamming+1 DISJOINT bit ranges covering all 64
-    * bits (sizes differing by ≤1). Pigeonhole: ≤ maxHamming differing
-    * bits cannot touch all maxHamming+1 bands, so two in-threshold
-    * hashes agree EXACTLY on at least one band — banded blocking is a
-    * lossless candidate pruning of the all-pairs Hamming join (the
-    * round-7 advice fix: the old fixed 4×16-bit blocking only
-    * guaranteed d ≤ 3 while [[imageNearDup]] callers ask for d = 6;
-    * the DuckDB oracle now states the all-pairs DEFINITION, so a
-    * recall-losing layout here would hash-fail). */
-  private[graft] def bandBits(maxHamming: Int): Seq[Range] = {
-    val nBands = maxHamming + 1
-    require(maxHamming >= 0 && maxHamming < 64,
-      s"maxHamming must be in [0, 63], got $maxHamming")
-    val base = 64 / nBands
-    val extra = 64 % nBands
-    val starts = (0 until nBands).scanLeft(0)((off, k) =>
-      off + base + (if (k < extra) 1 else 0))
-    (0 until nBands).map(k => starts(k) until starts(k + 1))
-  }
-
-  /** The value of band `bits` assembled bit-by-bit from the stored
-    * 16-bit words b0..b3 (a band may straddle a word boundary). Pure
-    * shift/and/add Column algebra — codegen'd, no UDF. */
-  private def bandValue(bits: Range): org.apache.spark.sql.Column =
-    bits.zipWithIndex.map { case (bit, j) =>
-      shiftleft(shiftright(col(s"b${bit / 16}"), bit % 16).bitwiseAND(lit(1L)), j)
-    }.reduce(_ + _)
-
-  /** Near-duplicate image pairs by banded aHash: explode each hash into
-    * its maxHamming+1 (band_idx, value) blocking keys ([[bandBits]] —
-    * recall-exact for the threshold), self-join per block, then verify
-    * candidates with the exact Hamming distance (`bit_count` of the
-    * XOR — codegen'd builtin, no UDF). Scale: the join is keyed on
-    * ~64/(maxHamming+1)-bit band values, so work is Σ bucket² over
-    * genuinely-colliding buckets — never corpus²; candidate dedup is a
-    * narrow distinct on the pair key. The hash frame is persisted for
-    * the self-join (5 longs per image — tiny) so the upstream codec
-    * pass runs ONCE, not once per join side, and released before
-    * returning ([[Dedup.materializeThenRelease]] lifecycle). */
+  /** Near-duplicate image pairs by aHash: every (img_a < img_b,
+    * hamming) within `maxHamming` — [[Hamming.memberPairs]] over the
+    * packed hashes, threshold-exact blocking plus exact verification.
+    *
+    * DISTINCT-HASH compression: real corpora carry heavy fingerprint
+    * duplication — logos, icons, re-posts; the 10× synthetic fixture
+    * saturates its pattern space and measured Σ bucket² 7.5M → 753M
+    * (×100) with the banded self-join over raw images, 705 s and 27 GB
+    * of spill for what is ~the same set of distinct hashes. Banding
+    * DISTINCT hash values shrinks Σ bucket² by the duplication factor
+    * SQUARED; hash-level matches expand back to image pairs through
+    * the per-hash member lists (output size is the true pair set
+    * either way — that part is definitional). The cached frames are
+    * released before returning ([[Dedup.materializeThenRelease]]). */
   def imageNearDup(hashes: DataFrame, maxHamming: Int): DataFrame = {
-    val (pairs, h, members, dh) = imageNearDupPlan(hashes, maxHamming)
-    Dedup.materializeThenRelease(pairs, h, members, dh)
+    val (pairs, members, dh) = imageNearDupPlan(hashes, maxHamming)
+    Dedup.materializeThenRelease(pairs, members, dh)
   }
 
   /** [[imageNearDup]] UP TO the checkpoint: the un-materialized pair
-    * plan plus the three persisted frames, so PlanHygieneSpec can pin
+    * plan plus the two persisted frames, so PlanHygieneSpec can pin
     * the distinct-hash compression shape (the checkpoint in the public
     * operator destroys the lineage a plan assertion needs). Callers
-    * must unpersist all three frames. */
+    * must unpersist both frames. */
   private[graft] def imageNearDupPlan(hashes: DataFrame, maxHamming: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // DISTINCT-HASH compression (the [[videoNearDup]] discipline,
-    // pulled down to the still-image path by the round-11 10× scale
-    // probe): real corpora carry heavy fingerprint duplication — logos,
-    // icons, re-posts; the 10× synthetic fixture saturates its pattern
-    // space and measured Σ bucket² 7.5M → 753M (×100) with the banded
-    // self-join over raw images, 705 s and 27 GB of spill for what is
-    // ~the same set of distinct hashes. Banding DISTINCT hash values
-    // shrinks Σ bucket² by the duplication factor SQUARED; hash-level
-    // matches expand back to image pairs through the per-hash member
-    // lists (output size is the true pair set either way — that part
-    // is definitional). Identical-hash pairs ride the diagonal
-    // (Hamming 0 by definition) instead of the banded join.
-    val h = hashes.persist(lvl)
-    val hid = col("b0").bitwiseOR(shiftleft(col("b1"), 16))
-      .bitwiseOR(shiftleft(col("b2"), 32))
-      .bitwiseOR(shiftleft(col("b3"), 48)).as("hid")
-    val members = h.select(col("img_id"), hid).persist(lvl)
-    val dh = h.select(hid, col("b0"), col("b1"), col("b2"), col("b3"))
-      .distinct().persist(lvl)
-    // Threshold-adaptive blocking: probe-side keys joined against
-    // exact-side keys (identical frames below the MIH cutover; probe
-    // enumerates ≤e flips above it — band distance is symmetric, so
-    // catching each unordered pair in the hid_a < hid_b orientation
-    // is sufficient).
-    val dhKeyed = dh.withColumnRenamed("hid", "img_id")
-    val ba = probeBandKeys(dhKeyed, maxHamming)
-      .toDF("hid_a", "a_band_idx", "a_bval")
-    val bb = exactBandKeys(dhKeyed, maxHamming)
-      .toDF("hid_b", "b_band_idx", "b_bval")
-    val cand = ba.join(bb, col("a_band_idx") === col("b_band_idx") &&
-        col("a_bval") === col("b_bval") && col("hid_a") < col("hid_b"))
-      .select("hid_a", "hid_b").distinct()
-    val verified = cand
-      .join(dh.toDF("hid_a", "a_b0", "a_b1", "a_b2", "a_b3"), Seq("hid_a"))
-      .join(dh.toDF("hid_b", "b_b0", "b_b1", "b_b2", "b_b3"), Seq("hid_b"))
-      .select(col("hid_a"), col("hid_b"),
-        (expr("bit_count(a_b0 ^ b_b0) + bit_count(a_b1 ^ b_b1)") +
-          expr("bit_count(a_b2 ^ b_b2) + bit_count(a_b3 ^ b_b3)"))
-          .cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    val diag = dh.select(col("hid").as("hid_a"), col("hid").as("hid_b"),
-      lit(0L).as("hamming"))
-    val ma = members.select(col("hid").as("hid_a"), col("img_id").as("ia"))
-    val mb = members.select(col("hid").as("hid_b"), col("img_id").as("ib"))
-    // Off-diagonal: every cross-member combination, ordered by img id;
-    // diagonal: member pairs within one hash, each unordered pair once.
-    val offDiag = verified.join(ma, "hid_a").join(mb, "hid_b")
-    val onDiag = diag.join(ma, "hid_a").join(mb, "hid_b")
-      .filter(col("ia") < col("ib"))
-    val pairs = offDiag.unionByName(onDiag)
-      .select(least(col("ia"), col("ib")).as("img_a"),
-        greatest(col("ia"), col("ib")).as("img_b"), col("hamming"))
-    (pairs, h, members, dh)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val (pairs, members, dh) = Hamming.memberPairs(
+      hashes.select(col("img_id"), Hamming.hid), "img_id", maxHamming)
+    (pairs.toDF("img_a", "img_b", "hamming"), members, dh)
   }
 
   /** Clip-level video near-dup from per-frame fingerprints — EXACT for
@@ -1364,22 +1284,20 @@ object Multimodal {
     * fingerprints massively (still scenes, fades, re-encodes — the
     * sf0.1 fixture carries 22,500 frames but only ~2,200 distinct
     * hashes, band buckets up to ~800 frames deep), so the pairwise
-    * stage here runs over DISTINCT hashes only (Σ bucket² shrinks by
-    * the square of the duplication factor) and hash-level matches
-    * expand back through per-(hash, video) frame COUNTS directly into
-    * the video-pair aggregate — the ~1M-row frame-pair set is never
-    * materialized and no distinct over banded candidates is needed.
+    * stage runs over DISTINCT hashes only ([[Hamming.selfPairs]]) and
+    * hash-level matches expand back through per-(hash, video) frame
+    * COUNTS directly into the video-pair aggregate — the ~1M-row
+    * frame-pair set is never materialized.
     *
     * Exactness: every cross-video frame pair within Hamming
     * `maxHamming` is counted exactly once — identical-hash pairs via
-    * the diagonal (the `video_a < video_b` guard keeps one orientation
-    * of the symmetric expansion), distinct-hash pairs via the banded
-    * candidate join over distinct hashes ([[bandBits]] pigeonhole —
-    * lossless) oriented by the total order on the packed 64-bit hash,
-    * so each (hash_a, hash_b, video_a, video_b) combination is
-    * produced once with multiplicity cnt_a·cnt_b. Output matches the
-    * all-pairs definition: (video_a, video_b, n_frame_pairs,
-    * min_hamming) for pairs with ≥ `minFrames` matching frame pairs. */
+    * the diagonal (one orientation of the symmetric expansion),
+    * distinct-hash pairs via the blocked candidate join oriented by
+    * the total order on the packed hash, so each (hash_a, hash_b,
+    * video_a, video_b) combination is produced once with multiplicity
+    * cnt_a·cnt_b. Output matches the all-pairs definition: (video_a,
+    * video_b, n_frame_pairs, min_hamming) for pairs with ≥ `minFrames`
+    * matching frame pairs. */
   def videoNearDup(frameHashes: DataFrame, maxHamming: Int,
                    minFrames: Long): DataFrame = {
     val (out, hv, dh) = videoNearDupPlan(frameHashes, maxHamming, minFrames)
@@ -1397,160 +1315,20 @@ object Multimodal {
                                       minFrames: Long)
       : (DataFrame, DataFrame, DataFrame) = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // (video, hash) frame multiplicities. hid re-packs the four stored
-    // 16-bit words into the one 64-bit hash — a bijection, so equality
-    // / ordering on hid is equality / a total order on the hash.
-    val hid = col("b0").bitwiseOR(shiftleft(col("b1"), 16))
-      .bitwiseOR(shiftleft(col("b2"), 32))
-      .bitwiseOR(shiftleft(col("b3"), 48)).as("hid")
     val hv = frameHashes
-      .select(shiftright(col("img_id"), 4).as("video"), hid,
-        col("b0"), col("b1"), col("b2"), col("b3"))
-      .groupBy("video", "hid", "b0", "b1", "b2", "b3")
+      .select(shiftright(col("img_id"), 4).as("video"), Hamming.hid)
+      .groupBy("video", "hid")
       .agg(count(lit(1)).as("cnt"))
       .persist(lvl)
-    val dh = hv.select("hid", "b0", "b1", "b2", "b3").distinct().persist(lvl)
-    // Threshold-adaptive blocking: probe-side keys joined against
-    // exact-side keys (identical frames below the MIH cutover; probe
-    // enumerates ≤e flips above it — band distance is symmetric, so
-    // catching each unordered pair in the hid_a < hid_b orientation
-    // is sufficient).
-    val dhKeyed = dh.withColumnRenamed("hid", "img_id")
-    val ba = probeBandKeys(dhKeyed, maxHamming)
-      .toDF("hid_a", "a_band_idx", "a_bval")
-    val bb = exactBandKeys(dhKeyed, maxHamming)
-      .toDF("hid_b", "b_band_idx", "b_bval")
-    val cand = ba.join(bb, col("a_band_idx") === col("b_band_idx") &&
-        col("a_bval") === col("b_bval") && col("hid_a") < col("hid_b"))
-      .select("hid_a", "hid_b").distinct()
-    val verified = cand
-      .join(dh.toDF("hid_a", "a_b0", "a_b1", "a_b2", "a_b3"), Seq("hid_a"))
-      .join(dh.toDF("hid_b", "b_b0", "b_b1", "b_b2", "b_b3"), Seq("hid_b"))
-      .select(col("hid_a"), col("hid_b"),
-        (expr("bit_count(a_b0 ^ b_b0) + bit_count(a_b1 ^ b_b1)") +
-          expr("bit_count(a_b2 ^ b_b2) + bit_count(a_b3 ^ b_b3)"))
-          .cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-    // Identical-hash matches: the diagonal, Hamming 0 by definition.
-    val diag = dh.select(col("hid").as("hid_a"), col("hid").as("hid_b"),
-      lit(0L).as("hamming"))
-    val hvA = hv.select(col("hid").as("hid_a"), col("video").as("va"),
-      col("cnt").as("ca"))
-    val hvB = hv.select(col("hid").as("hid_b"), col("video").as("vb"),
-      col("cnt").as("cb"))
-    val offDiag = verified.join(hvA, "hid_a").join(hvB, "hid_b")
-      .filter(col("va") =!= col("vb"))
-    val onDiag = diag.join(hvA, "hid_a").join(hvB, "hid_b")
-      .filter(col("va") < col("vb"))
-    val out = offDiag.unionByName(onDiag)
-      .select(least(col("va"), col("vb")).as("video_a"),
-        greatest(col("va"), col("vb")).as("video_b"),
-        (col("ca") * col("cb")).as("n"), col("hamming"))
+    val dh = hv.select("hid").distinct().persist(lvl)
+    val out = Hamming.expand(Hamming.selfPairs(dh, maxHamming), hv, "video")
+      .select(col("lo").as("video_a"), col("hi").as("video_b"),
+        (col("cnt_a") * col("cnt_b")).as("n"), col("hamming"))
       .groupBy("video_a", "video_b")
       .agg(sum(col("n")).as("n_frame_pairs"),
         min(col("hamming")).as("min_hamming"))
       .filter(col("n_frame_pairs") >= minFrames)
     (out, hv, dh)
-  }
-
-  /** (img_id, band_idx, bval) blocking keys of every hash row under the
-    * [[bandBits]] layout — shared by the self-join ([[imageNearDup]])
-    * and the corpus-vs-batch probe ([[flagAgainstFingerprintIndex]]). */
-  // private[graft]: graft.ScaleProbe measures Σ bucket² of the real
-  // banded keys for the scale-fixture evidence in SCALE.md.
-  private[graft] def bandedImageIds(h: DataFrame, maxHamming: Int): DataFrame = {
-    val bandStructs = bandBits(maxHamming).zipWithIndex.map { case (r, k) =>
-      struct(lit(k).as("band_idx"), bandValue(r).as("bval"))
-    }
-    h.select(col("img_id"), explode(array(bandStructs: _*)).as("b"))
-      .select(col("img_id"), col("b.band_idx").as("band_idx"),
-        col("b.bval").as("bval"))
-  }
-
-  // --------------------------- multi-index Hamming (dense fingerprint spaces)
-
-  /** Threshold at or above which the banded blocking switches from
-    * pigeonhole bands (maxHamming+1 bands of 64/(maxHamming+1) bits) to
-    * MULTI-INDEX HAMMING (3 wide bands + probe enumeration). The
-    * round-12 10× probe measured why: at threshold 8 the pigeonhole
-    * layout leaves 7-bit band values — 128 possible buckets per band,
-    * which ANY corpus beyond ~10k fingerprints saturates, making
-    * Σ bucket² structurally quadratic (12.4M at sf0.1 → 1.24B at 10×,
-    * ×100 — the audio family's cliff; distinct-hash compression can't
-    * help because audio fingerprints are near-distinct). MIH (Norouzi,
-    * Punjani, Fleet: "Fast Search in Hamming Space with Multi-Index
-    * Hashing", CVPR 2012) blocks on 3 bands of 22/21/21 bits and
-    * enumerates every ≤⌊h/3⌋-bit flip of the PROBE side's band values:
-    * the generalized pigeonhole — if all 3 bands differed by more than
-    * ⌊h/3⌋, the total would exceed 3·(⌊h/3⌋+1) > h — makes candidate
-    * recall exact, while bucket space grows to 2²¹ and join work drops
-    * from Σ bucket² to n·(enumeration ≈ 718 at h=8) + near-pair
-    * collisions. Small thresholds keep the simple layout: enumeration
-    * grows as C(width, ≤e) while narrow bands only saturate when the
-    * threshold (hence band count) is large. */
-  private val MihCutover = 7
-
-  private[graft] def useMih(maxHamming: Int): Boolean = maxHamming >= MihCutover
-
-  /** 3 MIH bands over the 64-bit hash: 22 + 21 + 21 bits. */
-  private[graft] val mihRanges: Seq[Range] = Seq(0 until 22, 22 until 43, 43 until 64)
-
-  /** Per-band error budget e = ⌊h/3⌋ (3·(e+1) > h — pigeonhole). */
-  private def mihErrors(maxHamming: Int): Int = maxHamming / 3
-
-  /** All XOR masks with at most e bits set within `width` bits,
-    * ascending popcount — the probe enumeration (254 masks at width 22,
-    * e = 2). */
-  private def mihMasks(width: Int, e: Int): Seq[Long] =
-    (0 to e).flatMap {
-      case 0 => Seq(0L)
-      case k => (0 until width).combinations(k)
-        .map(_.foldLeft(0L)((m, b) => m | (1L << b))).toSeq
-    }
-
-  /** Threshold-adaptive blocking keys, EXACT side (what gets indexed):
-    * MIH bands at high thresholds, pigeonhole bands below the cutover.
-    * Pair with [[probeBandKeys]] — a probe row must be joined against
-    * keys of the SAME scheme. */
-  private[graft] def exactBandKeys(h: DataFrame, maxHamming: Int): DataFrame =
-    if (useMih(maxHamming)) mihExactIds(h) else bandedImageIds(h, maxHamming)
-
-  /** Threshold-adaptive blocking keys, PROBE side (what scans the
-    * index): enumerated ≤e-flip variants under MIH, plain band values
-    * below the cutover (where the probe and exact sides coincide). */
-  private[graft] def probeBandKeys(h: DataFrame, maxHamming: Int): DataFrame =
-    if (useMih(maxHamming)) mihProbeIds(h, maxHamming)
-    else bandedImageIds(h, maxHamming)
-
-  /** EXACT-side MIH keys: (img_id, band_idx, bval) under [[mihRanges]]. */
-  private[graft] def mihExactIds(h: DataFrame): DataFrame = {
-    val bandStructs = mihRanges.zipWithIndex.map { case (r, k) =>
-      struct(lit(k).as("band_idx"), bandValue(r).as("bval"))
-    }
-    h.select(col("img_id"), explode(array(bandStructs: _*)).as("b"))
-      .select(col("img_id"), col("b.band_idx").as("band_idx"),
-        col("b.bval").as("bval"))
-  }
-
-  /** PROBE-side MIH keys: every ≤e-bit flip of every band value —
-    * (img_id, band_idx, bval) rows, ~718 per hash at h=8. The
-    * expansion is a BROADCAST join of the exact keys against the tiny
-    * (band_idx, mask) table — one XOR per output row. (A first cut
-    * exploded a literal mask array over a per-row band-value array;
-    * generator/project collapsing re-evaluated the ~64-shift band
-    * construction once per OUTPUT row, ~700× per hash — the join form
-    * computes each band value exactly once.) */
-  private[graft] def mihProbeIds(h: DataFrame, maxHamming: Int): DataFrame = {
-    val e = mihErrors(maxHamming)
-    val spark = h.sparkSession
-    import spark.implicits._
-    val masks = mihRanges.zipWithIndex.flatMap { case (r, k) =>
-      mihMasks(r.length, e).map(m => (k, m))
-    }.toDF("band_idx", "mask")
-    exactBandKeys(h, maxHamming)
-      .join(broadcast(masks), Seq("band_idx"))
-      .select(col("img_id"), col("band_idx"),
-        col("bval").bitwiseXOR(col("mask")).as("bval"))
   }
 
   // ------------------------------------ incremental (streaming) image dedup
@@ -1603,38 +1381,23 @@ object Multimodal {
       * members) and re-derives its band keys — cheap, the distinct set is
       * small by construction; raw hashes just re-materialize their union. */
     override protected def compacted(): Seq[DataFrame] = {
-      val hm = AccumIndex.persist(hashMin.groupBy("hid", "b0", "b1", "b2", "b3")
+      val hm = AccumIndex.persist(hashMin.groupBy("hid")
         .agg(min(col("min_img")).as("min_img")))
-      val b = AccumIndex.persist(hashBands(hm, maxHamming))
+      val b = AccumIndex.persist(Hamming.exactKeys(hm, maxHamming))
       val h = AccumIndex.persist(hashes)
       AccumIndex.fill(b, h)
       Seq(b, hm, h)
     }
   }
 
-  /** The 64-bit hash identity packed from the four stored 16-bit words
-    * — shared by [[imageNearDup]]'s compression and the index legs. */
-  private def hidCol: org.apache.spark.sql.Column =
-    col("b0").bitwiseOR(shiftleft(col("b1"), 16))
-      .bitwiseOR(shiftleft(col("b2"), 32))
-      .bitwiseOR(shiftleft(col("b3"), 48))
-
-  /** Exact-side band keys (hid, band_idx, bval) of a distinct-hash table. */
-  private def hashBands(hm: DataFrame, maxHamming: Int): DataFrame =
-    exactBandKeys(hm.select(col("hid").as("img_id"), col("b0"), col("b1"),
-        col("b2"), col("b3")), maxHamming)
-      .withColumnsRenamed(Map("img_id" -> "hid"))
-
   /** One compressed index leg (bands, hashMin, hashes) from a raw
     * (img_id, b0..b3) frame: bands ← hashMin ← hashes is one lineage
     * chain. */
   private def fingerprintLeg(raw: DataFrame, maxHamming: Int): Seq[DataFrame] = {
     val h = AccumIndex.persist(raw)
-    val hm = AccumIndex.persist(h.select(col("img_id"), hidCol.as("hid"),
-        col("b0"), col("b1"), col("b2"), col("b3"))
-      .groupBy("hid", "b0", "b1", "b2", "b3")
-      .agg(min(col("img_id")).as("min_img")))
-    val bands = AccumIndex.persist(hashBands(hm, maxHamming))
+    val hm = AccumIndex.persist(h.select(col("img_id"), Hamming.hid)
+      .groupBy("hid").agg(min(col("img_id")).as("min_img")))
+    val bands = AccumIndex.persist(Hamming.exactKeys(hm, maxHamming))
     AccumIndex.fill(bands)
     Seq(bands, hm, h)
   }
@@ -1648,55 +1411,38 @@ object Multimodal {
     AccumIndex.load(spark, path)(s =>
       buildFingerprintIndex(s.table("hashes"), s.param("max_hamming").toInt))
 
-  /** Flag one NEW image batch against a prebuilt [[FingerprintIndex]]: banded
-    * candidates (new bands × corpus bands — recall-exact for the
-    * threshold, [[bandBits]]), exact-Hamming verification, best corpus
-    * match per new image (min hamming, then min img_id). Per-ingest
-    * cost is the batch's bands plus Σ bucket² candidate work against
-    * the index — the corpus side is never recomputed. The result is
-    * checkpointed and the batch-side cache dropped before returning
-    * (the [[Dedup.materializeThenRelease]] discipline), so repeated
+  /** Flag one NEW image batch against a prebuilt [[FingerprintIndex]]:
+    * the batch's distinct hashes probe the index keys
+    * ([[Hamming.probe]] — recall-exact for the threshold, verified by
+    * exact distance), best corpus match per new image (min hamming,
+    * then min img_id). Per-ingest cost is the batch's keys plus Σ
+    * bucket² candidate work against the index — the corpus side is
+    * never recomputed. The result is checkpointed and the batch-side
+    * cache dropped before returning (the
+    * [[Dedup.materializeThenRelease]] discipline), so repeated
     * micro-batches leak nothing. */
   def flagAgainstFingerprintIndex(newHashes: DataFrame,
                                   index: FingerprintIndex,
                                   idOut: String = "img_new"): DataFrame = {
-    val maxHamming = index.maxHamming
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Batch side compresses too: candidates are hash×hash, expanded
     // back to images only after verification.
-    val nh = newHashes.select(col("img_id"), hidCol.as("hid")).persist(lvl)
-    val nd = newHashes.select(hidCol.as("hid"),
-        col("b0"), col("b1"), col("b2"), col("b3"))
-      .distinct().persist(lvl)
-    val nb = probeBandKeys(
-        nd.select(col("hid").as("img_id"), col("b0"), col("b1"),
-          col("b2"), col("b3")), maxHamming)
-      .withColumnsRenamed(Map("img_id" -> "hid_n"))
-    val ob = index.bands.withColumnsRenamed(Map("hid" -> "hid_o"))
-    val cand = nb.join(ob, Seq("band_idx", "bval"))
-      .select(col("hid_n"), col("hid_o")).distinct()
-    val verified = cand
-      .join(nd.toDF("hid_n", "n_b0", "n_b1", "n_b2", "n_b3"), Seq("hid_n"))
-      .join(index.hashMin.toDF("hid_o", "o_b0", "o_b1", "o_b2", "o_b3",
-        "min_img"), Seq("hid_o"))
-      .select(col("hid_n"), col("min_img"),
-        (expr("bit_count(n_b0 ^ o_b0) + bit_count(n_b1 ^ o_b1)") +
-          expr("bit_count(n_b2 ^ o_b2) + bit_count(n_b3 ^ o_b3)"))
-          .cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    val nh = newHashes.select(col("img_id"), Hamming.hid).persist(lvl)
+    val nd = nh.select("hid").distinct().persist(lvl)
+    val verified = Hamming.probe(nd, index.bands, index.maxHamming)
+      .join(index.hashMin.withColumnRenamed("hid", "hid_b"), Seq("hid_b"))
     // Best corpus match per new HASH = best per new image (every member
     // of an index hash has the same distance; min_img is the in-hash
     // tie-break, the window handles cross-hash and cross-leg ties).
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("hid_n").orderBy(col("hamming").asc, col("min_img").asc)
+      .partitionBy("hid_a").orderBy(col("hamming").asc, col("min_img").asc)
     val bestHash = verified.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
-      .select(col("hid_n"), col("min_img").as("best_match"), col("hamming"))
+      .select(col("hid_a").as("hid"), col("min_img").as("best_match"), col("hamming"))
     // The index is modality-agnostic; the probe id column is named by
     // the caller (audio passes "clip_new") so query layers don't
     // rename after the fact.
-    val best = nh.withColumnsRenamed(Map("hid" -> "hid_n"))
-      .join(bestHash, Seq("hid_n"))
+    val best = nh.join(bestHash, Seq("hid"))
       .select(col("img_id").as(idOut), col("best_match"), col("hamming"))
     Dedup.materializeThenRelease(best, nh, nd)
   }

@@ -984,16 +984,14 @@ object Similarity {
       s"(CASE WHEN dotp(v, ${planeSql(p)}) > 0 THEN ${1L << i} ELSE 0 END)"
     }.mkString(" + ")
 
-  /** Band rows (vec_id, c, cv): the 16-bit signature split into 4 bands
-    * of 4 bits. Id-narrow on purpose — candidate generation joins these
-    * tiny rows, never the vectors. `e` must be a [[normalized]] frame. */
-  def bandedIds(e: DataFrame, dim: Int): DataFrame = {
-    val planes = hyperplanes(16, dim)
-    e.withColumn("sig", expr(signatureExpr(planes)))
-      .select(col("vec_id"), explode(array((0 until 4).map(c =>
-        struct(lit(c).as("c"), expr(s"(sig >> ${4 * c}) & 15").as("cv"))): _*)).as("b"))
-      .select(col("vec_id"), col("b.c").as("c"), col("b.cv").as("cv"))
-  }
+  /** Band rows (vec_id, band_idx, bval): the 16-bit signature split
+    * into 4 bands of 4 bits ([[Hamming.bandKeys]]; bval = (sig >> 4c) &
+    * 15, the value the oracles replay). Id-narrow on purpose —
+    * candidate generation joins these tiny rows, never the vectors.
+    * `e` must be a [[normalized]] frame. */
+  def bandedIds(e: DataFrame, dim: Int): DataFrame =
+    Hamming.bandKeys(e, "vec_id", (0 until 16 by 4).map(b => b until b + 4),
+      expr(signatureExpr(hyperplanes(16, dim))))
 
   /** LSH ANN top-k: 16-bit sign signature, banded into 4×4-bit buckets;
     * a pair is a candidate if any band matches; exact cosine ranks the
@@ -1004,7 +1002,7 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bands = bandedIds(e, dim)
     val qb = bands.filter(queryPred).withColumnRenamed("vec_id", "query_id")
-    val cand = qb.join(bands, Seq("c", "cv"))
+    val cand = qb.join(bands, Seq("band_idx", "bval"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
       .distinct()
@@ -1042,8 +1040,8 @@ object Similarity {
     * re-ranks candidates to top-k via the bounded [[heapTopK]]
     * aggregator.
     *
-    * The candidate pass is a BROADCAST BINARY SCAN (the faiss
-    * IndexBinaryFlat shape): the query sketches (5 longs each)
+    * The candidate pass is a BROADCAST BINARY SCAN ([[Hamming.scan]],
+    * the faiss IndexBinaryFlat shape): the packed query sketches
     * broadcast to every partition and one xor+popcount pass streams
     * the corpus — no shuffle, no index, memory traffic 32× below the
     * float vectors. That is the right shape at retrieval radii:
@@ -1054,8 +1052,8 @@ object Similarity {
     * buckets stop being selective; measured on the synthetic corpus:
     * min query-corpus Hamming 16–19/64). The MIH machinery keeps the
     * NEAR-DUP radii (h ≲ 10) where it is exact and sub-linear — see
-    * [[graft.operators.Multimodal.probeBandKeys]]; this operator is
-    * the honest shape for the loose-radius regime.
+    * [[Hamming.layout]]; this operator is the honest shape for the
+    * loose-radius regime.
     *
     * Determinism is what makes a full DuckDB oracle possible: SQL
     * replays the seeded sketches and the same Hamming ≤ h candidate
@@ -1065,15 +1063,9 @@ object Similarity {
                      maxHamming: Int): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = normalized(emb).persist(lvl)
-    val sk = binarySketch(e, dim).persist(lvl)
-    val q = sk.filter(queryPred).toDF("query_id", "q_b0", "q_b1", "q_b2", "q_b3")
-    val c = sk.toDF("vec_id", "c_b0", "c_b1", "c_b2", "c_b3")
-    val cand = c.join(broadcast(q),
-        col("vec_id") =!= col("query_id") &&
-          (expr("bit_count(q_b0 ^ c_b0) + bit_count(q_b1 ^ c_b1)") +
-            expr("bit_count(q_b2 ^ c_b2) + bit_count(q_b3 ^ c_b3)"))
-            .cast("long") <= maxHamming)
-      .select(col("query_id"), col("vec_id"))
+    val sk = packedSketch(e, dim).persist(lvl)
+    val cand = Hamming.scan(sk,
+      sk.filter(queryPred).withColumnRenamed("vec_id", "query_id"), maxHamming)
     val scored = cand
       .join(e.select(col("vec_id").as("query_id"), col("v").as("qv")), Seq("query_id"))
       .join(e, Seq("vec_id"))
@@ -1110,11 +1102,15 @@ object Similarity {
       copy(frames = f, legs = l)
   }
 
+  /** (vec_id, hid): [[binarySketch]] packed to one 64-bit hash. */
+  private def packedSketch(e: DataFrame, dim: Int): DataFrame =
+    binarySketch(e, dim).select(col("vec_id"), Hamming.hid)
+
   /** (sketches, vectors) from normalized vectors: sketches ← vectors is
     * one lineage chain. */
   private def sketchLeg(normalized: DataFrame, dim: Int): Seq[DataFrame] = {
     val e = AccumIndex.persist(normalized)
-    val sk = AccumIndex.persist(binarySketch(e, dim))
+    val sk = AccumIndex.persist(packedSketch(e, dim))
     AccumIndex.fill(sk)
     Seq(sk, e)
   }
@@ -1144,15 +1140,9 @@ object Similarity {
                              k: Int): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val qe = normalizedNonZero(queryEmb).persist(lvl)
-    val qsk = binarySketch(qe, index.dim)
-      .toDF("query_id", "q_b0", "q_b1", "q_b2", "q_b3")
-    val c = index.sketches.toDF("vec_id", "c_b0", "c_b1", "c_b2", "c_b3")
-    val cand = c.join(broadcast(qsk),
-        col("vec_id") =!= col("query_id") &&
-          (expr("bit_count(q_b0 ^ c_b0) + bit_count(q_b1 ^ c_b1)") +
-            expr("bit_count(q_b2 ^ c_b2) + bit_count(q_b3 ^ c_b3)"))
-            .cast("long") <= index.maxHamming)
-      .select(col("query_id"), col("vec_id"))
+    val cand = Hamming.scan(index.sketches,
+      packedSketch(qe, index.dim).withColumnRenamed("vec_id", "query_id"),
+      index.maxHamming)
     val scored = cand
       .join(qe.select(col("vec_id").as("query_id"), col("v").as("qv")),
         Seq("query_id"))

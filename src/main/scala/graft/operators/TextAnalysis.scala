@@ -921,17 +921,6 @@ object TextAnalysis {
     Similarity.heapTopKGlobal(scored, "score", "doc_id", k)
   }
 
-  /** Word-distribution drift between two corpus snapshots (KL
-    * divergence both directions, per language) — the regression check a
-    * pipeline runs when a new crawl lands: a jump in KL(new‖old) flags a
-    * shifted source mix before it reaches training. Laplace add-1
-    * smoothing over the joint per-lang vocabulary keeps both directions
-    * finite. Engine-exactness: the log argument is a ratio of EXACT
-    * integer products (each factor < 2⁵³, cast to double before the
-    * multiply on both engines), terms are decimal-stable-summed and the
-    * final divergence rounded to 6. Scale: two map-side-combining
-    * groupBys (lang×word, then lang) and a broadcast-size totals join —
-    * linear in the corpus, no pairwise anything. */
   /** Jensen–Shannon drift between the same two corpus snapshots as
     * [[klDrift]] — the symmetric, bounded ([0, ln 2]) drift score a
     * regression gate can threshold without direction-picking. Same
@@ -965,6 +954,17 @@ object TextAnalysis {
         col("ta").as("tokens_a"), col("tb").as("tokens_b"), col("js"))
   }
 
+  /** Word-distribution drift between two corpus snapshots (KL
+    * divergence both directions, per language) — the regression check a
+    * pipeline runs when a new crawl lands: a jump in KL(new‖old) flags a
+    * shifted source mix before it reaches training. Laplace add-1
+    * smoothing over the joint per-lang vocabulary keeps both directions
+    * finite. Engine-exactness: the log argument is a ratio of EXACT
+    * integer products (each factor < 2⁵³, cast to double before the
+    * multiply on both engines), terms are decimal-stable-summed and the
+    * final divergence rounded to 6. Scale: two map-side-combining
+    * groupBys (lang×word, then lang) and a broadcast-size totals join —
+    * linear in the corpus, no pairwise anything. */
   def klDrift(docs: DataFrame, isB: Column): DataFrame = {
     val words = docs.select(col("lang"), isB.as("is_b"),
       explode(split(col("text"), " ")).as("word"))
@@ -1204,26 +1204,6 @@ object TextAnalysis {
         (ab, c) => concat(ab, lit(" "), c))).as("gram"))
   }
 
-  /** Pairwise SOURCE-overlap matrix — the dataset-card question ("how
-    * much of source A is also in source B?") answered two ways in one
-    * row: a KMV (k-minimum-values) sketch estimate and the exact
-    * Jaccard it approximates.
-    *
-    * The KMV path is the 100 TB shape: one distinct pass builds an
-    * O(k) sketch per source ([[graft.functions.KMinAggregator]] over
-    * engine-portable md5 hashes), and the S²/2 pairwise stage runs on
-    * sketches alone — S·k longs broadcast, never touching the corpus
-    * again. Because a set's k smallest hashes are deterministic, the
-    * ESTIMATE itself is exactly reproducible by the oracle — this
-    * sketch is fully hash-gated, unlike HLL/quantile sketches whose
-    * internal state is engine-specific. The estimator is the standard
-    * KMV Jaccard: among the k smallest hashes of A∪B, the fraction
-    * present in both sketches (σ ≈ √(J(1−J)/k) ≈ 0.04 at k=128).
-    *
-    * The exact column is the audit companion (the fuzzy-linkage-recall
-    * discipline): a word-keyed co-partitioned intersection join — at
-    * production scale you run it on a sampled slice or not at all; the
-    * sketch column is the one a 100 TB dataset card ships. */
   /** Distinct (source, trigram) pairs — the set universe behind the KMV
     * sketch family. Trigrams, not words: the corpus' word vocabulary is
     * tiny and near-fully shared across sources, so word sets would make
@@ -1244,6 +1224,26 @@ object TextAnalysis {
     udaf(new graft.functions.KMinAggregator(k),
       org.apache.spark.sql.Encoders.scalaLong)
 
+  /** Pairwise SOURCE-overlap matrix — the dataset-card question ("how
+    * much of source A is also in source B?") answered two ways in one
+    * row: a KMV (k-minimum-values) sketch estimate and the exact
+    * Jaccard it approximates.
+    *
+    * The KMV path is the 100 TB shape: one distinct pass builds an
+    * O(k) sketch per source ([[graft.functions.KMinAggregator]] over
+    * engine-portable md5 hashes), and the S²/2 pairwise stage runs on
+    * sketches alone — S·k longs broadcast, never touching the corpus
+    * again. Because a set's k smallest hashes are deterministic, the
+    * ESTIMATE itself is exactly reproducible by the oracle — this
+    * sketch is fully hash-gated, unlike HLL/quantile sketches whose
+    * internal state is engine-specific. The estimator is the standard
+    * KMV Jaccard: among the k smallest hashes of A∪B, the fraction
+    * present in both sketches (σ ≈ √(J(1−J)/k) ≈ 0.04 at k=128).
+    *
+    * The exact column is the audit companion (the fuzzy-linkage-recall
+    * discipline): a word-keyed co-partitioned intersection join — at
+    * production scale you run it on a sampled slice or not at all; the
+    * sketch column is the one a 100 TB dataset card ships. */
   def sourceOverlapKmv(docs: DataFrame, k: Int): DataFrame = {
     val kmin = kminAgg(k)
     // persisted: the trigram explode + distinct feeds the sketch, the

@@ -1274,7 +1274,7 @@ object PipelinePack {
     // Hamming VID_HAMMING_MAX — pairwise over DISTINCT hashes only
     // (video frames repeat fingerprints massively), expanded through
     // per-(hash, video) frame counts straight into the video-pair
-    // aggregate; threshold-exact (bandBits pigeonhole + diagonal),
+    // aggregate; threshold-exact (Hamming.selfPairs + diagonal),
     // verified against the oracle's all-pairs frame DEFINITION — the
     // "re-encoded / overlapping clip" detector a video curation
     // pipeline runs.
@@ -1315,7 +1315,7 @@ object PipelinePack {
         .orderBy("source")
     },
     // Image near-dup by 64-bit aHash over REAL decoded rasters,
-    // threshold-EXACT maxHamming+1-band blocking (Multimodal.bandBits),
+    // threshold-EXACT blocking (Hamming.layout: pigeonhole or MIH),
     // exact-Hamming verified against the oracle's all-pairs DEFINITION.
     // The corpus plants brightness-shifted re-renders (doc_id % 5 == 0)
     // as the near-dups a crawl-scale image dedup must catch.
@@ -1630,20 +1630,16 @@ object PipelinePack {
        |  SELECT u AS doc_id, least(u, min(v)) AS cluster_id
        |  FROM reach GROUP BY u)""".stripMargin
 
-  /** aHash image pipeline CTEs shared by the near-dup, cluster, and
-    * streaming-probe oracles: variant image set → closed-form 8×8
-    * downsampled grid → integer mean-compare bits → 4×16-bit hash
-    * words → ALL-PAIRS exact Hamming. The oracle states the
-    * DEFINITION (every pair within threshold); the Spark side's
-    * maxHamming+1-band blocking (Multimodal.bandBits) is a
-    * pigeonhole-LOSSLESS candidate pruning of the same result, so a
-    * recall-losing band layout hash-fails here. The hash itself
-    * mirrors Multimodal.{packImageVariants,imageAHash}, which measure
-    * the same quantities from rasters DECODED by ImageIO. */
   /** The closed-form aHash chain (dims → 8×8 cells → mean-compare
     * bits → 16-bit words → `h`) over an `imgs(img_id, doc_id, delta)`
-    * CTE already in scope — shared by the self-join family and the
-    * streaming corpus-probe oracle. */
+    * CTE already in scope — shared by the near-dup, cluster and
+    * streaming corpus-probe oracles, which then state the DEFINITION
+    * (all-pairs exact Hamming, every pair within threshold). The Spark
+    * side's threshold-derived blocking (Hamming.layout) is a LOSSLESS
+    * candidate pruning of the same result, so a recall-losing layout
+    * hash-fails here. The hash mirrors
+    * Multimodal.{packImageVariants,imageAHash}, which measure the same
+    * quantities from rasters DECODED by ImageIO. */
   private lazy val imageHashCtes =
     """dims AS (SELECT img_id, doc_id, delta,
       |                8 + doc_id % 9 AS w, 8 + doc_id % 7 AS h FROM imgs),
@@ -1906,26 +1902,23 @@ object PipelinePack {
        |$jaccardTail""".stripMargin
   }
 
+  /** The simhash oracle states the all-pairs DEFINITION (every doc
+    * pair within HAMMING_MAX), so a recall-losing blocking layout on
+    * the Spark side hash-fails here. */
   private val simhashSql: String = {
     val sums = (0 until 60).map(j => s"sum(((h >> $j) & 1) * 2 - 1) AS s$j")
       .mkString(",\n       ")
     val sig = (0 until 60).map(j => s"CASE WHEN s$j > 0 THEN ${1L << j} ELSE 0 END")
       .mkString(" + ")
-    val chunkSelects = (0 until 4).map(c =>
-      s"SELECT doc_id, simhash, $c AS c, (simhash >> ${15 * c}) & 32767 AS cv FROM sigs")
-      .mkString("\n  UNION ALL\n  ")
     s"""WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
        |h AS (SELECT doc_id, ${Hashing.md5LongSql("w")} AS h FROM w),
        |sums AS (SELECT doc_id,
        |       $sums
        |  FROM h GROUP BY doc_id),
-       |sigs AS (SELECT doc_id, CAST($sig AS BIGINT) AS simhash FROM sums),
-       |chunks AS (
-       |  $chunkSelects)
-       |SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
+       |sigs AS (SELECT doc_id, CAST($sig AS BIGINT) AS simhash FROM sums)
+       |SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
        |       CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming
-       |FROM chunks x JOIN chunks y
-       |  ON x.c = y.c AND x.cv = y.cv AND x.doc_id < y.doc_id
+       |FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id
        |WHERE bit_count(xor(x.simhash, y.simhash)) <= $HAMMING_MAX
        |ORDER BY doc_a, doc_b""".stripMargin
   }

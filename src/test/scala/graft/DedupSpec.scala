@@ -109,6 +109,20 @@ class DedupSpec extends AnyFunSuite {
     assert(out.get((0L, 1L)).forall(_ <= 20L))
   }
 
+  test("simhashPairs equals the all-pairs definition over simhashSignatures") {
+    val real = Tables.documents(spark, TestSpark.sf001)
+    val sigs = Dedup.simhashSignatures(real).as[(Long, Long)].collect()
+    val expect = (for {
+      (a, ha) <- sigs; (b, hb) <- sigs
+      d = java.lang.Long.bitCount(ha ^ hb).toLong
+      if a < b && d <= 8L
+    } yield (a, b, d)).toSet
+    val got = Dedup.simhashPairs(real, 8).as[(Long, Long, Long)].collect().toSet
+    val (missed, extra) = (expect -- got, got -- expect)
+    assert(expect.nonEmpty && missed.isEmpty && extra.isEmpty,
+      s"missed ${missed.size} of ${expect.size} pairs, ${extra.size} extra")
+  }
+
   test("duplicate clusters: a chain collapses to one component, min id wins") {
     val pairs = Seq((1L, 5L), (5L, 9L), (20L, 30L)).toDF("doc_a", "doc_b")
     val expected = Set(

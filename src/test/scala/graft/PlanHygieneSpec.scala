@@ -265,7 +265,7 @@ class PlanHygieneSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, d).select("doc_id", "text")
     val hashes = Multimodal.imageAHash(spark,
       Multimodal.packImageVariants(spark, docs)).toDF()
-    val (out, h, members, dh) = Multimodal.imageNearDupPlan(hashes, 6)
+    val (out, members, dh) = Multimodal.imageNearDupPlan(hashes, 6)
     try {
       import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Join}
       val p = out.queryExecution.analyzed
@@ -286,7 +286,7 @@ class PlanHygieneSpec extends AnyFunSuite {
             s"band join side reads raw images (no hid dedup beneath):\n$side")
         }
       }
-    } finally { h.unpersist(); members.unpersist(); dh.unpersist() }
+    } finally { members.unpersist(); dh.unpersist() }
   }
 
   test("no CartesianProduct in any query except the documented exact baseline") {

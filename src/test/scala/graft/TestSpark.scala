@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
   * the JVM starts a single SparkContext regardless of suite order). */
 object TestSpark {
   val sf0001 = "/root/testdata/sf0.001"
+  /** The next scale factor up, beside [[sf0001]]. */
+  val sf001: String = new java.io.File(new java.io.File(sf0001).getParent, "sf0.01").getPath
 
   lazy val spark: SparkSession = {
     val b = SparkSession.builder()

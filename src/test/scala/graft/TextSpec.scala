@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Poly31Hash
-import graft.operators.{Multimodal, Sampling, TextAnalysis}
+import graft.operators.{Hamming, Multimodal, Sampling, TextAnalysis}
 
 class TextSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -732,7 +732,7 @@ class TextSpec extends AnyFunSuite {
 
   test("bandBits: maxHamming+1 disjoint bands exactly cover the 64 bits") {
     for (mh <- 0 until 16) {
-      val bs = Multimodal.bandBits(mh)
+      val bs = Hamming.bandBits(mh)
       assert(bs.length == mh + 1, s"maxHamming=$mh")
       assert(bs.flatMap(_.toList).sorted == (0 until 64).toList,
         s"maxHamming=$mh must partition 0..63")
