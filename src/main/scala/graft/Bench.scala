@@ -125,10 +125,10 @@ object Bench {
         s""""queries":${jmap(results, _._4)},""" +
         s""""queries_median":${jmap(results, _._2)},""" +
         s""""queries_first":${jmap(results, _._3)},"sf":"$sfDir"}"""
-    // A dev-subset run must not clobber the committed full-suite artifact.
-    if (prefixes == Seq(""))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("BENCH_FULL.json"), fullJson)
+    // A dev-subset run must not clobber the committed full-suite
+    // artifact: it writes the same JSON (medians included) to its own file.
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(
+      if (prefixes == Seq("")) "BENCH_FULL.json" else "BENCH_SUBSET.json"), fullJson)
     // Print the result line AFTER spark.stop(): the driver captures the
     // TAIL of the log, and shutdown chatter after the JSON can push it
     // out of the captured window (round-5 driver recorded parsed:null).

@@ -84,7 +84,13 @@ object Tables {
     * predicate is false, and NO shuffle is added — this must never
     * become an unconditional repartition, which would re-shuffle the
     * full input at 100 TB. Apply AFTER projecting to the needed columns
-    * so the exchange moves only what the operator reads. */
+    * so the exchange moves only what the operator reads.
+    *
+    * Contract: pass scan/project frames only. Any frame whose plan AQE
+    * wrapped (one with an exchange or subquery) is returned untouched —
+    * including one whose exchange AQE coalesced to a single partition,
+    * which therefore stays single-task. Fan out before the aggregate or
+    * join, not after. */
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     df.queryExecution.executedPlan match {

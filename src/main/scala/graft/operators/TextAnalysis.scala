@@ -1034,7 +1034,8 @@ object TextAnalysis {
   /** Batch twin of the streaming drift monitor: md5-assign every doc to
     * one of `waves` ingest waves and score each wave against the whole
     * corpus as reference — byte-identical rows to replaying the same
-    * waves through [[graft.streaming.StreamOps.driftMonitorStream]]. */
+    * waves through [[graft.streaming.StreamOps.probeStream]] with the
+    * [[klAgainstRef]] probe. */
   def waveDriftReport(docs: DataFrame, waves: Long): DataFrame =
     klAgainstRef(driftRefHistogram(docs),
       docs.withColumn("wave",

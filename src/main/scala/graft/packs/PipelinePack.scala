@@ -233,182 +233,92 @@ object PipelinePack {
   private def docsWide(s: SparkSession, d: String): DataFrame =
     Tables.fanOut(Tables.documents(s, d))
 
-  /** Once-per-JVM materialization of the shingle→capped-intersection→
-    * jaccard-pairs pipeline shared by `q_dedup_jaccard`,
-    * `q_dedup_clusters`, and `q_dedup_canonical_docs`: the three queries
-    * previously each rebuilt the identical pairs from scratch (~2/3 of
-    * the dedup family's bench cost was duplicate work). Parquet-backed
-    * via the same [[SinksPack.ensureFixture]] discipline as the other
-    * fixtures — each query stays independently verifiable (it reads a
-    * deterministic function of (sfDir, constants)), and at 100 TB this
-    * IS the production shape: near-dup pairs are a materialized
-    * intermediate, not something recomputed per consumer. */
-  private def jaccardPairsFixture(s: SparkSession, d: String): DataFrame = {
-    val path = SinksPack.tmpPath("jpairs", d)
+  /** Once-per-JVM parquet materialization of a deterministic fixture
+    * frame under (kind, sfDir), read back. This is the production shape
+    * of a curation intermediate: near-dup pairs and media fingerprints
+    * are computed once and stored, not recomputed per consumer, and
+    * each query stays independently verifiable (it reads a
+    * deterministic function of (sfDir, constants)). The build fans out
+    * over the session's cores, but the fixture is written as ONE file:
+    * the read side must not pay one tiny file per core per scan (r16:
+    * the banded near-dup self-joins re-scan a fixture per band). */
+  private[graft] def parquetFixture(s: SparkSession, kind: String, d: String)
+                                   (frame: => DataFrame): DataFrame = {
+    val path = SinksPack.tmpPath(kind, d)
     SinksPack.ensureFixture(path) {
-      Dedup.jaccardPairs(Dedup.wordShingles(docsWide(s, d)), JACCARD_MIN)
-        .repartition(1) // single-file fixture (see the hash fixtures below)
-        .write.mode("overwrite").parquet(path)
+      frame.repartition(1).write.mode("overwrite").parquet(path)
     }
     s.read.parquet(path)
   }
 
-  /** Once-per-JVM parquet materialization of the aHash fingerprint
-    * tables (the [[jaccardPairsFixture]] discipline, and exactly the
-    * 100 TB production shape: media fingerprints are computed once at
-    * ingest and stored as a durable index, NOT re-decoded per
-    * consumer). The DECODE queries (`q_mm_decode_real`,
-    * `q_mm_audio_decode`, `q_mm_video_frames`) still run the real
-    * codec round trip every time — only the downstream dedup
-    * consumers read the materialized fingerprints. */
-  private def imageVariantHashFixture(s: SparkSession, d: String): DataFrame = {
-    val path = SinksPack.tmpPath("imghash", d)
-    SinksPack.ensureFixture(path) {
-      Multimodal.imageAHash(s,
-          Multimodal.packImageVariants(s, Tables.documents(s, d))).toDF()
-        // single-file fixture: the hash compute fans out over the
-        // session's cores (codecIds), but the fixture READ side must
-        // not pay 32 tiny files per scan (r16: the banded near-dup
-        // self-joins re-scan the fixture per band)
-        .repartition(1)
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  /** The shingle→capped-intersection→jaccard-pairs pipeline shared by
+    * `q_dedup_jaccard`, `q_dedup_clusters`, `q_dedup_canonical_docs`
+    * and the LSH quality/design reports, built once per JVM (each
+    * query rebuilding it was ~2/3 of the dedup family's bench cost). */
+  private def jaccardPairsFixture(s: SparkSession, d: String): DataFrame =
+    parquetFixture(s, "jpairs", d)(
+      Dedup.jaccardPairs(Dedup.wordShingles(docsWide(s, d)), JACCARD_MIN))
 
-  private def corruptPHashFixture(s: SparkSession, d: String): DataFrame = {
-    val path = SinksPack.tmpPath("imgphash", d)
-    SinksPack.ensureFixture(path) {
-      Multimodal.imagePHash(s,
-          Multimodal.packImageCorrupt(s, Tables.documents(s, d))).toDF()
-        // single-file fixture: the hash compute fans out over the
-        // session's cores (codecIds), but the fixture READ side must
-        // not pay 32 tiny files per scan (r16: the banded near-dup
-        // self-joins re-scan the fixture per band)
-        .repartition(1)
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  /** The media fingerprint tables. The DECODE queries
+    * (`q_mm_decode_real`, `q_mm_audio_decode`, `q_mm_video_frames`)
+    * still run the real codec round trip every time — only the
+    * downstream dedup consumers read the materialized fingerprints. */
+  private def imageVariantHashFixture(s: SparkSession, d: String): DataFrame =
+    parquetFixture(s, "imghash", d)(Multimodal.imageAHash(s,
+      Multimodal.packImageVariants(s, Tables.documents(s, d))).toDF())
 
-  private def noisyAHashFixture(s: SparkSession, d: String): DataFrame = {
-    val path = SinksPack.tmpPath("noisyah", d)
-    SinksPack.ensureFixture(path) {
-      Multimodal.imageAHash(s,
-          Multimodal.packImageNoisy(s, Tables.documents(s, d), NOISE_AMP)).toDF()
-        // single-file fixture: the hash compute fans out over the
-        // session's cores (codecIds), but the fixture READ side must
-        // not pay 32 tiny files per scan (r16: the banded near-dup
-        // self-joins re-scan the fixture per band)
-        .repartition(1)
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  private def corruptPHashFixture(s: SparkSession, d: String): DataFrame =
+    parquetFixture(s, "imgphash", d)(Multimodal.imagePHash(s,
+      Multimodal.packImageCorrupt(s, Tables.documents(s, d))).toDF())
 
-  private def noisyPHashFixture(s: SparkSession, d: String): DataFrame = {
-    val path = SinksPack.tmpPath("noisyph", d)
-    SinksPack.ensureFixture(path) {
-      Multimodal.imagePHash(s,
-          Multimodal.packImageNoisy(s, Tables.documents(s, d), NOISE_AMP)).toDF()
-        // single-file fixture: the hash compute fans out over the
-        // session's cores (codecIds), but the fixture READ side must
-        // not pay 32 tiny files per scan (r16: the banded near-dup
-        // self-joins re-scan the fixture per band)
-        .repartition(1)
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  private def noisyAHashFixture(s: SparkSession, d: String): DataFrame =
+    parquetFixture(s, "noisyah", d)(Multimodal.imageAHash(s,
+      Multimodal.packImageNoisy(s, Tables.documents(s, d), NOISE_AMP)).toDF())
 
-  private def baseImageHashFixture(s: SparkSession, d: String): DataFrame = {
-    val path = SinksPack.tmpPath("basehash", d)
-    SinksPack.ensureFixture(path) {
-      Multimodal.imageAHash(s,
-          Multimodal.packBaseImages(s, Tables.documents(s, d))).toDF()
-        // single-file fixture: the hash compute fans out over the
-        // session's cores (codecIds), but the fixture READ side must
-        // not pay 32 tiny files per scan (r16: the banded near-dup
-        // self-joins re-scan the fixture per band)
-        .repartition(1)
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  private def noisyPHashFixture(s: SparkSession, d: String): DataFrame =
+    parquetFixture(s, "noisyph", d)(Multimodal.imagePHash(s,
+      Multimodal.packImageNoisy(s, Tables.documents(s, d), NOISE_AMP)).toDF())
 
-  private def videoFrameHashFixture(s: SparkSession, d: String): DataFrame = {
-    val path = SinksPack.tmpPath("vidhash", d)
-    SinksPack.ensureFixture(path) {
-      Multimodal.videoFrameHashes(s,
-          Multimodal.packVideos(s, Tables.documents(s, d))).toDF()
-        // single-file fixture: the hash compute fans out over the
-        // session's cores (codecIds), but the fixture READ side must
-        // not pay 32 tiny files per scan (r16: the banded near-dup
-        // self-joins re-scan the fixture per band)
-        .repartition(1)
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  private def baseImageHashFixture(s: SparkSession, d: String): DataFrame =
+    parquetFixture(s, "basehash", d)(Multimodal.imageAHash(s,
+      Multimodal.packBaseImages(s, Tables.documents(s, d))).toDF())
 
-  private def audioFingerprintFixture(s: SparkSession, d: String): DataFrame = {
-    val path = SinksPack.tmpPath("audhash", d)
-    SinksPack.ensureFixture(path) {
-      Multimodal.audioFingerprint(s,
-          Multimodal.packAudioVariants(s, Tables.documents(s, d))).toDF()
-        // single-file fixture: the hash compute fans out over the
-        // session's cores (codecIds), but the fixture READ side must
-        // not pay 32 tiny files per scan (r16: the banded near-dup
-        // self-joins re-scan the fixture per band)
-        .repartition(1)
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  private def videoFrameHashFixture(s: SparkSession, d: String): DataFrame =
+    parquetFixture(s, "vidhash", d)(Multimodal.videoFrameHashes(s,
+      Multimodal.packVideos(s, Tables.documents(s, d))).toDF())
 
-  private def audioGridFingerprintFixture(s: SparkSession, d: String): DataFrame = {
-    val path = SinksPack.tmpPath("audgrid", d)
-    SinksPack.ensureFixture(path) {
-      Multimodal.audioFingerprint(s,
-          Multimodal.packAudioGrid(s, Tables.documents(s, d))).toDF()
-        // single-file fixture: the hash compute fans out over the
-        // session's cores (codecIds), but the fixture READ side must
-        // not pay 32 tiny files per scan (r16: the banded near-dup
-        // self-joins re-scan the fixture per band)
-        .repartition(1)
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  private def audioFingerprintFixture(s: SparkSession, d: String): DataFrame =
+    parquetFixture(s, "audhash", d)(Multimodal.audioFingerprint(s,
+      Multimodal.packAudioVariants(s, Tables.documents(s, d))).toDF())
 
-  private def baseImageHashWFixture(s: SparkSession, d: String): DataFrame = {
-    val path = SinksPack.tmpPath("basehashw", d)
-    SinksPack.ensureFixture(path) {
-      Multimodal.imageAHash(s,
-          Multimodal.packBaseImagesW(s, Tables.documents(s, d))).toDF()
-        // single-file fixture: the hash compute fans out over the
-        // session's cores (codecIds), but the fixture READ side must
-        // not pay 32 tiny files per scan (r16: the banded near-dup
-        // self-joins re-scan the fixture per band)
-        .repartition(1)
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
-  }
+  private def audioGridFingerprintFixture(s: SparkSession, d: String): DataFrame =
+    parquetFixture(s, "audgrid", d)(Multimodal.audioFingerprint(s,
+      Multimodal.packAudioGrid(s, Tables.documents(s, d))).toDF())
 
-  private def audioBaseFingerprintFixture(s: SparkSession, d: String): DataFrame = {
-    val path = SinksPack.tmpPath("audbase", d)
-    SinksPack.ensureFixture(path) {
-      Multimodal.audioFingerprint(s,
-          Multimodal.packBaseAudio(s, Tables.documents(s, d))).toDF()
-        // single-file fixture: the hash compute fans out over the
-        // session's cores (codecIds), but the fixture READ side must
-        // not pay 32 tiny files per scan (r16: the banded near-dup
-        // self-joins re-scan the fixture per band)
-        .repartition(1)
-        .write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
+  private def baseImageHashWFixture(s: SparkSession, d: String): DataFrame =
+    parquetFixture(s, "basehashw", d)(Multimodal.imageAHash(s,
+      Multimodal.packBaseImagesW(s, Tables.documents(s, d))).toDF())
+
+  private def audioBaseFingerprintFixture(s: SparkSession, d: String): DataFrame =
+    parquetFixture(s, "audbase", d)(Multimodal.audioFingerprint(s,
+      Multimodal.packBaseAudio(s, Tables.documents(s, d))).toDF())
+
+  /** The embedding re-arrival waves of the accum queries: wave 1 is a
+    * one-step neighbor-mix (x_p + 0.25·x_{(p mod D)+1}) of every
+    * INC_REM-th corpus vector, labeled +WAVE; wave 2 is the mix applied
+    * twice, labeled +2·WAVE — so a wave-2 vector is strictly closer to
+    * its wave-1 sibling than to the corpus original. The mix is exact
+    * double arithmetic the oracles replay verbatim ([[mixWaveCtes]]). */
+  private def mixedWaves(emb: DataFrame): (DataFrame, DataFrame) = {
+    val mix = s"transform(embedding, (x, i) -> " +
+      s"x + 0.25D * element_at(embedding, ((i + 1) % $DIM) + 1))"
+    val m1 = emb.filter(pmod(col("vec_id"), lit(INC_MOD)) === INC_REM)
+      .select(col("vec_id"),
+        col("embedding").cast("array<double>").as("embedding"))
+      .select(col("vec_id"), expr(mix).as("embedding"))
+    val m2 = m1.select(col("vec_id"), expr(mix).as("embedding"))
+    (m1.select((col("vec_id") + WAVE).as("vec_id"), col("embedding")),
+      m2.select((col("vec_id") + 2 * WAVE).as("vec_id"), col("embedding")))
   }
 
   val queries: Map[String, Q] = Map(
@@ -432,8 +342,8 @@ object PipelinePack {
     },
     // The same semantics THROUGH the streaming-cadence machinery: a
     // prebuilt corpus band index (the stream's long-lived state) with
-    // the batch flagged against it — the exact per-micro-batch path
-    // StreamOps.incrementalDedupStream runs inside foreachBatch
+    // the batch flagged against it — the exact per-micro-batch probe
+    // StreamOps.probeStream runs inside foreachBatch
     // (StreamingSpec proves staged-wave equality). Oracle shared with
     // q_dedup_incremental: the two paths must agree row for row.
     "q_st_dedup_incremental" -> { (s, d) =>
@@ -445,10 +355,11 @@ object PipelinePack {
       idx.release() // out is already checkpointed
       out.orderBy("doc_new")
     },
-    // Batch twin of StreamOps.driftMonitorStream: md5-assigned ingest
-    // waves scored against the whole-corpus reference histogram — the
-    // exact per-micro-batch path of the streaming drift sentinel
-    // (StreamingSpec proves staged-wave equality).
+    // Batch twin of the drift probe over StreamOps.probeStream:
+    // md5-assigned ingest waves scored against the whole-corpus
+    // reference histogram — the exact per-micro-batch path of the
+    // streaming drift sentinel (StreamingSpec proves staged-wave
+    // equality).
     "q_st_drift_monitor" -> { (s, d) =>
       TextAnalysis.waveDriftReport(Tables.documents(s, d), DRIFT_WAVES)
         .orderBy("wave", "lang")
@@ -526,10 +437,11 @@ object PipelinePack {
       materialized
     },
     // SELF-ACCUMULATING IVF maintenance (the batch face of
-    // StreamOps.ivfMonitorAccumStream): the index ABSORBS wave 1
-    // (vec_id % 10 = 8) before wave 2 (% 10 = 9) reports, so wave 2's
-    // old_size/growth/mean_sim_old read corpus ∪ wave 1 — the frozen
-    // index would compare every wave against the original build.
+    // StreamOps.accumStream over Similarity.ivfReassign): the index
+    // ABSORBS wave 1 (vec_id % 10 = 8) before wave 2 (% 10 = 9)
+    // reports, so wave 2's old_size/growth/mean_sim_old read corpus ∪
+    // wave 1 — the frozen index would compare every wave against the
+    // original build.
     "q_st_ivf_accum" -> { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val idx = Similarity.buildIvfIndex(
@@ -556,7 +468,7 @@ object PipelinePack {
       out.orderBy("vec_new")
     },
     // SELF-ACCUMULATING embedding near-dup (the batch face of
-    // StreamOps.embedNearDupAccumStream): wave 1 is a one-step
+    // StreamOps.accumStream over the embedding probe): wave 1 is a one-step
     // neighbor-mix of every INC_REM-th corpus vector, wave 2 the same
     // mix applied twice — so a wave-2 vector is strictly closer to its
     // wave-1 sibling than to the corpus original, and only an index
@@ -565,23 +477,14 @@ object PipelinePack {
     // oracle replays verbatim.
     "q_st_embed_accum" -> { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val base = emb.filter(pmod(col("vec_id"), lit(10L)) === INC_REM)
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-      val mix = s"transform(embedding, (x, i) -> " +
-        s"x + 0.25D * element_at(embedding, ((i + 1) % $DIM) + 1))"
-      val m1 = base.select(col("vec_id"), expr(mix).as("embedding"))
-      val w1 = m1.select((col("vec_id") + WAVE).as("vec_id"),
-        col("embedding"))
-      val w2 = m1.select(col("vec_id"), expr(mix).as("embedding"))
-        .select((col("vec_id") + 2 * WAVE).as("vec_id"), col("embedding"))
+      val (w1, w2) = mixedWaves(emb)
       val idx = Dedup.buildEmbeddingIndex(emb, DIM).absorb(w1)
       val out = Dedup.flagAgainstEmbeddingIndex(w2, idx, COS_MIN)
       idx.release()
       out.orderBy("vec_new")
     },
     // SELF-ACCUMULATING sketch-ANN serving (the batch face of
-    // StreamOps.hammingAnnAccumStream): the index absorbs wave 1
+    // StreamOps.accumStream over the sketch top-k): the index absorbs wave 1
     // (mixed re-embeds, +1e6) before wave 2 (double-mixed, +2e6)
     // queries it top-k — wave-2 queries are strictly closer to their
     // wave-1 siblings than to the corpus originals, so only an index
@@ -590,16 +493,7 @@ object PipelinePack {
     // replayed verbatim by the oracle.
     "q_st_hamming_ann" -> { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val base = emb.filter(pmod(col("vec_id"), lit(INC_MOD)) === INC_REM)
-        .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-      val mix = s"transform(embedding, (x, i) -> " +
-        s"x + 0.25D * element_at(embedding, ((i + 1) % $DIM) + 1))"
-      val m1 = base.select(col("vec_id"), expr(mix).as("embedding"))
-      val w1 = m1.select((col("vec_id") + WAVE).as("vec_id"),
-        col("embedding"))
-      val w2 = m1.select(col("vec_id"), expr(mix).as("embedding"))
-        .select((col("vec_id") + 2 * WAVE).as("vec_id"), col("embedding"))
+      val (w1, w2) = mixedWaves(emb)
       val idx = Similarity.buildSketchIndex(emb, DIM, HAM_ANN_MAX).absorb(w1)
       val out = Similarity.topKAgainstSketchIndex(w2, idx, TOPK)
       idx.release() // out is already checkpointed
@@ -1363,7 +1257,7 @@ object PipelinePack {
     // a prebuilt corpus aHash band index (the stream's long-lived
     // state — base images of every doc) probed by a "re-upload" batch
     // (brightness-shifted re-renders of every INC_REM-th doc) — the
-    // exact per-micro-batch path StreamOps.imageNearDupStream runs
+    // exact per-micro-batch probe StreamOps.probeStream runs
     // inside foreachBatch (StreamingSpec proves staged-wave equality).
     // One row per new image: its best corpus match by exact Hamming.
     "q_st_image_neardup" -> { (s, d) =>
@@ -1392,7 +1286,7 @@ object PipelinePack {
     // that incremental absorb ≡ one-shot build. kth_hash is an exact
     // integer — the strongest possible gate on a sketch's internals.
     // SELF-ACCUMULATING DSIR selection (the batch face of
-    // StreamOps.dsirSelectionStream): target histogram frozen on the
+    // StreamOps.accumStream over the DSIR scorer): target histogram frozen on the
     // 'en' slice, raw histogram seeded on wave 0; wave 1 scores
     // against the seed then absorbs, wave 2 scores against seed ∪
     // wave 1 — the hash pins that wave 2's weights really reflect the
@@ -1431,7 +1325,7 @@ object PipelinePack {
       Dedup.materializeThenRelease(out, idx.legs: _*)
     },
     // SELF-ACCUMULATING incremental text dedup (the batch face of
-    // StreamOps.incrementalDedupAccumStream): wave 1 re-arrivals carry
+    // StreamOps.accumStream over the corpus probe): wave 1 re-arrivals carry
     // one appended tag pair, wave 2 re-arrivals carry wave 1's text
     // plus a second tag pair — so a wave-2 doc is STRICTLY closer to
     // its wave-1 sibling than to the corpus original, and only an
@@ -1454,7 +1348,7 @@ object PipelinePack {
       out.orderBy("doc_new")
     },
     // SELF-ACCUMULATING incremental image dedup (the batch face of
-    // StreamOps.imageNearDupAccumStream): the corpus index ABSORBS
+    // StreamOps.accumStream over the fingerprint probe): the corpus index ABSORBS
     // wave 1's fingerprints before wave 2 probes, so wave-2 re-uploads
     // can best-match wave-1 uploads — the match a frozen index can
     // never produce (the media twin of the IVF absorb's defect class).
@@ -1472,7 +1366,7 @@ object PipelinePack {
     },
     // Incremental AUDIO dedup THROUGH the streaming-cadence machinery
     // (the audio face of q_st_image_neardup, and the per-micro-batch
-    // path StreamOps.audioNearDupStream runs inside foreachBatch): a
+    // probe StreamOps.probeStream runs inside foreachBatch): a
     // prebuilt corpus fingerprint band index probed by "re-upload"
     // clips that are trimmed AND ×2-gained at once — the compounded
     // perturbation only the band-median fingerprint survives. One row
@@ -1491,7 +1385,7 @@ object PipelinePack {
         .orderBy("clip_new")
     },
     // SELF-ACCUMULATING incremental audio dedup (the batch face of
-    // StreamOps.audioNearDupAccumStream): the index absorbs wave 1
+    // StreamOps.accumStream over the fingerprint probe): the index absorbs wave 1
     // (trim-4 re-renders) before wave 2 (the same renders at ×2 gain)
     // probes — wave 2 matches wave 1 up to gain-invariance ties, while
     // both differ from the base clips by the trim, so only the
@@ -1603,22 +1497,85 @@ object PipelinePack {
 
   private val sh = Dedup.wordShinglesSql()
 
-  /** Shingle → capped-intersection → jaccard-pairs → connected-component
-    * CTE chain ending in `labels(doc_id, cluster_id)` — the shared body
-    * of the cluster and canonical-resolution oracles (prefix with
-    * `WITH RECURSIVE`). */
-  private lazy val clusterCtes =
-    s"""sh AS ($sh),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-       |inter AS (
+  /** All-pairs shingle intersection sizes over the `sh` CTE — the
+    * exact-jaccard numerator, as CTE `name(doc_a, doc_b, i)`. */
+  private def shingleInterCte(name: String = "inter"): String =
+    s"""$name AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY a.doc_id, b.doc_id),
+       |  GROUP BY a.doc_id, b.doc_id)""".stripMargin
+
+  /** Exact Hamming distance between rows `a` and `b` over the given
+    * packed words (default the 4×16-bit b0..b3 fingerprint): the sum
+    * of per-word xor popcounts — the one SQL statement of it. */
+  private def hammingSql(a: String, b: String,
+                         words: Seq[String] = Seq("b0", "b1", "b2", "b3")): String =
+    words.map(w => s"bit_count(xor($a.$w, $b.$w))").mkString(" + ")
+
+  /** The 4×16-bit word pivot: one `key, b0..b3` row per key out of
+    * `src`'s (key, `idx`, `v`) word rows; `fill0` reads an absent word
+    * as 0. */
+  private def wordPivotSql(key: String, src: String, idx: String = "band_idx",
+                           v: String = "bval", fill0: Boolean = false): String = {
+    val words = (0 until 4).map { k =>
+      val m = s"max(CASE WHEN $idx = $k THEN $v END)"
+      s"${if (fill0) s"coalesce($m, 0)" else m} AS b$k"
+    }.mkString(", ")
+    s"SELECT $key, $words FROM $src GROUP BY $key"
+  }
+
+  /** All-pairs exact Hamming CTE `name(<e>_a, <e>_b, hamming)` over the
+    * fingerprint CTE `tbl(id, b0..b3)`, one row per id pair a < b (`e`
+    * is `id` without its `_id`) — the near-dup DEFINITION the Spark
+    * side's banded blocking prunes losslessly. */
+  private def pairHammingCte(id: String, tbl: String = "h",
+                             name: String = "ham"): String = {
+    val e = id.stripSuffix("_id")
+    s"""$name AS (
+       |  SELECT ha.$id AS ${e}_a, hb.$id AS ${e}_b,
+       |         CAST(${hammingSql("ha", "hb")} AS BIGINT) AS hamming
+       |  FROM $tbl ha JOIN $tbl hb ON ha.$id < hb.$id)""".stripMargin
+  }
+
+  /** Best corpus match per new fingerprint of the `h(id, b0..b3)` CTE,
+    * ending the query: all-pairs batch×corpus exact Hamming within
+    * `maxHam` (`pairs` selects the (new `hn`, corpus `hc`) pairs) —
+    * the DEFINITION the banded index probe is pigeonhole-lossless
+    * over — then best = (min hamming, min id) as
+    * (<e>_new, best_match, hamming). */
+  private def bestHammingMatchSql(id: String, pairs: String, maxHam: Int): String = {
+    val e = id.stripSuffix("_id")
+    s"""xham AS (
+       |  SELECT hn.$id AS ${e}_new, hc.$id AS ${e}_old,
+       |         CAST(${hammingSql("hn", "hc")} AS BIGINT) AS hamming
+       |  FROM h hn JOIN h hc ON $pairs
+       |  WHERE ${hammingSql("hn", "hc")} <= $maxHam),
+       |best AS (
+       |  SELECT ${e}_new, ${e}_old AS best_match, hamming FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY ${e}_new
+       |                ORDER BY hamming ASC, ${e}_old ASC) AS rn
+       |    FROM xham) WHERE rn = 1)
+       |SELECT ${e}_new, best_match, hamming FROM best
+       |ORDER BY ${e}_new""".stripMargin
+  }
+
+  /** Shingle → intersection → jaccard-pairs CTE chain ending in
+    * `pairs(doc_a, doc_b)` (every pair at jaccard ≥ JACCARD_MIN). */
+  private lazy val jaccardPairCtes =
+    s"""sh AS ($sh),
+       |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+       |${shingleInterCte()},
        |pairs AS (
        |  SELECT doc_a, doc_b
        |  FROM inter JOIN sizes sa ON sa.doc_id = doc_a
        |             JOIN sizes sb ON sb.doc_id = doc_b
-       |  WHERE round(i / (sa.n + sb.n - i), 6) >= $JACCARD_MIN),
+       |  WHERE round(i / (sa.n + sb.n - i), 6) >= $JACCARD_MIN)""".stripMargin
+
+  /** [[jaccardPairCtes]] → connected-component CTE chain ending in
+    * `labels(doc_id, cluster_id)` — the shared body of the cluster and
+    * canonical-resolution oracles (prefix with `WITH RECURSIVE`). */
+  private lazy val clusterCtes =
+    s"""$jaccardPairCtes,
        |edges AS (
        |  SELECT doc_a AS u, doc_b AS v FROM pairs
        |  UNION SELECT doc_b, doc_a FROM pairs),
@@ -1641,69 +1598,69 @@ object PipelinePack {
     * Multimodal.{packImageVariants,imageAHash}, which measure the same
     * quantities from rasters DECODED by ImageIO. */
   private lazy val imageHashCtes =
-    """dims AS (SELECT img_id, doc_id, delta,
-      |                8 + doc_id % 9 AS w, 8 + doc_id % 7 AS h FROM imgs),
-      |cells AS (
-      |  SELECT img_id, gy * 8 + gx AS cell,
-      |         (doc_id + delta + 31 * ((gx * w) // 8) + 7 * ((gy * h) // 8)) % 256 AS gray
-      |  FROM dims, unnest(range(0, 8)) tx(gx), unnest(range(0, 8)) ty(gy)),
-      |tot AS (SELECT img_id, sum(gray) AS total FROM cells GROUP BY img_id),
-      |bands AS (
-      |  SELECT c.img_id, c.cell // 16 AS band_idx,
-      |         CAST(sum(CASE WHEN 64 * c.gray > t.total
-      |                       THEN 1 << CAST(c.cell % 16 AS INT) ELSE 0 END)
-      |              AS BIGINT) AS bval
-      |  FROM cells c JOIN tot t USING (img_id)
-      |  GROUP BY c.img_id, c.cell // 16),
-      |h AS (SELECT img_id,
-      |             max(CASE WHEN band_idx = 0 THEN bval END) AS b0,
-      |             max(CASE WHEN band_idx = 1 THEN bval END) AS b1,
-      |             max(CASE WHEN band_idx = 2 THEN bval END) AS b2,
-      |             max(CASE WHEN band_idx = 3 THEN bval END) AS b3
-      |      FROM bands GROUP BY img_id)""".stripMargin
+    s"""dims AS (SELECT img_id, doc_id, delta,
+       |                8 + doc_id % 9 AS w, 8 + doc_id % 7 AS h FROM imgs),
+       |cells AS (
+       |  SELECT img_id, gy * 8 + gx AS cell,
+       |         (doc_id + delta + 31 * ((gx * w) // 8) + 7 * ((gy * h) // 8)) % 256 AS gray
+       |  FROM dims, unnest(range(0, 8)) tx(gx), unnest(range(0, 8)) ty(gy)),
+       |$aHashFromCellsCtes""".stripMargin
 
-  /** Closed-form replay of [[Multimodal.audioFingerprint]] over a
-    * `prm(clip_id, doc_id, sil, g, nc, nf)` CTE already in scope
-    * (structured render: block amplitude `AudioFixture.ampAt`,
-    * alternating sign, leading-silence zeroing, saturating gain):
+  /** The aHash bits over a `cells(img_id, cell, gray)` CTE already in
+    * scope (the 8×8 downsampled grid): bit = 64·gray > Σgray (the
+    * integer-exact mean compare) → 16-bit words → `h(img_id, b0..b3)`. */
+  private lazy val aHashFromCellsCtes =
+    s"""tot AS (SELECT img_id, sum(gray) AS total FROM cells GROUP BY img_id),
+       |bands AS (
+       |  SELECT c.img_id, c.cell // 16 AS band_idx,
+       |         CAST(sum(CASE WHEN 64 * c.gray > t.total
+       |                       THEN 1 << CAST(c.cell % 16 AS INT) ELSE 0 END)
+       |              AS BIGINT) AS bval
+       |  FROM cells c JOIN tot t USING (img_id)
+       |  GROUP BY c.img_id, c.cell // 16),
+       |h AS (${wordPivotSql("img_id", "bands")})""".stripMargin
+
+  /** Closed-form replay of [[Multimodal.audioFingerprint]] over an
+    * `aud(clip_id, doc_id, sil, g)` CTE already in scope — leading
+    * silence frames and gain per clip; channel and frame counts follow
+    * doc_id as in the fixture packers (structured render: block
+    * amplitude `AudioFixture.ampAt`, alternating sign, leading-silence
+    * zeroing, saturating gain):
     * per-frame loudness → 64 contiguous bands (band of frame f =
     * 64f//nf) → lcm-normalized band energy → bit = above the clip's
     * lower-median band under (norm, w) lex order → 4×16-bit words
     * `h(clip_id, b0..b3)`. Assumes nf ≥ 64 (every band non-empty, as
     * both fixture packers guarantee), mirroring the Scala guard. */
   private lazy val audioHashCtes =
-    """fr AS (SELECT clip_id, f, max(nf) AS nf,
-      |              sum(abs(CASE WHEN f < sil THEN 0
-      |                   ELSE LEAST(GREATEST(g
-      |                     * (CASE WHEN (f + c) % 2 = 0 THEN 1 ELSE -1 END)
-      |                     * (((doc_id + 131) * ((f // 4) + 17)
-      |                         * (doc_id + (f // 4) * 127 + 29)) % 20000 + 2048),
-      |                     -32768), 32767) END)) AS loud
-      |       FROM prm, unnest(range(0, nf)) tf(f), unnest(range(0, nc)) tc(c)
-      |       GROUP BY clip_id, f),
-      |bb AS (SELECT clip_id, (64 * f) // nf AS w, max(nf) AS nf,
-      |              sum(loud) AS bsum, count(*) AS cnt
-      |       FROM fr GROUP BY clip_id, (64 * f) // nf),
-      |rk AS (SELECT clip_id, w,
-      |              bsum * (((nf // 64) * (nf // 64 + 1)) // cnt) AS norm,
-      |              row_number() OVER (PARTITION BY clip_id
-      |                                 ORDER BY bsum * (((nf // 64)
-      |                                   * (nf // 64 + 1)) // cnt), w) AS rn
-      |       FROM bb),
-      |med AS (SELECT clip_id, norm AS mv, w AS mw FROM rk WHERE rn = 32),
-      |fb AS (SELECT r.clip_id, r.w // 16 AS band_idx,
-      |              CAST(sum(CASE WHEN r.norm > m.mv
-      |                              OR (r.norm = m.mv AND r.w > m.mw)
-      |                            THEN 1 << CAST(r.w % 16 AS INT) ELSE 0 END)
-      |                   AS BIGINT) AS bval
-      |       FROM rk r JOIN med m ON r.clip_id = m.clip_id
-      |       GROUP BY r.clip_id, r.w // 16),
-      |h AS (SELECT clip_id,
-      |             max(CASE WHEN band_idx = 0 THEN bval END) AS b0,
-      |             max(CASE WHEN band_idx = 1 THEN bval END) AS b1,
-      |             max(CASE WHEN band_idx = 2 THEN bval END) AS b2,
-      |             max(CASE WHEN band_idx = 3 THEN bval END) AS b3
-      |      FROM fb GROUP BY clip_id)""".stripMargin
+    s"""prm AS (SELECT clip_id, doc_id, sil, g,
+       |               1 + doc_id % 2 AS nc, 64 + doc_id % 33 AS nf FROM aud),
+       |fr AS (SELECT clip_id, f, max(nf) AS nf,
+       |              sum(abs(CASE WHEN f < sil THEN 0
+       |                   ELSE LEAST(GREATEST(g
+       |                     * (CASE WHEN (f + c) % 2 = 0 THEN 1 ELSE -1 END)
+       |                     * (((doc_id + 131) * ((f // 4) + 17)
+       |                         * (doc_id + (f // 4) * 127 + 29)) % 20000 + 2048),
+       |                     -32768), 32767) END)) AS loud
+       |       FROM prm, unnest(range(0, nf)) tf(f), unnest(range(0, nc)) tc(c)
+       |       GROUP BY clip_id, f),
+       |bb AS (SELECT clip_id, (64 * f) // nf AS w, max(nf) AS nf,
+       |              sum(loud) AS bsum, count(*) AS cnt
+       |       FROM fr GROUP BY clip_id, (64 * f) // nf),
+       |rk AS (SELECT clip_id, w,
+       |              bsum * (((nf // 64) * (nf // 64 + 1)) // cnt) AS norm,
+       |              row_number() OVER (PARTITION BY clip_id
+       |                                 ORDER BY bsum * (((nf // 64)
+       |                                   * (nf // 64 + 1)) // cnt), w) AS rn
+       |       FROM bb),
+       |med AS (SELECT clip_id, norm AS mv, w AS mw FROM rk WHERE rn = 32),
+       |fb AS (SELECT r.clip_id, r.w // 16 AS band_idx,
+       |              CAST(sum(CASE WHEN r.norm > m.mv
+       |                              OR (r.norm = m.mv AND r.w > m.mw)
+       |                            THEN 1 << CAST(r.w % 16 AS INT) ELSE 0 END)
+       |                   AS BIGINT) AS bval
+       |       FROM rk r JOIN med m ON r.clip_id = m.clip_id
+       |       GROUP BY r.clip_id, r.w // 16),
+       |h AS (${wordPivotSql("clip_id", "fb")})""".stripMargin
 
   private lazy val imageHamCtes =
     s"""imgs AS (
@@ -1711,12 +1668,7 @@ object PipelinePack {
        |  UNION ALL
        |  SELECT doc_id * 2 + 1, doc_id, 1 FROM documents WHERE doc_id % 5 = 0),
        |$imageHashCtes,
-       |ham AS (
-       |  SELECT ha.img_id AS img_a, hb.img_id AS img_b,
-       |         CAST(bit_count(xor(ha.b0, hb.b0)) + bit_count(xor(ha.b1, hb.b1))
-       |            + bit_count(xor(ha.b2, hb.b2)) + bit_count(xor(ha.b3, hb.b3))
-       |              AS BIGINT) AS hamming
-       |  FROM h ha JOIN h hb ON ha.img_id < hb.img_id)""".stripMargin
+       |${pairHammingCte("img_id")}""".stripMargin
 
   /** Closed-form replay of [[Multimodal.imagePHash]] (2×2 box sum +
     * integer DCT) over a `pxsrc(img_id, w, h, x, y, gray)` CTE already
@@ -1730,38 +1682,33 @@ object PipelinePack {
     * count) and the strict > compare is integer — deterministic both
     * sides. */
   private lazy val phashFromPxCtes =
-    """sm AS (SELECT a.img_id, a.w - 1 AS w, a.h - 1 AS h, a.x, a.y,
-      |              a.gray + b.gray + c.gray + d2.gray AS gray
-      |       FROM pxsrc a
-      |       JOIN pxsrc b ON b.img_id = a.img_id AND b.x = a.x + 1 AND b.y = a.y
-      |       JOIN pxsrc c ON c.img_id = a.img_id AND c.x = a.x AND c.y = a.y + 1
-      |       JOIN pxsrc d2 ON d2.img_id = a.img_id AND d2.x = a.x + 1
-      |                    AND d2.y = a.y + 1
-      |       WHERE a.x < a.w - 1 AND a.y < a.h - 1),
-      |co AS (SELECT img_id, tu.u AS u, tv.v AS v,
-      |              CAST(sum(gray
-      |                * CAST(floor(cos(pi() * (2 * x + 1) * tu.u / (2.0 * w))
-      |                             * 10000 + 0.5) AS BIGINT)
-      |                * CAST(floor(cos(pi() * (2 * y + 1) * tv.v / (2.0 * h))
-      |                             * 10000 + 0.5) AS BIGINT))
-      |                   AS BIGINT) AS coef
-      |       FROM sm, unnest(range(0, 8)) tu(u), unnest(range(0, 8)) tv(v)
-      |       GROUP BY img_id, tu.u, tv.v),
-      |pac AS (SELECT img_id, u * 8 + v - 1 AS bit, coef FROM co
-      |        WHERE NOT (u = 0 AND v = 0)),
-      |pmed AS (SELECT img_id, median(coef) AS med FROM pac GROUP BY img_id),
-      |pbit AS (SELECT a.img_id, a.bit // 16 AS band_idx,
-      |                CAST(sum(CASE WHEN a.coef > m.med
-      |                         THEN 1 << CAST(a.bit % 16 AS INT) ELSE 0 END)
-      |                     AS BIGINT) AS bval
-      |         FROM pac a JOIN pmed m USING (img_id)
-      |         GROUP BY a.img_id, a.bit // 16),
-      |ph AS (SELECT img_id,
-      |              coalesce(max(CASE WHEN band_idx = 0 THEN bval END), 0) AS b0,
-      |              coalesce(max(CASE WHEN band_idx = 1 THEN bval END), 0) AS b1,
-      |              coalesce(max(CASE WHEN band_idx = 2 THEN bval END), 0) AS b2,
-      |              coalesce(max(CASE WHEN band_idx = 3 THEN bval END), 0) AS b3
-      |       FROM pbit GROUP BY img_id)""".stripMargin
+    s"""sm AS (SELECT a.img_id, a.w - 1 AS w, a.h - 1 AS h, a.x, a.y,
+       |              a.gray + b.gray + c.gray + d2.gray AS gray
+       |       FROM pxsrc a
+       |       JOIN pxsrc b ON b.img_id = a.img_id AND b.x = a.x + 1 AND b.y = a.y
+       |       JOIN pxsrc c ON c.img_id = a.img_id AND c.x = a.x AND c.y = a.y + 1
+       |       JOIN pxsrc d2 ON d2.img_id = a.img_id AND d2.x = a.x + 1
+       |                    AND d2.y = a.y + 1
+       |       WHERE a.x < a.w - 1 AND a.y < a.h - 1),
+       |co AS (SELECT img_id, tu.u AS u, tv.v AS v,
+       |              CAST(sum(gray
+       |                * CAST(floor(cos(pi() * (2 * x + 1) * tu.u / (2.0 * w))
+       |                             * 10000 + 0.5) AS BIGINT)
+       |                * CAST(floor(cos(pi() * (2 * y + 1) * tv.v / (2.0 * h))
+       |                             * 10000 + 0.5) AS BIGINT))
+       |                   AS BIGINT) AS coef
+       |       FROM sm, unnest(range(0, 8)) tu(u), unnest(range(0, 8)) tv(v)
+       |       GROUP BY img_id, tu.u, tv.v),
+       |pac AS (SELECT img_id, u * 8 + v - 1 AS bit, coef FROM co
+       |        WHERE NOT (u = 0 AND v = 0)),
+       |pmed AS (SELECT img_id, median(coef) AS med FROM pac GROUP BY img_id),
+       |pbit AS (SELECT a.img_id, a.bit // 16 AS band_idx,
+       |                CAST(sum(CASE WHEN a.coef > m.med
+       |                         THEN 1 << CAST(a.bit % 16 AS INT) ELSE 0 END)
+       |                     AS BIGINT) AS bval
+       |         FROM pac a JOIN pmed m USING (img_id)
+       |         GROUP BY a.img_id, a.bit // 16),
+       |ph AS (${wordPivotSql("img_id", "pbit", fill0 = true)})""".stripMargin
 
   private val jaccardTail =
     s"""sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)
@@ -1917,14 +1864,12 @@ object PipelinePack {
        |  FROM h GROUP BY doc_id),
        |sigs AS (SELECT doc_id, CAST($sig AS BIGINT) AS simhash FROM sums)
        |SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
-       |       CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming
+       |       CAST(${hammingSql("x", "y", Seq("simhash"))} AS BIGINT) AS hamming
        |FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id
-       |WHERE bit_count(xor(x.simhash, y.simhash)) <= $HAMMING_MAX
+       |WHERE ${hammingSql("x", "y", Seq("simhash"))} <= $HAMMING_MAX
        |ORDER BY doc_a, doc_b""".stripMargin
   }
 
-  /** Sequential left-fold dot product from 0.0 — matches the native
-    * DotProduct expression exactly (same IEEE addition order). */
   /** The [[graft.functions.Poly31Hash]] rolling hash replayed in
     * DuckDB (ASCII text: `unicode` per char == UTF-16 code unit). */
   private def poly31Sql(e: String): String =
@@ -1961,6 +1906,8 @@ object PipelinePack {
        |       AND g.pos BETWEEN w.ws AND w.ws + $WIN_W - 1
        |  GROUP BY 1, 2, 3)""".stripMargin
 
+  /** Sequential left-fold dot product from 0.0 — matches the native
+    * DotProduct expression exactly (same IEEE addition order). */
   private def dotSql(x: String, y: String): String =
     s"list_reduce(list_prepend(0.0, list_transform(range(1, len($x) + 1), i -> $x[i] * $y[i])), (p, q) -> p + q)"
 
@@ -1970,9 +1917,16 @@ object PipelinePack {
     * side does before normalization. */
   private def normalizedCteWhere(where: String): String =
     s"""e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw FROM embeddings$where),
-       |e AS (SELECT vec_id,
-       |             list_transform(raw, x -> x / sqrt(${dotSql("raw", "raw")})) AS v
-       |      FROM e0)""".stripMargin
+       |${l2NormCte("e", "e0")}""".stripMargin
+
+  /** `xs` divided element-wise by sqrt(self-dot): the one statement of
+    * L2 normalization (Similarity.normalized). */
+  private def l2NormSql(xs: String): String =
+    s"list_transform($xs, x -> x / sqrt(${dotSql(xs, xs)}))"
+
+  /** CTE `name(vec_id, v)`: `src`'s `raw` vectors L2-normalized. */
+  private def l2NormCte(name: String, src: String): String =
+    s"$name AS (SELECT vec_id, ${l2NormSql("raw")} AS v FROM $src)"
 
   private val normalizedCte = normalizedCteWhere("")
 
@@ -1985,6 +1939,34 @@ object PipelinePack {
   private def mixSql(c: String): String =
     s"list_transform(range(1, ${DIM + 1}), p -> " +
       s"$c[CAST(p AS INT)] + 0.25 * $c[CAST((p % $DIM) + 1 AS INT)])"
+
+  /** The replay of `mixedWaves`: `m1(vec_id, raw)` is one mix step of
+    * every INC_REM-th vector, `m2` two, both with the corpus vec_id
+    * (each oracle adds its wave label). */
+  private lazy val mixWaveCtes: String =
+    s"""mb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw
+       |       FROM embeddings WHERE vec_id % $INC_MOD = $INC_REM),
+       |m1 AS (SELECT vec_id, ${mixSql("raw")} AS raw FROM mb),
+       |m2 AS (SELECT vec_id, ${mixSql("raw")} AS raw FROM m1)""".stripMargin
+
+  /** The 64 seeded sign-sketch hyperplanes as the `planes64(p_id, p)`
+    * CTE — one literalization for every sketch oracle. */
+  private lazy val planes64Cte: String =
+    s"""planes64(p_id, p) AS (VALUES
+       |    ${planesValuesSql(Similarity.hyperplanes(64, DIM))})""".stripMargin
+
+  /** 64-bit sign sketches of the normalized vectors in CTE `src(vec_id,
+    * v)` as CTE `name(vec_id, b0..b3)` — plane p sets bit p % 16 of
+    * word p / 16 when the fold-dot is positive (Similarity's sketch) —
+    * via the helper CTE `<name>w`. Expects [[planes64Cte]] in scope. */
+  private def signSketchCtes(name: String, src: String): String =
+    s"""${name}w AS (
+       |  SELECT vec_id, CAST(p_id // 16 AS INT) AS w,
+       |         CAST(sum(CASE WHEN ${dotSql("v", "p")} > 0
+       |                       THEN (CAST(1 AS BIGINT) << (p_id % 16))
+       |                       ELSE 0 END) AS BIGINT) AS wv
+       |  FROM $src, planes64 GROUP BY 1, 2),
+       |$name AS (${wordPivotSql("vec_id", s"${name}w", "w", "wv")})""".stripMargin
 
   /** Power-iteration CTE chain shared by the pca_power and
     * pca_explained oracles: normalized vectors → exploded (vec_id, pos,
@@ -2096,6 +2078,57 @@ object PipelinePack {
        |  FROM sigs, (VALUES (0), (1), (2), (3)) t(c))""".stripMargin
   }
 
+  /** Best corpus match per new vector, ending the query: the banded
+    * candidates of [[lshCtes]] whose (new `x`, corpus `y`) rows `pairs`
+    * selects, exact cosine over `e`, best = (max cosine, min vec_id)
+    * among cosine ≥ COS_MIN, as (vec_new, best_match, cosine). The band
+    * join is the execution strategy; the cosine tail states the
+    * semantics. */
+  private def embedBestMatchSql(pairs: String): String =
+    s"""cand AS (
+       |  SELECT DISTINCT x.vec_id AS vec_new, y.vec_id AS vec_old
+       |  FROM bands x JOIN bands y ON x.c = y.c AND x.cv = y.cv
+       |  WHERE $pairs),
+       |s AS (SELECT vec_new, vec_old,
+       |             round(${dotSql("a.v", "b.v")}, 6) AS cosine
+       |      FROM cand JOIN e a ON a.vec_id = vec_new
+       |                JOIN e b ON b.vec_id = vec_old),
+       |r AS (SELECT vec_new, vec_old, cosine,
+       |             row_number() OVER (PARTITION BY vec_new
+       |                  ORDER BY cosine DESC, vec_old ASC) AS rn
+       |      FROM s WHERE cosine >= $COS_MIN)
+       |SELECT vec_new, vec_old AS best_match, cosine FROM r
+       |WHERE rn = 1 ORDER BY vec_new""".stripMargin
+
+  /** Per-source distinct word trigrams `w(source, word)`, their md5
+    * hashes `hw(source, h)` and per-source hash ranks `rk(source, h,
+    * rn)` — the KMV sketch input of the overlap and cardinality
+    * oracles. */
+  private lazy val kmvRankCtes: String =
+    s"""w AS (
+       |  SELECT DISTINCT source,
+       |         ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2] AS word
+       |  FROM (SELECT source, string_split(text, ' ') AS ws FROM documents) t,
+       |       unnest(range(1, len(ws) - 1)) ti(i)),
+       |hw AS (SELECT DISTINCT source,
+       |              ${Hashing.md5LongSql("word")} AS h
+       |       FROM w),
+       |rk AS (SELECT source, h,
+       |              row_number() OVER (PARTITION BY source ORDER BY h) AS rn
+       |       FROM hw)""".stripMargin
+
+  /** Exact decontamination: every non-benchmark doc sharing ≥
+    * MIN_SHARED shingles with the every-BENCH_MOD-th "benchmark" docs,
+    * with its shared count (`extraCols` follows it). */
+  private def decontamSql(extraCols: String): String =
+    s"""WITH sh AS ($sh),
+       |bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % $BENCH_MOD = 0),
+       |corpus AS (SELECT * FROM sh WHERE doc_id % $BENCH_MOD <> 0)
+       |SELECT doc_id, count(*) AS shared_shingles$extraCols
+       |FROM corpus JOIN bench USING (shingle)
+       |GROUP BY doc_id HAVING count(*) >= $MIN_SHARED
+       |ORDER BY doc_id""".stripMargin
+
   /** doc → (lang, shard, n_words, seq_no) packing CTEs shared by the
     * assignment and materialization oracles (ends in CTE `p`). */
   private val seqPackCtes: String =
@@ -2199,9 +2232,7 @@ object PipelinePack {
        |       FROM embeddings),
        |t1 AS (SELECT vec_id, raw FROM t0
        |       WHERE len(list_filter(raw, x -> x <> 0)) > 0),
-       |t AS (SELECT vec_id,
-       |             list_transform(raw, x -> x / sqrt(${dotSql("raw", "raw")})) AS v
-       |      FROM t1),
+       |${l2NormCte("t", "t1")},
        |tq2 AS (SELECT vec_id AS query_id, v AS qv FROM t WHERE vec_id % 100 = 0),
        |ts2 AS (SELECT query_id, t.vec_id, round(${dotSql("qv", "v")}, 6) AS cosine
        |        FROM tq2, t WHERE t.vec_id <> query_id),
@@ -2358,10 +2389,7 @@ object PipelinePack {
     // CTE is mirrored — both engines compute the true all-pairs jaccard.
     "q_dedup_jaccard" ->
       s"""WITH sh AS ($sh),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY a.doc_id, b.doc_id),
+         |${shingleInterCte()},
          |$jaccardTail""".stripMargin,
 
     "q_dedup_minhash_lsh" -> minhashSql,
@@ -2384,10 +2412,7 @@ object PipelinePack {
          |  JOIN sizes sa ON sa.doc_id = doc_a
          |  JOIN sizes sb ON sb.doc_id = doc_b
          |  WHERE round(i / (sa.n + sb.n - i), 6) >= $JACCARD_MIN),
-         |ti AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
+         |${shingleInterCte("ti")},
          |tru AS (
          |  SELECT ti.doc_a FROM ti
          |  JOIN sizes sa ON sa.doc_id = ti.doc_a
@@ -2438,10 +2463,7 @@ object PipelinePack {
       }.mkString("\nUNION ALL\n")
       s"""WITH $minhashBandCtes,
          |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |ti AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
+         |${shingleInterCte("ti")},
          |truj AS (
          |  SELECT ti.doc_a, ti.doc_b FROM ti
          |  JOIN sizes sa ON sa.doc_id = ti.doc_a
@@ -2559,17 +2581,7 @@ object PipelinePack {
          |FROM u ORDER BY wave, doc_id""".stripMargin,
 
     "q_st_kmv_accum" ->
-      s"""WITH w AS (
-         |  SELECT DISTINCT source,
-         |         ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2] AS word
-         |  FROM (SELECT source, string_split(text, ' ') AS ws FROM documents) t,
-         |       unnest(range(1, len(ws) - 1)) ti(i)),
-         |hw AS (SELECT DISTINCT source,
-         |              ${graft.functions.Hashing.md5LongSql("word")} AS h
-         |       FROM w),
-         |rk AS (SELECT source, h,
-         |              row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-         |       FROM hw),
+      s"""WITH $kmvRankCtes,
          |sk AS (SELECT source,
          |              CAST(least(count(*), $KMV_K) AS BIGINT) AS sketch_n,
          |              max(CASE WHEN rn = $KMV_K THEN h END) AS kth_hash
@@ -2742,28 +2754,16 @@ object PipelinePack {
          |FROM asg JOIN at USING (cluster_id) ORDER BY asg.doc_id""".stripMargin,
 
     "q_dedup_decontaminate" ->
-      s"""WITH sh AS ($sh),
-         |bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % $BENCH_MOD = 0),
-         |corpus AS (SELECT * FROM sh WHERE doc_id % $BENCH_MOD <> 0)
-         |SELECT doc_id, count(*) AS shared_shingles
-         |FROM corpus JOIN bench USING (shingle)
-         |GROUP BY doc_id HAVING count(*) >= $MIN_SHARED
-         |ORDER BY doc_id""".stripMargin,
+      decontamSql(""),
 
     // Exact columns recomputed; the bloom-path verdicts are asserted as
     // literal 1 (no-false-negative is a bloom-filter theorem; the FP
     // bound is deterministic given the fixed hash family and sizing,
     // verified at both SFs).
     "q_dedup_bloom" ->
-      s"""WITH sh AS ($sh),
-         |bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % $BENCH_MOD = 0),
-         |corpus AS (SELECT * FROM sh WHERE doc_id % $BENCH_MOD <> 0)
-         |SELECT doc_id, count(*) AS shared_shingles,
+      decontamSql(""",
          |       CAST(1 AS BIGINT) AS bloom_flagged,
-         |       CAST(1 AS BIGINT) AS fp_within_bound
-         |FROM corpus JOIN bench USING (shingle)
-         |GROUP BY doc_id HAVING count(*) >= $MIN_SHARED
-         |ORDER BY doc_id""".stripMargin,
+         |       CAST(1 AS BIGINT) AS fp_within_bound""".stripMargin),
 
     // Same transitive closure as the min-id resolution, but the
     // survivor is the longest document (word count desc, doc_id asc).
@@ -2814,53 +2814,23 @@ object PipelinePack {
     "q_st_embed_neardup" ->
       s"""WITH $normalizedCte,
          |$lshCtes,
-         |cand AS (
-         |  SELECT DISTINCT x.vec_id AS vec_new, y.vec_id AS vec_old
-         |  FROM bands x JOIN bands y ON x.c = y.c AND x.cv = y.cv
-         |  WHERE x.vec_id % 10 = $INC_REM AND y.vec_id % 10 <> $INC_REM),
-         |s AS (SELECT vec_new, vec_old,
-         |             round(${dotSql("a.v", "b.v")}, 6) AS cosine
-         |      FROM cand JOIN e a ON a.vec_id = vec_new
-         |                JOIN e b ON b.vec_id = vec_old),
-         |r AS (SELECT vec_new, vec_old, cosine,
-         |             row_number() OVER (PARTITION BY vec_new
-         |                  ORDER BY cosine DESC, vec_old ASC) AS rn
-         |      FROM s WHERE cosine >= $COS_MIN)
-         |SELECT vec_new, vec_old AS best_match, cosine FROM r
-         |WHERE rn = 1 ORDER BY vec_new""".stripMargin,
+         |${embedBestMatchSql(
+              s"x.vec_id % 10 = $INC_REM AND y.vec_id % 10 <> $INC_REM")}""".stripMargin,
 
     // Accumulated face: wave 2 (double-mixed, vec_id ≥ 2e6) probes
     // corpus ∪ wave 1 — the union is synthesized with the same exact
     // double mix arithmetic the Spark side applies.
     "q_st_embed_accum" ->
-      s"""WITH b AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw
-         |           FROM embeddings WHERE vec_id % 10 = $INC_REM),
-         |m1 AS (SELECT vec_id, ${mixSql("raw")} AS raw FROM b),
-         |m2 AS (SELECT vec_id, ${mixSql("raw")} AS raw FROM m1),
+      s"""WITH $mixWaveCtes,
          |u0 AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw FROM embeddings
          |  UNION ALL
          |  SELECT vec_id + $WAVE, raw FROM m1
          |  UNION ALL
          |  SELECT vec_id + ${2 * WAVE}, raw FROM m2),
-         |e AS (SELECT vec_id,
-         |             list_transform(raw, x -> x / sqrt(${dotSql("raw", "raw")})) AS v
-         |      FROM u0),
+         |${l2NormCte("e", "u0")},
          |$lshCtes,
-         |cand AS (
-         |  SELECT DISTINCT x.vec_id AS vec_new, y.vec_id AS vec_old
-         |  FROM bands x JOIN bands y ON x.c = y.c AND x.cv = y.cv
-         |  WHERE x.vec_id >= ${2 * WAVE} AND y.vec_id < ${2 * WAVE}),
-         |s AS (SELECT vec_new, vec_old,
-         |             round(${dotSql("a.v", "b.v")}, 6) AS cosine
-         |      FROM cand JOIN e a ON a.vec_id = vec_new
-         |                JOIN e b ON b.vec_id = vec_old),
-         |r AS (SELECT vec_new, vec_old, cosine,
-         |             row_number() OVER (PARTITION BY vec_new
-         |                  ORDER BY cosine DESC, vec_old ASC) AS rn
-         |      FROM s WHERE cosine >= $COS_MIN)
-         |SELECT vec_new, vec_old AS best_match, cosine FROM r
-         |WHERE rn = 1 ORDER BY vec_new""".stripMargin,
+         |${embedBestMatchSql(s"x.vec_id >= ${2 * WAVE} AND y.vec_id < ${2 * WAVE}")}""".stripMargin,
 
     "q_sim_ann_lsh" ->
       s"""WITH $normalizedCte,
@@ -2895,28 +2865,13 @@ object PipelinePack {
     // same tie-break, hash-identical rows.
     "q_sim_hamming_ann" ->
       s"""WITH $normalizedCte,
-         |planes64(p_id, p) AS (VALUES
-         |    ${planesValuesSql(Similarity.hyperplanes(64, DIM))}),
-         |sw AS (
-         |  SELECT vec_id, CAST(p_id // 16 AS INT) AS w,
-         |         CAST(sum(CASE WHEN ${dotSql("v", "p")} > 0
-         |                       THEN (CAST(1 AS BIGINT) << (p_id % 16))
-         |                       ELSE 0 END) AS BIGINT) AS wv
-         |  FROM e, planes64 GROUP BY 1, 2),
-         |sk AS (
-         |  SELECT vec_id,
-         |         max(CASE WHEN w = 0 THEN wv END) AS b0,
-         |         max(CASE WHEN w = 1 THEN wv END) AS b1,
-         |         max(CASE WHEN w = 2 THEN wv END) AS b2,
-         |         max(CASE WHEN w = 3 THEN wv END) AS b3
-         |  FROM sw GROUP BY vec_id),
+         |$planes64Cte,
+         |${signSketchCtes("sk", "e")},
          |hc AS (
          |  SELECT q.vec_id AS query_id, c.vec_id
          |  FROM sk q JOIN sk c ON c.vec_id <> q.vec_id
          |  WHERE q.vec_id % 100 = 0
-         |    AND bit_count(xor(q.b0, c.b0)) + bit_count(xor(q.b1, c.b1)) +
-         |        bit_count(xor(q.b2, c.b2)) + bit_count(xor(q.b3, c.b3))
-         |        <= $HAM_ANN_MAX),
+         |    AND ${hammingSql("q", "c")} <= $HAM_ANN_MAX),
          |hs AS (SELECT hc.query_id, hc.vec_id,
          |              round(${dotSql("a.v", "b.v")}, 6) AS cosine
          |       FROM hc JOIN e a ON a.vec_id = hc.query_id
@@ -2935,55 +2890,21 @@ object PipelinePack {
     // is the quadratic Hamming <= H definition the broadcast scan
     // matches exactly.
     "q_st_hamming_ann" ->
-      s"""WITH hab AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw
-         |            FROM embeddings WHERE vec_id % $INC_MOD = $INC_REM),
-         |ham1 AS (SELECT vec_id, ${mixSql("raw")} AS raw FROM hab),
-         |ham2 AS (SELECT vec_id, ${mixSql("raw")} AS raw FROM ham1),
+      s"""WITH $mixWaveCtes,
          |hau AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS raw FROM embeddings
          |  UNION ALL
-         |  SELECT vec_id + $WAVE, raw FROM ham1),
-         |haq AS (SELECT vec_id + ${2 * WAVE} AS vec_id, raw FROM ham2),
-         |hae AS (SELECT vec_id,
-         |               list_transform(raw, x -> x / sqrt(${dotSql("raw", "raw")})) AS v
-         |        FROM hau),
-         |haeq AS (SELECT vec_id,
-         |                list_transform(raw, x -> x / sqrt(${dotSql("raw", "raw")})) AS v
-         |         FROM haq),
-         |hap(p_id, p) AS (VALUES
-         |    ${planesValuesSql(Similarity.hyperplanes(64, DIM))}),
-         |hacw AS (
-         |  SELECT vec_id, CAST(p_id // 16 AS INT) AS w,
-         |         CAST(sum(CASE WHEN ${dotSql("v", "p")} > 0
-         |                       THEN (CAST(1 AS BIGINT) << (p_id % 16))
-         |                       ELSE 0 END) AS BIGINT) AS wv
-         |  FROM hae, hap GROUP BY 1, 2),
-         |hack AS (
-         |  SELECT vec_id,
-         |         max(CASE WHEN w = 0 THEN wv END) AS b0,
-         |         max(CASE WHEN w = 1 THEN wv END) AS b1,
-         |         max(CASE WHEN w = 2 THEN wv END) AS b2,
-         |         max(CASE WHEN w = 3 THEN wv END) AS b3
-         |  FROM hacw GROUP BY vec_id),
-         |haqw AS (
-         |  SELECT vec_id, CAST(p_id // 16 AS INT) AS w,
-         |         CAST(sum(CASE WHEN ${dotSql("v", "p")} > 0
-         |                       THEN (CAST(1 AS BIGINT) << (p_id % 16))
-         |                       ELSE 0 END) AS BIGINT) AS wv
-         |  FROM haeq, hap GROUP BY 1, 2),
-         |haqk AS (
-         |  SELECT vec_id,
-         |         max(CASE WHEN w = 0 THEN wv END) AS b0,
-         |         max(CASE WHEN w = 1 THEN wv END) AS b1,
-         |         max(CASE WHEN w = 2 THEN wv END) AS b2,
-         |         max(CASE WHEN w = 3 THEN wv END) AS b3
-         |  FROM haqw GROUP BY vec_id),
+         |  SELECT vec_id + $WAVE, raw FROM m1),
+         |haq AS (SELECT vec_id + ${2 * WAVE} AS vec_id, raw FROM m2),
+         |${l2NormCte("hae", "hau")},
+         |${l2NormCte("haeq", "haq")},
+         |$planes64Cte,
+         |${signSketchCtes("hack", "hae")},
+         |${signSketchCtes("haqk", "haeq")},
          |hahc AS (
          |  SELECT q.vec_id AS query_id, c.vec_id
          |  FROM haqk q JOIN hack c ON c.vec_id <> q.vec_id
-         |  WHERE bit_count(xor(q.b0, c.b0)) + bit_count(xor(q.b1, c.b1)) +
-         |        bit_count(xor(q.b2, c.b2)) + bit_count(xor(q.b3, c.b3))
-         |        <= $HAM_ANN_MAX),
+         |  WHERE ${hammingSql("q", "c")} <= $HAM_ANN_MAX),
          |hahs AS (SELECT hahc.query_id, hahc.vec_id,
          |                round(${dotSql("a.v", "bb.v")}, 6) AS cosine
          |         FROM hahc JOIN haeq a ON a.vec_id = hahc.query_id
@@ -3620,17 +3541,7 @@ object PipelinePack {
     // column (sketch estimate included) is hash-checked — plus the
     // exact-Jaccard audit columns from the word-keyed intersection.
     "q_text_source_overlap" ->
-      s"""WITH w AS (
-         |  SELECT DISTINCT source,
-         |         ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2] AS word
-         |  FROM (SELECT source, string_split(text, ' ') AS ws FROM documents) t,
-         |       unnest(range(1, len(ws) - 1)) ti(i)),
-         |hw AS (SELECT DISTINCT source,
-         |              ${graft.functions.Hashing.md5LongSql("word")} AS h
-         |       FROM w),
-         |rk AS (SELECT source, h,
-         |              row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-         |       FROM hw),
+      s"""WITH $kmvRankCtes,
          |sk AS (SELECT source, h FROM rk WHERE rn <= $KMV_K),
          |srcs AS (SELECT DISTINCT source FROM documents),
          |pr AS (SELECT a.source AS source_a, b.source AS source_b
@@ -3674,17 +3585,7 @@ object PipelinePack {
     // Same signal constants as the gopher oracle, same pairs chain as
     // the jaccard oracle; dup membership via EXISTS (NULL-safe).
     "q_text_source_report" ->
-      s"""WITH sh AS ($sh),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |inter AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-         |  GROUP BY a.doc_id, b.doc_id),
-         |pairs AS (
-         |  SELECT doc_a, doc_b
-         |  FROM inter JOIN sizes sa ON sa.doc_id = doc_a
-         |             JOIN sizes sb ON sb.doc_id = doc_b
-         |  WHERE round(i / (sa.n + sb.n - i), 6) >= $JACCARD_MIN),
+      s"""WITH $jaccardPairCtes,
          |dup AS (SELECT DISTINCT doc_id FROM (
          |  SELECT doc_a AS doc_id FROM pairs
          |  UNION ALL SELECT doc_b AS doc_id FROM pairs) u),
@@ -3749,9 +3650,7 @@ object PipelinePack {
          |    $planeVals),
          |pr AS (SELECT vec_id, list(${dotSql("v", "p")} ORDER BY p_id) AS praw
          |       FROM e, planes GROUP BY vec_id),
-         |pn AS (SELECT vec_id,
-         |              list_transform(praw, x -> x / sqrt(${dotSql("praw", "praw")})) AS pv
-         |       FROM pr),
+         |pn AS (SELECT vec_id, ${l2NormSql("praw")} AS pv FROM pr),
          |j AS (SELECT vec_id, v, pv FROM e JOIN pn USING (vec_id)),
          |ja AS (SELECT vec_id AS vec_a, v AS va, pv AS pa FROM j),
          |jb AS (SELECT vec_id AS vec_b, v AS vb, pv AS pb FROM j),
@@ -4214,18 +4113,11 @@ object PipelinePack {
     // Spark side's banded blocking is pigeonhole-lossless).
     "q_mm_audio_neardup" ->
       s"""WITH aud AS (
-         |  SELECT doc_id * 2 AS clip_id, doc_id, 0 AS sil FROM documents
+         |  SELECT doc_id * 2 AS clip_id, doc_id, 0 AS sil, 1 AS g FROM documents
          |  UNION ALL
-         |  SELECT doc_id * 2 + 1, doc_id, 3 FROM documents WHERE doc_id % 5 = 0),
-         |prm AS (SELECT clip_id, doc_id, sil, 1 AS g,
-         |               1 + doc_id % 2 AS nc, 64 + doc_id % 33 AS nf FROM aud),
+         |  SELECT doc_id * 2 + 1, doc_id, 3, 1 FROM documents WHERE doc_id % 5 = 0),
          |$audioHashCtes,
-         |ham AS (
-         |  SELECT ha.clip_id AS clip_a, hb.clip_id AS clip_b,
-         |         CAST(bit_count(xor(ha.b0, hb.b0)) + bit_count(xor(ha.b1, hb.b1))
-         |            + bit_count(xor(ha.b2, hb.b2)) + bit_count(xor(ha.b3, hb.b3))
-         |              AS BIGINT) AS hamming
-         |  FROM h ha JOIN h hb ON ha.clip_id < hb.clip_id)
+         |${pairHammingCte("clip_id")}
          |SELECT clip_a, clip_b, hamming FROM ham
          |WHERE hamming <= $AUD_HAMMING_MAX ORDER BY clip_a, clip_b""".stripMargin,
 
@@ -4243,22 +4135,8 @@ object PipelinePack {
          |  SELECT doc_id * 4 + 2, doc_id, 2 FROM documents
          |  WHERE doc_id % $INC_MOD = $INC_REM),
          |$imageHashCtes,
-         |xham AS (
-         |  SELECT hn.img_id AS img_new, hc.img_id AS img_old,
-         |         CAST(bit_count(xor(hn.b0, hc.b0)) + bit_count(xor(hn.b1, hc.b1))
-         |            + bit_count(xor(hn.b2, hc.b2)) + bit_count(xor(hn.b3, hc.b3))
-         |              AS BIGINT) AS hamming
-         |  FROM h hn JOIN h hc ON hn.img_id % 4 = 2 AND hc.img_id % 4 <> 2
-         |  WHERE bit_count(xor(hn.b0, hc.b0)) + bit_count(xor(hn.b1, hc.b1))
-         |      + bit_count(xor(hn.b2, hc.b2)) + bit_count(xor(hn.b3, hc.b3))
-         |      <= $IMG_HAMMING_MAX),
-         |best AS (
-         |  SELECT img_new, img_old AS best_match, hamming FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY img_new
-         |                ORDER BY hamming ASC, img_old ASC) AS rn
-         |    FROM xham) WHERE rn = 1)
-         |SELECT img_new, best_match, hamming FROM best
-         |ORDER BY img_new""".stripMargin,
+         |${bestHammingMatchSql("img_id",
+              "hn.img_id % 4 = 2 AND hc.img_id % 4 <> 2", IMG_HAMMING_MAX)}""".stripMargin,
 
     // The streaming corpus-probe face for AUDIO: base clips of every
     // doc are the corpus (even clip_ids), trimmed+×2-gained re-uploads
@@ -4279,25 +4157,10 @@ object PipelinePack {
          |  UNION ALL
          |  SELECT ${2 * WAVE} + doc_id * 2, doc_id, 4, 2 FROM documents
          |  WHERE doc_id % $INC_MOD = $INC_REM),
-         |prm AS (SELECT clip_id, doc_id, sil, g,
-         |               1 + doc_id % 2 AS nc, 64 + doc_id % 33 AS nf FROM aud),
          |$audioHashCtes,
-         |xham AS (
-         |  SELECT hn.clip_id AS clip_new, hc.clip_id AS clip_old,
-         |         CAST(bit_count(xor(hn.b0, hc.b0)) + bit_count(xor(hn.b1, hc.b1))
-         |            + bit_count(xor(hn.b2, hc.b2)) + bit_count(xor(hn.b3, hc.b3))
-         |              AS BIGINT) AS hamming
-         |  FROM h hn JOIN h hc ON hn.clip_id >= ${2 * WAVE} AND hc.clip_id < ${2 * WAVE}
-         |  WHERE bit_count(xor(hn.b0, hc.b0)) + bit_count(xor(hn.b1, hc.b1))
-         |      + bit_count(xor(hn.b2, hc.b2)) + bit_count(xor(hn.b3, hc.b3))
-         |      <= $AUD_HAMMING_MAX),
-         |best AS (
-         |  SELECT clip_new, clip_old AS best_match, hamming FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY clip_new
-         |                ORDER BY hamming ASC, clip_old ASC) AS rn
-         |    FROM xham) WHERE rn = 1)
-         |SELECT clip_new, best_match, hamming FROM best
-         |ORDER BY clip_new""".stripMargin,
+         |${bestHammingMatchSql("clip_id",
+              s"hn.clip_id >= ${2 * WAVE} AND hc.clip_id < ${2 * WAVE}",
+              AUD_HAMMING_MAX)}""".stripMargin,
 
     "q_st_audio_neardup" ->
       s"""WITH aud AS (
@@ -4305,25 +4168,9 @@ object PipelinePack {
          |  UNION ALL
          |  SELECT doc_id * 2 + 1, doc_id, 3, 2 FROM documents
          |  WHERE doc_id % $INC_MOD = $INC_REM),
-         |prm AS (SELECT clip_id, doc_id, sil, g,
-         |               1 + doc_id % 2 AS nc, 64 + doc_id % 33 AS nf FROM aud),
          |$audioHashCtes,
-         |xham AS (
-         |  SELECT hn.clip_id AS clip_new, hc.clip_id AS clip_old,
-         |         CAST(bit_count(xor(hn.b0, hc.b0)) + bit_count(xor(hn.b1, hc.b1))
-         |            + bit_count(xor(hn.b2, hc.b2)) + bit_count(xor(hn.b3, hc.b3))
-         |              AS BIGINT) AS hamming
-         |  FROM h hn JOIN h hc ON hn.clip_id % 2 = 1 AND hc.clip_id % 2 = 0
-         |  WHERE bit_count(xor(hn.b0, hc.b0)) + bit_count(xor(hn.b1, hc.b1))
-         |      + bit_count(xor(hn.b2, hc.b2)) + bit_count(xor(hn.b3, hc.b3))
-         |      <= $AUD_HAMMING_MAX),
-         |best AS (
-         |  SELECT clip_new, clip_old AS best_match, hamming FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY clip_new
-         |                ORDER BY hamming ASC, clip_old ASC) AS rn
-         |    FROM xham) WHERE rn = 1)
-         |SELECT clip_new, best_match, hamming FROM best
-         |ORDER BY clip_new""".stripMargin,
+         |${bestHammingMatchSql("clip_id",
+              "hn.clip_id % 2 = 1 AND hc.clip_id % 2 = 0", AUD_HAMMING_MAX)}""".stripMargin,
 
     // The robustness grid replayed closed-form: base + trim-2 + trim-6
     // + saturating ×2-gain renders per planted doc, fingerprints via
@@ -4341,15 +4188,8 @@ object PipelinePack {
          |  SELECT doc_id * 4 + 2, doc_id, 6, 1 FROM documents WHERE doc_id % 5 = 0
          |  UNION ALL
          |  SELECT doc_id * 4 + 3, doc_id, 0, 2 FROM documents WHERE doc_id % 5 = 0),
-         |prm AS (SELECT clip_id, doc_id, sil, g,
-         |               1 + doc_id % 2 AS nc, 64 + doc_id % 33 AS nf FROM aud),
          |$audioHashCtes,
-         |ham AS (
-         |  SELECT ha.clip_id AS clip_a, hb.clip_id AS clip_b,
-         |         CAST(bit_count(xor(ha.b0, hb.b0)) + bit_count(xor(ha.b1, hb.b1))
-         |            + bit_count(xor(ha.b2, hb.b2)) + bit_count(xor(ha.b3, hb.b3))
-         |              AS BIGINT) AS hamming
-         |  FROM h ha JOIN h hb ON ha.clip_id < hb.clip_id),
+         |${pairHammingCte("clip_id")},
          |pred AS (SELECT clip_a // 4 AS doc_a, clip_a % 4 AS va,
          |                clip_b // 4 AS doc_b, clip_b % 4 AS vb
          |         FROM ham WHERE hamming <= $AUD_HAMMING_MAX),
@@ -4390,12 +4230,7 @@ object PipelinePack {
          |imgs AS (SELECT doc_id * 16 + f AS img_id, doc_id, 97 * f AS delta
          |         FROM v, unnest(range(0, nf)) tf(f)),
          |$imageHashCtes,
-         |ham AS (
-         |  SELECT ha.img_id AS img_a, hb.img_id AS img_b,
-         |         CAST(bit_count(xor(ha.b0, hb.b0)) + bit_count(xor(ha.b1, hb.b1))
-         |            + bit_count(xor(ha.b2, hb.b2)) + bit_count(xor(ha.b3, hb.b3))
-         |              AS BIGINT) AS hamming
-         |  FROM h ha JOIN h hb ON ha.img_id < hb.img_id),
+         |${pairHammingCte("img_id")},
          |vp AS (SELECT img_a // 16 AS video_a, img_b // 16 AS video_b, hamming
          |       FROM ham
          |       WHERE hamming <= $VID_HAMMING_MAX
@@ -4489,12 +4324,7 @@ object PipelinePack {
          |                      unnest(range(0, 14)) ty(y)
          |          WHERE tx.x < w AND ty.y < h),
          |$phashFromPxCtes,
-         |pham AS (
-         |  SELECT ha.img_id AS img_a, hb.img_id AS img_b,
-         |         CAST(bit_count(xor(ha.b0, hb.b0)) + bit_count(xor(ha.b1, hb.b1))
-         |            + bit_count(xor(ha.b2, hb.b2)) + bit_count(xor(ha.b3, hb.b3))
-         |              AS BIGINT) AS hamming
-         |  FROM ph ha JOIN ph hb ON ha.img_id < hb.img_id)
+         |${pairHammingCte("img_id", "ph", "pham")}
          |SELECT img_a, img_b, hamming FROM pham
          |WHERE hamming <= $PHASH_HAMMING_MAX ORDER BY img_a, img_b""".stripMargin,
 
@@ -4521,33 +4351,16 @@ object PipelinePack {
          |         32 + (doc_id + 31 * ((gx * w) // 8) + 7 * ((gy * h) // 8)) % 140
          |         + amp * (((((gx * w) // 8) + ((gy * h) // 8)) % 2) * 2 - 1) AS gray
          |  FROM pdims, unnest(range(0, 8)) tx(gx), unnest(range(0, 8)) ty(gy)),
-         |tot AS (SELECT img_id, sum(gray) AS total FROM cells GROUP BY img_id),
-         |abnd AS (
-         |  SELECT c.img_id, c.cell // 16 AS band_idx,
-         |         CAST(sum(CASE WHEN 64 * c.gray > t.total
-         |                       THEN 1 << CAST(c.cell % 16 AS INT) ELSE 0 END)
-         |              AS BIGINT) AS bval
-         |  FROM cells c JOIN tot t USING (img_id)
-         |  GROUP BY c.img_id, c.cell // 16),
-         |ah AS (SELECT img_id,
-         |             max(CASE WHEN band_idx = 0 THEN bval END) AS b0,
-         |             max(CASE WHEN band_idx = 1 THEN bval END) AS b1,
-         |             max(CASE WHEN band_idx = 2 THEN bval END) AS b2,
-         |             max(CASE WHEN band_idx = 3 THEN bval END) AS b3
-         |      FROM abnd GROUP BY img_id),
+         |$aHashFromCellsCtes,
          |$phashFromPxCtes,
          |apair AS (
          |  SELECT e.img_id // 2 AS doc_id,
-         |         CAST(bit_count(xor(e.b0, o.b0)) + bit_count(xor(e.b1, o.b1))
-         |            + bit_count(xor(e.b2, o.b2)) + bit_count(xor(e.b3, o.b3))
-         |              AS BIGINT) AS ahd
-         |  FROM ah e JOIN ah o ON o.img_id = e.img_id + 1
+         |         CAST(${hammingSql("e", "o")} AS BIGINT) AS ahd
+         |  FROM h e JOIN h o ON o.img_id = e.img_id + 1
          |  WHERE e.img_id % 2 = 0),
          |ppair AS (
          |  SELECT e.img_id // 2 AS doc_id,
-         |         CAST(bit_count(xor(e.b0, o.b0)) + bit_count(xor(e.b1, o.b1))
-         |            + bit_count(xor(e.b2, o.b2)) + bit_count(xor(e.b3, o.b3))
-         |              AS BIGINT) AS phd
+         |         CAST(${hammingSql("e", "o")} AS BIGINT) AS phd
          |  FROM ph e JOIN ph o ON o.img_id = e.img_id + 1
          |  WHERE e.img_id % 2 = 0),
          |j AS (SELECT a.doc_id, a.ahd, p.phd
@@ -4576,22 +4389,8 @@ object PipelinePack {
          |  SELECT doc_id * 2 + 1, doc_id, 1 FROM documents
          |  WHERE doc_id % $INC_MOD = $INC_REM),
          |$imageHashCtes,
-         |xham AS (
-         |  SELECT hn.img_id AS img_new, hc.img_id AS img_old,
-         |         CAST(bit_count(xor(hn.b0, hc.b0)) + bit_count(xor(hn.b1, hc.b1))
-         |            + bit_count(xor(hn.b2, hc.b2)) + bit_count(xor(hn.b3, hc.b3))
-         |              AS BIGINT) AS hamming
-         |  FROM h hn JOIN h hc ON hn.img_id % 2 = 1 AND hc.img_id % 2 = 0
-         |  WHERE bit_count(xor(hn.b0, hc.b0)) + bit_count(xor(hn.b1, hc.b1))
-         |      + bit_count(xor(hn.b2, hc.b2)) + bit_count(xor(hn.b3, hc.b3))
-         |      <= $IMG_HAMMING_MAX),
-         |best AS (
-         |  SELECT img_new, img_old AS best_match, hamming FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY img_new
-         |                ORDER BY hamming ASC, img_old ASC) AS rn
-         |    FROM xham) WHERE rn = 1)
-         |SELECT img_new, best_match, hamming FROM best
-         |ORDER BY img_new""".stripMargin,
+         |${bestHammingMatchSql("img_id",
+              "hn.img_id % 2 = 1 AND hc.img_id % 2 = 0", IMG_HAMMING_MAX)}""".stripMargin,
 
     // Same aHash pair pipeline, then the same transitive closure the
     // text dedup oracles use: component label = min img_id reachable,

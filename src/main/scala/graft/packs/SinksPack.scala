@@ -38,6 +38,81 @@ object SinksPack {
       if (!fixtureDone.contains(key)) { write; fixtureDone.add(key) }
     }
 
+  /** Registers the `graftw` [[graft.sources.GraftCatalog]] over this
+    * scale factor's warehouse dir; returns (catalog name, warehouse dir).
+    * Each catalog query keys its once-per-JVM fixture on the dir. */
+  private def graftCatalog(s: SparkSession, d: String): (String, String) = {
+    val (cat, wh) = ("graftw", tmpPath("catalog_wh", d))
+    s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    (cat, wh)
+  }
+
+  /** Spark SQL for the lineitem (month, returnflag) rows the catalog
+    * fixtures load: `m`, `rf`, `n_items` and, with `qty`, the dsum'd
+    * `sum_qty`, over the rows of temp view `view` matching `where`. */
+  private def monthFlagRowsSql(view: String, where: String = "true",
+                               qty: Boolean = false): String =
+    "SELECT date_format(l_shipdate, 'yyyy-MM') AS m, l_returnflag AS rf, " +
+      "count(*) AS n_items" + (if (qty) s", ${Num.dsumSql("l_quantity")} AS sum_qty" else "") +
+      s" FROM $view WHERE $where GROUP BY 1, 2"
+
+  /** The versioned, bucket(16, c) per-customer order aggregate
+    * `wh.cust_orders`, loaded once per JVM; returns [[graftCatalog]]'s
+    * (catalog, warehouse dir). */
+  private def custOrdersTable(s: SparkSession, d: String): (String, String) = {
+    val (cat, wh) = graftCatalog(s, d)
+    ensureFixture(s"$wh#bucketed") {
+      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
+      s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.cust_orders " +
+        "(c BIGINT, n_orders BIGINT, revenue DOUBLE) " +
+        "PARTITIONED BY (bucket(16, c)) TBLPROPERTIES('versioned'='true')")
+      Tables.orders(s, d).createOrReplaceTempView("graft_cat_ord_bkt")
+      s.sql(s"""INSERT INTO $cat.wh.cust_orders
+        SELECT o_custkey, count(*), ${Num.dsumSql("o_totalprice")}
+        FROM graft_cat_ord_bkt GROUP BY 1""")
+    }
+    (cat, wh)
+  }
+
+  /** The versioned `wh.li_mv` source of the changefeed-MV queries,
+    * written once per JVM: v1 the full (m, rf) load; v2 a COW UPDATE —
+    * every file holding an R row emits its pre-image as deletes and its
+    * post-image as inserts; v3 a metadata DELETE — pure retractions.
+    * Returns the catalog name. */
+  private def mvSourceTable(s: SparkSession, d: String): String = {
+    val (cat, wh) = graftCatalog(s, d)
+    ensureFixture(s"$wh#mv") {
+      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
+      s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_mv " +
+        "(m STRING, rf STRING, n_items BIGINT) PARTITIONED BY (m) " +
+        "TBLPROPERTIES('versioned'='true')")
+      Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_mv")
+      s.sql(s"INSERT INTO $cat.wh.li_mv " + monthFlagRowsSql("graft_cat_li_mv"))
+      s.sql(s"UPDATE $cat.wh.li_mv SET n_items = n_items * 10 WHERE rf = 'R'")
+      s.sql(s"DELETE FROM $cat.wh.li_mv WHERE m >= '1995-01' AND m <= '1995-12'")
+    }
+    cat
+  }
+
+  /** The token-chained search-page fixture the paged-source queries
+    * read, written once per JVM; returns its path. */
+  private def pagedFixture(s: SparkSession, d: String): String = {
+    val path = tmpPath("paged_src", d)
+    ensureFixture(path) {
+      graft.sources.JsonFixtureSource.writeSearchPagesPartitioned(
+        s, Tables.orders(s, d), path)
+    }
+    path
+  }
+
+  /** The paged source over [[pagedFixture]], publishedAfter predicate
+    * applied (pushed into the source). */
+  private def pagedSource(s: SparkSession, d: String): DataFrame =
+    s.read.format("graft.sources.PagedJsonSource")
+      .option("path", pagedFixture(s, d)).load()
+      .filter(col("published_at") > graft.sources.PagedJsonSource.PublishedAfter)
+
   /** Nested commentThreads JSON fixture; returns its path. */
   private def threadsFixture(s: SparkSession, d: String): String = {
     val path = tmpPath("threads", d)
@@ -261,11 +336,7 @@ object SinksPack {
     // round-13 surface — clustering-on-write, pruning, SPJ — with no
     // DataFrame code.
     "q_k_catalog_sql" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-      val qty = "CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)" // = Num.dsum
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(wh) {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_metrics " +
@@ -273,12 +344,10 @@ object SinksPack {
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li")
         // two appends over disjoint group slices — their union IS the
         // full (m, rf) aggregate the oracle replays
-        s.sql(s"""INSERT INTO $cat.wh.li_metrics
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*), $qty
-          FROM graft_cat_li WHERE l_returnflag = 'R' GROUP BY 1, 2""")
-        s.sql(s"""INSERT INTO $cat.wh.li_metrics
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*), $qty
-          FROM graft_cat_li WHERE l_returnflag <> 'R' GROUP BY 1, 2""")
+        s.sql(s"INSERT INTO $cat.wh.li_metrics " +
+          monthFlagRowsSql("graft_cat_li", "l_returnflag = 'R'", qty = true))
+        s.sql(s"INSERT INTO $cat.wh.li_metrics " +
+          monthFlagRowsSql("graft_cat_li", "l_returnflag <> 'R'", qty = true))
       }
       s.sql(s"""SELECT m, rf, n_items, sum_qty FROM $cat.wh.li_metrics
         WHERE m >= '1995-01' AND m <= '1995-12' ORDER BY m, rf""")
@@ -291,20 +360,15 @@ object SinksPack {
     // PartitionedCsvSpec), and directory pruning on ANY key subset:
     // this SELECT prunes on the month PREFIX and the rf SUFFIX at once.
     "q_k_partitioned_multi" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-      val qty = "CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)"
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#multi") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_multi " +
           "(m STRING, rf STRING, n_items BIGINT, sum_qty DOUBLE) " +
           "PARTITIONED BY (m, rf)")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_multi")
-        s.sql(s"""INSERT OVERWRITE $cat.wh.li_multi
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*), $qty
-          FROM graft_cat_li_multi GROUP BY 1, 2""")
+        s.sql(s"INSERT OVERWRITE $cat.wh.li_multi " +
+          monthFlagRowsSql("graft_cat_li_multi", qty = true))
       }
       s.sql(s"""SELECT m, rf, n_items, sum_qty FROM $cat.wh.li_multi
         WHERE m >= '1996-01' AND m <= '1996-12' AND rf <> 'N'
@@ -318,19 +382,14 @@ object SinksPack {
     // (GraftCatalogSpec pins the mtime invariance). The gate: survivors
     // hash-match the oracle's complement aggregate.
     "q_k_catalog_delete" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-      val qty = "CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)"
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#del") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_del " +
           "(m STRING, rf STRING, n_items BIGINT, sum_qty DOUBLE) PARTITIONED BY (m)")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_del")
-        s.sql(s"""INSERT OVERWRITE $cat.wh.li_del
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*), $qty
-          FROM graft_cat_li_del GROUP BY 1, 2""")
+        s.sql(s"INSERT OVERWRITE $cat.wh.li_del " +
+          monthFlagRowsSql("graft_cat_li_del", qty = true))
         // a whole retention year goes — directory deletes only
         s.sql(s"DELETE FROM $cat.wh.li_del WHERE m >= '1995-01' AND m <= '1995-12'")
       }
@@ -348,10 +407,7 @@ object SinksPack {
     // the values). The reference's serving layer reads bounded date
     // windows of the warehouse, never whole tables (…final.py:137).
     "q_k_zone_skip" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#zones") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         // sortBuckets pins the layout: 16 range-partitioned files at
@@ -362,7 +418,7 @@ object SinksPack {
         Tables.orders(s, d).createOrReplaceTempView("graft_cat_ord_zone")
         s.sql(s"""INSERT INTO $cat.wh.ord_daily
           SELECT date_format(o_orderdate, 'yyyy-MM-dd'), count(*),
-                 CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
+                 ${Num.dsumSql("o_totalprice")}
           FROM graft_cat_ord_zone GROUP BY 1""")
       }
       s.sql(s"""SELECT d, n_orders, revenue FROM $cat.wh.ord_daily
@@ -378,19 +434,14 @@ object SinksPack {
     // the pre-delete snapshot: the retention DELETE that rewrote
     // nothing also LOST nothing until the operator vacuums.
     "q_k_time_travel" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#tt") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_tt " +
           "(m STRING, rf STRING, n_items BIGINT) PARTITIONED BY (m) " +
           "TBLPROPERTIES('versioned'='true')")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_tt")
-        s.sql(s"""INSERT INTO $cat.wh.li_tt
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_tt GROUP BY 1, 2""")
+        s.sql(s"INSERT INTO $cat.wh.li_tt " + monthFlagRowsSql("graft_cat_li_tt"))
         // the retention year goes — LOGICALLY (manifest v2 excludes it)
         s.sql(s"DELETE FROM $cat.wh.li_tt WHERE m >= '1995-01' AND m <= '1995-12'")
       }
@@ -408,22 +459,17 @@ object SinksPack {
     // as the stream's input; the drained memory sink must equal the
     // batch aggregate the oracle replays.
     "q_st_catalog_stream" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#stream") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_stream " +
           "(m STRING, rf STRING, n_items BIGINT) PARTITIONED BY (m) " +
           "TBLPROPERTIES('versioned'='true')")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_st")
-        s.sql(s"""INSERT INTO $cat.wh.li_stream
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_st WHERE l_returnflag = 'R' GROUP BY 1, 2""")
-        s.sql(s"""INSERT INTO $cat.wh.li_stream
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_st WHERE l_returnflag <> 'R' GROUP BY 1, 2""")
+        s.sql(s"INSERT INTO $cat.wh.li_stream " +
+          monthFlagRowsSql("graft_cat_li_st", "l_returnflag = 'R'"))
+        s.sql(s"INSERT INTO $cat.wh.li_stream " +
+          monthFlagRowsSql("graft_cat_li_st", "l_returnflag <> 'R'"))
       }
       // per-run sink table + wiped checkpoint: each invocation re-drains
       // the full commit log (same convention as q_st_paged_source)
@@ -452,23 +498,18 @@ object SinksPack {
     // replayed in SQL: v1's rows as inserts, the deleted slice of v1
     // re-stated as deletes, v3's rows as inserts.
     "q_st_catalog_cdc" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#cdc") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_cdc " +
           "(m STRING, rf STRING, n_items BIGINT) PARTITIONED BY (m) " +
           "TBLPROPERTIES('versioned'='true')")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_cdc")
-        s.sql(s"""INSERT INTO $cat.wh.li_cdc
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_cdc WHERE l_returnflag = 'R' GROUP BY 1, 2""")
+        s.sql(s"INSERT INTO $cat.wh.li_cdc " +
+          monthFlagRowsSql("graft_cat_li_cdc", "l_returnflag = 'R'"))
         s.sql(s"DELETE FROM $cat.wh.li_cdc WHERE m >= '1995-01' AND m <= '1995-12'")
-        s.sql(s"""INSERT INTO $cat.wh.li_cdc
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_cdc WHERE l_returnflag <> 'R' GROUP BY 1, 2""")
+        s.sql(s"INSERT INTO $cat.wh.li_cdc " +
+          monthFlagRowsSql("graft_cat_li_cdc", "l_returnflag <> 'R'"))
       }
       val tbl = s"catalog_cdc_out_${java.lang.System.nanoTime()}"
       val ckpt = tmpPath("catalog_cdc_ckpt", d)
@@ -497,10 +538,7 @@ object SinksPack {
     // aggregate the three slices union to — compaction changed the
     // LAYOUT, not one value.
     "q_k_compact" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#compact") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_cmp " +
@@ -508,9 +546,8 @@ object SinksPack {
           "TBLPROPERTIES('versioned'='true')")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_cmp")
         Seq("= 'R'", "= 'A'", "= 'N'").foreach { p =>
-          s.sql(s"""INSERT INTO $cat.wh.li_cmp
-            SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-            FROM graft_cat_li_cmp WHERE l_returnflag $p GROUP BY 1, 2""")
+          s.sql(s"INSERT INTO $cat.wh.li_cmp " +
+            monthFlagRowsSql("graft_cat_li_cmp", s"l_returnflag $p"))
         }
         s.sql(s"CALL $cat.compact('wh.li_cmp')").collect()
       }
@@ -523,19 +560,14 @@ object SinksPack {
     // A bad correction (10x UPDATE) and a bad retention DELETE are
     // rolled back; the table must hash-match the original load.
     "q_k_rollback" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#rollback") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_rb " +
           "(m STRING, rf STRING, n_items BIGINT) PARTITIONED BY (m) " +
           "TBLPROPERTIES('versioned'='true')")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_rb")
-        s.sql(s"""INSERT INTO $cat.wh.li_rb
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_rb GROUP BY 1, 2""")
+        s.sql(s"INSERT INTO $cat.wh.li_rb " + monthFlagRowsSql("graft_cat_li_rb"))
         // the bad day: a wrong correction and a wrong retention sweep
         s.sql(s"UPDATE $cat.wh.li_rb SET n_items = n_items * 10 WHERE rf = 'R'")
         s.sql(s"DELETE FROM $cat.wh.li_rb WHERE m >= '1995-01' AND m <= '1995-12'")
@@ -558,19 +590,14 @@ object SinksPack {
     // back in the table and the hash against the post-DELETE
     // complement would fail.
     "q_k_conflict_serialized" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#conflict") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_cfl " +
           "(m STRING, rf STRING, n_items BIGINT) PARTITIONED BY (m) " +
           "TBLPROPERTIES('versioned'='true')")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_cfl")
-        s.sql(s"""INSERT INTO $cat.wh.li_cfl
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_cfl GROUP BY 1, 2""")
+        s.sql(s"INSERT INTO $cat.wh.li_cfl " + monthFlagRowsSql("graft_cat_li_cfl"))
         val root = new org.apache.hadoop.fs.Path(s"$wh/wh/li_cfl")
         val hconf = s.sessionState.newHadoopConf()
         // the stale operation's read set: every 1995 group, as a COW of
@@ -607,10 +634,7 @@ object SinksPack {
     // the partitioned layout, zone sidecars, time travel, and the
     // changefeed all hold underneath.
     "q_st_versioned_sink" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#vsink") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_vsink " +
@@ -629,14 +653,10 @@ object SinksPack {
           q.awaitTermination()
         }
         // epoch 1: the R slice; epoch 2: everything else
-        s.sql(s"""SELECT date_format(l_shipdate, 'yyyy-MM') AS m,
-            l_returnflag AS rf, count(*) AS n_items
-          FROM graft_cat_li_vsink WHERE l_returnflag = 'R' GROUP BY 1, 2""")
+        s.sql(monthFlagRowsSql("graft_cat_li_vsink", "l_returnflag = 'R'"))
           .write.mode("overwrite").parquet(staging)
         drain()
-        s.sql(s"""SELECT date_format(l_shipdate, 'yyyy-MM') AS m,
-            l_returnflag AS rf, count(*) AS n_items
-          FROM graft_cat_li_vsink WHERE l_returnflag <> 'R' GROUP BY 1, 2""")
+        s.sql(monthFlagRowsSql("graft_cat_li_vsink", "l_returnflag <> 'R'"))
           .write.mode("append").parquet(staging)
         drain()
       }
@@ -653,21 +673,7 @@ object SinksPack {
     // partition count); this full-table read gates that the hash
     // routing is LOSSLESS — every row in exactly one bucket.
     "q_k_bucketed_table" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-      ensureFixture(s"$wh#bucketed") {
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
-        s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.cust_orders " +
-          "(c BIGINT, n_orders BIGINT, revenue DOUBLE) " +
-          "PARTITIONED BY (bucket(16, c)) TBLPROPERTIES('versioned'='true')")
-        Tables.orders(s, d).createOrReplaceTempView("graft_cat_ord_bkt")
-        s.sql(s"""INSERT INTO $cat.wh.cust_orders
-          SELECT o_custkey, count(*),
-                 CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
-          FROM graft_cat_ord_bkt GROUP BY 1""")
-      }
+      val (cat, _) = custOrdersTable(s, d)
       s.sql(s"SELECT c, n_orders, revenue FROM $cat.wh.cust_orders ORDER BY c")
     },
 
@@ -683,21 +689,7 @@ object SinksPack {
     // hash-gates the joined VALUES. (q_x_bucketed_join is the OTHER
     // bucketed face — Spark's builtin parquet bucketBy tables.)
     "q_x_spj_bucket" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-      ensureFixture(s"$wh#bucketed") {
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
-        s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.cust_orders " +
-          "(c BIGINT, n_orders BIGINT, revenue DOUBLE) " +
-          "PARTITIONED BY (bucket(16, c)) TBLPROPERTIES('versioned'='true')")
-        Tables.orders(s, d).createOrReplaceTempView("graft_cat_ord_bkt")
-        s.sql(s"""INSERT INTO $cat.wh.cust_orders
-          SELECT o_custkey, count(*),
-                 CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
-          FROM graft_cat_ord_bkt GROUP BY 1""")
-      }
+      val (cat, wh) = custOrdersTable(s, d)
       ensureFixture(s"$wh#bucketed2") {
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.cust_profile " +
           "(c BIGINT, seg STRING, acctbal DOUBLE) " +
@@ -723,10 +715,7 @@ object SinksPack {
     // aggregate. The daily-reload + date-window-serving loop is the
     // reference's exact access pattern (…final.py:137).
     "q_k_truncated_table" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#truncated") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.ord_trunc " +
@@ -735,7 +724,7 @@ object SinksPack {
         Tables.orders(s, d).createOrReplaceTempView("graft_cat_ord_trunc")
         s.sql(s"""INSERT INTO $cat.wh.ord_trunc
           SELECT date_format(o_orderdate, 'yyyy-MM-dd'), count(*),
-                 CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
+                 ${Num.dsumSql("o_totalprice")}
           FROM graft_cat_ord_trunc GROUP BY 1""")
       }
       s.sql(s"""SELECT d, n_orders, revenue FROM $cat.wh.ord_trunc
@@ -753,10 +742,7 @@ object SinksPack {
     // metadata (nothing on this engine enforces uniqueness, so nothing
     // pretends to); FOREIGN KEY is refused at DDL (ConstraintSpec).
     "q_k_catalog_check" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#check") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_ck " +
@@ -764,9 +750,7 @@ object SinksPack {
           "CONSTRAINT n_items_pos CHECK (n_items > 0)) " +
           "PARTITIONED BY (m) TBLPROPERTIES('versioned'='true')")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_ck")
-        s.sql(s"""INSERT INTO $cat.wh.li_ck
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_ck GROUP BY 1, 2""")
+        s.sql(s"INSERT INTO $cat.wh.li_ck " + monthFlagRowsSql("graft_cat_li_ck"))
         // the bad load: negated counts — must be REFUSED whole
         val refused =
           try {
@@ -790,22 +774,7 @@ object SinksPack {
     // the drain the maintained table must equal the batch aggregate
     // over the source's CURRENT state.
     "q_st_catalog_mv" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-      ensureFixture(s"$wh#mv") {
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
-        s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_mv " +
-          "(m STRING, rf STRING, n_items BIGINT) PARTITIONED BY (m) " +
-          "TBLPROPERTIES('versioned'='true')")
-        Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_mv")
-        s.sql(s"""INSERT INTO $cat.wh.li_mv
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_mv GROUP BY 1, 2""")
-        s.sql(s"UPDATE $cat.wh.li_mv SET n_items = n_items * 10 WHERE rf = 'R'")
-        s.sql(s"DELETE FROM $cat.wh.li_mv WHERE m >= '1995-01' AND m <= '1995-12'")
-      }
+      val cat = mvSourceTable(s, d)
       val mv = s"li_mv_out_${java.lang.System.nanoTime()}"
       s.sql(s"CREATE TABLE $cat.wh.$mv (rf STRING, n_items BIGINT)")
       val ckpt = tmpPath("catalog_mv_ckpt", d)
@@ -850,25 +819,7 @@ object SinksPack {
     // materialized-view maintenance as ONE declarative query; the
     // appends-only stream cannot express it.
     "q_k_changes_mv" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-      ensureFixture(s"$wh#mv") {
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
-        s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_mv " +
-          "(m STRING, rf STRING, n_items BIGINT) PARTITIONED BY (m) " +
-          "TBLPROPERTIES('versioned'='true')")
-        Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_mv")
-        s.sql(s"""INSERT INTO $cat.wh.li_mv
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_mv GROUP BY 1, 2""")
-        // v2: COW — every file holding an R row emits its pre-image as
-        // deletes and its post-image as inserts
-        s.sql(s"UPDATE $cat.wh.li_mv SET n_items = n_items * 10 WHERE rf = 'R'")
-        // v3: metadata delete — pure retractions
-        s.sql(s"DELETE FROM $cat.wh.li_mv WHERE m >= '1995-01' AND m <= '1995-12'")
-      }
+      val cat = mvSourceTable(s, d)
       s.sql(s"""SELECT rf,
           sum(CASE WHEN _change_type = 'insert' THEN n_items
                    ELSE -n_items END) AS n_items
@@ -881,25 +832,19 @@ object SinksPack {
     // never get rewritten — the reader null-fills the missing column
     // per file — and both generations read back as one table.
     "q_k_catalog_evolve" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-      val qty = "CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)"
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#evolve") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_evo " +
           "(m STRING, rf STRING, n_items BIGINT) PARTITIONED BY (m)")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_evo")
         // generation 1: pre-evolution schema (no sum_qty anywhere)
-        s.sql(s"""INSERT INTO $cat.wh.li_evo
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_evo WHERE l_returnflag = 'R' GROUP BY 1, 2""")
+        s.sql(s"INSERT INTO $cat.wh.li_evo " +
+          monthFlagRowsSql("graft_cat_li_evo", "l_returnflag = 'R'"))
         s.sql(s"ALTER TABLE $cat.wh.li_evo ADD COLUMN sum_qty DOUBLE")
         // generation 2: carries the evolved column
-        s.sql(s"""INSERT INTO $cat.wh.li_evo
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*), $qty
-          FROM graft_cat_li_evo WHERE l_returnflag <> 'R' GROUP BY 1, 2""")
+        s.sql(s"INSERT INTO $cat.wh.li_evo " +
+          monthFlagRowsSql("graft_cat_li_evo", "l_returnflag <> 'R'", qty = true))
       }
       s.sql(s"SELECT m, rf, n_items, sum_qty FROM $cat.wh.li_evo ORDER BY m, rf")
     },
@@ -909,18 +854,13 @@ object SinksPack {
     // read so pruning/SPJ still fire underneath; the monthly rollup a
     // warehouse serves to dashboards, in pure SQL.
     "q_k_catalog_view" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#view") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_v " +
           "(m STRING, rf STRING, n_items BIGINT) PARTITIONED BY (m)")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_v")
-        s.sql(s"""INSERT OVERWRITE $cat.wh.li_v
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_v GROUP BY 1, 2""")
+        s.sql(s"INSERT OVERWRITE $cat.wh.li_v " + monthFlagRowsSql("graft_cat_li_v"))
         s.sql(s"""CREATE VIEW IF NOT EXISTS $cat.wh.li_monthly AS
           SELECT m, count(*) AS n_flags, sum(n_items) AS n_items
           FROM $cat.wh.li_v GROUP BY m""")
@@ -935,18 +875,13 @@ object SinksPack {
     // files containing matching rows; everything else is untouched
     // (GraftCatalogSpec pins the mtime invariance).
     "q_k_catalog_update" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#update") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_upd " +
           "(m STRING, rf STRING, n_items BIGINT) PARTITIONED BY (m)")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_upd")
-        s.sql(s"""INSERT OVERWRITE $cat.wh.li_upd
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_upd GROUP BY 1, 2""")
+        s.sql(s"INSERT OVERWRITE $cat.wh.li_upd " + monthFlagRowsSql("graft_cat_li_upd"))
         // the correction: every returned-flag row gets a re-stated count
         s.sql(s"UPDATE $cat.wh.li_upd SET n_items = n_items * 10 WHERE rf = 'R'")
       }
@@ -957,19 +892,15 @@ object SinksPack {
     // (upsert a recomputed slice: matched rows update in place, new
     // rows insert) as ONE SQL statement over the copy-on-write engine.
     "q_k_catalog_merge" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#merge") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_mrg " +
           "(m STRING, rf STRING, n_items BIGINT) PARTITIONED BY (m)")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_mrg")
         // base load: everything before 1996
-        s.sql(s"""INSERT OVERWRITE $cat.wh.li_mrg
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_mrg WHERE year(l_shipdate) < 1996 GROUP BY 1, 2""")
+        s.sql(s"INSERT OVERWRITE $cat.wh.li_mrg " +
+          monthFlagRowsSql("graft_cat_li_mrg", "year(l_shipdate) < 1996"))
         // the incremental: 1995 onward recomputed with DOUBLED counts —
         // 1995 groups exist (update), 1996+ are new (insert)
         s.sql(s"""MERGE INTO $cat.wh.li_mrg t
@@ -990,18 +921,13 @@ object SinksPack {
     // identical). Touched keys come from the COMMIT MESSAGES — no
     // directory listing at all.
     "q_k_catalog_overwrite" -> { (s, d) =>
-      val cat = "graftw"
-      val wh = tmpPath("catalog_wh", d)
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+      val (cat, wh) = graftCatalog(s, d)
       ensureFixture(s"$wh#dynow") {
         s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
         s.sql(s"CREATE TABLE IF NOT EXISTS $cat.wh.li_dyn " +
           "(m STRING, rf STRING, n_items BIGINT) PARTITIONED BY (m)")
         Tables.lineitem(s, d).createOrReplaceTempView("graft_cat_li_dyn")
-        s.sql(s"""INSERT OVERWRITE $cat.wh.li_dyn
-          SELECT date_format(l_shipdate, 'yyyy-MM'), l_returnflag, count(*)
-          FROM graft_cat_li_dyn GROUP BY 1, 2""")
+        s.sql(s"INSERT OVERWRITE $cat.wh.li_dyn " + monthFlagRowsSql("graft_cat_li_dyn"))
         // the "corrected reload" of 1996: doubled counts, dynamic mode
         val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
         try {
@@ -1225,13 +1151,7 @@ object SinksPack {
     // predicate pushed into the source (no residual Spark filter —
     // PlanHygieneSpec asserts it).
     "q_s1_paged_source" -> { (s, d) =>
-      val path = tmpPath("paged_src", d)
-      ensureFixture(path) {
-        graft.sources.JsonFixtureSource.writeSearchPagesPartitioned(
-          s, Tables.orders(s, d), path)
-      }
-      s.read.format("graft.sources.PagedJsonSource").option("path", path).load()
-        .filter(col("published_at") > graft.sources.PagedJsonSource.PublishedAfter)
+      pagedSource(s, d)
         .orderBy("video_id")
     },
 
@@ -1244,13 +1164,7 @@ object SinksPack {
     // any 100 passing rows count the same — so the hash gate covers a
     // genuinely row-nondeterministic operator.
     "q_s1_paged_limit" -> { (s, d) =>
-      val path = tmpPath("paged_src", d)
-      ensureFixture(path) {
-        graft.sources.JsonFixtureSource.writeSearchPagesPartitioned(
-          s, Tables.orders(s, d), path)
-      }
-      s.read.format("graft.sources.PagedJsonSource").option("path", path).load()
-        .filter(col("published_at") > graft.sources.PagedJsonSource.PublishedAfter)
+      pagedSource(s, d)
         .limit(100)
         .agg(count(lit(1)).as("n"))
     },
@@ -1260,13 +1174,7 @@ object SinksPack {
     // the freshness/recency probe every mirror consumer runs ("how many
     // items, how recent") without materializing a single item field.
     "q_s1_paged_minmax" -> { (s, d) =>
-      val path = tmpPath("paged_src", d)
-      ensureFixture(path) {
-        graft.sources.JsonFixtureSource.writeSearchPagesPartitioned(
-          s, Tables.orders(s, d), path)
-      }
-      s.read.format("graft.sources.PagedJsonSource").option("path", path).load()
-        .filter(col("published_at") > graft.sources.PagedJsonSource.PublishedAfter)
+      pagedSource(s, d)
         .agg(count(lit(1)).as("n"),
           min("published_at").as("first_pub"),
           max("published_at").as("last_pub"))
@@ -1278,13 +1186,7 @@ object SinksPack {
     // instead of the whole mirror. (published_at, video_id) is a total
     // order (unique ids), so the row set is deterministic.
     "q_s1_paged_topn" -> { (s, d) =>
-      val path = tmpPath("paged_src", d)
-      ensureFixture(path) {
-        graft.sources.JsonFixtureSource.writeSearchPagesPartitioned(
-          s, Tables.orders(s, d), path)
-      }
-      s.read.format("graft.sources.PagedJsonSource").option("path", path).load()
-        .filter(col("published_at") > graft.sources.PagedJsonSource.PublishedAfter)
+      pagedSource(s, d)
         .orderBy(col("published_at").desc, col("video_id"))
         .limit(50)
     },
@@ -1298,11 +1200,7 @@ object SinksPack {
     // itself, not a batch twin; incremental append + exactly-once
     // restart live in PagedStreamSpec.
     "q_st_paged_source" -> { (s, d) =>
-      val path = tmpPath("paged_src", d)
-      ensureFixture(path) {
-        graft.sources.JsonFixtureSource.writeSearchPagesPartitioned(
-          s, Tables.orders(s, d), path)
-      }
+      val path = pagedFixture(s, d)
       // Per-run memory-sink table, dropped as soon as the result plan
       // holds the sink relation (the NAME leak was the issue: Bench's
       // x3 runs would otherwise pin three full result copies in the
@@ -1413,6 +1311,25 @@ object SinksPack {
     bucketedTables(s, d)
   }
 
+  /** The lineitem (month, returnflag) aggregate every catalog oracle
+    * replays: `m`, `rf`, the item count as `n`, and with `qty` the
+    * dsum'd quantity `sum_qty`. */
+  private def monthFlagAggSql(n: String = "n_items", qty: Boolean = false): String =
+    s"""SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
+       |       count(*) AS $n${if (qty) s", ${Num.dsumSql("l_quantity")} AS sum_qty" else ""}
+       |FROM lineitem GROUP BY 1, 2""".stripMargin
+
+  /** The per-flag rollup of the `li_mv` source's CURRENT state — the
+    * full load with R rows re-stated 10x and 1995 retracted — which
+    * both changefeed-MV queries must converge to. */
+  private def mvCurrentRollupSql: String =
+    s"""WITH t AS (${monthFlagAggSql("n")}),
+       |cur AS (
+       |  SELECT m, rf, CASE WHEN rf = 'R' THEN 10 * n ELSE n END AS n
+       |  FROM t WHERE m < '1995-01' OR m > '1995-12')
+       |SELECT rf, CAST(sum(n) AS BIGINT) AS n_items
+       |FROM cur GROUP BY rf ORDER BY rf""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "q_st_csv_sink" ->
       """SELECT event_type, count(*) AS n,
@@ -1444,10 +1361,7 @@ object SinksPack {
     // Replays the partitioned table's content directly from parquet; the
     // key-range predicate mirrors the planning-time directory pruning.
     "q_k_partitioned_table" ->
-      s"""WITH t AS (
-         |  SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-         |         count(*) AS n_items, ${Num.dsumSql("l_quantity")} AS sum_qty
-         |  FROM lineitem GROUP BY 1, 2)
+      s"""WITH t AS (${monthFlagAggSql(qty = true)})
          |SELECT m, rf, n_items, sum_qty FROM t
          |WHERE m >= '1996-01' AND m <= '1996-12'
          |ORDER BY m, rf""".stripMargin,
@@ -1469,29 +1383,20 @@ object SinksPack {
 
     // The two disjoint INSERT slices union to the full (m, rf) aggregate.
     "q_k_catalog_sql" ->
-      s"""WITH t AS (
-         |  SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-         |         count(*) AS n_items, ${Num.dsumSql("l_quantity")} AS sum_qty
-         |  FROM lineitem GROUP BY 1, 2)
+      s"""WITH t AS (${monthFlagAggSql(qty = true)})
          |SELECT m, rf, n_items, sum_qty FROM t
          |WHERE m >= '1995-01' AND m <= '1995-12'
          |ORDER BY m, rf""".stripMargin,
 
     "q_k_partitioned_multi" ->
-      s"""WITH t AS (
-         |  SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-         |         count(*) AS n_items, ${Num.dsumSql("l_quantity")} AS sum_qty
-         |  FROM lineitem GROUP BY 1, 2)
+      s"""WITH t AS (${monthFlagAggSql(qty = true)})
          |SELECT m, rf, n_items, sum_qty FROM t
          |WHERE m >= '1996-01' AND m <= '1996-12' AND rf <> 'N'
          |ORDER BY m, rf""".stripMargin,
 
     // The deleted retention year is the COMPLEMENT of the kept range.
     "q_k_catalog_delete" ->
-      s"""WITH t AS (
-         |  SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-         |         count(*) AS n_items, ${Num.dsumSql("l_quantity")} AS sum_qty
-         |  FROM lineitem GROUP BY 1, 2)
+      s"""WITH t AS (${monthFlagAggSql(qty = true)})
          |SELECT m, rf, n_items, sum_qty FROM t
          |WHERE m < '1995-01' OR m > '1995-12'
          |ORDER BY m, rf""".stripMargin,
@@ -1509,74 +1414,57 @@ object SinksPack {
     // v1 = the full load; 'now' = the post-DELETE complement. The union
     // proves the deleted year is still SERVED at version 1.
     "q_k_time_travel" ->
-      """WITH t AS (
-        |  SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |         count(*) AS n_items
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT 'v1' AS gen, m, rf, n_items FROM t
-        |UNION ALL
-        |SELECT 'now' AS gen, m, rf, n_items FROM t
-        |WHERE m < '1995-01' OR m > '1995-12'
-        |ORDER BY gen, m, rf""".stripMargin,
+      s"""WITH t AS (${monthFlagAggSql()})
+         |SELECT 'v1' AS gen, m, rf, n_items FROM t
+         |UNION ALL
+         |SELECT 'now' AS gen, m, rf, n_items FROM t
+         |WHERE m < '1995-01' OR m > '1995-12'
+         |ORDER BY gen, m, rf""".stripMargin,
 
     // The stream drains both INSERT commits; their disjoint slices
     // union to the full (m, rf) aggregate.
     "q_st_catalog_stream" ->
-      """SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |       count(*) AS n_items
-        |FROM lineitem GROUP BY 1, 2 ORDER BY m, rf""".stripMargin,
+      s"${monthFlagAggSql()} ORDER BY m, rf",
 
     // The changefeed replayed as SQL over the manifest history: v1 =
     // the rf='R' load as inserts; v2 = the deleted retention year of
     // that load, re-stated as deletes; v3 = the rf<>'R' load as inserts.
     "q_st_catalog_cdc" ->
-      """WITH t AS (
-        |  SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |         count(*) AS n_items
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT m, rf, n_items, 'insert' AS _change_type,
-        |       1 AS _commit_version FROM t WHERE rf = 'R'
-        |UNION ALL
-        |SELECT m, rf, n_items, 'delete' AS _change_type,
-        |       2 AS _commit_version FROM t
-        |WHERE rf = 'R' AND m >= '1995-01' AND m <= '1995-12'
-        |UNION ALL
-        |SELECT m, rf, n_items, 'insert' AS _change_type,
-        |       3 AS _commit_version FROM t WHERE rf <> 'R'
-        |ORDER BY _commit_version, _change_type, m, rf""".stripMargin,
+      s"""WITH t AS (${monthFlagAggSql()})
+         |SELECT m, rf, n_items, 'insert' AS _change_type,
+         |       1 AS _commit_version FROM t WHERE rf = 'R'
+         |UNION ALL
+         |SELECT m, rf, n_items, 'delete' AS _change_type,
+         |       2 AS _commit_version FROM t
+         |WHERE rf = 'R' AND m >= '1995-01' AND m <= '1995-12'
+         |UNION ALL
+         |SELECT m, rf, n_items, 'insert' AS _change_type,
+         |       3 AS _commit_version FROM t WHERE rf <> 'R'
+         |ORDER BY _commit_version, _change_type, m, rf""".stripMargin,
 
     // Compaction is layout-only: the merged table still equals the
     // plain (m, rf) aggregate the three slices union to.
     "q_k_compact" ->
-      """SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |       count(*) AS n_items
-        |FROM lineitem GROUP BY 1, 2 ORDER BY m, rf""".stripMargin,
+      s"${monthFlagAggSql()} ORDER BY m, rf",
 
     // Rollback erased the 10x correction AND the retention delete: the
     // table equals the original full load, byte for byte.
     "q_k_rollback" ->
-      """SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |       count(*) AS n_items
-        |FROM lineitem GROUP BY 1, 2 ORDER BY m, rf""".stripMargin,
+      s"${monthFlagAggSql()} ORDER BY m, rf",
 
     // The stale COW was refused: the table equals the post-DELETE
     // complement. Had last-writer-wins applied the swap, the deleted
     // retention year would be back and this hash would fail.
     "q_k_conflict_serialized" ->
-      """WITH t AS (
-        |  SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |         count(*) AS n_items
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT m, rf, n_items FROM t
-        |WHERE m < '1995-01' OR m > '1995-12'
-        |ORDER BY m, rf""".stripMargin,
+      s"""WITH t AS (${monthFlagAggSql()})
+         |SELECT m, rf, n_items FROM t
+         |WHERE m < '1995-01' OR m > '1995-12'
+         |ORDER BY m, rf""".stripMargin,
 
     // Two streamed epochs union to the full (m, rf) aggregate — each
     // epoch was one manifest commit with its txn record.
     "q_st_versioned_sink" ->
-      """SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |       count(*) AS n_items
-        |FROM lineitem GROUP BY 1, 2 ORDER BY m, rf""".stripMargin,
+      s"${monthFlagAggSql()} ORDER BY m, rf",
 
     // Bucket routing is lossless: the full bucketed table equals the
     // plain per-customer aggregate.
@@ -1613,88 +1501,57 @@ object SinksPack {
     // The refused violating load published nothing: the table equals
     // the clean aggregate alone.
     "q_k_catalog_check" ->
-      """SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |       count(*) AS n_items
-        |FROM lineitem GROUP BY 1, 2 ORDER BY m, rf""".stripMargin,
+      s"${monthFlagAggSql()} ORDER BY m, rf",
 
     // The commit-by-commit MERGE-maintained view converges to the same
     // current-state aggregate the one-shot signed fold produces.
     "q_st_catalog_mv" ->
-      """WITH t AS (
-        |  SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |         count(*) AS n
-        |  FROM lineitem GROUP BY 1, 2),
-        |cur AS (
-        |  SELECT m, rf, CASE WHEN rf = 'R' THEN 10 * n ELSE n END AS n
-        |  FROM t WHERE m < '1995-01' OR m > '1995-12')
-        |SELECT rf, CAST(sum(n) AS BIGINT) AS n_items
-        |FROM cur GROUP BY rf ORDER BY rf""".stripMargin,
+      mvCurrentRollupSql,
 
     // The signed changefeed aggregate equals the CURRENT table's
     // aggregate: full load, R rows re-stated 10x, 1995 retracted.
     "q_k_changes_mv" ->
-      """WITH t AS (
-        |  SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |         count(*) AS n
-        |  FROM lineitem GROUP BY 1, 2),
-        |cur AS (
-        |  SELECT m, rf, CASE WHEN rf = 'R' THEN 10 * n ELSE n END AS n
-        |  FROM t WHERE m < '1995-01' OR m > '1995-12')
-        |SELECT rf, CAST(sum(n) AS BIGINT) AS n_items
-        |FROM cur GROUP BY rf ORDER BY rf""".stripMargin,
+      mvCurrentRollupSql,
 
     // The view's monthly rollup, replayed over the same aggregate.
     "q_k_catalog_view" ->
-      """WITH t AS (
-        |  SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |         count(*) AS n
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT m, CAST(count(*) AS BIGINT) AS n_flags,
-        |       CAST(sum(n) AS BIGINT) AS n_items
-        |FROM t WHERE m >= '1996-01' GROUP BY m ORDER BY m""".stripMargin,
+      s"""WITH t AS (${monthFlagAggSql("n")})
+         |SELECT m, CAST(count(*) AS BIGINT) AS n_flags,
+         |       CAST(sum(n) AS BIGINT) AS n_items
+         |FROM t WHERE m >= '1996-01' GROUP BY m ORDER BY m""".stripMargin,
 
     // Returned-flag rows carry the 10x re-stated count.
     "q_k_catalog_update" ->
-      """WITH t AS (
-        |  SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |         count(*) AS n
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT m, rf,
-        |       CAST(CASE WHEN rf = 'R' THEN 10 * n ELSE n END AS BIGINT) AS n_items
-        |FROM t ORDER BY m, rf""".stripMargin,
+      s"""WITH t AS (${monthFlagAggSql("n")})
+         |SELECT m, rf,
+         |       CAST(CASE WHEN rf = 'R' THEN 10 * n ELSE n END AS BIGINT) AS n_items
+         |FROM t ORDER BY m, rf""".stripMargin,
 
     // Months from 1995 on carry the doubled incremental recompute
     // (1995: merged update; 1996+: merged insert); earlier months keep
     // the base load.
     "q_k_catalog_merge" ->
-      """WITH t AS (
-        |  SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |         count(*) AS n
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT m, rf,
-        |       CAST(CASE WHEN m >= '1995-01' THEN 2 * n ELSE n END AS BIGINT) AS n_items
-        |FROM t ORDER BY m, rf""".stripMargin,
+      s"""WITH t AS (${monthFlagAggSql("n")})
+         |SELECT m, rf,
+         |       CAST(CASE WHEN m >= '1995-01' THEN 2 * n ELSE n END AS BIGINT) AS n_items
+         |FROM t ORDER BY m, rf""".stripMargin,
 
     // Generation 1 (rf = 'R') predates the column — NULL sum_qty;
     // generation 2 carries it.
     "q_k_catalog_evolve" ->
-      s"""SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-         |       count(*) AS n_items,
-         |       CASE WHEN l_returnflag = 'R' THEN NULL
-         |            ELSE ${Num.dsumSql("l_quantity")} END AS sum_qty
-         |FROM lineitem GROUP BY 1, 2 ORDER BY m, rf""".stripMargin,
+      s"""WITH t AS (${monthFlagAggSql(qty = true)})
+         |SELECT m, rf, n_items,
+         |       CASE WHEN rf = 'R' THEN NULL ELSE sum_qty END AS sum_qty
+         |FROM t ORDER BY m, rf""".stripMargin,
 
     // 1996 partitions were dynamically re-loaded with doubled counts;
     // every other month keeps its original files.
     "q_k_catalog_overwrite" ->
-      """WITH t AS (
-        |  SELECT strftime(l_shipdate, '%Y-%m') AS m, l_returnflag AS rf,
-        |         count(*) AS n
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT m, rf,
-        |       CAST(CASE WHEN m >= '1996-01' AND m <= '1996-12'
-        |                 THEN 2 * n ELSE n END AS BIGINT) AS n_items
-        |FROM t ORDER BY m, rf""".stripMargin,
+      s"""WITH t AS (${monthFlagAggSql("n")})
+         |SELECT m, rf,
+         |       CAST(CASE WHEN m >= '1996-01' AND m <= '1996-12'
+         |                 THEN 2 * n ELSE n END AS BIGINT) AS n_items
+         |FROM t ORDER BY m, rf""".stripMargin,
 
     "q_k4_json_roundtrip" ->
       """SELECT lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars

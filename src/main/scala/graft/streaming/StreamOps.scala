@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 import graft.functions.Num
-import graft.operators.{AccumIndex, Dedup, Lifecycle, Multimodal, Similarity, TextAnalysis}
+import graft.operators.{AccumIndex, Lifecycle, Multimodal, TextAnalysis}
 
 /** Structured Streaming surface. The reference is batch-only (`@daily`
   * Airflow reruns, SURVEY.md §2.13); these are the streaming-idiomatic
@@ -203,32 +203,12 @@ object StreamOps {
   }
 
   /** [[stagedStream]] probing a FROZEN index: each micro-batch's probe
-    * result is written with [[idempotentParquetWrite]]. */
-  private def probeStream(spark: SparkSession, stagingDir: String, schema: StructType,
-                          outPath: String, checkpointDir: Option[String])
-                         (probe: DataFrame => DataFrame): StreamingQuery =
-    stagedStream(spark, stagingDir, schema, checkpointDir) { (batch, batchId) =>
-      idempotentParquetWrite(probe(batch), outPath, batchId)
-    }
-
-  /** The raw-PNG payload batch as (img_id, b0..b3) aHash rows. */
-  private def imageHashes(spark: SparkSession)(batch: DataFrame): DataFrame = {
-    import spark.implicits._
-    Multimodal.imageAHash(spark, batch.as[Multimodal.ImageVariant]).toDF()
-  }
-
-  /** The raw-WAV payload batch as band-median fingerprint rows (REAL
-    * decode, so trimmed AND re-gained re-uploads still match). */
-  private def audioPrints(spark: SparkSession)(batch: DataFrame): DataFrame = {
-    import spark.implicits._
-    Multimodal.audioFingerprint(spark, batch.as[Multimodal.AudioClip]).toDF()
-  }
-
-  /** Incremental corpus-vs-batch dedup at STREAMING cadence — the
-    * streaming face of [[graft.operators.Dedup.minhashLshAgainstCorpus]]:
-    * each micro-batch of new documents is flagged against a PREBUILT
-    * corpus index, so per-ingest cost ∝ the micro-batch. The caller
-    * stops the query and releases the index.
+    * result is written with [[idempotentParquetWrite]]. For example,
+    * incremental corpus-vs-batch dedup at streaming cadence (the
+    * streaming face of [[graft.operators.Dedup.minhashLshAgainstCorpus]])
+    * probes `Dedup.flagAgainstCorpusIndex(Dedup.wordShingles(batch), index,
+    * minJ)` against a PREBUILT corpus index, so per-ingest cost ∝ the
+    * micro-batch. The caller stops the query and releases the index.
     *
     * Exactly-once across failure/restart: `foreachBatch` gives
     * at-least-once delivery — a crash after the sink write but before
@@ -238,51 +218,27 @@ object StreamOps {
     * offsets (StreamingSpec kills a run mid-feed, deletes the commit
     * marker to force a true batch re-execution, restarts, and asserts
     * equality with the uninterrupted run). */
-  def incrementalDedupStream(spark: SparkSession, stagingDir: String, schema: StructType,
-                             index: Dedup.CorpusIndex, minJ: Double, outPath: String,
-                             checkpointDir: Option[String] = None): StreamingQuery =
-    probeStream(spark, stagingDir, schema, outPath, checkpointDir)(batch =>
-      Dedup.flagAgainstCorpusIndex(Dedup.wordShingles(batch), index, minJ))
+  def probeStream(spark: SparkSession, stagingDir: String, schema: StructType,
+                  outPath: String, checkpointDir: Option[String] = None)
+                 (probe: DataFrame => DataFrame): StreamingQuery =
+    stagedStream(spark, stagingDir, schema, checkpointDir) { (batch, batchId) =>
+      idempotentParquetWrite(probe(batch), outPath, batchId)
+    }
 
-  /** Distribution-drift MONITOR at streaming cadence — the data-quality
-    * sentinel of a production ingest: each micro-batch (one staged
-    * ingest wave, carrying its `wave` id) is scored against a PREBUILT
-    * reference word histogram
-    * ([[graft.operators.TextAnalysis.driftRefHistogram]], persisted by
-    * the caller) inside `foreachBatch`, and the per-(wave, lang) KL
-    * rows append to a parquet sink — kl_ba spiking on a wave means the
-    * ingest drifted (language mix, spam burst, template flood) and the
-    * wave can be quarantined BEFORE it pollutes the corpus. Per-wave
-    * cost is the wave's own histogram + a keyed join against the
-    * reference; the reference is never recomputed. Byte-identical to
-    * the batch twin [[graft.operators.TextAnalysis.waveDriftReport]]
-    * on the same waves (StreamingSpec pins the equality). */
-  def driftMonitorStream(spark: SparkSession, stagingDir: String, schema: StructType,
-                         refHist: DataFrame, outPath: String,
-                         checkpointDir: Option[String] = None): StreamingQuery =
-    probeStream(spark, stagingDir, schema, outPath, checkpointDir)(batch =>
-      TextAnalysis.klAgainstRef(refHist, batch))
+  /** The raw-PNG payload batch as (img_id, b0..b3) aHash rows — the
+    * `prep` of an image stream. */
+  def imageHashes(spark: SparkSession)(batch: DataFrame): DataFrame = {
+    import spark.implicits._
+    Multimodal.imageAHash(spark, batch.as[Multimodal.ImageVariant]).toDF()
+  }
 
-  /** Incremental IMAGE near-dup at streaming cadence — the multimodal
-    * twin of [[incrementalDedupStream]]: each micro-batch of raw PNG
-    * payloads is aHashed and probed against a PREBUILT corpus
-    * [[graft.operators.Multimodal.FingerprintIndex]]. */
-  def imageNearDupStream(spark: SparkSession, stagingDir: String, schema: StructType,
-                         index: Multimodal.FingerprintIndex, outPath: String,
-                         checkpointDir: Option[String] = None): StreamingQuery =
-    probeStream(spark, stagingDir, schema, outPath, checkpointDir)(batch =>
-      Multimodal.flagAgainstFingerprintIndex(imageHashes(spark)(batch), index))
-
-  /** Incremental AUDIO near-dup at streaming cadence — the audio twin of
-    * [[imageNearDupStream]]: audio fingerprints share the 4×16-bit
-    * [[graft.operators.Multimodal.ImageHash]] layout, so the
-    * FingerprintIndex probe is modality-agnostic. */
-  def audioNearDupStream(spark: SparkSession, stagingDir: String, schema: StructType,
-                         index: Multimodal.FingerprintIndex, outPath: String,
-                         checkpointDir: Option[String] = None): StreamingQuery =
-    probeStream(spark, stagingDir, schema, outPath, checkpointDir)(batch =>
-      Multimodal.flagAgainstFingerprintIndex(audioPrints(spark)(batch), index,
-        idOut = "clip_new"))
+  /** The raw-WAV payload batch as band-median fingerprint rows (REAL
+    * decode, so trimmed AND re-gained re-uploads still match) — the
+    * `prep` of an audio stream. */
+  def audioPrints(spark: SparkSession)(batch: DataFrame): DataFrame = {
+    import spark.implicits._
+    Multimodal.audioFingerprint(spark, batch.as[Multimodal.AudioClip]).toDF()
+  }
 
   /** The replay guard every accum stream runs: a batch at or below the
     * index's `lastBatchId` was already written AND absorbed before a
@@ -330,77 +286,6 @@ object StreamOps {
         idempotentParquetWrite(probe(index, in), outPath, batchId)
         index.absorb(in).budgeted(maxLegs)
     }
-
-  /** [[accumStream]] over raw PNG payloads: aHash, flag against the
-    * [[graft.operators.Multimodal.FingerprintIndex]], absorb. */
-  def imageNearDupAccumStream(spark: SparkSession, stagingDir: String, schema: StructType,
-                              indexRef: AtomicReference[Multimodal.FingerprintIndex],
-                              outPath: String, checkpointDir: Option[String] = None)
-      : StreamingQuery =
-    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
-      (i, h) => Multimodal.flagAgainstFingerprintIndex(h, i), imageHashes(spark))
-
-  /** [[accumStream]] over raw WAV payloads: fingerprint, flag (audio
-    * column names), absorb. */
-  def audioNearDupAccumStream(spark: SparkSession, stagingDir: String, schema: StructType,
-                              indexRef: AtomicReference[Multimodal.FingerprintIndex],
-                              outPath: String, checkpointDir: Option[String] = None)
-      : StreamingQuery =
-    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
-      (i, h) => Multimodal.flagAgainstFingerprintIndex(h, i, idOut = "clip_new"),
-      audioPrints(spark))
-
-  /** [[accumStream]] over documents: shingle, flag against the
-    * [[graft.operators.Dedup.CorpusIndex]], absorb. */
-  def incrementalDedupAccumStream(spark: SparkSession, stagingDir: String, schema: StructType,
-                                  indexRef: AtomicReference[Dedup.CorpusIndex],
-                                  minJ: Double, outPath: String,
-                                  checkpointDir: Option[String] = None): StreamingQuery =
-    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
-      (i, sh) => Dedup.flagAgainstCorpusIndex(sh, i, minJ), Dedup.wordShingles(_))
-
-  /** [[accumStream]] over embeddings: banded candidates + exact-cosine
-    * verify against the [[graft.operators.Dedup.EmbeddingIndex]], absorb. */
-  def embedNearDupAccumStream(spark: SparkSession, stagingDir: String, schema: StructType,
-                              indexRef: AtomicReference[Dedup.EmbeddingIndex],
-                              minCos: Double, outPath: String,
-                              checkpointDir: Option[String] = None): StreamingQuery =
-    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
-      (i, b) => Dedup.flagAgainstEmbeddingIndex(b, i, minCos))
-
-  /** [[accumStream]] as IVF maintenance: each embedding batch's per-list
-    * staleness report ([[graft.operators.Similarity.ivfReassign]] — what
-    * a serving pipeline watches for re-centroid decisions) is written,
-    * then the batch is absorbed, so the NEXT wave's growth/drift reads
-    * against everything already ingested. */
-  def ivfMonitorAccumStream(spark: SparkSession, stagingDir: String, schema: StructType,
-                            indexRef: AtomicReference[Similarity.IvfIndex],
-                            outPath: String, checkpointDir: Option[String] = None)
-      : StreamingQuery =
-    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
-      Similarity.ivfReassign)
-
-  /** [[accumStream]] as sketch-ANN SERVING: each embedding batch is
-    * answered top-k against the [[graft.operators.Similarity.SketchIndex]]
-    * (query sketches broadcast, one xor+popcount pass, exact-cosine
-    * re-rank), then absorbed — the "index the traffic" pattern. */
-  def hammingAnnAccumStream(spark: SparkSession, stagingDir: String, schema: StructType,
-                            indexRef: AtomicReference[Similarity.SketchIndex],
-                            k: Int, outPath: String,
-                            checkpointDir: Option[String] = None): StreamingQuery =
-    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
-      (i, b) => Similarity.topKAgainstSketchIndex(b, i, k))
-
-  /** [[accumStream]] as continuous DSIR data selection: each wave is
-    * scored against the current feature state, then its token counts
-    * are absorbed into the raw histogram, so later waves score against
-    * sharper importance weights. */
-  def dsirSelectionStream(spark: SparkSession, stagingDir: String, schema: StructType,
-                          indexRef: AtomicReference[TextAnalysis.DsirIndex],
-                          outPath: String, checkpointDir: Option[String] = None)
-      : StreamingQuery =
-    accumStream(spark, stagingDir, schema, indexRef, outPath, checkpointDir)(
-      TextAnalysis.scoreAgainstDsirIndex)
 
   /** SELF-ACCUMULATING KMV cardinality sentinel: each micro-batch of
     * documents is absorbed into the per-source trigram-cardinality

@@ -118,8 +118,9 @@ class StreamingSpec extends AnyFunSuite {
         .write.mode("append").parquet(staging)
     }
     val index = Dedup.buildCorpusIndex(Dedup.wordShingles(corpus))
-    val q = graft.streaming.StreamOps.incrementalDedupStream(
-      spark, staging, newDocs.schema, index, 0.6, outPath)
+    val q = StreamOps.probeStream(
+      spark, staging, newDocs.schema, outPath)(
+      b => Dedup.flagAgainstCorpusIndex(Dedup.wordShingles(b), index, 0.6))
     try q.processAllAvailable() finally q.stop()
     val streamed = spark.read.parquet(outPath).collect()
       .map(r => (r.getAs[Long]("doc_new"), r.getAs[Long]("best_match"),
@@ -161,8 +162,9 @@ class StreamingSpec extends AnyFunSuite {
     val refHist = TextAnalysis.driftRefHistogram(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     refHist.count() // the prebuilt long-lived state
-    val q = graft.streaming.StreamOps.driftMonitorStream(
-      spark, staging, waved.schema, refHist, outPath)
+    val q = StreamOps.probeStream(
+      spark, staging, waved.schema, outPath)(
+      TextAnalysis.klAgainstRef(refHist, _))
     try q.processAllAvailable() finally q.stop()
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("wave"), r.getAs[String]("lang"),
@@ -201,8 +203,10 @@ class StreamingSpec extends AnyFunSuite {
         .write.mode("append").parquet(staging)
     }
     val index = Multimodal.buildFingerprintIndex(corpusHashes, 6)
-    val q = graft.streaming.StreamOps.imageNearDupStream(
-      spark, staging, newImgs.schema, index, outPath)
+    val q = StreamOps.probeStream(
+      spark, staging, newImgs.schema, outPath)(
+      b => Multimodal.flagAgainstFingerprintIndex(
+        StreamOps.imageHashes(spark)(b), index))
     try q.processAllAvailable() finally q.stop()
     def rowSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("img_new"), r.getAs[Long]("best_match"),
@@ -234,8 +238,10 @@ class StreamingSpec extends AnyFunSuite {
         .write.mode("append").parquet(staging)
     }
     val index = Multimodal.buildFingerprintIndex(corpusHashes, 8)
-    val q = graft.streaming.StreamOps.audioNearDupStream(
-      spark, staging, newClips.schema, index, outPath)
+    val q = StreamOps.probeStream(
+      spark, staging, newClips.schema, outPath)(
+      b => Multimodal.flagAgainstFingerprintIndex(
+        StreamOps.audioPrints(spark)(b), index, idOut = "clip_new"))
     try q.processAllAvailable() finally q.stop()
     val streamed = spark.read.parquet(outPath).collect()
       .map(r => (r.getAs[Long]("clip_new"), r.getAs[Long]("best_match"),
@@ -298,8 +304,10 @@ class StreamingSpec extends AnyFunSuite {
     val ref = new java.util.concurrent.atomic.AtomicReference(
       Multimodal.buildFingerprintIndex(corpusHashes, 6))
     val schema = Multimodal.packImageWave(spark, sel, 1).toDF().schema
-    val q = graft.streaming.StreamOps.imageNearDupAccumStream(
-      spark, staging, schema, ref, outPath)
+    val q = StreamOps.accumStream(
+      spark, staging, schema, ref, outPath)(
+      (i, h) => Multimodal.flagAgainstFingerprintIndex(h, i),
+      StreamOps.imageHashes(spark))
     try q.processAllAvailable() finally q.stop()
     val streamedW2 = spark.read.parquet(outPath)
       .filter(col("img_new") % 4 === 2).collect()
@@ -375,8 +383,10 @@ class StreamingSpec extends AnyFunSuite {
     w2.coalesce(1).write.mode("append").parquet(staging)
     val ref = new java.util.concurrent.atomic.AtomicReference(
       Dedup.buildCorpusIndex(Dedup.wordShingles(docs)))
-    val q = graft.streaming.StreamOps.incrementalDedupAccumStream(
-      spark, staging, w1.schema, ref, 0.6, outPath)
+    val q = StreamOps.accumStream(
+      spark, staging, w1.schema, ref, outPath)(
+      (i, sh) => Dedup.flagAgainstCorpusIndex(sh, i, 0.6),
+      Dedup.wordShingles(_))
     try q.processAllAvailable() finally q.stop()
     val streamedW2 = spark.read.parquet(outPath)
       .filter(col("doc_new") >= 2000000L).collect()
@@ -413,8 +423,9 @@ class StreamingSpec extends AnyFunSuite {
     val target = docs.filter(col("lang") === "en")
     val ref = new java.util.concurrent.atomic.AtomicReference(
       TextAnalysis.buildDsirIndex(target, wave(0), 512))
-    val q = graft.streaming.StreamOps.dsirSelectionStream(
-      spark, staging, wave(1).schema, ref, outPath)
+    val q = StreamOps.accumStream(
+      spark, staging, wave(1).schema, ref, outPath)(
+      TextAnalysis.scoreAgainstDsirIndex)
     try q.processAllAvailable() finally q.stop()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_tokens"),
@@ -563,8 +574,10 @@ class StreamingSpec extends AnyFunSuite {
     val ref = new java.util.concurrent.atomic.AtomicReference(
       Multimodal.buildFingerprintIndex(corpusHashes, 8))
     val schema = Multimodal.packAudioWave(spark, sel, 1).toDF().schema
-    val q = graft.streaming.StreamOps.audioNearDupAccumStream(
-      spark, staging, schema, ref, outPath)
+    val q = StreamOps.accumStream(
+      spark, staging, schema, ref, outPath)(
+      (i, h) => Multimodal.flagAgainstFingerprintIndex(h, i, idOut = "clip_new"),
+      StreamOps.audioPrints(spark))
     try q.processAllAvailable() finally q.stop()
     val streamedW2 = spark.read.parquet(outPath)
       .filter(col("clip_new") >= 2 * Multimodal.WaveStride).collect()
@@ -608,8 +621,9 @@ class StreamingSpec extends AnyFunSuite {
     w2.coalesce(1).write.mode("append").parquet(staging)
     val ref = new java.util.concurrent.atomic.AtomicReference(
       Dedup.buildEmbeddingIndex(emb, dim))
-    val q = graft.streaming.StreamOps.embedNearDupAccumStream(
-      spark, staging, w1.schema, ref, 0.35, outPath)
+    val q = StreamOps.accumStream(
+      spark, staging, w1.schema, ref, outPath)(
+      (i, b) => Dedup.flagAgainstEmbeddingIndex(b, i, 0.35))
     try q.processAllAvailable() finally q.stop()
     val streamedW2 = spark.read.parquet(outPath)
       .filter(col("vec_new") >= 2000000L).collect()
@@ -645,8 +659,9 @@ class StreamingSpec extends AnyFunSuite {
     b2.coalesce(1).write.mode("append").parquet(staging)
     val ref = new java.util.concurrent.atomic.AtomicReference(
       Similarity.buildIvfIndex(corpus, 61L))
-    val q = graft.streaming.StreamOps.ivfMonitorAccumStream(
-      spark, staging, b1.schema, ref, outPath)
+    val q = StreamOps.accumStream(
+      spark, staging, b1.schema, ref, outPath)(
+      Similarity.ivfReassign)
     try q.processAllAvailable() finally q.stop()
     def canon(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
       (r.getAs[Long]("cid"), r.getAs[Long]("old_size"), r.getAs[Long]("added"),
@@ -688,8 +703,9 @@ class StreamingSpec extends AnyFunSuite {
     w2.coalesce(1).write.mode("append").parquet(staging)
     val ref = new java.util.concurrent.atomic.AtomicReference(
       Similarity.buildSketchIndex(emb, dim, 20))
-    val q = graft.streaming.StreamOps.hammingAnnAccumStream(
-      spark, staging, w1.schema, ref, 5, outPath)
+    val q = StreamOps.accumStream(
+      spark, staging, w1.schema, ref, outPath)(
+      (i, b) => Similarity.topKAgainstSketchIndex(b, i, 5))
     try q.processAllAvailable() finally q.stop()
     val streamedW2 = spark.read.parquet(outPath)
       .filter(col("query_id") >= 2000000L).collect()
@@ -769,8 +785,9 @@ class StreamingSpec extends AnyFunSuite {
       (staging, w) => newDocs.filter(col("doc_id") % 3 === w).coalesce(1)
         .write.mode("append").parquet(staging),
       (staging, out, cp) => {
-        val q = graft.streaming.StreamOps.incrementalDedupStream(
-          spark, staging, newDocs.schema, index, 0.6, out, Some(cp))
+        val q = StreamOps.probeStream(
+          spark, staging, newDocs.schema, out, Some(cp))(
+          b => Dedup.flagAgainstCorpusIndex(Dedup.wordShingles(b), index, 0.6))
         try q.processAllAvailable() finally q.stop()
       },
       p => spark.read.parquet(p).select("doc_new", "best_match", "jaccard")
@@ -793,8 +810,9 @@ class StreamingSpec extends AnyFunSuite {
       (staging, w) => waved.filter(col("wave") === w.toLong).coalesce(1)
         .write.mode("append").parquet(staging),
       (staging, out, cp) => {
-        val q = graft.streaming.StreamOps.driftMonitorStream(
-          spark, staging, waved.schema, refHist, out, Some(cp))
+        val q = StreamOps.probeStream(
+          spark, staging, waved.schema, out, Some(cp))(
+          TextAnalysis.klAgainstRef(refHist, _))
         try q.processAllAvailable() finally q.stop()
       },
       p => spark.read.parquet(p)
@@ -821,8 +839,10 @@ class StreamingSpec extends AnyFunSuite {
       (staging, w) => newClips.filter(col("clip_id") % 3 === w).coalesce(1)
         .write.mode("append").parquet(staging),
       (staging, out, cp) => {
-        val q = graft.streaming.StreamOps.audioNearDupStream(
-          spark, staging, newClips.schema, index, out, Some(cp))
+        val q = StreamOps.probeStream(
+          spark, staging, newClips.schema, out, Some(cp))(
+          b => Multimodal.flagAgainstFingerprintIndex(
+            StreamOps.audioPrints(spark)(b), index, idOut = "clip_new"))
         try q.processAllAvailable() finally q.stop()
       },
       p => spark.read.parquet(p).select("clip_new", "best_match", "hamming")
@@ -845,8 +865,10 @@ class StreamingSpec extends AnyFunSuite {
       (staging, w) => newImgs.filter(col("img_id") % 3 === w).coalesce(1)
         .write.mode("append").parquet(staging),
       (staging, out, cp) => {
-        val q = graft.streaming.StreamOps.imageNearDupStream(
-          spark, staging, newImgs.schema, index, out, Some(cp))
+        val q = StreamOps.probeStream(
+          spark, staging, newImgs.schema, out, Some(cp))(
+          b => Multimodal.flagAgainstFingerprintIndex(
+            StreamOps.imageHashes(spark)(b), index))
         try q.processAllAvailable() finally q.stop()
       },
       p => spark.read.parquet(p).select("img_new", "best_match", "hamming")
@@ -901,8 +923,10 @@ class StreamingSpec extends AnyFunSuite {
           if (new java.io.File(idxPath).exists)
             Dedup.loadCorpusIndex(spark, idxPath)
           else Dedup.buildCorpusIndex(Dedup.wordShingles(corpus)))
-        val q = graft.streaming.StreamOps.incrementalDedupAccumStream(
-          spark, staging, wave(0).schema, ref, 0.6, out, Some(cp))
+        val q = StreamOps.accumStream(
+          spark, staging, wave(0).schema, ref, out, Some(cp))(
+          (i, sh) => Dedup.flagAgainstCorpusIndex(sh, i, 0.6),
+          Dedup.wordShingles(_))
         try q.processAllAvailable() finally q.stop()
         ref.get().save(idxPath)
         ref.get().release()
@@ -939,8 +963,10 @@ class StreamingSpec extends AnyFunSuite {
         val ref = refs.getOrElseUpdate(cp,
           new java.util.concurrent.atomic.AtomicReference(
             Multimodal.buildFingerprintIndex(corpusHashes, 8)))
-        val q = graft.streaming.StreamOps.audioNearDupAccumStream(
-          spark, staging, newClips.schema, ref, out, Some(cp))
+        val q = StreamOps.accumStream(
+          spark, staging, newClips.schema, ref, out, Some(cp))(
+          (i, h) => Multimodal.flagAgainstFingerprintIndex(h, i, idOut = "clip_new"),
+          StreamOps.audioPrints(spark))
         try q.processAllAvailable() finally q.stop()
       },
       p => spark.read.parquet(p).select("clip_new", "best_match", "hamming")
@@ -971,8 +997,9 @@ class StreamingSpec extends AnyFunSuite {
           if (new java.io.File(idxPath).exists)
             Similarity.loadIvfIndex(spark, idxPath)
           else Similarity.buildIvfIndex(corpus, 61L))
-        val q = graft.streaming.StreamOps.ivfMonitorAccumStream(
-          spark, staging, arriving.schema, ref, out, Some(cp))
+        val q = StreamOps.accumStream(
+          spark, staging, arriving.schema, ref, out, Some(cp))(
+          Similarity.ivfReassign)
         try q.processAllAvailable() finally q.stop()
         ref.get().save(idxPath)
         ref.get().release()
@@ -1010,8 +1037,10 @@ class StreamingSpec extends AnyFunSuite {
           if (new java.io.File(idxPath).exists)
             Multimodal.loadFingerprintIndex(spark, idxPath)
           else Multimodal.buildFingerprintIndex(corpusHashes, 6))
-        val q = graft.streaming.StreamOps.imageNearDupAccumStream(
-          spark, staging, newImgs.schema, ref, out, Some(cp))
+        val q = StreamOps.accumStream(
+          spark, staging, newImgs.schema, ref, out, Some(cp))(
+          (i, h) => Multimodal.flagAgainstFingerprintIndex(h, i),
+          StreamOps.imageHashes(spark))
         try q.processAllAvailable() finally q.stop()
         ref.get().save(idxPath)
         ref.get().release()
@@ -1042,8 +1071,9 @@ class StreamingSpec extends AnyFunSuite {
         val ref = refs.getOrElseUpdate(cp,
           new java.util.concurrent.atomic.AtomicReference(
             Dedup.buildEmbeddingIndex(emb, 64)))
-        val q = graft.streaming.StreamOps.embedNearDupAccumStream(
-          spark, staging, arriving.schema, ref, 0.35, out, Some(cp))
+        val q = StreamOps.accumStream(
+          spark, staging, arriving.schema, ref, out, Some(cp))(
+          (i, b) => Dedup.flagAgainstEmbeddingIndex(b, i, 0.35))
         try q.processAllAvailable() finally q.stop()
       },
       p => spark.read.parquet(p).select("vec_new", "best_match", "cosine")
@@ -1072,8 +1102,9 @@ class StreamingSpec extends AnyFunSuite {
           if (new java.io.File(idxPath).exists)
             Similarity.loadSketchIndex(spark, idxPath)
           else Similarity.buildSketchIndex(emb, 64, 20))
-        val q = graft.streaming.StreamOps.hammingAnnAccumStream(
-          spark, staging, arriving.schema, ref, 5, out, Some(cp))
+        val q = StreamOps.accumStream(
+          spark, staging, arriving.schema, ref, out, Some(cp))(
+          (i, b) => Similarity.topKAgainstSketchIndex(b, i, 5))
         try q.processAllAvailable() finally q.stop()
         ref.get().save(idxPath)
         ref.get().release()
