@@ -55,6 +55,7 @@ object Bench {
     // driver sets no prefix → full suite.
     val prefixes = sys.env.get("SPARK_GRAFT_BENCH_PREFIX")
       .map(_.split(',').toSeq).getOrElse(Seq(""))
+    val fullSuite = prefixes == Seq("")
     val timed = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     val fns = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => prefixes.exists(name.startsWith) }
@@ -128,7 +129,7 @@ object Bench {
     // A dev-subset run must not clobber the committed full-suite
     // artifact: it writes the same JSON (medians included) to its own file.
     java.nio.file.Files.writeString(java.nio.file.Paths.get(
-      if (prefixes == Seq("")) "BENCH_FULL.json" else "BENCH_SUBSET.json"), fullJson)
+      if (fullSuite) "BENCH_FULL.json" else "BENCH_SUBSET.json"), fullJson)
     // Print the result line AFTER spark.stop(): the driver captures the
     // TAIL of the log, and shutdown chatter after the JSON can push it
     // out of the captured window (round-5 driver recorded parsed:null).
@@ -137,7 +138,7 @@ object Bench {
     // consumers at it either: "full" names the artifact only when this
     // run actually produced it; otherwise the prefix list is recorded.
     val fullRef =
-      if (prefixes == Seq("")) "\"full\":\"BENCH_FULL.json\""
+      if (fullSuite) "\"full\":\"BENCH_FULL.json\""
       else s""""full":null,"prefixes":"${prefixes.mkString(",")}""""
     val line =
       s"""{"metric":"total","value":${r3(totalMin)},"unit":"sec","stat":"min_of_$runs","runs":$runs,""" +
@@ -146,18 +147,19 @@ object Bench {
         s""""total_median":${r3(totalMed)},""" +
         s""""queries":${jmap(headline, _._4)},""" +
         s""""sf":"$sfDir",$fullRef}"""
-    // The headline line ALSO lands in a fixed small file (r16, VERDICT
+    // A full-suite headline ALSO lands in a fixed small file (r16, VERDICT
     // r15 item 7): the harness reads a ~2 KB tail of stdout where one
     // stray WARN after the JSON truncates it mid-object (r14's artifact
     // recorded parsed:null); BENCH_LINE.json is immune to log framing.
-    // Subset runs write it too — the line itself says full:null. A
-    // failed write must not cost the stdout line as well.
+    // A subset run leaves the committed headline alone (its line goes to
+    // stdout only). A failed write must not cost the stdout line as well.
     val linePath = java.nio.file.Paths.get("BENCH_LINE.json")
-    try java.nio.file.Files.writeString(linePath, line + "\n")
-    catch {
-      case e: java.io.IOException =>
-        System.err.println(s"[bench] could not write ${linePath.toAbsolutePath}: $e")
-    }
+    if (fullSuite)
+      try java.nio.file.Files.writeString(linePath, line + "\n")
+      catch {
+        case e: java.io.IOException =>
+          System.err.println(s"[bench] could not write ${linePath.toAbsolutePath}: $e")
+      }
     println(line)
   }
 }

@@ -50,7 +50,7 @@ object Num {
     s"CAST(sum(CAST(($expr) AS DECIMAL(38,$scale))) AS DOUBLE)"
 
   // Single-task replications of the Column ops above, for the
-  // small-input one-task paths (Graph.pageRank, Similarity.pcaCore):
+  // one-task folds of graft.operators.Cutover (Graph, Similarity):
   // a loop that runs inside one executor task must reproduce Spark's
   // decimal discipline bit-for-bit so both execution paths satisfy the
   // same oracle hash.

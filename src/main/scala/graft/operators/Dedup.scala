@@ -574,27 +574,21 @@ object Dedup {
     * count crosses the distributed-path threshold; below 10x the
     * single-task union-find path had masked it). The loop exits on the
     * converged flag, so shallow graphs never pay the higher cap. */
-  def duplicateClusters(pairs: DataFrame, maxIter: Int = 40,
-                        smallGraphEdges: Long = 1000000L): DataFrame = {
-    val rawEdges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
+  def duplicateClusters(pairs: DataFrame, maxIter: Int = 40): DataFrame = {
+    val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nEdges = rawEdges.count()
     // The near-dup pair graph is orders of magnitude smaller than the
     // corpus (it holds only documents with at least one near-duplicate),
-    // so below the threshold the exact component labeling runs as ONE
-    // executor task (union-find over the edge list — still no driver
-    // data), replacing ~5 jobs per fixpoint round with a single pass.
-    // Above it, the O(log n)-round distributed fixpoint below takes over.
-    if (nEdges <= smallGraphEdges)
-      return materializeThenRelease(
-        smallGraphClusters(rawEdges).withColumn("is_canonical",
-          when(col("doc_id") === col("cluster_id"), 1L).otherwise(0L)),
-        rawEdges)
-    // Size the fixpoint's parallelism to the edge set, not the session
-    // default (a small graph on 32 shuffle partitions pays ~30 empty
-    // tasks per round).
-    val edges = if (nEdges < 100000L) rawEdges.coalesce(1) else rawEdges
+    // so below the limit the exact component labeling is one union-find
+    // pass, replacing ~5 jobs per fixpoint round.
+    Cutover.run("duplicateClusters", edges.count(), Cutover.ClusterEdges)(
+      smallGraphClusters(edges))(distributedClusters(edges, maxIter))
+      .withColumn("is_canonical",
+        when(col("doc_id") === col("cluster_id"), 1L).otherwise(0L))
+  }
+
+  private def distributedClusters(edges: DataFrame, maxIter: Int): DataFrame = {
     var labels = Lifecycle.checkpoint(
       edges.select(col("u").as("doc_id")).distinct()
         .withColumn("cluster_id", col("doc_id")))
@@ -635,9 +629,8 @@ object Dedup {
           s"(component diameter > 2^$maxIter?) — refusing to return partial labels")
     // `labels` is localCheckpointed (materialized) by the last round, so
     // the edge cache can be dropped without triggering recompute.
-    rawEdges.unpersist(blocking = false)
-    labels.withColumn("is_canonical",
-      when(col("doc_id") === col("cluster_id"), 1L).otherwise(0L))
+    edges.unpersist(blocking = false)
+    labels
   }
 
   /** SoftDeDup commonness reweighting (He et al. 2024, "SoftDedup: an
@@ -691,51 +684,48 @@ object Dedup {
     * roots every component at its minimum — the same labels the
     * distributed fixpoint and the oracle's transitive closure produce).
     * Zero boxed collections and no materialized label Seq, so the task's
-    * footprint is ~32 bytes/edge — at the 1M-edge cutover that is tens
-    * of MB, far from executor-memory trouble. Runs on an executor via
-    * `mapPartitions`; the driver never sees a row. */
+    * footprint is ~32 bytes/edge ([[Cutover.ClusterEdges]]). Releases
+    * the `edges` cache. */
   private def smallGraphClusters(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    edges.select(col("u").cast("long"), col("v").cast("long")).as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        val ub = new scala.collection.mutable.ArrayBuilder.ofLong
-        val vb = new scala.collection.mutable.ArrayBuilder.ofLong
-        it.foreach { case (u, v) => ub += u; vb += v }
-        val us = ub.result(); val vs = vb.result()
-        // Sorted distinct node ids (in-place dedupe, no hash sets).
-        val all = new Array[Long](us.length + vs.length)
-        System.arraycopy(us, 0, all, 0, us.length)
-        System.arraycopy(vs, 0, all, us.length, vs.length)
-        java.util.Arrays.sort(all)
-        var n = 0
-        var i = 0
-        while (i < all.length) {
-          if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-          i += 1
-        }
-        val nodes = java.util.Arrays.copyOf(all, n)
-        def idx(x: Long): Int = java.util.Arrays.binarySearch(nodes, x)
-        val parent = Array.tabulate(n)(identity)
-        def find(x: Int): Int = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        var e = 0
-        while (e < us.length) {
-          val ru = find(idx(us(e))); val rv = find(idx(vs(e)))
-          if (ru != rv) {
-            if (ru < rv) parent(rv) = ru else parent(ru) = rv
-          }
-          e += 1
-        }
-        Iterator.tabulate(n)(i => (nodes(i), nodes(find(i))))
+    Cutover.fold(edges.select(col("u").cast("long"), col("v").cast("long"))
+        .as[(Long, Long)], edges) { it =>
+      val ub = new scala.collection.mutable.ArrayBuilder.ofLong
+      val vb = new scala.collection.mutable.ArrayBuilder.ofLong
+      it.foreach { case (u, v) => ub += u; vb += v }
+      val us = ub.result(); val vs = vb.result()
+      // Sorted distinct node ids (in-place dedupe, no hash sets).
+      val all = new Array[Long](us.length + vs.length)
+      System.arraycopy(us, 0, all, 0, us.length)
+      System.arraycopy(vs, 0, all, us.length, vs.length)
+      java.util.Arrays.sort(all)
+      var n = 0
+      var i = 0
+      while (i < all.length) {
+        if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
+        i += 1
       }
-      .toDF("doc_id", "cluster_id")
+      val nodes = java.util.Arrays.copyOf(all, n)
+      def idx(x: Long): Int = java.util.Arrays.binarySearch(nodes, x)
+      val parent = Array.tabulate(n)(identity)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var c = x
+        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+        r
+      }
+      var e = 0
+      while (e < us.length) {
+        val ru = find(idx(us(e))); val rv = find(idx(vs(e)))
+        if (ru != rv) {
+          if (ru < rv) parent(rv) = ru else parent(ru) = rv
+        }
+        e += 1
+      }
+      Iterator.tabulate(n)(i => (nodes(i), nodes(find(i))))
+    }.toDF("doc_id", "cluster_id")
   }
 
   /** Dedup RESOLUTION — the step after pair-finding in a real curation

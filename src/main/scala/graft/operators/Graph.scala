@@ -26,41 +26,25 @@ object Graph {
     * (node, pr) row per node; an iteration shuffles the edge list once
     * on src and once on dst — linear in |E| per round, the canonical
     * distributed PageRank shape. */
-  def pageRank(edges: DataFrame, damping: Double, iters: Int,
-               smallGraphEdges: Long = 2000000L): DataFrame = {
+  def pageRank(edges: DataFrame, damping: Double, iters: Int): DataFrame = {
     val und = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Small-graph cutover (the [[Dedup.duplicateClusters]] pattern): a
-    // distributed fixpoint costs ~2 jobs × `iters` rounds of scheduling,
-    // and under a loaded suite JVM that fixed cost dominates and
-    // amplifies (round-6/7 benches: 6–34 s for the SAME plan). Below the
-    // cutover the whole loop runs as ONE executor task over primitive
-    // arrays — still no driver-side data — with bit-identical decimal
-    // semantics to the distributed path (same shortest-string HALF_UP
-    // double→DECIMAL(38,18) per-edge cast, exact scaled-long sums, same
-    // round-6 trajectory), so the two paths are interchangeable under
-    // the oracle hash. Task-state math behind the 2M-edge default
-    // (SCALE.md "one-task cutovers"): the edge fold is two primitive
-    // int arrays ([[IntBuf]] — 8 B/edge ≈ 16 MB), but the LABEL side
-    // dominates worst-case — up to 2 nodes/edge, each costing a
-    // String (~56 B for short labels), a HashMap entry (~48 B) and a
-    // boxed Integer (~16 B) ≈ 130 B/node → ≤ ~500 MB at 4M distinct
-    // nodes. Typical graphs (nodes ≪ edges) sit far below; a
-    // cluster-scale graph takes the distributed fixpoint below.
-    // The one-task path folds labels as strings; for any other id type
-    // the distributed path (type-agnostic dictionary join) keeps the
-    // pre-cutover behavior AND the pre-cutover output schema.
-    val stringIds = und.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.StringType)
     // One count serves BOTH the cutover gate and the distributed path's
     // edge-partition sizing (undId is a bijective re-keying of und, so
     // the two counts are equal): the distributed path pays no extra
-    // materialization job for the gate.
+    // materialization job for the gate. The one-task fold reads labels
+    // as strings; any other id type keeps the distributed path (a
+    // type-agnostic dictionary join) and its output schema.
     val nUndEdges = und.count()
-    if (stringIds && nUndEdges <= smallGraphEdges)
-      return smallGraphPageRank(und, damping, iters)
+    Cutover.run("pageRank", nUndEdges, Cutover.PageRankEdges, oneTaskFits = stringIds(und))(
+      smallGraphPageRank(und, damping, iters))(
+      distributedPageRank(und, nUndEdges, damping, iters))
+  }
+
+  private def distributedPageRank(und: DataFrame, nUndEdges: Long, damping: Double,
+                                  iters: Int): DataFrame = {
     // Dictionary-encode node labels to dense longs for the ITERATION hot
     // path: the loop shuffles the edge list every round, and long keys
     // hash/compare/serialize several times cheaper than string labels —
@@ -105,7 +89,7 @@ object Graph {
     // map-side-combined partials, so one task per half-million nodes is
     // the scheduling sweet spot.
     val defaultParts =
-      edges.sparkSession.sessionState.conf.numShufflePartitions.toLong
+      und.sparkSession.sessionState.conf.numShufflePartitions.toLong
     def clamp(n: Long): Int = math.max(1L, math.min(defaultParts, n)).toInt
     val edgeParts = clamp(nUndEdges / 100000L + 1)
     val rankParts = clamp(dict.count() / 500000L + 1)
@@ -168,86 +152,71 @@ object Graph {
   /** One-task PageRank over a bounded symmetrized edge list. Replicates
     * the distributed loop's arithmetic EXACTLY so both paths satisfy the
     * same oracle:
-    *  - initial pr = round6(1.0 / n) (Spark `round` = shortest-string
-    *    HALF_UP, [[round6]]);
+    *  - initial pr = round₆(1.0 / n) (Spark `round` = shortest-string
+    *    HALF_UP, [[Num.roundAt]]);
     *  - per-edge contribution = decimal(38,18) cast of the IEEE double
-    *    pr/deg ([[scale18]]), summed EXACTLY as scaled longs (per-node
-    *    in-sums are ≤ ~1.0, so the scaled sum fits a long with 3 bits to
-    *    spare), then widened back to double exactly as Spark's
+    *    pr/deg ([[Num.unscaledAt]]), summed EXACTLY as scaled longs
+    *    (per-node in-sums are ≤ ~1.0, so the scaled sum fits a long with
+    *    3 bits to spare), then widened back to double exactly as Spark's
     *    decimal→double cast does;
-    *  - next pr = round6((1−damping)/n + damping·in_sum) with the same
+    *  - next pr = round₆((1−damping)/n + damping·in_sum) with the same
     *    double evaluation order as the Column expression.
-    * The task never ships rows to the driver: it folds the edge
-    * iterator into primitive int arrays ([[IntBuf]], 8 B/edge across
-    * both endpoints), iterates, and emits one (node, deg, pr) row per
-    * node. */
+    * The task folds the edge iterator into primitive int arrays
+    * ([[IntBuf]], 8 B/edge across both endpoints), iterates, and emits
+    * one (node, deg, pr) row per node. */
   private def smallGraphPageRank(und: DataFrame, damping: Double,
                                  iters: Int): DataFrame = {
     val sess = und.sparkSession
     import sess.implicits._
-    val out = und.select(col("src"), col("dst")).as[(String, String)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        val idOf = new java.util.HashMap[String, Integer]()
-        val labels = new scala.collection.mutable.ArrayBuffer[String]()
-        val srcs = new IntBuf()
-        val dsts = new IntBuf()
-        def id(s: String): Int = {
-          val e = idOf.get(s)
-          if (e != null) e.intValue()
-          else { val i = labels.size; idOf.put(s, i); labels += s; i }
-        }
-        while (it.hasNext) {
-          val (a, b) = it.next()
-          srcs += id(a); dsts += id(b)
-        }
-        val n = labels.size
-        if (n == 0) Iterator.empty
-        else {
-          val nE = srcs.length
-          val deg = new Array[Long](n)
-          var k = 0
-          while (k < nE) { deg(srcs(k)) += 1; k += 1 }
-          val pr = new Array[Double](n)
-          java.util.Arrays.fill(pr, round6(1.0 / n))
-          val base = (1 - damping) / n
-          val contribScaled = new Array[Long](n)
-          val inSum = new Array[Long](n)
-          var iter = 0
-          while (iter < iters) {
-            var i = 0
-            while (i < n) {
-              contribScaled(i) = scale18(pr(i) / deg(i))
-              inSum(i) = 0L
-              i += 1
-            }
-            k = 0
-            while (k < nE) {
-              // addExact: a silent long wrap would corrupt ranks; the
-              // distributed path's decimals can't wrap, so fail loudly instead.
-              inSum(dsts(k)) = Math.addExact(inSum(dsts(k)), contribScaled(srcs(k)))
-              k += 1
-            }
-            i = 0
-            while (i < n) {
-              pr(i) = round6(base + damping * Num.fromUnscaled(inSum(i), 18))
-              i += 1
-            }
-            iter += 1
-          }
-          labels.indices.iterator.map(i => (labels(i), deg(i), pr(i)))
-        }
+    Cutover.fold(und.select(col("src"), col("dst")).as[(String, String)], und) { it =>
+      val labels = new Interner[String]
+      val srcs = new IntBuf()
+      val dsts = new IntBuf()
+      while (it.hasNext) {
+        val (a, b) = it.next()
+        srcs += labels.id(a); dsts += labels.id(b)
       }
-      .toDF("node", "deg", "pr")
-    Dedup.materializeThenRelease(out, und)
+      val n = labels.size
+      if (n == 0) Iterator.empty
+      else {
+        val nE = srcs.length
+        val deg = new Array[Long](n)
+        var k = 0
+        while (k < nE) { deg(srcs(k)) += 1; k += 1 }
+        val pr = new Array[Double](n)
+        java.util.Arrays.fill(pr, Num.roundAt(1.0 / n, 6))
+        val base = (1 - damping) / n
+        val contribScaled = new Array[Long](n)
+        val inSum = new Array[Long](n)
+        var iter = 0
+        while (iter < iters) {
+          var i = 0
+          while (i < n) {
+            contribScaled(i) = Num.unscaledAt(pr(i) / deg(i), 18)
+            inSum(i) = 0L
+            i += 1
+          }
+          k = 0
+          while (k < nE) {
+            // addExact: a silent long wrap would corrupt ranks; the
+            // distributed path's decimals can't wrap, so fail loudly instead.
+            inSum(dsts(k)) = Math.addExact(inSum(dsts(k)), contribScaled(srcs(k)))
+            k += 1
+          }
+          i = 0
+          while (i < n) {
+            pr(i) = Num.roundAt(base + damping * Num.fromUnscaled(inSum(i), 18), 6)
+            i += 1
+          }
+          iter += 1
+        }
+        Iterator.tabulate(n)(i => (labels(i), deg(i), pr(i)))
+      }
+    }.toDF("node", "deg", "pr")
   }
 
-  /** Spark's `round(col, 6)` on a double ([[Num.roundAt]]). */
-  private def round6(v: Double): Double = Num.roundAt(v, 6)
-
-  /** Spark's `cast(col AS DECIMAL(38,18))` on a double as the unscaled
-    * long ([[Num.unscaledAt]]); callers guarantee |v| < 1 so it fits. */
-  private def scale18(v: Double): Long = Num.unscaledAt(v, 18)
+  private def stringIds(edges: DataFrame): Boolean =
+    edges.schema.fields.forall(_.dataType == org.apache.spark.sql.types.StringType)
 
   /** HITS hubs & authorities (Kleinberg 1999) over a DIRECTED edge
     * list — on the bipartite customer→supplier trade graph, hub scores
@@ -263,19 +232,19 @@ object Graph {
     * key-equi join of the node-sized score vector against the edge list
     * plus one map-side-combining aggregate — linear in |E|, the
     * canonical shape; the norm is a 1-row broadcast. Below
-    * `smallGraphEdges` the loop runs as ONE executor task (the
-    * [[pageRank]] cutover pattern; exact `BigDecimal` accumulation
-    * because raw HITS sums exceed the long-unscaled range at scale
-    * 18). Emits (node, kind ∈ hub|authority, score). */
-  def hits(edges: DataFrame, iters: Int,
-           smallGraphEdges: Long = 2000000L): DataFrame = {
+    * [[Cutover.HitsEdges]] the loop runs as ONE executor task (exact
+    * `BigDecimal` accumulation because raw HITS sums exceed the
+    * long-unscaled range at scale 18). Emits (node, kind ∈
+    * hub|authority, score). */
+  def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"hits needs at least one iteration, got $iters")
     val e = edges.select(col("src"), col("dst")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // String-id gate: same reasoning as [[pageRank]]'s cutover.
-    val stringIds = e.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.StringType)
-    if (stringIds && e.count() <= smallGraphEdges) return smallGraphHits(e, iters)
+    Cutover.run("hits", e.count(), Cutover.HitsEdges, oneTaskFits = stringIds(e))(
+      smallGraphHits(e, iters))(distributedHits(e, iters))
+  }
+
+  private def distributedHits(e: DataFrame, iters: Int): DataFrame = {
     val hubs0 = e.select(col("src")).distinct()
     val nH = broadcast(hubs0.agg(count(lit(1)).as("n_hubs")))
     var h = hubs0.crossJoin(nH)
@@ -315,84 +284,70 @@ object Graph {
     * the distributed loop ([[Num.unscaledAt]]-per-term sums done with
     * `BigDecimal` addition — raw sums can pass 9.2, the long-unscaled
     * ceiling at scale 18 — then the same double widening, IEEE sqrt and
-    * round-6). No driver-side data: the edge iterator folds into
-    * primitive arrays inside one executor task. */
+    * round-6), over the edge iterator folded into primitive arrays. */
   private def smallGraphHits(e: DataFrame, iters: Int): DataFrame = {
     val sess = e.sparkSession
     import sess.implicits._
-    val out = e.as[(String, String)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        val hubOf = new java.util.HashMap[String, Integer]()
-        val autOf = new java.util.HashMap[String, Integer]()
-        val hubLabels = new scala.collection.mutable.ArrayBuffer[String]()
-        val autLabels = new scala.collection.mutable.ArrayBuffer[String]()
-        val es = new IntBuf()
-        val ed = new IntBuf()
-        def idIn(m: java.util.HashMap[String, Integer],
-                 ls: scala.collection.mutable.ArrayBuffer[String],
-                 s: String): Int = {
-          val v = m.get(s)
-          if (v != null) v.intValue()
-          else { val i = ls.size; m.put(s, i); ls += s; i }
-        }
-        while (it.hasNext) {
-          val (s, d) = it.next()
-          es += idIn(hubOf, hubLabels, s); ed += idIn(autOf, autLabels, d)
-        }
-        val nHub = hubLabels.size
-        val nAut = autLabels.size
-        if (nHub == 0) Iterator.empty
-        else {
-          val nE = es.length
-          val h = Array.fill(nHub)(Num.roundAt(1.0 / math.sqrt(nHub), 6))
-          val a = new Array[Double](nAut)
-          val ZERO = java.math.BigDecimal.ZERO
-          def d18(v: Double): java.math.BigDecimal =
-            new java.math.BigDecimal(java.lang.Double.toString(v))
-              .setScale(18, java.math.RoundingMode.HALF_UP)
-          var iter = 0
-          while (iter < iters) {
-            val ar = Array.fill(nAut)(ZERO)
-            var k = 0
-            while (k < nE) { ar(ed(k)) = ar(ed(k)).add(d18(h(es(k)))); k += 1 }
-            var ss = ZERO
-            var i = 0
-            while (i < nAut) {
-              val v = ar(i).doubleValue()
-              ss = ss.add(d18(v * v))
-              i += 1
-            }
-            var nrm = math.sqrt(ss.doubleValue())
-            i = 0
-            while (i < nAut) {
-              a(i) = Num.roundAt(ar(i).doubleValue() / nrm, 6)
-              i += 1
-            }
-            val hr = Array.fill(nHub)(ZERO)
-            k = 0
-            while (k < nE) { hr(es(k)) = hr(es(k)).add(d18(a(ed(k)))); k += 1 }
-            ss = ZERO
-            i = 0
-            while (i < nHub) {
-              val v = hr(i).doubleValue()
-              ss = ss.add(d18(v * v))
-              i += 1
-            }
-            nrm = math.sqrt(ss.doubleValue())
-            i = 0
-            while (i < nHub) {
-              h(i) = Num.roundAt(hr(i).doubleValue() / nrm, 6)
-              i += 1
-            }
-            iter += 1
-          }
-          hubLabels.indices.iterator.map(i => (hubLabels(i), "hub", h(i))) ++
-            autLabels.indices.iterator.map(i => (autLabels(i), "authority", a(i)))
-        }
+    Cutover.fold(e.as[(String, String)], e) { it =>
+      val hubs = new Interner[String]
+      val auts = new Interner[String]
+      val es = new IntBuf()
+      val ed = new IntBuf()
+      while (it.hasNext) {
+        val (s, d) = it.next()
+        es += hubs.id(s); ed += auts.id(d)
       }
-      .toDF("node", "kind", "score")
-    Dedup.materializeThenRelease(out, e)
+      val nHub = hubs.size
+      val nAut = auts.size
+      if (nHub == 0) Iterator.empty
+      else {
+        val nE = es.length
+        val h = Array.fill(nHub)(Num.roundAt(1.0 / math.sqrt(nHub), 6))
+        val a = new Array[Double](nAut)
+        val ZERO = java.math.BigDecimal.ZERO
+        def d18(v: Double): java.math.BigDecimal =
+          new java.math.BigDecimal(java.lang.Double.toString(v))
+            .setScale(18, java.math.RoundingMode.HALF_UP)
+        var iter = 0
+        while (iter < iters) {
+          val ar = Array.fill(nAut)(ZERO)
+          var k = 0
+          while (k < nE) { ar(ed(k)) = ar(ed(k)).add(d18(h(es(k)))); k += 1 }
+          var ss = ZERO
+          var i = 0
+          while (i < nAut) {
+            val v = ar(i).doubleValue()
+            ss = ss.add(d18(v * v))
+            i += 1
+          }
+          var nrm = math.sqrt(ss.doubleValue())
+          i = 0
+          while (i < nAut) {
+            a(i) = Num.roundAt(ar(i).doubleValue() / nrm, 6)
+            i += 1
+          }
+          val hr = Array.fill(nHub)(ZERO)
+          k = 0
+          while (k < nE) { hr(es(k)) = hr(es(k)).add(d18(a(ed(k)))); k += 1 }
+          ss = ZERO
+          i = 0
+          while (i < nHub) {
+            val v = hr(i).doubleValue()
+            ss = ss.add(d18(v * v))
+            i += 1
+          }
+          nrm = math.sqrt(ss.doubleValue())
+          i = 0
+          while (i < nHub) {
+            h(i) = Num.roundAt(hr(i).doubleValue() / nrm, 6)
+            i += 1
+          }
+          iter += 1
+        }
+        Iterator.tabulate(nHub)(i => (hubs(i), "hub", h(i))) ++
+          Iterator.tabulate(nAut)(i => (auts(i), "authority", a(i)))
+      }
+    }.toDF("node", "kind", "score")
   }
 
   /** The customer↔supplier trade graph implied by the warehouse schema:

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{DotProduct, TopKAggregator, TopKStringAggregator}
+import graft.functions.{DotProduct, Num, TopKAggregator, TopKStringAggregator}
 
 /** Similarity search over an embedding column (Array[Float] in parquet,
   * cast to double for engine-stable arithmetic).
@@ -415,9 +415,8 @@ object Similarity {
     * constant 1/√dim — so loadings and the Rayleigh-quotient eigenvalue
     * are bit-identical on any engine at any parallelism. Emits one row
     * per dimension: (dim, loading, lambda). */
-  def pcaPower(emb: DataFrame, iters: Int, dim: Int,
-               smallMatrixRows: Long = 20000000L): DataFrame = {
-    val (v, lambda, c) = pcaCore(emb, iters, dim, smallMatrixRows)
+  def pcaPower(emb: DataFrame, iters: Int, dim: Int): DataFrame = {
+    val (v, lambda, c) = pcaCore(emb, iters, dim)
     val out = v.crossJoin(broadcast(lambda))
       .select(col("pos").as("dim"), col("w").as("loading"), col("lambda"))
     Dedup.materializeThenRelease(out, c)
@@ -430,10 +429,8 @@ object Similarity {
     * and their ratio. A healthy isotropic-ish batch sits near 1/dim; a
     * collapsed batch's top component absorbs most of the variance.
     * One row: (lambda, total_var, explained_ratio). */
-  def pcaExplained(emb: DataFrame, iters: Int, dim: Int,
-                   smallMatrixRows: Long = 20000000L): DataFrame = {
-    import graft.functions.Num
-    val (_, lambda, c) = pcaCore(emb, iters, dim, smallMatrixRows)
+  def pcaExplained(emb: DataFrame, iters: Int, dim: Int): DataFrame = {
+    val (_, lambda, c) = pcaCore(emb, iters, dim)
     val n1 = broadcast(
       c.select("vec_id").distinct().agg(count(lit(1)).as("n")))
     val tv = c.agg(Num.dsum(col("cv") * col("cv")).as("ss"))
@@ -451,10 +448,8 @@ object Similarity {
   /** Shared power-iteration core: returns (direction v = (pos, w),
     * 1-row Rayleigh eigenvalue, and the PERSISTED centered matrix —
     * callers must release `c` via `materializeThenRelease(…, c)`). */
-  private def pcaCore(emb: DataFrame, iters: Int, dim: Int,
-                      smallMatrixRows: Long = 20000000L): (DataFrame, DataFrame, DataFrame) = {
-    import graft.functions.Num
-    val ss = emb.sparkSession
+  private def pcaCore(emb: DataFrame, iters: Int,
+                      dim: Int): (DataFrame, DataFrame, DataFrame) = {
     // fanOut: a single-file embeddings scan otherwise single-threads
     // the normalize+explode AND leaves the centered-matrix cache (and
     // every aggregate over it) one partition wide (r16).
@@ -467,18 +462,15 @@ object Similarity {
     val c = ev.join(broadcast(mean), Seq("pos"))
       .select(col("vec_id"), col("pos"), (col("val") - col("m")).as("cv"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Small-matrix cutover (the Graph.pageRank pattern): a distributed
-    // power iteration pays ~3 jobs of scheduling per round, and that
-    // fixed cost dominates when the centered matrix is small. Below the
-    // cutover the whole loop runs as ONE executor task over primitive
-    // arrays — no driver-side data — replicating the decimal discipline
-    // bit-for-bit (Num.unscaledAt/fromUnscaled/roundAt are exactly the
-    // dsum-cast/round semantics), so both paths satisfy the same oracle.
-    // 20M rows ≈ 320 MB of task state; larger matrices iterate
-    // distributed.
-    if (c.count() <= smallMatrixRows)
-      return smallMatrixPcaCore(c, iters, dim)
-    var v: DataFrame = ss.range(1, dim + 1)
+    // A distributed power iteration pays ~3 jobs of scheduling per
+    // round; below the limit the whole loop runs as ONE executor task.
+    Cutover.run("pcaCore", c.count(), Cutover.PcaRows)(
+      smallMatrixPcaCore(c, iters, dim))(distributedPcaCore(c, iters, dim))
+  }
+
+  private def distributedPcaCore(c: DataFrame, iters: Int,
+                                 dim: Int): (DataFrame, DataFrame, DataFrame) = {
+    var v: DataFrame = c.sparkSession.range(1, dim + 1)
       .select(col("id").as("pos"), lit(1.0 / math.sqrt(dim)).as("w"))
     for (i <- 1 to iters) {
       val d = c.join(broadcast(v), Seq("pos"))
@@ -516,95 +508,87 @@ object Similarity {
     * apart. */
   private def smallMatrixPcaCore(c: DataFrame, iters: Int,
                                  dim: Int): (DataFrame, DataFrame, DataFrame) = {
-    import graft.functions.Num
     val sess = c.sparkSession
     import sess.implicits._
-    val vl = Lifecycle.checkpoint(
-      c.select(col("vec_id"), col("pos"), col("cv"))
-        .as[(Long, Long, Double)]
-        .coalesce(1)
-        .mapPartitions { it =>
-          val vecOf = new java.util.HashMap[java.lang.Long, Integer]()
-          val vecs = new graft.operators.IntBuf()
-          val poss = new graft.operators.IntBuf()
-          val cvs = new graft.operators.DoubleBuf()
-          while (it.hasNext) {
-            val (vec, pos, cv) = it.next()
-            // The w/uSum arrays are dim-sized; a dim argument that does
-            // not cover the data would index past them — reject loudly
-            // (the distributed path would silently widen to the data's
-            // dimensionality after round 1, which is equally wrong).
-            require(pos >= 1 && pos <= dim,
-              s"pcaCore: position $pos outside [1, $dim] — dim must " +
-                "cover the embedding dimensionality")
-            val e = vecOf.get(vec)
-            val vi = if (e != null) e.intValue()
-              else { val i = vecOf.size; vecOf.put(vec, i); i }
-            vecs += vi; poss += pos.toInt - 1; cvs += cv
+    val vl = Cutover.fold(c.select(col("vec_id"), col("pos"), col("cv"))
+        .as[(Long, Long, Double)]) { it =>
+      val vecIds = new Interner[java.lang.Long]
+      val vecs = new IntBuf()
+      val poss = new IntBuf()
+      val cvs = new DoubleBuf()
+      while (it.hasNext) {
+        val (vec, pos, cv) = it.next()
+        // The w/uSum arrays are dim-sized; a dim argument that does
+        // not cover the data would index past them — reject loudly
+        // (the distributed path would silently widen to the data's
+        // dimensionality after round 1, which is equally wrong).
+        require(pos >= 1 && pos <= dim,
+          s"pcaCore: position $pos outside [1, $dim] — dim must " +
+            "cover the embedding dimensionality")
+        vecs += vecIds.id(vec); poss += pos.toInt - 1; cvs += cv
+      }
+      val nVec = vecIds.size
+      if (nVec == 0) Iterator.empty
+      else {
+        val nRows = vecs.length
+        val w = Array.fill(dim)(1.0 / math.sqrt(dim))
+        val dSum = new Array[Long](nVec)
+        val uSum = new Array[Long](dim)
+        val d = new Array[Double](nVec)
+        var iter = 1
+        while (iter <= iters) {
+          java.util.Arrays.fill(dSum, 0L)
+          var k = 0
+          while (k < nRows) {
+            // addExact throughout this loop body: a silent long wrap
+            // would corrupt the trajectory; the distributed path's
+            // decimal sums can't wrap, so fail loudly instead.
+            dSum(vecs(k)) = Math.addExact(dSum(vecs(k)),
+              Num.unscaledAt(cvs(k) * w(poss(k)), 6))
+            k += 1
           }
-          val nVec = vecOf.size
-          if (nVec == 0) Iterator.empty
-          else {
-            val nRows = vecs.length
-            val w = Array.fill(dim)(1.0 / math.sqrt(dim))
-            val dSum = new Array[Long](nVec)
-            val uSum = new Array[Long](dim)
-            val d = new Array[Double](nVec)
-            var iter = 1
-            while (iter <= iters) {
-              java.util.Arrays.fill(dSum, 0L)
-              var k = 0
-              while (k < nRows) {
-                // addExact throughout this loop body: a silent long wrap
-                // would corrupt the trajectory; the distributed path's
-                // decimal sums can't wrap, so fail loudly instead.
-                dSum(vecs(k)) = Math.addExact(dSum(vecs(k)),
-                  Num.unscaledAt(cvs(k) * w(poss(k)), 6))
-                k += 1
-              }
-              var i = 0
-              while (i < nVec) { d(i) = Num.fromUnscaled(dSum(i), 6); i += 1 }
-              java.util.Arrays.fill(uSum, 0L)
-              k = 0
-              while (k < nRows) {
-                uSum(poss(k)) = Math.addExact(uSum(poss(k)),
-                  Num.unscaledAt(cvs(k) * d(vecs(k)), 6))
-                k += 1
-              }
-              var nn = 0L
-              i = 0
-              while (i < dim) {
-                val u = Num.fromUnscaled(uSum(i), 6)
-                nn = Math.addExact(nn, Num.unscaledAt(u * u, 6))
-                i += 1
-              }
-              val norm = math.sqrt(Num.fromUnscaled(nn, 6))
-              i = 0
-              while (i < dim) {
-                w(i) = Num.roundAt(Num.fromUnscaled(uSum(i), 6) / norm, 6)
-                i += 1
-              }
-              iter += 1
-            }
-            java.util.Arrays.fill(dSum, 0L)
-            var k = 0
-            while (k < nRows) {
-              dSum(vecs(k)) = Math.addExact(dSum(vecs(k)),
-                Num.unscaledAt(cvs(k) * w(poss(k)), 6))
-              k += 1
-            }
-            var ll = 0L
-            var i = 0
-            while (i < nVec) {
-              val df = Num.fromUnscaled(dSum(i), 6)
-              ll = Math.addExact(ll, Num.unscaledAt(df * df, 6))
-              i += 1
-            }
-            val lambda = Num.roundAt(Num.fromUnscaled(ll, 6) / nVec, 6)
-            (0 until dim).iterator.map(i => (i + 1L, w(i), lambda))
+          var i = 0
+          while (i < nVec) { d(i) = Num.fromUnscaled(dSum(i), 6); i += 1 }
+          java.util.Arrays.fill(uSum, 0L)
+          k = 0
+          while (k < nRows) {
+            uSum(poss(k)) = Math.addExact(uSum(poss(k)),
+              Num.unscaledAt(cvs(k) * d(vecs(k)), 6))
+            k += 1
           }
+          var nn = 0L
+          i = 0
+          while (i < dim) {
+            val u = Num.fromUnscaled(uSum(i), 6)
+            nn = Math.addExact(nn, Num.unscaledAt(u * u, 6))
+            i += 1
+          }
+          val norm = math.sqrt(Num.fromUnscaled(nn, 6))
+          i = 0
+          while (i < dim) {
+            w(i) = Num.roundAt(Num.fromUnscaled(uSum(i), 6) / norm, 6)
+            i += 1
+          }
+          iter += 1
         }
-        .toDF("pos", "w", "lambda"))
+        java.util.Arrays.fill(dSum, 0L)
+        var k = 0
+        while (k < nRows) {
+          dSum(vecs(k)) = Math.addExact(dSum(vecs(k)),
+            Num.unscaledAt(cvs(k) * w(poss(k)), 6))
+          k += 1
+        }
+        var ll = 0L
+        var i = 0
+        while (i < nVec) {
+          val df = Num.fromUnscaled(dSum(i), 6)
+          ll = Math.addExact(ll, Num.unscaledAt(df * df, 6))
+          i += 1
+        }
+        val lambda = Num.roundAt(Num.fromUnscaled(ll, 6) / nVec, 6)
+        (0 until dim).iterator.map(i => (i + 1L, w(i), lambda))
+      }
+    }.toDF("pos", "w", "lambda")
     (vl.select(col("pos"), col("w")),
       vl.filter(col("pos") === 1).select(col("lambda")),
       c)
@@ -844,7 +828,6 @@ object Similarity {
     * plus keyed aggregates. */
   def rankingMetricsReport(emb: DataFrame, queryPred: Column, k: Int,
                            nProbe: Int, centStride: Long): DataFrame = {
-    import graft.functions.Num
     def log2(c: Column): Column = log(c) / log(lit(2.0))
     val truth = bruteForceTopK(emb, queryPred, k)
       .select(col("query_id"), col("rn").as("trn"), col("vec_id"))
@@ -890,7 +873,6 @@ object Similarity {
     * shape every embedding op here shuffles), keyed means, and a
     * |docs|-sized tail — no pairwise term at all. */
   def chunkPooledEmbeddings(emb: DataFrame, groupSize: Long): DataFrame = {
-    import graft.functions.Num
     val e = normalized(emb)
       .withColumn("group_id", expr(s"vec_id div $groupSize"))
     val pooled = e

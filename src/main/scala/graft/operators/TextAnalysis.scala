@@ -126,32 +126,21 @@ object TextAnalysis {
     * Per round: 1 aggregate job + 1 apply/checkpoint job (was ~5 jobs
     * and 3 corpus passes); one extra histogram total after the last
     * round closes the curve. The curve itself is assembled driver-side
-    * from the R collected scalars — zero extra jobs. */
-  def bpeTrain(docs: DataFrame, rounds: Int,
-               smallCorpusChars: Long = SmallCorpusChars): DataFrame = {
+    * from the R collected scalars — zero extra jobs. Below
+    * [[Cutover.BpeChars]] corpus chars the whole loop runs as ONE
+    * executor task instead ([[smallCorpusBpeTrain]]). */
+  def bpeTrain(docs: DataFrame, rounds: Int): DataFrame = {
     graft.functions.BpeApply.register(docs.sparkSession)
+    // The gate is ONE bounded metadata action (a sum over the scan), the
+    // same driver-scalar discipline as the pageRank cutover count.
+    val chars = docs.agg(sum(length(col("text")))).head()
+    Cutover.run("bpeTrain", if (chars.isNullAt(0)) 0L else chars.getLong(0),
+        Cutover.BpeChars)(smallCorpusBpeTrain(docs.select(col("text")), rounds))(
+      distributedBpeTrain(docs, rounds))
+  }
+
+  private def distributedBpeTrain(docs: DataFrame, rounds: Int): DataFrame = {
     val spark = docs.sparkSession
-    // Small-corpus cutover (the [[Graph.pageRank]] one-task pattern): a
-    // distributed BPE round is ≥2 jobs (histogram aggregate + apply/
-    // checkpoint) and at bench scale that per-job scheduling floor
-    // dominates — r16 measured ~110 ms/job × ~40 jobs ≈ 4.4 s for 8
-    // rounds over a 1.5 M-char corpus whose actual per-round work is
-    // ~10 ms. Below the gate the whole training loop runs as ONE
-    // executor task over String arrays with semantics identical
-    // operation for operation (same split, same greedy merge fold as
-    // [[graft.functions.BpeApply.applyMergePairs]], same UTF-8-binary
-    // argmax tie-break — all integer/string math, no floats to drift).
-    // Task-state math behind the 32 M-char default: tokens are the
-    // dominant state, ~60 B/token (header + char[] copy) at ~5 chars/
-    // token → ≤ ~400 MB for one task; a cluster-scale corpus takes the
-    // distributed fixpoint below. The gate is ONE bounded metadata
-    // action (count+sum over the scan), the same driver-scalar
-    // discipline as the pageRank cutover count.
-    val gate = docs.agg(count(lit(1)).as("n"),
-      sum(length(col("text"))).as("chars")).head()
-    val totalChars = if (gate.isNullAt(1)) 0L else gate.getLong(1)
-    if (totalChars <= smallCorpusChars)
-      return smallCorpusBpeTrain(docs.select(col("text")), rounds)
     // fanOut BEFORE the initial checkpoint: the corpus frame keeps its
     // partitioning across every round, so a single-file documents scan
     // would otherwise single-thread ALL R histogram+apply passes
@@ -220,29 +209,16 @@ object TextAnalysis {
     Lifecycle.release(toks)
     // An input with no pairs AT ALL (single-token docs only) learns zero
     // merges: emit the empty curve with the pre-r16 schema.
-    if (curve.isEmpty) {
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("round",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("merge_rule",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("pair_n",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("tokens_after",
-            org.apache.spark.sql.types.LongType))))
-    }
+    if (curve.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "round BIGINT, merge_rule STRING, pair_n BIGINT, tokens_after BIGINT"))
     // Boxed tokens_after keeps the column NULLABLE like the sum() it
     // replaced, so the dumped schema is byte-identical to pre-r16.
     import spark.implicits._
     curve.toSeq.toDF("round", "merge_rule", "pair_n", "tokens_after")
       .orderBy("round")
   }
-
-  /** Corpus-size ceiling (total chars) for [[smallCorpusBpeTrain]];
-    * see the task-state math at the [[bpeTrain]] gate. */
-  private val SmallCorpusChars = 32L * 1024 * 1024
 
   /** One-task BPE training below the cutover: folds the corpus into
     * String arrays inside ONE executor task (no rows ship to the
@@ -264,92 +240,88 @@ object TextAnalysis {
   private def smallCorpusBpeTrain(txt: DataFrame, rounds: Int): DataFrame = {
     val spark = txt.sparkSession
     import spark.implicits._
-    val out = txt.as[String]
-      .coalesce(1)
-      .mapPartitions { it =>
-        def u8cmp(a: String, b: String): Int = {
-          val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val n = math.min(x.length, y.length)
-          var i = 0
-          while (i < n) {
-            val c = (x(i) & 0xff) - (y(i) & 0xff)
-            if (c != 0) return c
-            i += 1
-          }
-          x.length - y.length
+    Cutover.fold(txt.as[String]) { it =>
+      def u8cmp(a: String, b: String): Int = {
+        val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        val n = math.min(x.length, y.length)
+        var i = 0
+        while (i < n) {
+          val c = (x(i) & 0xff) - (y(i) & 0xff)
+          if (c != 0) return c
+          i += 1
         }
-        val corpus = new scala.collection.mutable.ArrayBuffer[Array[String]]()
-        val lens = new scala.collection.mutable.ArrayBuffer[Int]()
-        while (it.hasNext) {
-          val t = it.next()
-          if (t != null) { // null text = null toks row: no pairs, no size
-            val a = t.split(" ", -1)
-            corpus += a
-            lens += a.length
-          }
+        x.length - y.length
+      }
+      val corpus = new scala.collection.mutable.ArrayBuffer[Array[String]]()
+      val lens = new scala.collection.mutable.ArrayBuffer[Int]()
+      while (it.hasNext) {
+        val t = it.next()
+        if (t != null) { // null text = null toks row: no pairs, no size
+          val a = t.split(" ", -1)
+          corpus += a
+          lens += a.length
         }
-        val curve = new scala.collection.mutable.ArrayBuffer[
-          (Long, String, Long, java.lang.Long)]()
-        var r = 1
-        var exhausted = false
-        while (r <= rounds && !exhausted) {
-          val counts = new java.util.HashMap[(String, String), Long]()
-          var d = 0
+      }
+      val curve = new scala.collection.mutable.ArrayBuffer[
+        (Long, String, Long, java.lang.Long)]()
+      var r = 1
+      var exhausted = false
+      while (r <= rounds && !exhausted) {
+        val counts = new java.util.HashMap[(String, String), Long]()
+        var d = 0
+        while (d < corpus.length) {
+          val arr = corpus(d)
+          val len = lens(d)
+          var j = 0
+          while (j + 1 < len) {
+            val k = (arr(j), arr(j + 1))
+            counts.put(k, counts.getOrDefault(k, 0L) + 1L)
+            j += 1
+          }
+          d += 1
+        }
+        if (counts.isEmpty) exhausted = true
+        else {
+          var bl: String = null
+          var br: String = null
+          var bn = -1L
+          val e = counts.entrySet().iterator()
+          while (e.hasNext) {
+            val kv = e.next()
+            val (l, rt) = kv.getKey
+            val n = kv.getValue
+            if (n > bn || (n == bn && {
+                  val cl = u8cmp(l, bl)
+                  cl < 0 || (cl == 0 && u8cmp(rt, br) < 0)
+                })) { bl = l; br = rt; bn = n }
+          }
+          val merged = bl + " " + br
+          var tokensAfter = 0L
+          d = 0
           while (d < corpus.length) {
             val arr = corpus(d)
             val len = lens(d)
+            // applyMergePairs' greedy fold, single rule
+            var o = 0
             var j = 0
-            while (j + 1 < len) {
-              val k = (arr(j), arr(j + 1))
-              counts.put(k, counts.getOrDefault(k, 0L) + 1L)
+            while (j < len) {
+              val t = arr(j)
+              if (o > 0 && arr(o - 1) == bl && t == br) arr(o - 1) = merged
+              else { arr(o) = t; o += 1 }
               j += 1
             }
+            lens(d) = o
+            tokensAfter += o
             d += 1
           }
-          if (counts.isEmpty) exhausted = true
-          else {
-            var bl: String = null
-            var br: String = null
-            var bn = -1L
-            val e = counts.entrySet().iterator()
-            while (e.hasNext) {
-              val kv = e.next()
-              val (l, rt) = kv.getKey
-              val n = kv.getValue
-              if (n > bn || (n == bn && {
-                    val cl = u8cmp(l, bl)
-                    cl < 0 || (cl == 0 && u8cmp(rt, br) < 0)
-                  })) { bl = l; br = rt; bn = n }
-            }
-            val merged = bl + " " + br
-            var tokensAfter = 0L
-            d = 0
-            while (d < corpus.length) {
-              val arr = corpus(d)
-              val len = lens(d)
-              // applyMergePairs' greedy fold, single rule
-              var o = 0
-              var j = 0
-              while (j < len) {
-                val t = arr(j)
-                if (o > 0 && arr(o - 1) == bl && t == br) arr(o - 1) = merged
-                else { arr(o) = t; o += 1 }
-                j += 1
-              }
-              lens(d) = o
-              tokensAfter += o
-              d += 1
-            }
-            curve += ((r.toLong, merged, bn, java.lang.Long.valueOf(tokensAfter)))
-          }
-          r += 1
+          curve += ((r.toLong, merged, bn, java.lang.Long.valueOf(tokensAfter)))
         }
-        curve.iterator
+        r += 1
       }
-      .toDF("round", "merge_rule", "pair_n", "tokens_after")
+      curve.iterator
+    }.toDF("round", "merge_rule", "pair_n", "tokens_after")
       .orderBy("round")
-    out
   }
 
   /** Curation gate: keep documents passing the quality thresholds — the

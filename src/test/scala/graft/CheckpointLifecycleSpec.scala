@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Graph, Lifecycle, Similarity}
+import graft.operators.{Cutover, Dedup, Graph, Lifecycle, Similarity}
 
 /** Checkpoint blocks are released deterministically, not left to GC.
   *
@@ -79,11 +79,13 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
     Lifecycle.releaseAll()
     // Chain graph 0-1-2-...-9 plus an isolated pair: forces several
     // pointer-doubling rounds through the DISTRIBUTED path
-    // (smallGraphEdges=0 disables the single-task shortcut).
+    // (forcing Cutover.Distributed disables the single-task shortcut).
     import spark.implicits._
     val pairs = (0L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
       .union(Seq((100L, 101L)).toDF("doc_a", "doc_b"))
-    val out = Dedup.duplicateClusters(pairs, maxIter = 20, smallGraphEdges = 0L)
+    val out = Cutover.forcing(Cutover.Distributed) {
+      Dedup.duplicateClusters(pairs, maxIter = 20)
+    }
     val labels = out.select("doc_id", "cluster_id").as[(Long, Long)]
       .collect().toMap
     assert((0L to 9L).forall(labels(_) == 0L), "chain must root at 0")

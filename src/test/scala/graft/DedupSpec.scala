@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Dedup
+import graft.operators.{Cutover, Dedup}
 
 class DedupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -131,10 +131,19 @@ class DedupSpec extends AnyFunSuite {
     def labels(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_id"),
         r.getAs[Long]("is_canonical"))).toSet
-    // single-task union-find path (default threshold)
+    // single-task union-find path (default limit)
     assert(labels(Dedup.duplicateClusters(pairs)) == expected)
-    // distributed fixpoint path (threshold forced to 0) — same labels
-    assert(labels(Dedup.duplicateClusters(pairs, smallGraphEdges = 0L)) == expected)
+    // distributed fixpoint path (forced) — same labels
+    assert(Cutover.forcing(Cutover.Distributed)(
+      labels(Dedup.duplicateClusters(pairs))) == expected)
+    // The sf0.001 near-dup graph (the Jaccard pairs the dedup queries
+    // cluster): both paths label it identically.
+    val real = Dedup.jaccardPairs(
+      Dedup.wordShingles(Tables.documents(spark, TestSpark.sf0001)), 0.5)
+    val oneTask = Cutover.forcing(Cutover.OneTask)(labels(Dedup.duplicateClusters(real)))
+    assert(oneTask.nonEmpty)
+    assert(Cutover.forcing(Cutover.Distributed)(
+      labels(Dedup.duplicateClusters(real))) == oneTask)
   }
 
   test("canonical resolution keeps uniques and one survivor per cluster") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Graph
+import graft.operators.{Cutover, Graph}
 
 class GraphSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -26,11 +26,12 @@ class GraphSpec extends AnyFunSuite {
     // oracle hash can never depend on which path ran.
     val edges = Graph.tradeEdges(
       Tables.orders(spark, TestSpark.sf0001), Tables.lineitem(spark, TestSpark.sf0001))
-    def run(cutover: Long) =
-      Graph.pageRank(edges, 0.85, 3, smallGraphEdges = cutover).collect()
+    def run(path: Cutover.Path) = Cutover.forcing(path) {
+      Graph.pageRank(edges, 0.85, 3).collect()
         .map(r => (r.getAs[String]("node"), r.getAs[Long]("deg"),
           r.getAs[Double]("pr"))).sorted.toSeq
-    assert(run(Long.MaxValue) == run(0L))
+    }
+    assert(run(Cutover.OneTask) == run(Cutover.Distributed))
   }
 
   test("hits: unit-norm halves, authority follows in-degree, dual-path bit-identical") {
@@ -54,11 +55,12 @@ class GraphSpec extends AnyFunSuite {
     // dual-path pin, HITS edition) on a real slice.
     val trade = Graph.tradeEdges(
       Tables.orders(spark, TestSpark.sf0001), Tables.lineitem(spark, TestSpark.sf0001))
-    def run(cutover: Long) =
-      Graph.hits(trade, 3, smallGraphEdges = cutover).collect()
+    def run(path: Cutover.Path) = Cutover.forcing(path) {
+      Graph.hits(trade, 3).collect()
         .map(r => (r.getAs[String]("node"), r.getAs[String]("kind"),
           r.getAs[Double]("score"))).sorted.toSeq
-    assert(run(Long.MaxValue) == run(0L))
+    }
+    assert(run(Cutover.OneTask) == run(Cutover.Distributed))
   }
 
   test("pageRank over the trade graph is a probability-mass fixpoint, repartition-stable") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Similarity
+import graft.operators.{Cutover, Similarity}
 
 class SimilaritySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -268,11 +268,12 @@ class SimilaritySpec extends AnyFunSuite {
     // — pin both paths to the same output so the oracle hash can never
     // depend on which path ran.
     val emb = Tables.embeddings(spark, TestSpark.sf0001)
-    def run(cutover: Long) =
-      Similarity.pcaPower(emb, 3, 64, smallMatrixRows = cutover).collect()
+    def run(path: Cutover.Path) = Cutover.forcing(path) {
+      Similarity.pcaPower(emb, 3, 64).collect()
         .map(r => (r.getAs[Long]("dim"), r.getAs[Double]("loading"),
           r.getAs[Double]("lambda"))).sorted.toSeq
-    assert(run(Long.MaxValue) == run(0L))
+    }
+    assert(run(Cutover.OneTask) == run(Cutover.Distributed))
   }
 
   test("hardNegativeMining: planted near-dup of the positive is flagged false_negative") {

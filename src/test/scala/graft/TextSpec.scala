@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Poly31Hash
-import graft.operators.{Hamming, Multimodal, Sampling, TextAnalysis}
+import graft.operators.{Cutover, Hamming, Multimodal, Sampling, TextAnalysis}
 
 class TextSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -508,7 +508,7 @@ class TextSpec extends AnyFunSuite {
   }
 
   test("bpeTrain: one-task cutover and distributed loop agree row for row") {
-    // The r16 one-task path (smallCorpusChars gate) must replay the
+    // The r16 one-task path (the Cutover.BpeChars gate) must replay the
     // distributed loop's exact curve: same argmax tie-breaks, same
     // greedy merge fold, same tokens_after totals — including rules
     // whose sides are learned space-carrying symbols.
@@ -518,9 +518,15 @@ class TextSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("round"), r.getAs[String]("merge_rule"),
         r.getAs[Long]("pair_n"), r.getAs[Long]("tokens_after"))).toList
     val small = rows(TextAnalysis.bpeTrain(docs, 5))
-    val dist = rows(TextAnalysis.bpeTrain(docs, 5, smallCorpusChars = 0L))
+    val dist = Cutover.forcing(Cutover.Distributed)(rows(TextAnalysis.bpeTrain(docs, 5)))
     assert(small == dist)
     assert(small.map(_._1) == (1L to 5L).toList)
+    // The sf0.001 documents (the q_text_bpe_train corpus): same curve.
+    val corpus = Tables.documents(spark, TestSpark.sf0001)
+    val real = Cutover.forcing(Cutover.OneTask)(rows(TextAnalysis.bpeTrain(corpus, 5)))
+    assert(real.map(_._1) == (1L to 5L).toList)
+    assert(Cutover.forcing(Cutover.Distributed)(
+      rows(TextAnalysis.bpeTrain(corpus, 5))) == real)
   }
 
   test("multimodal real decode: PNG round trip pins the known image's pixels") {

@@ -11,13 +11,37 @@ Usage: tools/check.py <sfDir> <verifyOutDir> [onlyPrefixes]
 drive one query at a time, e.g. with a per-query timeout for the 10x
 fixture where a few deliberately-quadratic oracles are infeasible.)
 """
-import json, sys, glob, os
+import json, sys, glob, os, shutil
 
 import duckdb
 import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+# Disk left free under DuckDB's temp spill: an oracle whose spill would
+# eat into it fails with DuckDB's max_temp_directory_size error instead
+# of filling the disk (the all-pairs q_dedup_lsh_design oracle spills
+# 12-17 GB at sf0.1).
+TEMP_RESERVE_BYTES = 1 << 30
+
+
+def connect(sf_dir: str):
+    """A DuckDB connection with one view per test table present in
+    `sf_dir`, its temp spill capped at the free disk less the reserve."""
+    con = duckdb.connect()
+    tmp = con.execute("SELECT current_setting('temp_directory')").fetchone()[0]
+    free = shutil.disk_usage(os.path.dirname(os.path.abspath(tmp))).free
+    cap_mib = max(free - TEMP_RESERVE_BYTES, 0) >> 20
+    con.execute(f"SET max_temp_directory_size = '{cap_mib}MiB'")
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(p):  # Spark-written table (e.g. the 10x probe fixture)
+            p = f"{p}/*.parquet"
+        elif not os.path.exists(p):
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
 
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
@@ -31,14 +55,7 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 def main(sf_dir: str, out_dir: str, only: str = "") -> int:
     prefixes = [p for p in only.split(",") if p]
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(p):  # Spark-written table (e.g. the 10x probe fixture)
-            p = f"{p}/*.parquet"
-        elif not os.path.exists(p):
-            continue
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = connect(sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name in sorted(oracle):
@@ -92,7 +109,7 @@ def check_round_artifacts() -> int:
         return 0
     import fnmatch
     pats = ["BENCH_r*.json", "CORRECTNESS_r*.json", "BENCH_FULL.json",
-            "LEAKCHECK.json", "COPYCHECK.json"]
+            "BENCH_LINE.json", "LEAKCHECK.json", "COPYCHECK.json"]
     dirty = []
     for line in out.splitlines():
         status, name = line[:2], line[3:].strip()

@@ -24,22 +24,8 @@ import json
 import os
 import sys
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from check import TABLES, norm  # noqa: E402
-
-
-def connect(sf_dir: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(p):  # Spark-written table (e.g. the 10x probe fixture)
-            p = f"{p}/*.parquet"
-        elif not os.path.exists(p):
-            continue
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    return con
+from check import connect, norm  # noqa: E402
 
 
 def first_diff(old, new) -> str:
@@ -61,7 +47,6 @@ def main(sf_dir: str, old_path: str, new_path: str, only: str = "") -> int:
     prefixes = [p for p in only.split(",") if p]
     old = json.load(open(old_path))
     new = json.load(open(new_path))
-    con = connect(sf_dir)
     n_same = n_diff = n_not_run = n_unchanged = 0
     for name in sorted(set(old) | set(new)):
         if prefixes and not any(name.startswith(p) for p in prefixes):
@@ -74,6 +59,9 @@ def main(sf_dir: str, old_path: str, new_path: str, only: str = "") -> int:
         if old[name] == new[name]:
             n_unchanged += 1
             continue
+        # A fresh connection per oracle: one run's temp spill is freed
+        # before the next starts.
+        con = connect(sf_dir)
         try:
             want = norm(con.execute(old[name]).df())
             got = norm(con.execute(new[name]).df())
@@ -82,6 +70,8 @@ def main(sf_dir: str, old_path: str, new_path: str, only: str = "") -> int:
             print(f"NOT RUN {name}: {cause}", flush=True)
             n_not_run += 1
             continue
+        finally:
+            con.close()
         d = first_diff(want, got)
         if d:
             print(f"DIFF {name}: {d}", flush=True)
