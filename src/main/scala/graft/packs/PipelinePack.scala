@@ -1721,8 +1721,11 @@ object PipelinePack {
   /** sh → signature → 4×4 band CTEs shared by the all-pairs and the
     * incremental (batch-vs-corpus) MinHash oracles; `shSql` is the
     * shingle query (over `documents` by default, or a synthesized
-    * corpus ∪ wave union for the accumulating-index oracle). */
-  private def minhashBandCtesFrom(shSql: String): String = {
+    * corpus ∪ wave union for the accumulating-index oracle);
+    * `materializeSigs` marks `sigs` AS MATERIALIZED for oracles that
+    * read it many times. */
+  private def minhashBandCtesFrom(shSql: String,
+                                  materializeSigs: Boolean = false): String = {
     val m = Hashing.M
     val minCols = Hashing.minhashPerms.zipWithIndex.map { case ((a, b), i) =>
       s"min(($a * h + $b) % $m) AS m$i"
@@ -1733,7 +1736,7 @@ object PipelinePack {
     }.mkString("\n  UNION ALL\n  ")
     s"""sh AS ($shSql),
        |hs AS (SELECT doc_id, ${Hashing.md5ModSql("shingle")} AS h FROM sh),
-       |sigs AS (SELECT doc_id,
+       |sigs AS ${if (materializeSigs) "MATERIALIZED " else ""}(SELECT doc_id,
        |       $minCols
        |  FROM hs GROUP BY doc_id),
        |bands AS (
@@ -2429,6 +2432,9 @@ object PipelinePack {
     // One CTE block per (b, r) tiling, all over the SAME sigs CTE; the
     // s-curve columns are Scala-computed literals shared verbatim with
     // the query (Dedup.lshSCurve) so no engine pow() is in the hash.
+    // sigs, truj and every cand_<b>_<r> are read several times each and
+    // marked AS MATERIALIZED: DuckDB otherwise inlines every reference,
+    // recomputing the all-pairs join until it exhausts its temp disk.
     "q_dedup_lsh_design" -> {
       val layoutCtes = Dedup.LshLayouts.map { case (b, r) =>
         val bandsSel = (0 until b).map { j =>
@@ -2437,7 +2443,7 @@ object PipelinePack {
         }.mkString("\n    UNION ALL\n    ")
         s"""bands_${b}_$r AS (
            |    $bandsSel),
-           |cand_${b}_$r AS (
+           |cand_${b}_$r AS MATERIALIZED (
            |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
            |  FROM bands_${b}_$r x JOIN bands_${b}_$r y
            |    ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id),
@@ -2461,10 +2467,10 @@ object PipelinePack {
            |             / (SELECT count(*) FROM truj), 6) AS recall"""
           .stripMargin
       }.mkString("\nUNION ALL\n")
-      s"""WITH $minhashBandCtes,
+      s"""WITH ${minhashBandCtesFrom(sh, materializeSigs = true)},
          |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
          |${shingleInterCte("ti")},
-         |truj AS (
+         |truj AS MATERIALIZED (
          |  SELECT ti.doc_a, ti.doc_b FROM ti
          |  JOIN sizes sa ON sa.doc_id = ti.doc_a
          |  JOIN sizes sb ON sb.doc_id = ti.doc_b

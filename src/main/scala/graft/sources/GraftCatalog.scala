@@ -543,8 +543,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         "pin the file count of a flat table with write.orderBy/" +
         "write.sortBuckets instead")
     val live = GraftLog.latest(dir, hconf)
-    val byDir = live.groupBy(e =>
-      e.rel.substring(0, math.max(e.rel.lastIndexOf('/'), 0)))
+    val byDir = live.groupBy(e => GraftLog.dirOf(e.rel))
     val multi = byDir.filter { case (d, es) => d.nonEmpty && es.length > 1 }
     if (multi.isEmpty) return (0, 0)
     val keyFields = meta.partCols.map(c =>

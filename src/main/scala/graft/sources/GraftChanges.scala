@@ -188,25 +188,11 @@ class GraftChangesScan private[sources] (path: String, required: StructType,
     eventPartitions(math.max(0, fromVersion - 1), to)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // Slot per required column: index into the constant tuple (keys +
-    // _change_type + _commit_version) or PAYLOAD — same contract as the
-    // keyed scan, no _file slot (provenance IS the event here).
-    val slotOf: Array[Int] = required.fields.map { f =>
-      val k = extKeyFields.indexWhere(_.name.equalsIgnoreCase(f.name))
-      if (k >= 0) k else KeyedCsvSlots.Payload
-    }
-    val payloadRequired = StructType(
-      required.fields.zip(slotOf).collect {
-        case (f, KeyedCsvSlots.Payload) => f
-      })
-    val extra = CsvFilterEval.referenced(payloadFilters)
-      .filterNot(n => payloadRequired.fieldNames.exists(_.equalsIgnoreCase(n)))
-      .flatMap(n => payload.fields.find(_.name.equalsIgnoreCase(n)))
-    new KeyedCsvReaderFactory(required, payloadRequired,
-      StructType(payloadRequired.fields ++ extra), payloadFilters,
-      slotOf, conf, vectorized = false, limit = None, nullFill = true)
-  }
+  // The constant tuple is keys + _change_type + _commit_version; no
+  // _file slot (provenance IS the event here).
+  override def createReaderFactory(): PartitionReaderFactory =
+    KeyedCsvReaderFactory(required, payload, extKeyFields, payloadFilters,
+      fileSlot = false, conf, vectorized = false, limit = None, nullFill = true)
 
   /** Streaming face: one micro-batch per manifest range, inserts AND
     * deletes — the retraction-carrying source the appends-only stream

@@ -247,7 +247,7 @@ private[sources] case class CsvTruncSpec(col: StructField, len: Int)
   * partition key, the reported partitioning is the spec's transform. */
 private[sources] class DerivedCsvScanBuilder(path: String, full: StructType,
                                              spec: CsvDerivedSpec,
-                                             leaves: Array[(String, String)],
+                                             leaves: Array[(Seq[String], String)],
                                              conf: SerializableHadoopConf,
                                              vectorized: Boolean,
                                              nullFill: Boolean,
@@ -275,95 +275,11 @@ private[sources] class DerivedCsvScanBuilder(path: String, full: StructType,
 
   override def build(): Scan = {
     val keep = spec.staticKeep(payloadFilters)
-    val survivors = leaves.filter { case (raw, _) => keep(raw) }
     new KeyedCsvScan(path, required, payload = full,
       keyFields = Seq(spec.syntheticField),
-      leaves = survivors.map { case (raw, dir) => (Seq(raw), dir) },
+      leaves = leaves.filter { case (raws, _) => keep(raws.head) },
       partFilters = Array.empty, payloadFilters, conf, vectorized, limit,
       nullFill, zoneSkip, manifestFiles, maxVersionsPerTrigger,
       derivedSpec = Some(spec))
   }
-}
-
-/** The derived-partition writer: same rolling shape as the
-  * identity-key partitioned writer (input arrives clustered and sorted
-  * by the transform per the write's required distribution, so one
-  * sequential pass rolls one file per derived value), but the payload
-  * is the FULL schema — the derived value is a directory name, not a
-  * stripped column. */
-private[sources] class DerivedCsvWriter(tmpDir: String, schema: StructType,
-                                        spec: CsvDerivedSpec,
-                                        partitionId: Int, taskId: Long,
-                                        conf: SerializableHadoopConf,
-                                        stem: String,
-                                        trackZones: Boolean)
-    extends org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.connector.write.WriterCommitMessage
-
-  private val colIdx = schema.fieldNames.indexWhere(_.equalsIgnoreCase(spec.col.name))
-  require(colIdx >= 0, s"derived key column '${spec.col.name}' missing from write schema")
-  private val colType = schema(colIdx).dataType
-
-  private var currentRaw: String = _
-  private var current: GraftCsvDataWriter = _
-  private val committed = scala.collection.mutable.ArrayBuffer.empty[CsvFileCommit]
-  private var rolledRows = 0L
-  private var rolledBytes = 0L
-
-  private def rawFor(row: InternalRow): String = {
-    if (row.isNullAt(colIdx)) throw new IllegalArgumentException(
-      s"graft-csv: NULL value in derived partition key column " +
-        s"'${spec.col.name}' — derived keys must be non-null (same rule " +
-        "as identity partition keys)")
-    spec.rawOf(colType match {
-      case StringType => row.getUTF8String(colIdx)
-      case LongType => row.getLong(colIdx)
-      case IntegerType => row.getInt(colIdx)
-      case ShortType => row.getShort(colIdx)
-      case BooleanType => row.getBoolean(colIdx)
-      case other => throw new UnsupportedOperationException(
-        s"graft-csv sink: unsupported derived key type $other")
-    })
-  }
-
-  private def roll(raw: String): Unit = {
-    if (current != null) {
-      rolledRows += current.rows
-      rolledBytes += current.bytes
-      committed += current.commit().asInstanceOf[CsvFileCommit]
-    }
-    current = new GraftCsvDataWriter(tmpDir, schema, partitionId, taskId, conf,
-      f"${spec.dirName(raw)}/$stem-$partitionId%05d.csv", trackZones)
-    currentRaw = raw
-  }
-
-  override def write(row: InternalRow): Unit = {
-    val raw = rawFor(row)
-    if (current == null || currentRaw != raw) roll(raw)
-    current.write(row)
-  }
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
-    val liveRows = if (current != null) current.rows else 0L
-    val liveBytes = if (current != null) current.bytes else 0L
-    Array(PagedTaskMetric("csvRowsWritten", rolledRows + liveRows),
-      PagedTaskMetric("csvBytesWritten", rolledBytes + liveBytes),
-      PagedTaskMetric("csvFilesWritten",
-        committed.length + (if (current != null) 1L else 0L)))
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (current != null) {
-      rolledRows += current.rows
-      rolledBytes += current.bytes
-      committed += current.commit().asInstanceOf[CsvFileCommit]
-      current = null
-    }
-    CsvFilesCommit(committed.toSeq)
-  }
-
-  override def abort(): Unit = if (current != null) current.abort()
-
-  override def close(): Unit = ()
 }

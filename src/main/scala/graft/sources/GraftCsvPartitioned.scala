@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
@@ -25,7 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * convention) — a 100 TB table partitioned on grain keys never stores
   * the key bytes per row.
   *
-  * READ: the scan plans ONE input partition per LEAF directory, each
+  * READ ([[KeyedCsvScan]], the one CSV scan — a flat table is its
+  * zero-key case: one partition per part file, no grouping reported):
+  * the scan plans ONE input partition per LEAF directory, each
   * declaring its key tuple ([[HasPartitionKey]]), and reports
   * [[KeyGroupedPartitioning]] over `identity(k1), identity(k2), …` plus
   * a per-partition ordering on the keys ([[SupportsReportOrdering]] —
@@ -155,6 +157,14 @@ private[sources] object PartitionedCsvLayout {
     }
     (col +: childCols, leaves)
   }
+
+  /** [[listPartitionTree]], with a flat layout as the zero-key case:
+    * its root is the one leaf. */
+  def listLeaves(path: String,
+                 conf: Configuration): (Seq[String], Array[(Seq[String], String)]) = {
+    val (cols, leaves) = listPartitionTree(path, conf)
+    if (cols.isEmpty) (Nil, Array((Nil, path))) else (cols, leaves)
+  }
 }
 
 /** One leaf directory = one input partition, declaring its key tuple so
@@ -202,8 +212,9 @@ private[sources] class KeyedCsvScanBuilder(path: String, full: StructType,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** PARTIAL limit per leaf-directory partition (same contract as the
-    * flat scan); the engine's CollectLimit finishes globally. */
+  /** PARTIAL limit: each input partition stops parsing after n
+    * surviving rows (the engine's CollectLimit finishes globally) — on a
+    * many-file flat table, `LIMIT n` typically opens ONE file. */
   override def pushLimit(n: Int): Boolean = { limit = Some(n); true }
   override def isPartiallyPushed(): Boolean = true
 
@@ -276,7 +287,7 @@ class KeyedCsvScan private[sources] (path: String, required: StructType,
 
   override def description(): String =
     s"GraftCsvKeyed path=$path keys=${keyFields.map(_.name).mkString(",")} " +
-      s"partitions=${leaves.length} " +
+      s"leaves=${leaves.length} " +
       s"PartitionFilters: [${partFilters.mkString(", ")}] " +
       s"PushedFilters: [${payloadFilters.mkString(", ")}] " +
       s"ReadSchema: ${required.simpleString}" +
@@ -345,20 +356,24 @@ class KeyedCsvScan private[sources] (path: String, required: StructType,
   private lazy val zones: Map[String, CsvZones.CsvFileZones] =
     CsvZones.load(new HPath(path), conf.value)
 
-  /** Fully-qualified table root (leaf dirs come from listStatus, which
-    * qualifies: `file:/…`) — the prefix stripped to recover each file's
-    * root-relative publish name, the `_zones` entry key. */
-  private lazy val qualifiedRoot: String = {
-    val r = new HPath(path)
-    r.getFileSystem(conf.value).makeQualified(r).toString
+  /** Root-relative publish names of files in leaf `dir` — the `_zones`
+    * entry keys. */
+  private def relNames(dir: String, files: Array[String]): Array[String] = {
+    val relDir = GraftLog.relativize(new HPath(path), conf.value, dir)
+    files.map { f =>
+      val name = new HPath(f).getName
+      if (relDir.isEmpty) name else s"$relDir/$name"
+    }
   }
 
+  /** One partition per leaf with keys; with none (a flat table) one
+    * partition per part file. */
   override def planInputPartitions(): Array[InputPartition] = {
     val schemaJson = keySchema.json
     val keep = runtimeKeys
     val useZones = zoneSkip && payloadFilters.nonEmpty
     var skipped = 0
-    val parts = leaves.map { case (raws, dir) =>
+    val perLeaf = leaves.map { case (raws, dir) =>
       val pruned = keep.exists(_.exists { case (i, ks) =>
         !ks.contains(PartitionedCsvLayout.keyValue(raws(i), keyFields(i).dataType))
       })
@@ -368,29 +383,21 @@ class KeyedCsvScan private[sources] (path: String, required: StructType,
           val listed = listedOf(dir).map(_._1)
           if (!useZones || zones.isEmpty) listed
           else {
-            // zone entries are keyed by root-relative publish names
-            val relDir =
-              if (dir.startsWith(qualifiedRoot))
-                dir.substring(qualifiedRoot.length).dropWhile(_ == '/')
-              else if (dir.startsWith(path))
-                dir.substring(path.length).dropWhile(_ == '/')
-              else null
-            if (relDir == null) listed
-            else {
-              val kept = listed.filter { f =>
-                val rel = s"$relDir/${new HPath(f).getName}"
-                zones.get(rel).forall(z =>
-                  ZoneEval.mayMatch(payloadFilters, payload, z.cols))
-              }
-              skipped += listed.length - kept.length
-              kept
+            val kept = listed.zip(relNames(dir, listed)).collect {
+              case (f, rel) if zones.get(rel).forall(z =>
+                ZoneEval.mayMatch(payloadFilters, payload, z.cols)) => f
             }
+            skipped += listed.length - kept.length
+            kept
           }
         }
-      KeyedCsvPartition(raws, schemaJson, files): InputPartition
+      (raws, files)
     }
     skippedByZones = skipped
-    parts
+    perLeaf.flatMap { case (raws, files) =>
+      if (keyFields.nonEmpty) Array[InputPartition](KeyedCsvPartition(raws, schemaJson, files))
+      else files.map(f => KeyedCsvPartition(raws, schemaJson, Array(f)): InputPartition)
+    }
   }
 
   /** Post-static-pruning byte size (the honest estimate a join planner
@@ -432,12 +439,12 @@ class KeyedCsvScan private[sources] (path: String, required: StructType,
             scala.collection.mutable.ArrayBuffer.empty) += ((s.getPath.toString, s.getLen))
       }
     }
-    leaves.foreach { case (_, d) =>
-      fileCache.putIfAbsent(d,
-        byDir.get(d).map(_.sortBy(_._1).toArray).getOrElse(Array.empty))
-    }
+    // listed parents are qualified; a flat table's leaf is the root as given
     leaves.iterator.map { case (_, d) =>
-      byDir.get(d).map(_.iterator.map(_._2).sum).getOrElse(0L)
+      val files = byDir.get(fs.makeQualified(new HPath(d)).toString)
+        .map(_.sortBy(_._1).toArray).getOrElse(Array.empty[(String, Long)])
+      fileCache.putIfAbsent(d, files)
+      files.iterator.map(_._2).sum
     }.sum
   }
 
@@ -454,16 +461,8 @@ class KeyedCsvScan private[sources] (path: String, required: StructType,
       var sum = 0L
       var all = true
       leaves.foreach { case (_, dir) =>
-        val relDir =
-          if (dir.startsWith(qualifiedRoot))
-            dir.substring(qualifiedRoot.length).dropWhile(_ == '/')
-          else if (dir.startsWith(path))
-            dir.substring(path.length).dropWhile(_ == '/')
-          else null
-        if (relDir == null) all = false
-        else listedOf(dir).foreach { case (f, _) =>
-          if (all) zones.get(s"$relDir/${new HPath(f).getName}")
-            .flatMap(_.rows) match {
+        relNames(dir, listedOf(dir).map(_._1)).foreach { rel =>
+          if (all) zones.get(rel).flatMap(_.rows) match {
             case Some(r) => sum += r
             case None => all = false
           }
@@ -482,7 +481,8 @@ class KeyedCsvScan private[sources] (path: String, required: StructType,
   }
 
   /** The SPJ contract: rows are grouped by `identity(k1), identity(k2),
-    * …` with exactly one partition per key tuple. */
+    * …` with exactly one partition per key tuple. A flat table (no keys)
+    * promises no grouping. */
   override def outputPartitioning(): Partitioning = derivedSpec match {
     // derived mode: the reported transform is bucket(n, col) /
     // truncate(w, col) — resolved through the catalog's own V2
@@ -490,6 +490,7 @@ class KeyedCsvScan private[sources] (path: String, required: StructType,
     // storage-partition-join with zero exchange
     case Some(spec) =>
       new KeyGroupedPartitioning(Array(spec.transform), leaves.length)
+    case None if keyFields.isEmpty => new UnknownPartitioning(0)
     case None =>
       new KeyGroupedPartitioning(
         keyFields.map(f => Expressions.identity(f.name): Transform).toArray,
@@ -514,41 +515,18 @@ class KeyedCsvScan private[sources] (path: String, required: StructType,
     if (manifestFiles.isEmpty) throw new UnsupportedOperationException(
       "graft-csv: streaming reads require a VERSIONED catalog table " +
         "(TBLPROPERTIES('versioned'='true') — the commit log is the stream)")
-    val schemaJson = keySchema.json
     new GraftLogMicroBatchStream(path, keyFields, partFilters, conf,
-      createReaderFactory(),
-      (raws, file) => KeyedCsvPartition(raws, schemaJson, Array(file)),
-      maxVersionsPerTrigger)
+      createReaderFactory(), maxVersionsPerTrigger)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // A DATA column named _file hides the metadata column and parses
-    // from the payload like any other field (SupportsMetadataColumns
-    // contract; advice r13).
-    val fileIsData =
-      payload.fieldNames.exists(_.equalsIgnoreCase(GraftCsvTable.FileColumn))
-    // Slot per required column: key index (>= 0), PAYLOAD, or FILE —
-    // keys and _file are served by the reader wrapper, never parsed.
-    val slotOf: Array[Int] = required.fields.map { f =>
-      val k = keyFields.indexWhere(_.name.equalsIgnoreCase(f.name))
-      if (k >= 0) k
-      else if (!fileIsData &&
-        f.name.equalsIgnoreCase(GraftCsvTable.FileColumn)) KeyedCsvSlots.File
-      else KeyedCsvSlots.Payload
-    }
-    val payloadRequired = StructType(
-      required.fields.zip(slotOf).collect {
-        case (f, KeyedCsvSlots.Payload) => f
-      })
-    // Parse schema: required payload columns plus any payload-filtered
-    // columns pruning removed (same discipline as the flat scan).
-    val extra = CsvFilterEval.referenced(payloadFilters)
-      .filterNot(n => payloadRequired.fieldNames.exists(_.equalsIgnoreCase(n)))
-      .flatMap(n => payload.fields.find(_.name.equalsIgnoreCase(n)))
-    new KeyedCsvReaderFactory(required, payloadRequired,
-      StructType(payloadRequired.fields ++ extra), payloadFilters,
-      slotOf, conf, vectorized, pushedLimit, nullFill)
-  }
+  // A DATA column named _file hides the metadata column and parses from
+  // the payload like any other field (SupportsMetadataColumns contract;
+  // advice r13).
+  override def createReaderFactory(): PartitionReaderFactory =
+    KeyedCsvReaderFactory(required, payload, keyFields, payloadFilters,
+      fileSlot = !payload.fieldNames.exists(
+        _.equalsIgnoreCase(GraftCsvTable.FileColumn)),
+      conf, vectorized, pushedLimit, nullFill)
 }
 
 private[sources] object KeyedCsvSlots {
@@ -557,44 +535,112 @@ private[sources] object KeyedCsvSlots {
   val File: Int = -2
 }
 
+private[sources] object KeyedCsvReaderFactory {
+  /** The reader-factory prologue every CSV scan shares. Each required
+    * column gets a slot: an index into the partition-constant tuple
+    * (`constFields` — keys, plus the changefeed's two CDC columns), the
+    * `_file` metadata column (when `fileSlot`), or PAYLOAD. Constants
+    * and `_file` are served by the readers, never parsed; the parse
+    * schema is the required payload columns plus any payload-filtered
+    * column pruning removed (parsed for filter evaluation only). */
+  def apply(required: StructType, payload: StructType,
+            constFields: Seq[StructField], payloadFilters: Array[Filter],
+            fileSlot: Boolean, conf: SerializableHadoopConf,
+            vectorized: Boolean, limit: Option[Int],
+            nullFill: Boolean): KeyedCsvReaderFactory = {
+    val slotOf: Array[Int] = required.fields.map { f =>
+      val k = constFields.indexWhere(_.name.equalsIgnoreCase(f.name))
+      if (k >= 0) k
+      else if (fileSlot && f.name.equalsIgnoreCase(GraftCsvTable.FileColumn))
+        KeyedCsvSlots.File
+      else KeyedCsvSlots.Payload
+    }
+    val payloadRequired = StructType(
+      required.fields.zip(slotOf).collect {
+        case (f, KeyedCsvSlots.Payload) => f
+      })
+    val extra = CsvFilterEval.referenced(payloadFilters)
+      .filterNot(n => payloadRequired.fieldNames.exists(_.equalsIgnoreCase(n)))
+      .flatMap(n => payload.fields.find(_.name.equalsIgnoreCase(n)))
+    new KeyedCsvReaderFactory(required, payloadRequired,
+      StructType(payloadRequired.fields ++ extra), payloadFilters, slotOf,
+      conf, vectorized, limit, nullFill)
+  }
+}
+
 private[sources] class KeyedCsvReaderFactory(required: StructType,
                                              payloadRequired: StructType,
                                              parse: StructType,
                                              payloadFilters: Array[Filter],
                                              slotOf: Array[Int],
                                              conf: SerializableHadoopConf,
-                                             vectorized: Boolean = false,
-                                             limit: Option[Int] = None,
-                                             nullFill: Boolean = false)
+                                             vectorized: Boolean,
+                                             limit: Option[Int],
+                                             nullFill: Boolean)
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new KeyedCsvReader(p.asInstanceOf[KeyedCsvPartition], required,
-      payloadRequired, parse, payloadFilters, slotOf, conf, limit, nullFill)
+  private def files(p: InputPartition) =
+    new KeyedCsvFiles(p.asInstanceOf[KeyedCsvPartition], payloadRequired,
+      parse, payloadFilters, conf, nullFill)
 
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new KeyedCsvReader(files(p), required, slotOf, limit)
+
+  /** Columnar (vectorized) reads by default — `option("vectorized",
+    * "false")` falls back to the row reader. */
   override def supportColumnarReads(p: InputPartition): Boolean = vectorized
   override def createColumnarReader(
       p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new KeyedCsvColumnarReader(p.asInstanceOf[KeyedCsvPartition], required,
-      payloadRequired, parse, payloadFilters, slotOf, conf,
-      limit = limit, nullFill = nullFill)
+    new KeyedCsvColumnarReader(files(p), required, payloadRequired, slotOf,
+      limit = limit)
 }
 
-/** Columnar face of the keyed read: payload columns fill on-heap
-  * vectors ([[CsvValueIterator]] shared with the row face), while the
-  * partition keys — constant across the whole partition by construction
-  * — are [[ConstantColumnVector]]s set ONCE per partition: the keys
-  * cost zero bytes per row in the batch, the exact vector form of
-  * "the key is metadata, not data". */
-private[sources] class KeyedCsvColumnarReader(part: KeyedCsvPartition,
+/** One partition's part files, opened in turn as [[CsvValueIterator]]s
+  * (each only when the previous one is drained), plus the partition's
+  * constant key values — the state both reader faces share. */
+private[sources] class KeyedCsvFiles(val part: KeyedCsvPartition,
+                                     payloadRequired: StructType,
+                                     parse: StructType,
+                                     payloadFilters: Array[Filter],
+                                     conf: SerializableHadoopConf,
+                                     nullFill: Boolean) {
+  /** Typed JVM key values, in key-schema order. */
+  val keyValues: Array[Any] = part.keySchema.fields.zip(part.keyRaws).map {
+    case (f, raw) => PartitionedCsvLayout.keyValue(raw, f.dataType)
+  }
+  private var idx = 0
+  /** The open file's values; null between files. */
+  var it: CsvValueIterator = _
+  def file: String = part.files(idx - 1)
+
+  /** Opens the next file; false when none is left. */
+  def advance(): Boolean = {
+    close()
+    if (idx >= part.files.length) false
+    else {
+      it = new CsvValueIterator(part.files(idx), payloadRequired, parse,
+        payloadFilters, conf, nullFill)
+      idx += 1
+      true
+    }
+  }
+
+  def close(): Unit = if (it != null) { it.close(); it = null }
+}
+
+/** Columnar face of the CSV scan: surviving records append into on-heap
+  * column vectors and leave the source as [[ColumnarBatch]]es of up to
+  * 4096 rows; the engine's ColumnarToRow conversion runs inside
+  * whole-stage codegen reading the vectors directly. The partition keys
+  * — constant across the whole partition by construction — are
+  * [[ConstantColumnVector]]s set ONCE per partition: the keys cost zero
+  * bytes per row in the batch, the exact vector form of "the key is
+  * metadata, not data". */
+private[sources] class KeyedCsvColumnarReader(files: KeyedCsvFiles,
                                               required: StructType,
                                               payloadRequired: StructType,
-                                              parse: StructType,
-                                              payloadFilters: Array[Filter],
                                               slotOf: Array[Int],
-                                              conf: SerializableHadoopConf,
                                               batchSize: Int = 4096,
-                                              limit: Option[Int] = None,
-                                              nullFill: Boolean = false)
+                                              limit: Option[Int] = None)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
@@ -608,7 +654,7 @@ private[sources] class KeyedCsvColumnarReader(part: KeyedCsvPartition,
   private val fileVector: ConstantColumnVector =
     if (!hasFileCol) null else new ConstantColumnVector(batchSize, StringType)
   private val columns: Array[ColumnVector] = {
-    val keySchema = part.keySchema
+    val keySchema = files.part.keySchema
     val out = new Array[ColumnVector](required.length)
     var i = 0; var j = 0
     while (i < required.length) {
@@ -616,9 +662,8 @@ private[sources] class KeyedCsvColumnarReader(part: KeyedCsvPartition,
         case KeyedCsvSlots.File => out(i) = fileVector
         case KeyedCsvSlots.Payload => out(i) = payloadVectors(j); j += 1
         case k =>
-          val keyType = keySchema(k).dataType
-          val kv = new ConstantColumnVector(batchSize, keyType)
-          PartitionedCsvLayout.keyValue(part.keyRaws(k), keyType) match {
+          val kv = new ConstantColumnVector(batchSize, keySchema(k).dataType)
+          files.keyValues(k) match {
             case s: String => kv.setUtf8String(UTF8String.fromString(s))
             case l: Long => kv.setLong(l)
             case n: Int => kv.setInt(n)
@@ -634,23 +679,6 @@ private[sources] class KeyedCsvColumnarReader(part: KeyedCsvPartition,
   }
   private val batch = new ColumnarBatch(columns)
   private val types: Array[DataType] = payloadRequired.fields.map(_.dataType)
-
-  private var fileIdx = 0
-  private var it: CsvValueIterator = _
-
-  private def nextFile(): Boolean = {
-    if (it != null) { it.close(); it = null }
-    if (fileIdx >= part.files.length) false
-    else {
-      it = new CsvValueIterator(part.files(fileIdx), payloadRequired, parse,
-        payloadFilters, conf, nullFill)
-      if (fileVector != null)
-        fileVector.setUtf8String(UTF8String.fromString(part.files(fileIdx)))
-      fileIdx += 1
-      true
-    }
-  }
-
   private var emitted = 0L
 
   override def next(): Boolean = {
@@ -662,15 +690,18 @@ private[sources] class KeyedCsvColumnarReader(part: KeyedCsvPartition,
     if (cap <= 0) return false
     var n = 0
     while (n < cap) {
-      if (it == null) {
+      if (files.it == null) {
         // end the batch at a file boundary when _file is requested —
         // the constant vector must hold ONE value per batch
         if (hasFileCol && n > 0) { emitted += n; batch.setNumRows(n); return true }
-        if (!nextFile()) {
+        if (!files.advance()) {
           if (n == 0) return false
           emitted += n; batch.setNumRows(n); return true
         }
+        if (fileVector != null)
+          fileVector.setUtf8String(UTF8String.fromString(files.file))
       }
+      val it = files.it
       if (it.next()) {
         var j = 0
         while (j < types.length) {
@@ -693,7 +724,7 @@ private[sources] class KeyedCsvColumnarReader(part: KeyedCsvPartition,
           j += 1
         }
         n += 1
-      } else { it.close(); it = null }
+      } else files.close()
     }
     emitted += n
     batch.setNumRows(n)
@@ -701,80 +732,64 @@ private[sources] class KeyedCsvColumnarReader(part: KeyedCsvPartition,
   }
 
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
-  override def close(): Unit = { batch.close(); if (it != null) it.close() }
+  override def close(): Unit = { batch.close(); files.close() }
 }
 
-/** Streams every part file of one leaf directory through the flat CSV
-  * reader, re-inserting the (constant) partition keys into their
-  * projected positions. The keys never exist in the payload bytes —
-  * they cost one catalyst value per PARTITION, not per row. */
-private[sources] class KeyedCsvReader(part: KeyedCsvPartition,
+/** Row face of the CSV scan: one [[GenericInternalRow]] per surviving
+  * record, straight off [[CsvValueIterator]]'s values, with the
+  * (constant) partition keys and `_file` placed at their projected
+  * positions. The keys never exist in the payload bytes — they cost one
+  * catalyst value per PARTITION, not per row. With a pushed `limit` the
+  * partition stops PARSING after that many rows (partial-limit
+  * contract — the engine's CollectLimit finishes). */
+private[sources] class KeyedCsvReader(files: KeyedCsvFiles,
                                       required: StructType,
-                                      payloadRequired: StructType,
-                                      parse: StructType,
-                                      payloadFilters: Array[Filter],
                                       slotOf: Array[Int],
-                                      conf: SerializableHadoopConf,
-                                      limit: Option[Int] = None,
-                                      nullFill: Boolean = false)
+                                      limit: Option[Int])
     extends PartitionReader[InternalRow] {
-  private val keyValues: Array[Any] = {
-    val ks = part.keySchema
-    ks.fields.zip(part.keyRaws).map { case (f, raw) =>
-      PartitionedCsvLayout.catalystKey(raw, f.dataType)
-    }.toArray[Any]
+  private val keyValues: Array[Any] = files.keyValues.map {
+    case s: String => UTF8String.fromString(s)
+    case v => v
   }
-  private val passthrough = slotOf.forall(_ == KeyedCsvSlots.Payload)
-  private var fileIdx = 0
   private var emitted = 0L
-  private var inner: GraftCsvPartitionReader = _
   private var currentFile: UTF8String = _
   private var row: InternalRow = _
-
-  private def nextInner(): Boolean = {
-    if (inner != null) { inner.close(); inner = null }
-    if (fileIdx >= part.files.length) false
-    else {
-      inner = new GraftCsvPartitionReader(part.files(fileIdx), payloadRequired,
-        payloadRequired, parse, payloadFilters, conf, None, -1, nullFill)
-      currentFile = UTF8String.fromString(part.files(fileIdx))
-      fileIdx += 1
-      true
-    }
-  }
 
   override def next(): Boolean = {
     if (limit.exists(emitted >= _)) return false
     while (true) {
-      if (inner == null && !nextInner()) return false
-      if (inner.next()) {
-        val payloadRow = inner.get()
-        row =
-          if (passthrough) payloadRow
-          else {
-            val out = new Array[Any](required.length)
-            var i = 0; var j = 0
-            while (i < required.length) {
-              slotOf(i) match {
-                case KeyedCsvSlots.File => out(i) = currentFile
-                case KeyedCsvSlots.Payload =>
-                  out(i) = payloadRow.get(j, payloadRequired(j).dataType); j += 1
-                case k => out(i) = keyValues(k)
+      if (files.it == null) {
+        if (!files.advance()) return false
+        currentFile = UTF8String.fromString(files.file)
+      }
+      val it = files.it
+      if (it.next()) {
+        val out = new Array[Any](required.length)
+        var i = 0; var j = 0
+        while (i < required.length) {
+          slotOf(i) match {
+            case KeyedCsvSlots.File => out(i) = currentFile
+            case KeyedCsvSlots.Payload =>
+              out(i) = it.values(j) match {
+                case s: String => UTF8String.fromString(s)
+                case v => v
               }
-              i += 1
-            }
-            new GenericInternalRow(out)
+              j += 1
+            case k => out(i) = keyValues(k)
           }
+          i += 1
+        }
+        row = new GenericInternalRow(out)
         emitted += 1
         return true
       }
-      inner.close(); inner = null
+      files.close()
     }
     false // unreachable
   }
 
   override def get(): InternalRow = row
-  override def close(): Unit = if (inner != null) inner.close()
+  override def close(): Unit = files.close()
 }
 
 /** Commit message for a task that published SEVERAL files (one per key
@@ -782,28 +797,35 @@ private[sources] class KeyedCsvReader(part: KeyedCsvPartition,
 private[sources] case class CsvFilesCommit(files: Seq[CsvFileCommit])
   extends WriterCommitMessage
 
-/** The partitioned writer: the engine has already clustered AND sorted
-  * this task's rows by the keys (RequiresDistributionAndOrdering), so
-  * key tuples arrive as contiguous runs — each run streams to one temp
-  * file destined for `<c1>=<v1>/…/<cN>=<vN>/part-<partition>.csv`.
-  * Because a key tuple lives in exactly one cluster partition, each
-  * leaf directory receives exactly one file per write. */
-private[sources] class GraftCsvPartitionedWriter(tmpDir: String,
-                                                 schema: StructType,
-                                                 partCols: Seq[String],
-                                                 partitionId: Int, taskId: Long,
-                                                 conf: SerializableHadoopConf,
-                                                 stem: String = "part",
-                                                 trackZones: Boolean = false)
+/** The rolling writer of the partitioned layouts. The engine has
+  * already clustered AND sorted this task's rows by the layout's keys
+  * (RequiresDistributionAndOrdering), so destination directories arrive
+  * as contiguous runs — each run streams to one temp file destined for
+  * `<dir>/<stem>-<partition>.csv`. Because a key lives in exactly one
+  * cluster partition, each directory receives exactly one file per
+  * write. The layouts differ only in `dirOf` (the row's key values →
+  * its directory) and in whether the key columns are stripped from the
+  * payload: identity keys live in the directory names only (hive
+  * convention), a derived key's source column stays data. */
+private[sources] class CsvRollingWriter(tmpDir: String, schema: StructType,
+                                        keyCols: Seq[String],
+                                        dirOf: Array[Any] => String,
+                                        stripKeys: Boolean,
+                                        partitionId: Int, taskId: Long,
+                                        conf: SerializableHadoopConf,
+                                        stem: String, trackZones: Boolean)
     extends DataWriter[InternalRow] {
-  private val keyIdx: Array[Int] = partCols.map(c =>
-    schema.fieldNames.indexWhere(_.equalsIgnoreCase(c))).toArray
-  private val keyTypes: Array[DataType] = keyIdx.map(schema(_).dataType)
+  private val keyIdx: Array[Int] = keyCols.map { c =>
+    val i = schema.fieldNames.indexWhere(_.equalsIgnoreCase(c))
+    require(i >= 0, s"partition column '$c' missing from the write schema")
+    i
+  }.toArray
   private val payloadIdx: Array[Int] =
-    schema.fields.indices.filterNot(keyIdx.contains).toArray
+    if (stripKeys) schema.fields.indices.filterNot(keyIdx.contains).toArray
+    else schema.fields.indices.toArray
   private val payload = StructType(payloadIdx.map(schema(_)))
 
-  private var currentKey: String = _ // encoded rel dir; null = no file open
+  private var currentDir: String = _ // null = no file open
   private var current: GraftCsvDataWriter = _
   private val committed = scala.collection.mutable.ArrayBuffer.empty[CsvFileCommit]
   // metrics carried across rolled files (the current file's live
@@ -811,61 +833,32 @@ private[sources] class GraftCsvPartitionedWriter(tmpDir: String,
   private var rolledRows = 0L
   private var rolledBytes = 0L
 
-  private def keyString(row: InternalRow, k: Int): String = {
-    val i = keyIdx(k)
-    if (row.isNullAt(i)) throw new IllegalArgumentException(
-      s"graft-csv sink: NULL value in partition column '${partCols(k)}' — " +
-        "partition keys must be non-null")
-    keyTypes(k) match {
-      case StringType => row.getUTF8String(i).toString
-      case LongType => row.getLong(i).toString
-      case IntegerType => row.getInt(i).toString
-      case ShortType => row.getShort(i).toString
-      case BooleanType => row.getBoolean(i).toString
-      case other => throw new UnsupportedOperationException(
-        s"graft-csv sink: unsupported partition key type $other")
-    }
-  }
+  private def rowDir(row: InternalRow): String =
+    dirOf(keyIdx.map { i =>
+      if (row.isNullAt(i)) throw new IllegalArgumentException(
+        s"graft-csv sink: NULL value in partition column '${schema(i).name}' " +
+          "— partition keys (identity or derived) must be non-null")
+      row.get(i, schema(i).dataType)
+    })
 
-  /** Nested relative directory for this row's key tuple. */
-  private def keyDir(row: InternalRow): String =
-    partCols.indices.map(k =>
-      s"${partCols(k)}=${PartitionedCsvLayout.encode(keyString(row, k))}")
-      .mkString("/")
-
-  private def roll(dir: String): Unit = {
-    if (current != null) {
-      rolledRows += current.rows
-      rolledBytes += current.bytes
-      committed += current.commit().asInstanceOf[CsvFileCommit]
-    }
-    current = new GraftCsvDataWriter(tmpDir, payload, partitionId, taskId, conf,
-      f"$dir/$stem-$partitionId%05d.csv", trackZones)
-    currentKey = dir
+  private def finishCurrent(): Unit = if (current != null) {
+    committed += current.commit().asInstanceOf[CsvFileCommit]
+    rolledRows += current.rows
+    rolledBytes += current.bytes
+    current = null
   }
 
   override def write(row: InternalRow): Unit = {
-    val dir = keyDir(row)
-    if (currentKey == null || currentKey != dir) roll(dir)
-    // project the payload columns into the inner writer's schema order
-    val out = new Array[Any](payloadIdx.length)
-    var i = 0
-    while (i < payloadIdx.length) {
-      out(i) = if (row.isNullAt(payloadIdx(i))) null
-        else payload(i).dataType match {
-          case StringType => row.getUTF8String(payloadIdx(i))
-          case LongType => row.getLong(payloadIdx(i))
-          case IntegerType => row.getInt(payloadIdx(i))
-          case ShortType => row.getShort(payloadIdx(i))
-          case DoubleType => row.getDouble(payloadIdx(i))
-          case FloatType => row.getFloat(payloadIdx(i))
-          case BooleanType => row.getBoolean(payloadIdx(i))
-          case other => throw new UnsupportedOperationException(
-            s"graft-csv sink: unsupported column type $other")
-        }
-      i += 1
+    val dir = rowDir(row)
+    if (currentDir == null || currentDir != dir) {
+      finishCurrent()
+      current = new GraftCsvDataWriter(tmpDir, payload, partitionId, taskId,
+        conf, f"$dir/$stem-$partitionId%05d.csv", trackZones)
+      currentDir = dir
     }
-    current.write(new GenericInternalRow(out))
+    current.write(
+      if (!stripKeys) row
+      else new GenericInternalRow(payloadIdx.map(i => row.get(i, schema(i).dataType))))
   }
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
@@ -878,16 +871,38 @@ private[sources] class GraftCsvPartitionedWriter(tmpDir: String,
   }
 
   override def commit(): WriterCommitMessage = {
-    if (current != null) {
-      rolledRows += current.rows
-      rolledBytes += current.bytes
-      committed += current.commit().asInstanceOf[CsvFileCommit]
-      current = null
-    }
+    finishCurrent()
     CsvFilesCommit(committed.toSeq)
   }
 
   override def abort(): Unit = if (current != null) current.abort()
 
   override def close(): Unit = ()
+}
+
+private[sources] object CsvRollingWriter {
+  /** The one writer choice every batch and streaming writer factory
+    * makes: a derived layout rolls per `spec` directory (full payload),
+    * an identity-keyed one per `k1=v1/…` tuple (keys stripped), and a
+    * flat table writes one file per task. */
+  def forLayout(tmpDir: String, schema: StructType, partitioned: Seq[String],
+                derivedSpec: Option[CsvDerivedSpec], partitionId: Int,
+                taskId: Long, conf: SerializableHadoopConf, stem: String,
+                trackZones: Boolean): DataWriter[InternalRow] = {
+    def rolling(keys: Seq[String], dirOf: Array[Any] => String, strip: Boolean) =
+      new CsvRollingWriter(tmpDir, schema, keys, dirOf, strip, partitionId,
+        taskId, conf, stem, trackZones)
+    derivedSpec match {
+      case Some(spec) =>
+        rolling(Seq(spec.col.name), ks => spec.dirName(spec.rawOf(ks(0))),
+          strip = false)
+      case None if partitioned.nonEmpty =>
+        rolling(partitioned, ks => partitioned.indices.map(k =>
+          s"${partitioned(k)}=${PartitionedCsvLayout.encode(ks(k).toString)}")
+          .mkString("/"), strip = true)
+      case None =>
+        new GraftCsvDataWriter(tmpDir, schema, partitionId, taskId, conf,
+          f"$stem-$partitionId%05d.csv", trackZones)
+    }
+  }
 }

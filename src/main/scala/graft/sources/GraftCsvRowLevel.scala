@@ -121,23 +121,12 @@ private[sources] class GraftCowScan(op: GraftCsvRowLevelOperation,
     * rewrite), from the filesystem otherwise. */
   private lazy val allFiles: Array[(Seq[String], String)] =
     if (versioned)
-      GraftLog.latest(new HPath(path), conf.value).toArray.map { e =>
-        val raws = e.rel.split('/').dropRight(1).toSeq.map(seg =>
-          PartitionedCsvLayout.decode(seg.substring(seg.indexOf('=') + 1)))
-        (raws, s"$path/${e.rel}")
-      }
-    else if (derivedSpec.isDefined) {
-      // bucketed layout: files live under <col>_bucket=<id>/ dirs (the
-      // raws are cosmetic here — COW groups by _file, not by key)
-      val (_, leaves) = PartitionedCsvLayout.listPartitionTree(path, conf.value)
-      leaves.flatMap { case (raws, dir) =>
-        GraftCsvTable.listPartFiles(dir, conf.value).map(f => (raws, f))
-      }
-    }
-    else if (partCols.isEmpty)
-      GraftCsvTable.listPartFiles(path, conf.value).map(f => (Nil: Seq[String], f))
+      GraftLog.latest(new HPath(path), conf.value).toArray.map(e =>
+        (GraftLog.rawsOf(e.rel), s"$path/${e.rel}"))
     else {
-      val (_, leaves) = PartitionedCsvLayout.listPartitionTree(path, conf.value)
+      // derived layouts' raws (bucket ids, truncations) are cosmetic
+      // here — COW groups by _file, not by key
+      val (_, leaves) = PartitionedCsvLayout.listLeaves(path, conf.value)
       leaves.flatMap { case (raws, dir) =>
         GraftCsvTable.listPartFiles(dir, conf.value).map(f => (raws, f))
       }
@@ -170,23 +159,11 @@ private[sources] class GraftCowScan(op: GraftCsvRowLevelOperation,
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // slots: key index / payload / the _file group id (required schema
-    // always carries _file here — it IS the group attribute)
-    val slotOf: Array[Int] = required.fields.map { f =>
-      val k = keyFields.indexWhere(_.name.equalsIgnoreCase(f.name))
-      if (k >= 0) k
-      else if (f.name.equalsIgnoreCase(GraftCsvTable.FileColumn)) KeyedCsvSlots.File
-      else KeyedCsvSlots.Payload
-    }
-    val payloadRequired = StructType(
-      required.fields.zip(slotOf).collect {
-        case (f, KeyedCsvSlots.Payload) => f
-      })
-    new KeyedCsvReaderFactory(required, payloadRequired, payloadRequired,
-      Array.empty, slotOf, conf, vectorized = false, limit = None,
-      nullFill = true)
-  }
+  // the required schema always carries _file here — it IS the group
+  // attribute; no filters (every row of a group is rewritten)
+  override def createReaderFactory(): PartitionReaderFactory =
+    KeyedCsvReaderFactory(required, payload, keyFields, Array.empty,
+      fileSlot = true, conf, vectorized = false, limit = None, nullFill = true)
 }
 
 /** The replace-data write: rewritten rows cluster on the partition keys
@@ -251,11 +228,8 @@ private[sources] class GraftCowBatchWrite(op: GraftCsvRowLevelOperation,
     val fs = root.getFileSystem(conf.value)
     fs.mkdirs(root)
     // 1. publish the rewritten groups (fresh names — no collisions)
-    GraftCsvCommit.publish(fs, root, messages)
-    val files = messages.flatMap {
-      case f: CsvFileCommit => Seq(f)
-      case CsvFilesCommit(fsq) => fsq
-    }.toSeq
+    val files = GraftCsvCommit.files(messages)
+    GraftCsvCommit.publish(fs, root, files)
     // rewritten groups keep their data-skipping ability: same tagged-
     // write zone sidecar as a catalog INSERT (replaced files' entries
     // go stale harmlessly — their names are never reused)

@@ -15,7 +15,6 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.sources.{AlwaysTrue, And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Serializable carrier for the SESSION's Hadoop configuration: scan and
   * write factories ship it to executors so `spark.hadoop.*` settings
@@ -295,83 +294,63 @@ private[sources] class GraftCsvTable(path: String, tableSchema: StructType,
     val maxVersions = Option(options.get("maxVersionsPerTrigger")).map(_.toInt)
     // catalog reads null-fill columns missing from an old part file's
     // header (schema evolution); path reads keep the loud error (a
-    // user-typed schema with a typo'd column should fail, not null out)
-    if (catalogVersioned) {
-      // versioned tables LIST NOTHING: the manifest (current or AS OF)
-      // is the file list, the partition tree, and the size statistics
-      val root = new HPath(path)
-      val entries = asOfVersion match {
-        case Some(v) => GraftLog.read(root, conf.value, v)
-        case None => GraftLog.latest(root, conf.value)
+    // user-typed schema with a typo'd column should fail, not null out).
+    // Every layout is (key columns, leaves): one (key raws, directory)
+    // per partition directory — a flat table is the zero-key case, its
+    // root the one leaf.
+    val root = new HPath(path)
+    val (keyCols, leaves, manifestFiles) =
+      if (catalogVersioned) {
+        // versioned tables LIST NOTHING: the manifest (current or AS OF)
+        // is the file list, the partition tree, and the size statistics
+        val entries = asOfVersion match {
+          case Some(v) => GraftLog.read(root, conf.value, v)
+          case None => GraftLog.latest(root, conf.value)
+        }
+        val byDir = entries.groupBy(e => GraftLog.dirOf(e.rel)).toArray.sortBy(_._1)
+          .map { case (relDir, es) =>
+            (relDir, if (relDir.isEmpty) path else s"$path/$relDir", es)
+          }
+        val isLeaf: String => Boolean = catalogDerived match {
+          case Some(spec) => _.startsWith(spec.dirPrefix)
+          case None => _.isEmpty == catalogPartitionCols.isEmpty
+        }
+        (catalogPartitionCols,
+          byDir.collect { case (relDir, dir, es) if isLeaf(relDir) =>
+            (GraftLog.rawsOf(es.head.rel), dir)
+          },
+          Some(byDir.map { case (_, dir, es) =>
+            dir -> es.map(e => (s"$path/${e.rel}", e.bytes)).sortBy(_._1).toArray
+          }.toMap))
+      } else catalogDerived match {
+        case Some(spec) =>
+          // unversioned derived catalog table: derived dirs from one listing
+          val fs = root.getFileSystem(conf.value)
+          val derivedDirs =
+            if (!fs.exists(root)) Array.empty[(Seq[String], String)]
+            else fs.listStatus(root).collect {
+              case s if s.isDirectory && s.getPath.getName.startsWith(spec.dirPrefix) =>
+                (Seq(PartitionedCsvLayout.decode(
+                  s.getPath.getName.substring(spec.dirPrefix.length))),
+                  s.getPath.toString)
+            }.sortBy(_._1.head)
+          (Nil, derivedDirs, None)
+        case None =>
+          // Layout sniff (ONE listing): a root holding key=value
+          // directories was written with partitionedBy — key-grouped
+          // partitions (storage-partitioned joins, planning-time pruning)
+          val (cols, ls) = PartitionedCsvLayout.listLeaves(path, conf.value)
+          (cols, ls, None)
       }
-      if (catalogDerived.isDefined) {
-        val spec = catalogDerived.get
-        // derived leaves straight off the manifest rel dirs
-        val byDir = entries.groupBy(e =>
-          e.rel.substring(0, e.rel.lastIndexOf('/').max(0)))
-        val leaves = byDir.keys.filter(_.startsWith(spec.dirPrefix))
-          .toArray.sorted.map { relDir =>
-            (PartitionedCsvLayout.decode(
-              relDir.substring(spec.dirPrefix.length)), s"$path/$relDir")
-          }
-        val manifestFiles: Map[String, Array[(String, Long)]] =
-          byDir.map { case (relDir, es) =>
-            s"$path/$relDir" ->
-              es.map(e => (s"$path/${e.rel}", e.bytes)).sortBy(_._1).toArray
-          }
+    catalogDerived match {
+      case Some(spec) =>
         new DerivedCsvScanBuilder(path, tableSchema, spec, leaves, conf,
           vectorized, nullFill = catalogManaged, zoneSkip = zoneSkip,
-          manifestFiles = Some(manifestFiles),
-          maxVersionsPerTrigger = maxVersions)
-      } else if (catalogPartitionCols.isEmpty)
-        new GraftCsvScanBuilder(path, tableSchema, vectorized,
-          nullFill = catalogManaged, zoneSkip = zoneSkip,
-          manifest = Some(entries), maxVersionsPerTrigger = maxVersions)
-      else {
-        // leaves from manifest rel dirs (nesting order = segment order)
-        val byDir = entries.groupBy(e =>
-          e.rel.substring(0, e.rel.lastIndexOf('/').max(0)))
-        val leaves = byDir.keys.filter(_.nonEmpty).toArray.sorted.map { relDir =>
-          val raws = relDir.split('/').toSeq.map(seg =>
-            PartitionedCsvLayout.decode(seg.substring(seg.indexOf('=') + 1)))
-          (raws, s"$path/$relDir")
-        }
-        val manifestFiles: Map[String, Array[(String, Long)]] =
-          byDir.map { case (relDir, es) =>
-            s"$path/$relDir" ->
-              es.map(e => (s"$path/${e.rel}", e.bytes)).sortBy(_._1).toArray
-          }
-        new KeyedCsvScanBuilder(path, tableSchema, catalogPartitionCols,
-          leaves, conf, vectorized, nullFill = catalogManaged,
-          zoneSkip = zoneSkip, manifestFiles = Some(manifestFiles),
-          maxVersionsPerTrigger = maxVersions)
-      }
-    } else if (catalogDerived.isDefined) {
-      // unversioned derived catalog table: derived dirs from one listing
-      val spec = catalogDerived.get
-      val root = new HPath(path)
-      val fs = root.getFileSystem(conf.value)
-      val leaves: Array[(String, String)] =
-        if (!fs.exists(root)) Array.empty
-        else fs.listStatus(root).collect {
-          case s if s.isDirectory && s.getPath.getName.startsWith(spec.dirPrefix) =>
-            (PartitionedCsvLayout.decode(
-              s.getPath.getName.substring(spec.dirPrefix.length)),
-              s.getPath.toString)
-        }.sortBy(_._1)
-      new DerivedCsvScanBuilder(path, tableSchema, spec, leaves, conf,
-        vectorized, nullFill = catalogManaged, zoneSkip = zoneSkip)
-    } else {
-      // Layout sniff (ONE listing): a root holding key=value directories
-      // was written with partitionedBy — serve it through the key-grouped
-      // scan (storage-partitioned joins, planning-time pruning).
-      val (keyCols, leaves) =
-        PartitionedCsvLayout.listPartitionTree(path, conf.value)
-      if (keyCols.isEmpty)
-        new GraftCsvScanBuilder(path, tableSchema, vectorized,
-          nullFill = catalogManaged, zoneSkip = zoneSkip)
-      else new KeyedCsvScanBuilder(path, tableSchema, keyCols, leaves,
-        conf, vectorized, nullFill = catalogManaged, zoneSkip = zoneSkip)
+          manifestFiles = manifestFiles, maxVersionsPerTrigger = maxVersions)
+      case None =>
+        new KeyedCsvScanBuilder(path, tableSchema, keyCols, leaves, conf,
+          vectorized, nullFill = catalogManaged, zoneSkip = zoneSkip,
+          manifestFiles = manifestFiles, maxVersionsPerTrigger = maxVersions)
     }
   }
 
@@ -418,12 +397,8 @@ private[sources] class GraftCsvTable(path: String, tableSchema: StructType,
           "graft-csv: predicate DELETE requires a partitioned table")
       GraftLog.commit(root, conf, live =>
         if (keyFilters.isEmpty) Nil
-        else live.filterNot { e =>
-          val raws = e.rel.split('/').dropRight(1).toSeq.map(seg =>
-            PartitionedCsvLayout.decode(seg.substring(seg.indexOf('=') + 1)))
-          keyFilters.forall(CsvFilterEval.eval(_,
-            KeyedCsvScan.keyLookup(ks, raws)))
-        })
+        else live.filterNot(e => keyFilters.forall(CsvFilterEval.eval(_,
+          KeyedCsvScan.keyLookup(ks, GraftLog.rawsOf(e.rel))))))
       return
     }
     if (keyFilters.isEmpty) {
@@ -580,269 +555,6 @@ private[sources] object CsvFilterEval {
   /** SQL WHERE semantics: UNKNOWN is not-true → row dropped. */
   def eval(f: Filter, valueOf: String => Any): Boolean =
     eval3(f, valueOf).contains(true)
-}
-
-private[sources] class GraftCsvScanBuilder(path: String, full: StructType,
-                                           vectorized: Boolean = false,
-                                           nullFill: Boolean = false,
-                                           zoneSkip: Boolean = true,
-                                           manifest: Option[Seq[GraftLog.Entry]] = None,
-                                           maxVersionsPerTrigger: Option[Int] = None)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = full
-  private var pushed: Array[Filter] = Array.empty
-  private var limit: Option[Int] = None
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, rest) = filters.partition(CsvFilterEval.supportedBy(full, _))
-    pushed = supported
-    rest // residual: shapes/types this dialect can't evaluate
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  /** PARTIAL limit (each part-file partition stops parsing after n
-    * surviving rows; the engine's CollectLimit finishes) — with the
-    * incremental take, `LIMIT n` over a many-file table typically opens
-    * ONE file. Same contract as the paged source's pushLimit. */
-  override def pushLimit(n: Int): Boolean = { limit = Some(n); true }
-  override def isPartiallyPushed(): Boolean = true
-  override def build(): Scan =
-    new GraftCsvScan(path, required, full, pushed,
-      SerializableHadoopConf.fromSession(), vectorized, limit, nullFill,
-      zoneSkip, manifest, maxVersionsPerTrigger)
-}
-
-private[sources] case class CsvFilePartition(file: String) extends InputPartition
-
-// Public like PagedScan so PlanHygieneSpec can read `pushed` off the plan.
-class GraftCsvScan private[sources] (path: String, required: StructType,
-                                     full: StructType, val pushed: Array[Filter],
-                                     conf: SerializableHadoopConf,
-                                     vectorized: Boolean = false,
-                                     val pushedLimit: Option[Int] = None,
-                                     nullFill: Boolean = false,
-                                     zoneSkip: Boolean = true,
-                                     manifest: Option[Seq[GraftLog.Entry]] = None,
-                                     maxVersionsPerTrigger: Option[Int] = None)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"GraftCsv path=$path ReadSchema: ${required.simpleString} " +
-      s"PushedFilters: [${pushed.mkString(", ")}]" +
-      pushedLimit.map(n => s" PushedLimit: $n").getOrElse("")
-  /** Files the zone maps excluded at the last planning (spec surface —
-    * the plan itself only shows the surviving partition count). */
-  @volatile private var skippedByZones: Int = 0
-  def zoneSkipped: Int = skippedByZones
-  // Metadata-only planning: one partition per committed part file —
-  // from the version manifest when one governs this read (versioned
-  // tables list NOTHING), otherwise from one directory listing — minus
-  // files whose zone maps prove no pushed filter can match (tagged
-  // writes persist per-file min/max — see CsvZones).
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = manifest match {
-      case Some(entries) => entries.map(e => s"$path/${e.rel}").toArray
-      case None => GraftCsvTable.listPartFiles(path, conf.value)
-    }
-    val kept =
-      if (!zoneSkip || pushed.isEmpty) files
-      else {
-        if (zones.isEmpty) files
-        else files.filter { f =>
-          zones.get(new HPath(f).getName)
-            .forall(z => ZoneEval.mayMatch(pushed, full, z.cols))
-        }
-      }
-    skippedByZones = files.length - kept.length
-    kept.map(CsvFilePartition(_): InputPartition)
-  }
-
-  private lazy val zones: Map[String, CsvZones.CsvFileZones] =
-    CsvZones.load(new HPath(path), conf.value)
-
-  /** Table statistics for the planner — the flat-layout twin of
-    * [[KeyedCsvScan.estimateStatistics]]. Bytes come off the manifest
-    * on versioned reads (zero filesystem ops) or one listing
-    * otherwise; rows are the exact per-file counts the `_zones`
-    * sidecars record at commit (r15), reported only when EVERY live
-    * file carries one — a partial sum would mislead the planner.
-    * Without this a DSV2 relation defaults to `defaultSizeInBytes`,
-    * which is never broadcastable. */
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val (bytes, names): (Long, Array[String]) = manifest match {
-      case Some(entries) =>
-        (entries.map(e => math.max(0L, e.bytes)).sum,
-          entries.map(_.rel).toArray)
-      case None =>
-        val fs = new HPath(path).getFileSystem(conf.value)
-        val files = GraftCsvTable.listPartFiles(path, conf.value)
-        (files.map(f => fs.getFileStatus(new HPath(f)).getLen).sum,
-          files.map(f => new HPath(f).getName))
-    }
-    val rows: Option[Long] =
-      if (zones.isEmpty) None
-      else {
-        var sum = 0L
-        var all = true
-        names.foreach { n =>
-          if (all) zones.get(n).flatMap(_.rows) match {
-            case Some(r) => sum += r
-            case None => all = false
-          }
-        }
-        if (all) Some(sum) else None
-      }
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong =
-        rows.fold(java.util.OptionalLong.empty())(java.util.OptionalLong.of)
-    }
-  }
-  /** Streaming face (versioned tables only) — the flat-layout twin of
-    * [[KeyedCsvScan.toMicroBatchStream]]. */
-  override def toMicroBatchStream(
-      checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    if (manifest.isEmpty) throw new UnsupportedOperationException(
-      "graft-csv: streaming reads require a VERSIONED catalog table " +
-        "(TBLPROPERTIES('versioned'='true') — the commit log is the stream)")
-    new GraftLogMicroBatchStream(path, Nil, Array.empty, conf,
-      createReaderFactory(), (_, file) => CsvFilePartition(file),
-      maxVersionsPerTrigger)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // The _file metadata column is served by the reader wrapper, not
-    // parsed from the payload — strip it before building parse schemas.
-    // UNLESS the table's data schema itself claims the name: a data
-    // column hides the metadata column (SupportsMetadataColumns
-    // contract) and parses from the payload normally (advice r13).
-    val filePos =
-      if (full.fieldNames.exists(_.equalsIgnoreCase(GraftCsvTable.FileColumn))) -1
-      else required.fieldNames.indexWhere(
-        _.equalsIgnoreCase(GraftCsvTable.FileColumn))
-    val payloadRequired =
-      if (filePos < 0) required
-      else StructType(required.fields.patch(filePos, Nil, 1))
-    // Parse schema = required output columns plus any filtered columns
-    // pruning removed (a fully-pushed filter's column need not survive
-    // in the read schema); extras are parsed for evaluation only.
-    val extra = CsvFilterEval.referenced(pushed)
-      .filterNot(n => payloadRequired.fieldNames.exists(_.equalsIgnoreCase(n)))
-      .flatMap(n => full.fields.find(_.name.equalsIgnoreCase(n)))
-    new GraftCsvReaderFactory(required, payloadRequired,
-      StructType(payloadRequired.fields ++ extra),
-      pushed, conf, vectorized, pushedLimit, filePos, nullFill)
-  }
-}
-
-private[sources] class GraftCsvReaderFactory(required: StructType,
-                                             payloadRequired: StructType,
-                                             parse: StructType,
-                                             pushed: Array[Filter],
-                                             conf: SerializableHadoopConf,
-                                             vectorized: Boolean = false,
-                                             limit: Option[Int] = None,
-                                             filePos: Int = -1,
-                                             nullFill: Boolean = false)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new GraftCsvPartitionReader(p.asInstanceOf[CsvFilePartition].file,
-      required, payloadRequired, parse, pushed, conf, limit, filePos, nullFill)
-
-  /** Columnar (vectorized) reads by default — `option("vectorized",
-    * "false")` falls back to the row reader. */
-  override def supportColumnarReads(p: InputPartition): Boolean = vectorized
-  override def createColumnarReader(
-      p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new GraftCsvColumnarReader(p.asInstanceOf[CsvFilePartition].file,
-      payloadRequired, parse, pushed, conf, limit = limit, filePos = filePos,
-      nullFill = nullFill)
-}
-
-/** Vectorized face of the CSV scan: surviving records append into
-  * on-heap column vectors and leave the source as [[ColumnarBatch]]es
-  * of up to 4096 rows. The engine's ColumnarToRow conversion runs
-  * INSIDE whole-stage codegen reading the vectors directly — versus
-  * the row reader's per-record `GenericInternalRow` allocation plus
-  * the unsafe-row copy every downstream operator pays. Same parse,
-  * same pushed-filter evaluation, same null semantics
-  * ([[CsvValueIterator]] is shared), so the two faces cannot drift. */
-private[sources] class GraftCsvColumnarReader(file: String,
-                                              payloadRequired: StructType,
-                                              parse: StructType,
-                                              pushed: Array[Filter],
-                                              conf: SerializableHadoopConf,
-                                              batchSize: Int = 4096,
-                                              limit: Option[Int] = None,
-                                              filePos: Int = -1,
-                                              nullFill: Boolean = false)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-
-  private val it = new CsvValueIterator(file, payloadRequired, parse, pushed,
-    conf, nullFill)
-  private val vectors: Array[OnHeapColumnVector] =
-    OnHeapColumnVector.allocateColumns(batchSize, payloadRequired)
-  private val batch = new ColumnarBatch({
-    if (filePos < 0) vectors.map(v => v: ColumnVector)
-    else {
-      // _file is a constant vector — zero bytes per row
-      val fv = new ConstantColumnVector(batchSize, StringType)
-      fv.setUtf8String(UTF8String.fromString(file))
-      val out = new Array[ColumnVector](vectors.length + 1)
-      var i = 0; var j = 0
-      while (i < out.length) {
-        if (i == filePos) out(i) = fv else { out(i) = vectors(j); j += 1 }
-        i += 1
-      }
-      out
-    }
-  })
-  private val types: Array[DataType] = payloadRequired.fields.map(_.dataType)
-  private var emitted = 0L
-
-  override def next(): Boolean = {
-    var i = 0
-    while (i < vectors.length) { vectors(i).reset(); i += 1 }
-    // partial-limit: the batch fill cap shrinks to the rows remaining
-    val cap = limit.map(l => math.min(batchSize.toLong, l - emitted).toInt)
-      .getOrElse(batchSize)
-    if (cap <= 0) return false
-    var n = 0
-    while (n < cap && it.next()) {
-      var j = 0
-      while (j < types.length) {
-        val v = it.values(j)
-        if (v == null) vectors(j).putNull(n)
-        else types(j) match {
-          case StringType =>
-            val b = v.asInstanceOf[String]
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            vectors(j).putByteArray(n, b, 0, b.length)
-          case LongType => vectors(j).putLong(n, v.asInstanceOf[Long])
-          case IntegerType => vectors(j).putInt(n, v.asInstanceOf[Int])
-          case ShortType => vectors(j).putShort(n, v.asInstanceOf[Short])
-          case DoubleType => vectors(j).putDouble(n, v.asInstanceOf[Double])
-          case FloatType => vectors(j).putFloat(n, v.asInstanceOf[Float])
-          case BooleanType => vectors(j).putBoolean(n, v.asInstanceOf[Boolean])
-          case other => throw new UnsupportedOperationException(
-            s"graft-csv columnar read: unsupported column type $other")
-        }
-        j += 1
-      }
-      n += 1
-    }
-    if (n == 0) false
-    else { emitted += n; batch.setNumRows(n); true }
-  }
-
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
-  override def close(): Unit = { batch.close(); it.close() }
 }
 
 /** The sink's RFC-4180 quoting: quote-and-double when the field
@@ -1019,56 +731,6 @@ private[sources] class CsvValueIterator(file: String, required: StructType,
   }
 
   def close(): Unit = in.close()
-}
-
-/** Row-at-a-time face of [[CsvValueIterator]]. With a pushed `limit`,
-  * the partition stops PARSING after emitting that many surviving rows
-  * (partial-limit contract — the engine's CollectLimit finishes). A
-  * requested `_file` metadata column (`filePos` ≥ 0 in `required`) is
-  * served as a per-partition constant. */
-private[sources] class GraftCsvPartitionReader(file: String, required: StructType,
-                                               payloadRequired: StructType,
-                                               parse: StructType,
-                                               pushed: Array[Filter],
-                                               conf: SerializableHadoopConf,
-                                               limit: Option[Int] = None,
-                                               filePos: Int = -1,
-                                               nullFill: Boolean = false)
-    extends PartitionReader[InternalRow] {
-  def this(file: String, required: StructType, parse: StructType,
-           pushed: Array[Filter], conf: SerializableHadoopConf) =
-    this(file, required, required, parse, pushed, conf, None, -1, false)
-
-  private val it = new CsvValueIterator(file, payloadRequired, parse, pushed,
-    conf, nullFill)
-  private val fileUtf8 = UTF8String.fromString(file)
-  private var emitted = 0L
-  private var row: InternalRow = _
-
-  override def next(): Boolean = {
-    if (limit.exists(emitted >= _)) return false
-    if (!it.next()) return false
-    emitted += 1
-    val out = new Array[Any](required.length)
-    var i = 0
-    var j = 0
-    while (i < required.length) {
-      if (i == filePos) out(i) = fileUtf8
-      else {
-        out(i) = it.values(j) match {
-          case s: String => UTF8String.fromString(s)
-          case v => v
-        }
-        j += 1
-      }
-      i += 1
-    }
-    row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
-    true
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = it.close()
 }
 
 /** What a batch write does to EXISTING table contents at commit time. */
@@ -1326,16 +988,20 @@ private[sources] class CsvFilesWrittenMetric
   override def description(): String = "files committed"
 }
 
-/** The publish step shared by the batch and streaming commit paths:
-  * overwrite-rename every temp file under its final name. One body so
-  * the rename/failure semantics can never drift between the two. */
+/** The commit steps shared by the batch, streaming and copy-on-write
+  * commit paths. One body so the rename/failure semantics can never
+  * drift between them. */
 private[sources] object GraftCsvCommit {
-  def publish(fs: FileSystem, root: HPath,
-              messages: Array[WriterCommitMessage]): Unit =
-    messages.flatMap {
+  /** Every file the tasks committed, flattened. */
+  def files(messages: Array[WriterCommitMessage]): Seq[CsvFileCommit] =
+    messages.toSeq.flatMap {
       case f: CsvFileCommit => Seq(f)
       case CsvFilesCommit(fsq) => fsq // partitioned task: one file per key
-    }.foreach { f =>
+    }
+
+  /** Overwrite-renames every temp file under its final name. */
+  def publish(fs: FileSystem, root: HPath, files: Seq[CsvFileCommit]): Unit =
+    files.foreach { f =>
       val target = new HPath(root, f.finalName)
       // partitioned finalNames live under key=value subdirectories
       if (target.getParent != root) fs.mkdirs(target.getParent)
@@ -1360,21 +1026,14 @@ private[sources] class GraftCsvBatchWrite(path: String, schema: StructType,
     new GraftCsvWriterFactory(path, tmpDir.toString, schema, conf, partitioned,
       appendTag, derivedSpec)
 
-  private def commitFiles(messages: Array[WriterCommitMessage]): Seq[CsvFileCommit] =
-    messages.flatMap {
-      case f: CsvFileCommit => Seq(f)
-      case CsvFilesCommit(fsq) => fsq
-    }.toSeq
-
   /** Versioned commit: publish data files, write the zone sidecar, then
     * claim the next manifest — NO physical deletes ever (overwritten/
     * truncated files stay referenced by older versions until VACUUM).
     * Crash between publish and manifest leaves orphans no manifest
     * names — vacuum food, never a manifest of missing files. */
   private def commitVersioned(fs: FileSystem, root: HPath,
-                              messages: Array[WriterCommitMessage]): Unit = {
-    GraftCsvCommit.publish(fs, root, messages)
-    val files = commitFiles(messages)
+                              files: Seq[CsvFileCommit]): Unit = {
+    GraftCsvCommit.publish(fs, root, files)
     appendTag.foreach { tag =>
       CsvZones.write(root, conf.value, tag,
         files.map(f => (f.finalName, f.zones, f.rows)))
@@ -1382,20 +1041,15 @@ private[sources] class GraftCsvBatchWrite(path: String, schema: StructType,
     val fresh = files.map(f => GraftLog.Entry(f.finalName, math.max(0L, f.bytes)))
     val ks = partitioned.flatMap(c =>
       schema.fields.find(_.name.equalsIgnoreCase(c)))
-    def relDirOf(rel: String): String =
-      rel.substring(0, math.max(rel.lastIndexOf('/'), 0))
-    def rawsOf(rel: String): Seq[String] =
-      rel.split('/').dropRight(1).toSeq.map(seg =>
-        PartitionedCsvLayout.decode(seg.substring(seg.indexOf('=') + 1)))
     GraftLog.commit(root, conf.value, live => (mode match {
       case CsvWriteMode.Append => live
       case CsvWriteMode.Truncate => Nil
       case CsvWriteMode.OverwriteKeys(filters) =>
         live.filterNot(e => filters.forall(CsvFilterEval.eval(_,
-          KeyedCsvScan.keyLookup(ks, rawsOf(e.rel)))))
+          KeyedCsvScan.keyLookup(ks, GraftLog.rawsOf(e.rel)))))
       case CsvWriteMode.DynamicOverwrite =>
-        val touched = fresh.map(e => relDirOf(e.rel)).toSet
-        live.filterNot(e => touched.contains(relDirOf(e.rel)))
+        val touched = fresh.map(e => GraftLog.dirOf(e.rel)).toSet
+        live.filterNot(e => touched.contains(GraftLog.dirOf(e.rel)))
     }) ++ fresh)
     fs.delete(tmpDir, true)
     fs.create(new HPath(root, "_SUCCESS"), true).close()
@@ -1405,7 +1059,8 @@ private[sources] class GraftCsvBatchWrite(path: String, schema: StructType,
     val root = new HPath(path)
     val fs = root.getFileSystem(conf.value)
     fs.mkdirs(root)
-    if (versioned) { commitVersioned(fs, root, messages); return }
+    val files = GraftCsvCommit.files(messages)
+    if (versioned) { commitVersioned(fs, root, files); return }
     mode match {
       case CsvWriteMode.Append => ()
       case CsvWriteMode.Truncate =>
@@ -1433,21 +1088,15 @@ private[sources] class GraftCsvBatchWrite(path: String, schema: StructType,
       case CsvWriteMode.DynamicOverwrite =>
         // drop exactly the key directories this write publishes into —
         // computed from the commit messages, no directory listing at all
-        val touched = messages.flatMap {
-          case f: CsvFileCommit => Seq(f)
-          case CsvFilesCommit(fsq) => fsq
-        }.map(_.finalName).filter(_.contains('/'))
-          .map(n => n.substring(0, n.lastIndexOf('/'))).distinct
-        touched.foreach(d => fs.delete(new HPath(root, d), true))
+        files.map(f => GraftLog.dirOf(f.finalName)).filter(_.nonEmpty)
+          .distinct.foreach(d => fs.delete(new HPath(root, d), true))
     }
-    GraftCsvCommit.publish(fs, root, messages)
+    GraftCsvCommit.publish(fs, root, files)
     // tagged writes persist their files' zone maps (one sidecar per
     // commit; untagged writes reuse names, so theirs would be unsound)
     appendTag.foreach { tag =>
-      CsvZones.write(root, conf.value, tag, messages.flatMap {
-        case f: CsvFileCommit => Seq(f)
-        case CsvFilesCommit(fsq) => fsq
-      }.map(f => (f.finalName, f.zones, f.rows)).toSeq)
+      CsvZones.write(root, conf.value, tag,
+        files.map(f => (f.finalName, f.zones, f.rows)))
     }
     fs.delete(tmpDir, true)
     fs.create(new HPath(root, "_SUCCESS"), true).close()
@@ -1489,16 +1138,15 @@ private[sources] class GraftCsvStreamingWrite(path: String, schema: StructType,
     // failed attempt behind as duplicate rows. Remove every file this
     // epoch ever published that the replay does not re-produce, THEN
     // publish — the epoch's final state is exactly `messages`.
-    val finalNames = messages.collect {
-      case f: CsvFileCommit => f.finalName
-    }.toSet
+    val files = GraftCsvCommit.files(messages)
+    val finalNames = files.map(_.finalName).toSet
     val epochPrefix = f"part-$epochId%05d-"
     if (fs.exists(root))
       fs.listStatus(root)
         .filter(s => s.isFile && s.getPath.getName.startsWith(epochPrefix) &&
           !finalNames.contains(s.getPath.getName))
         .foreach(s => fs.delete(s.getPath, false))
-    GraftCsvCommit.publish(fs, root, messages)
+    GraftCsvCommit.publish(fs, root, files)
     fs.delete(tmpDir(epochId), true)
   }
 
@@ -1572,11 +1220,8 @@ private[sources] class GraftCsvVersionedStreamingWrite(
       fs.delete(tmpDir(epochId), true)
       return
     }
-    GraftCsvCommit.publish(fs, root, messages)
-    val files = messages.flatMap {
-      case f: CsvFileCommit => Seq(f)
-      case CsvFilesCommit(fsq) => fsq
-    }.toSeq
+    val files = GraftCsvCommit.files(messages)
+    GraftCsvCommit.publish(fs, root, files)
     CsvZones.write(root, conf.value, tagOf(epochId),
       files.map(f => (f.finalName, f.zones, f.rows)))
     val fresh = files.map(f => GraftLog.Entry(f.finalName, math.max(0L, f.bytes)))
@@ -1598,19 +1243,10 @@ private[sources] class GraftCsvVersionedStreamingWriterFactory(
     derivedSpec: Option[CsvDerivedSpec] = None)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] = {
-    val tmp = s"$path/_tmp_${queryId}_e$epochId"
-    val stem = s"part-$queryId-e$epochId"
-    if (derivedSpec.isDefined)
-      new DerivedCsvWriter(tmp, schema, derivedSpec.get, partitionId,
-        taskId, conf, stem, trackZones = true)
-    else if (partitioned.nonEmpty)
-      new GraftCsvPartitionedWriter(tmp, schema, partitioned, partitionId,
-        taskId, conf, stem, trackZones = true)
-    else
-      new GraftCsvDataWriter(tmp, schema, partitionId, taskId, conf,
-        f"$stem-$partitionId%05d.csv", trackZones = true)
-  }
+                            epochId: Long): DataWriter[InternalRow] =
+    CsvRollingWriter.forLayout(s"$path/_tmp_${queryId}_e$epochId", schema,
+      partitioned, derivedSpec, partitionId, taskId, conf,
+      stem = s"part-$queryId-e$epochId", trackZones = true)
 }
 
 private[sources] class GraftCsvWriterFactory(path: String, tmpDir: String,
@@ -1627,15 +1263,8 @@ private[sources] class GraftCsvWriterFactory(path: String, tmpDir: String,
   // stale against a same-named different file — track them
   private val trackZones = appendTag.isDefined
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    if (derivedSpec.isDefined)
-      new DerivedCsvWriter(tmpDir, schema, derivedSpec.get, partitionId,
-        taskId, conf, stem, trackZones)
-    else if (partitioned.nonEmpty)
-      new GraftCsvPartitionedWriter(tmpDir, schema, partitioned, partitionId,
-        taskId, conf, stem, trackZones)
-    else
-      new GraftCsvDataWriter(tmpDir, schema, partitionId, taskId, conf,
-        f"$stem-$partitionId%05d.csv", trackZones)
+    CsvRollingWriter.forLayout(tmpDir, schema, partitioned, derivedSpec,
+      partitionId, taskId, conf, stem, trackZones)
 }
 
 private[sources] class GraftCsvDataWriter(tmpDir: String, schema: StructType,
@@ -1655,9 +1284,9 @@ private[sources] class GraftCsvDataWriter(tmpDir: String, schema: StructType,
   private val tempFile =
     new HPath(tmpDir, f"part-$partitionId%05d-$taskId-${UUID.randomUUID()}.csv")
   private val fs: FileSystem = tempFile.getFileSystem(conf.value)
+  private val stream = fs.create(tempFile, true)
   private val out = new java.io.BufferedWriter(
-    new java.io.OutputStreamWriter(fs.create(tempFile, true),
-      java.nio.charset.StandardCharsets.UTF_8))
+    new java.io.OutputStreamWriter(stream, java.nio.charset.StandardCharsets.UTF_8))
   out.write(schema.fieldNames.map(GraftCsvDialect.quote).mkString(";"))
   out.write("\n")
 
@@ -1678,7 +1307,9 @@ private[sources] class GraftCsvDataWriter(tmpDir: String, schema: StructType,
     }
 
   private[sources] var rows = 0L
-  private[sources] var bytes = 0L
+  /** Bytes that reached the file so far (header included); exact, the
+    * file's length, once committed. */
+  private[sources] def bytes: Long = stream.getPos
 
   override def write(row: InternalRow): Unit = {
     if (zoneTracker != null) zoneTracker.update(row)
@@ -1691,7 +1322,6 @@ private[sources] class GraftCsvDataWriter(tmpDir: String, schema: StructType,
     }
     sb.append('\n')
     rows += 1
-    bytes += sb.length // rendered chars ≈ bytes for the ASCII-heavy common case
     out.write(sb.toString())
   }
 

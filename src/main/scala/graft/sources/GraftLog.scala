@@ -495,6 +495,10 @@ private[graft] object GraftLog extends org.apache.spark.internal.Logging {
     else abs
   }
 
+  /** The directory part of a root-relative publish name (`""` at the
+    * root). */
+  def dirOf(rel: String): String = rel.substring(0, math.max(rel.lastIndexOf('/'), 0))
+
   /** Key raws of a root-relative publish name (its `k=v` directory
     * segments, nesting order), decoded. */
   def rawsOf(rel: String): Seq[String] =
@@ -633,12 +637,12 @@ private[sources] class GraftLogMicroBatchStream(
     partFilters: Array[org.apache.spark.sql.sources.Filter],
     conf: SerializableHadoopConf,
     factory: org.apache.spark.sql.connector.read.PartitionReaderFactory,
-    mkPartition: (Seq[String], String) => org.apache.spark.sql.connector.read.InputPartition,
     maxVersionsPerTrigger: Option[Int] = None)
     extends GraftLogStreamBase(path, conf, maxVersionsPerTrigger) {
   import org.apache.spark.sql.connector.read.InputPartition
 
   override protected def planRange(s: Int, e: Int): Array[InputPartition] = {
+    val keySchemaJson = org.apache.spark.sql.types.StructType(keyFields).json
     val added: Iterator[GraftLog.Entry] =
       if (s == 0) GraftLog.read(root, conf.value, e).iterator // snapshot
       else GraftLog.changes(root, conf.value, s, e).iterator
@@ -647,7 +651,7 @@ private[sources] class GraftLogMicroBatchStream(
       val raws = GraftLog.rawsOf(entry.rel)
       if (partFilters.forall(CsvFilterEval.eval(_,
           KeyedCsvScan.keyLookup(keyFields, raws))))
-        Some(mkPartition(raws, s"$path/${entry.rel}"))
+        Some(KeyedCsvPartition(raws, keySchemaJson, Array(s"$path/${entry.rel}")))
       else None
     }.toArray
   }

@@ -145,7 +145,7 @@ class PlanHygieneSpec extends AnyFunSuite {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }
     assert(scans.nonEmpty, "expected a BatchScan over GraftCsvSink")
-    val pushed = scans.head.scan.asInstanceOf[graft.sources.GraftCsvScan].pushed
+    val pushed = scans.head.scan.asInstanceOf[graft.sources.KeyedCsvScan].payloadFilters
     assert(pushed.nonEmpty, "no filter was pushed into the CSV source")
     val s = pushed.mkString("; ")
     assert(s.contains("p_brand") && s.contains("p_partkey"),

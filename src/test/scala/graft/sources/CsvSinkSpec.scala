@@ -178,6 +178,18 @@ class CsvSinkSpec extends AnyFunSuite {
     val filtered = read(true).filter(col("x") > 0.0).select("s")
     assert(filtered.collect().map(_.getString(0)).toSet ==
       Set("plain", "multi\nline"))
+    // a flat table is the zero-key case of the one CSV scan: one input
+    // partition per part file, and no key grouping claimed
+    val nFiles = new java.io.File(path).listFiles()
+      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+    val flatScan = read(true).queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.head
+    assert(nFiles > 1 && flatScan.inputRDD.getNumPartitions == nFiles &&
+      !flatScan.scan.asInstanceOf[KeyedCsvScan].outputPartitioning().isInstanceOf[
+        org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning],
+      s"$nFiles part files planned ${flatScan.inputRDD.getNumPartitions} " +
+        s"partitions as ${flatScan.scan.asInstanceOf[KeyedCsvScan].outputPartitioning()}")
   }
 
   test("LIMIT pushes into the scan (partial), both row and columnar faces") {
@@ -193,7 +205,7 @@ class CsvSinkSpec extends AnyFunSuite {
       assert(limited.collect().length == 7, s"vectorized=$vec")
       val scan = limited.queryExecution.executedPlan.collect {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-      }.head.scan.asInstanceOf[GraftCsvScan]
+      }.head.scan.asInstanceOf[KeyedCsvScan]
       assert(scan.pushedLimit.contains(7),
         s"vectorized=$vec: limit not pushed — ${scan.description()}")
     }

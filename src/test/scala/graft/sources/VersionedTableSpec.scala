@@ -117,6 +117,20 @@ class VersionedTableSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { c.loadTable(ident, "latest") }
   }
 
+  test("manifest byte counts are the committed files' lengths, non-ASCII included") {
+    wh
+    spark.sql(s"CREATE TABLE $cat.wh.vbytes (s STRING, n BIGINT) " +
+      "TBLPROPERTIES('versioned'='true')")
+    spark.sql(s"INSERT INTO $cat.wh.vbytes VALUES ('naïve café ✓', 1), ('plain', 2)")
+    val tdir = s"$wh/wh/vbytes"
+    val entries = GraftLog.latest(new HPath(tdir), hconf)
+    assert(entries.nonEmpty)
+    entries.foreach { e =>
+      val len = new java.io.File(s"$tdir/${e.rel}").length()
+      assert(e.bytes == len, s"${e.rel}: manifest says ${e.bytes} bytes, file has $len")
+    }
+  }
+
   test("VACUUM reclaims unreferenced bytes and enforces the retention horizon") {
     wh
     spark.sql(s"CREATE TABLE $cat.wh.vv (m STRING, n BIGINT) PARTITIONED BY (m) " +

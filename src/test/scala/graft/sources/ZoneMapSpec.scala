@@ -43,11 +43,8 @@ class ZoneMapSpec extends AnyFunSuite {
     flatten(df.queryExecution.executedPlan)
   }
 
-  private def flatScanOf(df: org.apache.spark.sql.DataFrame): GraftCsvScan =
-    allNodes(df).collectFirst {
-      case b: BatchScanExec if b.scan.isInstanceOf[GraftCsvScan] =>
-        b.scan.asInstanceOf[GraftCsvScan]
-    }.get
+  private def flatScanOf(df: org.apache.spark.sql.DataFrame): KeyedCsvScan =
+    keyedScanOf(df)
 
   private def keyedScanOf(df: org.apache.spark.sql.DataFrame): KeyedCsvScan =
     allNodes(df).collectFirst {
