@@ -16,8 +16,18 @@ import graft.sources.JsonFixtureSource
   * Role mapping (FIXTURES.md §B): orders = videos, lineitem = comments,
   * per-order aggregates = video_statistics (x = total quantity ≈ views,
   * y = item count ≈ comment count).
+  *
+  * The DAG has two branches that share no data until the serving join:
+  * descriptions (orders → JSON pages → flatten/clean → CSV → table) and
+  * statistics (lineitem → per-video aggregate → CSV → table). The
+  * reference's Airflow chain runs them one after the other, but that
+  * order is declared, not required by the data, so [[run]] runs them
+  * at once and joins both before the serving fit.
   */
 object Pipeline {
+
+  /** The Spark local property naming the DAG branch a job belongs to. */
+  val StageKey = "graft.stage"
 
   private def stagePath(workDir: String, stage: String): String = s"$workDir/$stage"
 
@@ -30,13 +40,17 @@ object Pipeline {
       .withColumn("video_description", Cleaning.cleanChain(col("video_description")))
   }
 
-  /** Stage 2 — per-video statistics from the comment-shaped fact table. */
+  /** Stage 2 — per-video statistics from the comment-shaped fact table.
+    * Grouped on the long key and cast after the aggregate: long → string
+    * is injective, so the groups are the same and hashing is cheaper. */
   def statistics(spark: SparkSession, sfDir: String): DataFrame =
     Tables.lineitem(spark, sfDir)
-      .groupBy(col("l_orderkey").cast("string").as("video_id"))
+      .groupBy(col("l_orderkey"))
       .agg(
         Num.dsum(col("l_quantity")).as("views"),
         count(lit(1)).as("comments"))
+      .select(col("l_orderkey").cast("string").as("video_id"),
+        col("views"), col("comments"))
 
   /** Stage 3 — land both tables as `;`-CSV (K1) and read back (S6). */
   def throughCsv(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
@@ -57,19 +71,52 @@ object Pipeline {
       count(lit(1)).as("n_videos"),
       round(avg(col("views")), 6).as("avg_views"))
 
-  /** All five stages; returns the 1-row serving result. The descriptions
-    * branch goes through the same CSV sink and a catalog table to mirror
-    * the DAG's store step (K2/K3). */
-  def run(spark: SparkSession, sfDir: String, workDir: String): DataFrame = {
-    val descriptions = scrapeAndClean(spark, sfDir, workDir)
-    val descBack = throughCsv(spark, descriptions, stagePath(workDir, "csv_descriptions"))
-    descBack.write.mode("overwrite").format("parquet")
-      .saveAsTable("graft_pipeline_descriptions")
+  /** Stages 3+4 of one branch: through the CSV sink into a catalog
+    * table (the DAG's store step, K2/K3), with every job of the branch
+    * carrying [[StageKey]] = `stage`; the previous value is restored. */
+  private def land(spark: SparkSession, stage: String, df: => DataFrame,
+                   csvPath: String, table: String): Unit = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(StageKey)
+    sc.setLocalProperty(StageKey, stage)
+    try throughCsv(spark, df, csvPath)
+      .write.mode("overwrite").format("parquet").saveAsTable(table)
+    finally sc.setLocalProperty(StageKey, prev)
+  }
 
-    val stats = statistics(spark, sfDir)
-    val statsBack = throughCsv(spark, stats, stagePath(workDir, "csv_statistics"))
-    statsBack.write.mode("overwrite").format("parquet")
-      .saveAsTable("graft_pipeline_statistics")
+  /** All five stages; returns the 1-row serving result. The statistics
+    * branch runs on a fresh thread (which inherits the caller's Spark
+    * local properties and active session) while the descriptions
+    * branch runs on the caller's; both job chains share the one
+    * context. `run` returns only after both branches have ended. A
+    * branch's error is rethrown as is; if both fail, the statistics
+    * error is attached to the descriptions error as suppressed. */
+  def run(spark: SparkSession, sfDir: String, workDir: String): DataFrame = {
+    @volatile var statsError: Throwable = null
+    val statsBranch = new Thread(() =>
+      try land(spark, "pipeline.statistics", statistics(spark, sfDir),
+        stagePath(workDir, "csv_statistics"), "graft_pipeline_statistics")
+      catch { case t: Throwable => statsError = t },
+      "graft-pipeline-statistics")
+    statsBranch.start()
+    val descError =
+      try {
+        land(spark, "pipeline.descriptions", scrapeAndClean(spark, sfDir, workDir),
+          stagePath(workDir, "csv_descriptions"), "graft_pipeline_descriptions")
+        null
+      } catch { case t: Throwable => t }
+    // Wait out the branch even when interrupted; re-assert the interrupt after.
+    var interrupted = false
+    while (statsBranch.isAlive)
+      try statsBranch.join()
+      catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
+    (descError, statsError) match {
+      case (null, null) => ()
+      case (d, null) => throw d
+      case (null, s) => throw s
+      case (d, s) => d.addSuppressed(s); throw d
+    }
 
     // The serving fit reads from the warehouse, like the Lambda read S3.
     val joined = spark.table("graft_pipeline_statistics")

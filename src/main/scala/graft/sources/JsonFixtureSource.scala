@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's ingest surface (SURVEY.md §2.1 S1–S5) re-expressed
   * sandbox-side: the YouTube API is unreachable, so the *same nested
@@ -25,13 +26,20 @@ object JsonFixtureSource {
     * write — the scheduling overhead that AMPLIFIES under a contended
     * suite JVM (driver 10.8 s vs 3.4 s isolated on q_pipeline_e2e).
     * Target ~256 pages (≈ 12 800 items) per task, clamped to the
-    * session cap so a cluster-scale corpus still fans out. The count is
-    * a bounded metadata action (parquet footer counts). */
-  private def pageParts(orders: DataFrame, keysPerPage: Long): Int = {
-    val cap = orders.sparkSession.sessionState.conf.numShufflePartitions.toLong
-    val nPages = orders.count() / keysPerPage + 1L
+    * session cap so a cluster-scale corpus still fans out. `rows` is
+    * the caller's count of the keyed input. */
+  private def pageParts(spark: SparkSession, rows: Long, keysPerPage: Long): Int = {
+    val cap = spark.sessionState.conf.numShufflePartitions.toLong
+    val nPages = rows / keysPerPage + 1L
     math.max(1L, math.min(cap, nPages / 256L + 1L)).toInt
   }
+
+  /** The S1 page shape [[writeSearchPages]] writes, stated once for the
+    * typed read in [[readAndFlattenSearch]]. */
+  private val SearchPageSchema = StructType.fromDDL(
+    "items ARRAY<STRUCT<id: STRUCT<videoId: STRING>, " +
+      "snippet: STRUCT<publishedAt: STRING, title: STRING, description: STRING>>>, " +
+      "nextPageToken STRING")
 
   /** S1-shaped pages: orders become "videos" — pages of 50 items, each
     * item `{id: {videoId}, snippet: {publishedAt, title, description}}`,
@@ -45,19 +53,20 @@ object JsonFixtureSource {
           date_format(col("o_orderdate"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("publishedAt"),
           col("o_orderpriority").as("title"),
           col("o_orderstatus").as("description")).as("snippet")).as("item"))
-    // broadcast 1-row max instead of a global window (an unpartitioned
-    // window funnels everything to one task).
-    val maxPage = items.agg(max(col("page")).as("max_page"))
+    // One aggregate action sizes the shuffle and finds the last page;
+    // the last page number enters the token rule as a literal (a global
+    // window would funnel every row through one task).
+    val sizes = items.agg(count(lit(1)), max(col("page"))).head()
+    val lastPage = if (sizes.isNullAt(1)) -1L else sizes.getLong(1)
     // Pre-partition on the group key at the data-sized count: groupBy
     // reuses the hash partitioning (no second exchange), and the agg +
     // JSON write run as pageParts tasks instead of 32 near-empty ones.
     val pages = items
-      .repartition(pageParts(orders, 50L), col("page"))
+      .repartition(pageParts(spark, sizes.getLong(0), 50L), col("page"))
       .groupBy("page")
       .agg(sort_array(collect_list(col("item"))).as("items"))
-      .crossJoin(broadcast(maxPage))
       .withColumn("nextPageToken",
-        when(col("page") < col("max_page"), concat(lit("tok_"), col("page") + 1)))
+        when(col("page") < lit(lastPage), concat(lit("tok_"), col("page") + 1)))
     pages.select("items", "nextPageToken")
       .write.mode("overwrite").json(path)
   }
@@ -66,7 +75,7 @@ object JsonFixtureSource {
     * with the reference's null-safe dot-path projection and day
     * truncation. */
   def readAndFlattenSearch(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
+    spark.read.schema(SearchPageSchema).json(path)
       .select(explode(col("items")).as("item"))
       .select(
         col("item.id.videoId").as("video_id"),
@@ -136,7 +145,7 @@ object JsonFixtureSource {
           when(col("comments").isNotNull,
             struct(col("comments").as("comments"))).as("replies")).as("item"))
     threads
-      .repartition(pageParts(orders, 50L), col("page"))
+      .repartition(pageParts(spark, orders.count(), 50L), col("page"))
       .groupBy("page")
       .agg(sort_array(collect_list(col("item"))).as("items"))
       .select("items")
