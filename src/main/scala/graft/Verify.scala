@@ -21,15 +21,10 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.log.level", "WARN")
-      // pid+nanoTime-unique: a managed table's directory outlives the
-      // in-memory catalog, so a reused location fails the next JVM's
-      // saveAsTable — and pids RECYCLE on a long-lived host (each
-      // 32-thread Spark JVM burns thousands of Linux pids, so a session
-      // running many forked mains wraps pid_max and collides; observed
-      // round 8: LOCATION_ALREADY_EXISTS on graft-warehouse-865).
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-warehouse-" +
-          s"${ProcessHandle.current().pid()}-${java.lang.System.nanoTime()}")
+      // JVM-unique (Scratch.root): a managed table's directory outlives
+      // the in-memory catalog, so a location reused by a later JVM fails
+      // its saveAsTable — a pid alone recycles on a long-lived host.
+      .config("spark.sql.warehouse.dir", Scratch.path("warehouse"))
     Tables.requiredConfs.foreach { case (k, v) => b.config(k, v) }
     // Dev-only A/B hook: semicolon-separated k=v pairs layered on top of
     // the standard session confs, so optimization experiments can flip

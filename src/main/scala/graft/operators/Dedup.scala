@@ -40,35 +40,26 @@ object Dedup {
     out
   }
 
-  /** Distinct word n-gram shingles per document (default n=3). Documents
-    * shorter than n words contribute their whole text as one shingle.
-    * n=3 goes through the native [[graft.functions.WordShingles]]
-    * expression (one primitive pass per row); other n fall back to the
-    * equivalent Column algebra. */
-  def wordShingles(docs: DataFrame, n: Int = 3): DataFrame =
-    if (n == 3) {
-      graft.functions.WordShingles.register(docs.sparkSession)
-      docs.select(col("doc_id"), explode(expr("shingles3(text)")).as("shingle"))
-    } else {
-      val words = split(col("text"), " ")
-      docs.select(
-        col("doc_id"),
-        explode(array_distinct(transform(
-          sequence(lit(0), greatest(size(words) - n, lit(0))),
-          i => concat_ws(" ", slice(words, i + 1, lit(n)))))).as("shingle"))
-    }
+  /** Distinct word 3-gram shingles per document. Documents shorter than
+    * 3 words contribute their whole text as one shingle. Goes through the
+    * native [[graft.functions.WordShingles]] expression (one primitive
+    * pass per row). */
+  def wordShingles(docs: DataFrame): DataFrame = {
+    graft.functions.WordShingles.register(docs.sparkSession)
+    docs.select(col("doc_id"), explode(expr("shingles3(text)")).as("shingle"))
+  }
 
   /** The DuckDB mirror of [[wordShingles]] as a CTE body. */
-  def wordShinglesSql(n: Int = 3): String = wordShinglesSqlFrom("documents", n)
+  def wordShinglesSql: String = wordShinglesSqlFrom("documents")
 
   /** [[wordShinglesSql]] over an arbitrary source table/CTE carrying
     * (doc_id, text) — lets the accumulating-index oracle shingle a
     * synthesized corpus ∪ wave union. */
-  def wordShinglesSqlFrom(src: String, n: Int = 3): String =
+  def wordShinglesSqlFrom(src: String): String =
     s"""SELECT DISTINCT doc_id,
-       |       array_to_string(ws[CAST(i AS INT):CAST(i + ${n - 1} AS INT)], ' ') AS shingle
+       |       array_to_string(ws[CAST(i AS INT):CAST(i + 2 AS INT)], ' ') AS shingle
        |FROM (SELECT doc_id, ws,
-       |             unnest(range(1, greatest(len(ws) - ${n - 1}, 1) + 1)) AS i
+       |             unnest(range(1, greatest(len(ws) - 2, 1) + 1)) AS i
        |      FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM $src))""".stripMargin
 
   /** Exact dedup: keep the smallest doc_id per identical text. */
@@ -341,7 +332,7 @@ object Dedup {
     * bands only (never corpus × corpus), so per-ingest cost scales with
     * the batch, not the corpus. Survivors verify with exact jaccard;
     * each flagged doc reports its best corpus match (jaccard desc,
-    * doc_old asc — a row_number top-1, which plans through the native
+    * doc_old asc — a [[Rank.perGroup]] top-1, which plans through the native
     * TopKPerGroupExec). */
   def minhashLshAgainstCorpus(rawShingles: DataFrame, batchPred: Column,
                               minJ: Double): DataFrame = {
@@ -362,9 +353,7 @@ object Dedup {
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
     val j = withJaccard(inter, sizes, minJ)
       .withColumnsRenamed(Map("doc_a" -> "doc_new", "doc_b" -> "doc_old"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_new").orderBy(col("jaccard").desc, col("doc_old").asc)
-    val best = j.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    val best = Rank.perGroup(j, Seq("doc_new"), Seq(col("jaccard").desc, col("doc_old").asc), 1)
       .select(col("doc_new"), col("doc_old").as("best_match"), col("jaccard"))
     materializeThenRelease(best, shingles)
   }
@@ -441,9 +430,7 @@ object Dedup {
       .withColumn("jaccard", round(col("i") / (col("na") + col("nb") - col("i")), 6))
       .filter(col("jaccard") >= minJ)
       .select(col("doc_a").as("doc_new"), col("doc_b").as("doc_old"), col("jaccard"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_new").orderBy(col("jaccard").desc, col("doc_old").asc)
-    val best = j.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    val best = Rank.perGroup(j, Seq("doc_new"), Seq(col("jaccard").desc, col("doc_old").asc), 1)
       .select(col("doc_new"), col("doc_old").as("best_match"), col("jaccard"))
     materializeThenRelease(best, bsh)
   }
@@ -517,10 +504,8 @@ object Dedup {
         Seq("vec_old"))
       .withColumn("cosine", round(expr("dotp(vn, vo)"), 6))
       .filter(col("cosine") >= minCos)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_new").orderBy(col("cosine").desc, col("vec_old").asc)
-    val best = scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val best = Rank.perGroup(scored, Seq("vec_new"),
+        Seq(col("cosine").desc, col("vec_old").asc), 1)
       .select(col("vec_new"), col("vec_old").as("best_match"), col("cosine"))
     materializeThenRelease(best, e)
   }
@@ -844,11 +829,8 @@ object Dedup {
     // whole non-duplicate corpus into ONE window partition.
     val uniques = scored.filter(col("cluster_id").isNull)
       .select(col("doc_id"), lit("unique").as("status"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("cluster_id").orderBy(col("__score").desc, col("doc_id").asc)
-    val survivors = scored.filter(col("cluster_id").isNotNull)
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") === 1)
+    val survivors = Rank.perGroup(scored.filter(col("cluster_id").isNotNull),
+        Seq("cluster_id"), Seq(col("__score").desc, col("doc_id").asc), 1)
       .select(col("doc_id"), lit("best_quality").as("status"))
     uniques.unionByName(survivors)
   }

@@ -292,23 +292,8 @@ object Multimodal {
       * via the JDK's built-in codec (r = g = b = gray ramp). */
     def renderPng(docId: Long): Array[Byte] = renderPng(docId, 0)
 
-    def renderPng(docId: Long, delta: Int): Array[Byte] = {
-      val w = widthOf(docId)
-      val h = heightOf(docId)
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val g = grayAt(docId, delta, x, y)
-          img.setRGB(x, y, (g << 16) | (g << 8) | g)
-          x += 1
-        }
-        y += 1
-      }
-      writePng(img)
-    }
+    def renderPng(docId: Long, delta: Int): Array[Byte] =
+      renderWith(docId, (x, y) => grayAt(docId, delta, x, y))
   }
 
   case class ImageMedia(doc_id: Long, png: Array[Byte])
@@ -1434,10 +1419,8 @@ object Multimodal {
     // Best corpus match per new HASH = best per new image (every member
     // of an index hash has the same distance; min_img is the in-hash
     // tie-break, the window handles cross-hash and cross-leg ties).
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("hid_a").orderBy(col("hamming").asc, col("min_img").asc)
-    val bestHash = verified.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val bestHash = Rank.perGroup(verified, Seq("hid_a"),
+        Seq(col("hamming").asc, col("min_img").asc), 1)
       .select(col("hid_a").as("hid"), col("min_img").as("best_match"), col("hamming"))
     // The index is modality-agnostic; the probe id column is named by
     // the caller (audio passes "clip_new") so query layers don't

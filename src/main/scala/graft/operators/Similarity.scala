@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{DotProduct, Num, TopKAggregator, TopKStringAggregator}
+import graft.functions.{DotProduct, Num}
 
 /** Similarity search over an embedding column (Array[Float] in parquet,
   * cast to double for engine-stable arithmetic).
@@ -18,8 +18,8 @@ import graft.functions.{DotProduct, Num, TopKAggregator, TopKStringAggregator}
   *    banded bucket joins produce id-only candidates, exact scoring only
   *    on candidates. The sub-quadratic 100 TB shape.
   *
-  * Ranking in both goes through a bounded per-group top-k Aggregator
-  * ([[graft.functions.TopKAggregator]]): partial top-k buffers combine
+  * Ranking in both goes through the bounded per-group heap top-k
+  * ([[Rank.topK]]): partial top-k buffers combine
   * map-side, so only O(k) rows per query per partition cross the
   * shuffle — NOT the full scored set sorted under a window.
   */
@@ -65,71 +65,6 @@ object Similarity {
           transform(col("raw"), x => x / col("nrm"))).as("v"))
   }
 
-  /** Rank scored (group, score, id) rows to the top k per group via the
-    * bounded aggregator; emits (group, rn, id, score) with rn 1-based in
-    * (score desc, id asc) order — exactly ROW_NUMBER's output for the
-    * same total order, without shuffling more than k rows per group per
-    * partition. */
-  def heapTopK(scored: DataFrame, groupCol: String, scoreCol: String,
-               idCol: String, k: Int): DataFrame = {
-    val topk = udaf(new TopKAggregator(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
-    scored.groupBy(col(groupCol))
-      .agg(topk(col(scoreCol), col(idCol)).as("top"))
-      .select(col(groupCol), posexplode(col("top")))
-      .select(col(groupCol), (col("pos") + 1).cast("long").as("rn"),
-        col("col._2").as(idCol), col("col._1").as(scoreCol))
-  }
-
-  /** Global (ungrouped) bounded top-k over (count, word) rows — count
-    * desc, word asc, 1-based rn — via [[TopKStringAggregator]], as a
-    * TWO-LEVEL (tree) merge: level 1 takes the exact top-k within each
-    * of `fanout` partition groups (the global top-k is contained in the
-    * union of group top-ks, so this loses nothing), level 2 ranks the
-    * ≤ fanout·k survivors. Partial buffers still combine map-side, and
-    * no single task ever receives more than max(P/fanout, fanout)·k
-    * rows — at extreme partition counts the old single final merge
-    * (one task receiving P·k rows) was the pinch point; with
-    * fanout ≈ √P both levels are O(k·√P). Contract: `counts` carries
-    * ONE fully-aggregated row per word (what a groupBy produces) — a
-    * word split across partition groups would rank partial scores. */
-  def heapTopKWords(counts: DataFrame, scoreCol: String, wordCol: String, k: Int,
-                    fanout: Int = 32): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Long, String)]()
-    val topk = udaf(new TopKStringAggregator(k), enc)
-    val groupWinners = counts
-      .withColumn("__g", pmod(spark_partition_id(), lit(fanout)))
-      .groupBy("__g").agg(topk(col(scoreCol), col(wordCol)).as("top"))
-      .select(explode(col("top")).as("t"))
-      .select(col("t._1").as(scoreCol), col("t._2").as(wordCol))
-    groupWinners.agg(topk(col(scoreCol), col(wordCol)).as("top"))
-      .select(posexplode(col("top")))
-      .select((col("pos") + 1).cast("long").as("rn"),
-        col("col._2").as(wordCol), col("col._1").as(scoreCol))
-  }
-
-  /** Global (ungrouped) bounded top-k over (score, id) rows — score
-    * desc, id asc, 1-based rn — the [[TopKAggregator]] twin of
-    * [[heapTopKWords]], with the same two-level tree merge: level 1
-    * takes the exact top-k within each of `fanout` partition groups,
-    * level 2 ranks the ≤ fanout·k survivors, so no task ever receives
-    * more than max(P/fanout, fanout)·k rows. Contract: `scored` carries
-    * ONE fully-scored row per id. */
-  def heapTopKGlobal(scored: DataFrame, scoreCol: String, idCol: String, k: Int,
-                     fanout: Int = 32): DataFrame = {
-    val enc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]()
-    val topk = udaf(new TopKAggregator(k), enc)
-    val groupWinners = scored
-      .withColumn("__g", pmod(spark_partition_id(), lit(fanout)))
-      .groupBy("__g").agg(topk(col(scoreCol), col(idCol)).as("top"))
-      .select(explode(col("top")).as("t"))
-      .select(col("t._1").as(scoreCol), col("t._2").as(idCol))
-    groupWinners.agg(topk(col(scoreCol), col(idCol)).as("top"))
-      .select(posexplode(col("top")))
-      .select((col("pos") + 1).cast("long").as("rn"),
-        col("col._2").as(idCol), col("col._1").as(scoreCol))
-  }
-
   /** Exact top-k neighbours for each query row (queries = `queryPred`),
     * ranked by rounded cosine desc with vec_id tiebreak. */
   def bruteForceTopK(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
@@ -140,7 +75,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(expr("dotp(qv, v)"), 6).as("cosine"))
-    heapTopK(scored, "query_id", "cosine", "vec_id", k)
+    Rank.topK(scored, "query_id", "cosine", "vec_id", k)
       .select(col("query_id"), col("rn"), col("vec_id"), col("cosine"))
   }
 
@@ -163,11 +98,11 @@ object Similarity {
       .select(col("vec_id"), col("cid"), expr("dotp(v, cv)").as("cd"))
     // Per-vector centroid ranking: each window partition is one vector's
     // |centroids| rows — bounded, never a corpus-wide sort.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(col("cd").desc, col("cid").asc)
-    val ranked = scoredCent.withColumn("crn", row_number().over(w))
-    val lists = ranked.filter(col("crn") === 1).select("vec_id", "cid")
-    val probes = ranked.filter(queryPred && col("crn") <= nProbe)
+    val byCentroid = Seq(col("cd").desc, col("cid").asc)
+    val lists = Rank.perGroup(scoredCent, Seq("vec_id"), byCentroid, 1)
+      .select("vec_id", "cid")
+    val probes = Rank.perGroup(scoredCent, Seq("vec_id"), byCentroid, nProbe)
+      .filter(queryPred)
       .select(col("vec_id").as("query_id"), col("cid"))
     val cand = probes.join(lists, Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -177,7 +112,7 @@ object Similarity {
       .join(e, Seq("vec_id"))
       .select(col("query_id"), col("vec_id"),
         round(expr("dotp(qv, v)"), 6).as("cosine"))
-    val out = heapTopK(scored, "query_id", "cosine", "vec_id", k)
+    val out = Rank.topK(scored, "query_id", "cosine", "vec_id", k)
       .select(col("query_id"), col("rn"), col("vec_id"), col("cosine"))
     Dedup.materializeThenRelease(out, e)
   }
@@ -224,10 +159,7 @@ object Similarity {
   private def assignWithSim(e: DataFrame, cent: DataFrame): DataFrame = {
     val scored = e.crossJoin(broadcast(cent))
       .select(col("vec_id"), col("cid"), expr("dotp(v, cv)").as("cd"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(col("cd").desc, col("cid").asc)
-    scored.withColumn("crn", row_number().over(w))
-      .filter(col("crn") === 1)
+    Rank.perGroup(scored, Seq("vec_id"), Seq(col("cd").desc, col("cid").asc), 1)
       .select(col("vec_id"), col("cid"), round(col("cd"), 6).as("cd"))
   }
 
@@ -648,8 +580,7 @@ object Similarity {
   def pqEncode(emb: DataFrame, centStride: Long, m: Int, dim: Int): DataFrame = {
     val e = normalized(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = pqScored(e, centStride, m, dim / m)
-      .withColumn("rn", row_number().over(pqArgminWindow)).filter(col("rn") === 1)
+    val out = pqArgmin(pqScored(e, centStride, m, dim / m))
       .select(col("vec_id"), col("sub_no"), col("cid").as("code"), col("d").as("sq_err"))
     Dedup.materializeThenRelease(out, e)
   }
@@ -674,9 +605,9 @@ object Similarity {
           - lit(2) * expr("dotp(sv, cv)"), 6).as("d"))
   }
 
-  private def pqArgminWindow =
-    org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id", "sub_no").orderBy(col("d").asc, col("cid").asc)
+  /** Each (vector, subspace)'s nearest codebook entry, cid-asc tie-break. */
+  private def pqArgmin(scored: DataFrame): DataFrame =
+    Rank.perGroup(scored, Seq("vec_id", "sub_no"), Seq(col("d").asc, col("cid").asc), 1)
 
   /** PQ asymmetric-distance (ADC) top-k retrieval: corpus vectors are
     * represented ONLY by their m codebook codes ([[pqEncode]]'s output);
@@ -697,8 +628,7 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val scored = pqScored(e, centStride, m, dim / m)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val codes = scored
-      .withColumn("rn", row_number().over(pqArgminWindow)).filter(col("rn") === 1)
+    val codes = pqArgmin(scored)
       .select(col("vec_id"), col("sub_no"), col("cid").as("code"))
     val dtab = scored.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("sub_no"),
@@ -707,12 +637,9 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy("query_id", "vec_id")
       .agg(round(graft.functions.Num.dsum(col("d")), 6).as("adist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("adist").asc, col("vec_id").asc)
-    val out = adist.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("vec_id"), col("adist"))
+    val out = Rank.perGroup(adist, Seq("query_id"),
+        Seq(col("adist").asc, col("vec_id").asc), k)
+      .select(col("query_id"), col("rn"), col("vec_id"), col("adist"))
     Dedup.materializeThenRelease(out, e, scored)
   }
 
@@ -993,7 +920,7 @@ object Similarity {
       .join(e, Seq("vec_id"))
       .select(col("query_id"), col("vec_id"),
         round(expr("dotp(qv, v)"), 6).as("cosine"))
-    val ranked = heapTopK(scored, "query_id", "cosine", "vec_id", k)
+    val ranked = Rank.topK(scored, "query_id", "cosine", "vec_id", k)
       .select(col("query_id"), col("rn"), col("vec_id"), col("cosine"))
     Dedup.materializeThenRelease(ranked, e)
   }
@@ -1019,7 +946,7 @@ object Similarity {
     * folds to a 64-bit sign sketch ([[binarySketch]] — 32× smaller
     * than the float vector); candidates are the query×corpus pairs
     * whose sketches sit within Hamming ≤ `maxHamming`; exact cosine
-    * re-ranks candidates to top-k via the bounded [[heapTopK]]
+    * re-ranks candidates to top-k via the bounded [[Rank.topK]]
     * aggregator.
     *
     * The candidate pass is a BROADCAST BINARY SCAN ([[Hamming.scan]],
@@ -1053,7 +980,7 @@ object Similarity {
       .join(e, Seq("vec_id"))
       .select(col("query_id"), col("vec_id"),
         round(expr("dotp(qv, v)"), 6).as("cosine"))
-    val ranked = heapTopK(scored, "query_id", "cosine", "vec_id", k)
+    val ranked = Rank.topK(scored, "query_id", "cosine", "vec_id", k)
       .select(col("query_id"), col("rn"), col("vec_id"), col("cosine"))
     Dedup.materializeThenRelease(ranked, e, sk)
   }
@@ -1133,10 +1060,10 @@ object Similarity {
         round(expr("dotp(qv, v)"), 6).as("cosine"))
       // normalizedNonZero nulls v for zero-norm vectors (they have no
       // direction); their all-zero sketches still collide at Hamming 0,
-      // so the NULL cosine must be dropped HERE — TopKAggregator's
+      // so the NULL cosine must be dropped HERE — the heap's
       // primitive Double input would NPE on it.
       .filter(col("cosine").isNotNull)
-    val ranked = heapTopK(scored, "query_id", "cosine", "vec_id", k)
+    val ranked = Rank.topK(scored, "query_id", "cosine", "vec_id", k)
       .select(col("query_id"), col("rn"), col("vec_id"), col("cosine"))
     Dedup.materializeThenRelease(ranked, qe)
   }
@@ -1165,7 +1092,7 @@ object Similarity {
           coalesce(lit(1.0) / (lit(c.toDouble) + col("bm25_rn")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(c.toDouble) + col("cosine_rn")), lit(0.0)),
           6).as("rrf"))
-    heapTopKGlobal(fused, "rrf", "doc_id", k)
+    Rank.global(fused, "rrf", "doc_id", k, Rank.ScoreDescIdAsc)
       .join(fused.select(col("doc_id"), col("bm25_rn"), col("cosine_rn")),
         Seq("doc_id"))
       .select(col("rn"), col("doc_id"), col("rrf"),

@@ -72,7 +72,7 @@ object TextAnalysis {
         slice(ws, lit(1), size(ws) - 1), slice(ws, lit(2), size(ws) - 1),
         (a, b) => concat(a, lit(" "), b))).as("pair"))
       .groupBy("pair").agg(count(lit(1)).as("n"))
-    val merges = broadcast(Similarity.heapTopKWords(pairs, "n", "pair", k)
+    val merges = broadcast(Rank.global(pairs, "n", "pair", k, Rank.CountDescWordAsc)
       .agg(transform(array_sort(collect_list(struct(col("rn"), col("pair")))),
         x => x.getField("pair")).as("merges")))
     val applied = docs.crossJoin(merges) // broadcast 1-row merge table
@@ -348,10 +348,7 @@ object TextAnalysis {
       .crossJoin(broadcast(nDocs))
       .withColumn("score",
         round(col("tf") * log((col("n_docs") + lit(1.0)) / (col("df") + lit(1.0))), 6))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("score").desc, col("word").asc)
-    scored.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    Rank.perGroup(scored, Seq("doc_id"), Seq(col("score").desc, col("word").asc), k)
       .select(col("doc_id"), col("rn"), col("word"), col("tf"), col("score"))
   }
 
@@ -890,7 +887,7 @@ object TextAnalysis {
             (lit(1.0) - Bm25B + lit(Bm25B) * col("dl") / col("avgdl"))))
       .groupBy("doc_id")
       .agg(round(graft.functions.Num.dsum(col("term_score")), 6).as("score"))
-    Similarity.heapTopKGlobal(scored, "score", "doc_id", k)
+    Rank.global(scored, "score", "doc_id", k, Rank.ScoreDescIdAsc)
   }
 
   /** Jensen–Shannon drift between the same two corpus snapshots as
@@ -1133,7 +1130,7 @@ object TextAnalysis {
     * whitespace tokens by corpus frequency (count desc, token asc — the
     * greedy frequency vocabulary a tokenizer build would keep) and score
     * every document's coverage against it. The vocabulary is built with
-    * the two-level bounded top-k heap ([[Similarity.heapTopKWords]] — no
+    * the two-level bounded top-k heap ([[Rank.global]] — no
     * global sort) and broadcast, so the per-doc scoring join ships only
     * `v` strings to every executor; the coverage aggregation is one
     * keyed groupBy on doc_id. All-integer counts plus one exactly-
@@ -1152,7 +1149,7 @@ object TextAnalysis {
       explode(split(col("text"), " ")).as("tok"))
     val counts = toks.groupBy("tok").agg(count(lit(1)).as("n"))
     val vocab = broadcast(
-      Similarity.heapTopKWords(counts, "n", "tok", v)
+      Rank.global(counts, "n", "tok", v, Rank.CountDescWordAsc)
         .select(col("tok"), lit(1L).as("in_vocab")))
     toks.join(vocab, Seq("tok"), "left_outer")
       .groupBy("doc_id")
@@ -1166,15 +1163,19 @@ object TextAnalysis {
     * [[Dedup.wordShingles]]' per-doc distinct set): pure array algebra —
     * two zip_with passes over three shifted slices, one generator per
     * row, no shuffle. */
-  def wordTrigrams(docs: DataFrame): DataFrame = {
+  def wordTrigrams(docs: DataFrame): DataFrame = trigrams(docs, Nil, "gram")
+
+  /** `lead` columns plus one `as` row per positional word trigram of each
+    * document with at least three words. */
+  private def trigrams(docs: DataFrame, lead: Seq[Column], as: String): DataFrame = {
     val ws = split(col("text"), " ")
     val n = size(ws)
-    docs.filter(n >= 3).select(
+    docs.filter(n >= 3).select(lead :+
       explode(zip_with(
         zip_with(slice(ws, lit(1), n - 2), slice(ws, lit(2), n - 2),
           (a, b) => concat(a, lit(" "), b)),
         slice(ws, lit(3), n - 2),
-        (ab, c) => concat(ab, lit(" "), c))).as("gram"))
+        (ab, c) => concat(ab, lit(" "), c))).as(as): _*)
   }
 
   /** Distinct (source, trigram) pairs — the set universe behind the KMV
@@ -1182,20 +1183,8 @@ object TextAnalysis {
     * tiny and near-fully shared across sources, so word sets would make
     * every pairwise Jaccard ≈ 1 and leave the sketches untested;
     * trigram sets are ~10× the sketch size with 1–8% overlaps. */
-  private[graft] def sourceTrigrams(docs: DataFrame): DataFrame = {
-    val ws = split(col("text"), " ")
-    val n = size(ws)
-    docs.filter(n >= 3).select(col("source"),
-      explode(zip_with(
-        zip_with(slice(ws, lit(1), n - 2), slice(ws, lit(2), n - 2),
-          (a, b) => concat(a, lit(" "), b)),
-        slice(ws, lit(3), n - 2),
-        (ab, c) => concat(ab, lit(" "), c))).as("word")).distinct()
-  }
-
-  private def kminAgg(k: Int) =
-    udaf(new graft.functions.KMinAggregator(k),
-      org.apache.spark.sql.Encoders.scalaLong)
+  private[graft] def sourceTrigrams(docs: DataFrame): DataFrame =
+    trigrams(docs, Seq(col("source")), "word").distinct()
 
   /** Pairwise SOURCE-overlap matrix — the dataset-card question ("how
     * much of source A is also in source B?") answered two ways in one
@@ -1203,7 +1192,7 @@ object TextAnalysis {
     * Jaccard it approximates.
     *
     * The KMV path is the 100 TB shape: one distinct pass builds an
-    * O(k) sketch per source ([[graft.functions.KMinAggregator]] over
+    * O(k) sketch per source ([[Rank.LongAsc]]'s bounded aggregate over
     * engine-portable md5 hashes), and the S²/2 pairwise stage runs on
     * sketches alone — S·k longs broadcast, never touching the corpus
     * again. Because a set's k smallest hashes are deterministic, the
@@ -1218,7 +1207,7 @@ object TextAnalysis {
     * production scale you run it on a sampled slice or not at all; the
     * sketch column is the one a 100 TB dataset card ships. */
   def sourceOverlapKmv(docs: DataFrame, k: Int): DataFrame = {
-    val kmin = kminAgg(k)
+    val kmin = Rank.LongAsc.udaf(k)
     // persisted: the trigram explode + distinct feeds the sketch, the
     // sizes, AND the exact-intersection aggregate — repeated executions
     // of the operator's dominant shuffle without the pin. fanOut first:
@@ -1443,7 +1432,7 @@ object TextAnalysis {
     def absorb(docs: DataFrame): KmvIndex =
       copy(sketch = AccumIndex.swap(sketch, sketch.unionByName(kmvSketch(docs, k))
         .select(col("source"), explode(col("sk")).as("h")).distinct()
-        .groupBy("source").agg(kminAgg(k)(col("h")).as("sk"))))
+        .groupBy("source").agg(Rank.LongAsc.udaf(k)(col("h")).as("sk"))))
   }
 
   /** Per-source k-min sketch of the docs' distinct trigram hashes. */
@@ -1452,7 +1441,7 @@ object TextAnalysis {
     sourceTrigrams(graft.Tables.fanOut(docs))
       .select(col("source"), graft.functions.Hashing.md5Long(col("word")).as("h"))
       .distinct()
-      .groupBy("source").agg(kminAgg(k)(col("h")).as("sk"))
+      .groupBy("source").agg(Rank.LongAsc.udaf(k)(col("h")).as("sk"))
 
   def buildKmvIndex(docs: DataFrame, k: Int): KmvIndex = {
     val sk = AccumIndex.persist(kmvSketch(docs, k))

@@ -119,16 +119,6 @@ object Warehouse {
       .drop("bin")
   }
 
-  /** Top-k rows per group by an explicit total order (ties broken by the
-    * caller's tiebreak column — never rely on row_number over a partial
-    * order). */
-  def topKPerGroup(df: DataFrame, partCols: Seq[String], order: Seq[Column],
-                   k: Int): DataFrame = {
-    val w = Window.partitionBy(partCols.map(col): _*).orderBy(order: _*)
-    df.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-  }
-
   /** SCD Type-2 history build: turn an attribute change log into a
     * versioned dimension with `valid_from`/`valid_to` intervals and an
     * `is_current` flag (the companion to [[upsert]]'s SCD-1 overwrite).

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{Hashing, Num, Poly31Hash}
-import graft.operators.{Dedup, Multimodal, Sampling, Similarity, TextAnalysis}
+import graft.operators.{Dedup, Multimodal, Rank, Sampling, Similarity, TextAnalysis}
 
 /** LLM-training-data pipeline operators (the north-star extras in
   * BASELINE.json): dedup ×5, similarity search, text analysis,
@@ -698,7 +698,7 @@ object PipelinePack {
           slice(ws, lit(1), size(ws) - 1), slice(ws, lit(2), size(ws) - 1),
           (a, b) => concat(a, lit(" "), b))).as("pair"))
         .groupBy("pair").agg(count(lit(1)).as("n"))
-      Similarity.heapTopKWords(pairs, "n", "pair", 10)
+      Rank.global(pairs, "n", "pair", 10, Rank.CountDescWordAsc)
         .select(col("rn"), col("pair"), col("n"))
         .orderBy("rn")
     },
@@ -1458,7 +1458,7 @@ object PipelinePack {
         .select(col("doc_id"), col("lang"), col("source"))
         .withColumn("h",
           Hashing.md5Long(concat(lit("smp:"), col("doc_id").cast("string"))))
-      graft.operators.Warehouse.topKPerGroup(docs, Seq("lang"),
+      Rank.perGroup(docs, Seq("lang"),
           Seq(col("h").asc, col("doc_id").asc), GRP_SAMPLE_K)
         .select(col("lang"), col("rn"), col("doc_id"), col("source"))
         .orderBy("lang", "rn")
@@ -1480,8 +1480,8 @@ object PipelinePack {
       val est = grams.agg(mg(col("gram")).as("mg"))
         .select(explode(col("mg")).as(Seq("gram", "mg_est")))
       val totals = grams.agg(count(lit(1)).as("n_total"))
-      val top = Similarity.heapTopKWords(
-        grams.groupBy("gram").agg(count(lit(1)).as("n")), "n", "gram", HH_TOP)
+      val top = Rank.global(grams.groupBy("gram").agg(count(lit(1)).as("n")),
+        "n", "gram", HH_TOP, Rank.CountDescWordAsc)
       top.join(broadcast(est), Seq("gram"), "left")
         .crossJoin(broadcast(totals))
         .select(col("rn"), col("gram"), col("n"),
@@ -1495,7 +1495,7 @@ object PipelinePack {
 
   // ---- oracle SQL generation (same constants as the Spark side) ----
 
-  private val sh = Dedup.wordShinglesSql()
+  private val sh = Dedup.wordShinglesSql
 
   /** All-pairs shingle intersection sizes over the `sh` CTE — the
     * exact-jaccard numerator, as CTE `name(doc_a, doc_b, i)`. */
@@ -4421,7 +4421,7 @@ object PipelinePack {
          |FROM labels ORDER BY img_id""".stripMargin,
 
     // Top-VOCAB_V frequency vocabulary (count desc, token asc — the
-    // exact order heapTopKWords produces), then per-doc OOV coverage.
+    // exact order Rank.CountDescWordAsc produces), then per-doc OOV coverage.
     "q_text_vocab_coverage" ->
       s"""WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
          |           FROM documents),

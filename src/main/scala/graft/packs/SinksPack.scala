@@ -16,16 +16,16 @@ import graft.streaming.StreamOps
 object SinksPack {
   type Q = (SparkSession, String) => DataFrame
 
-  // pid-unique so two JVMs on the same scale factor (sbt test alongside
-  // Verify/Bench) never race on the same overwrite-write + read-back dirs.
-  private val pid = java.lang.ProcessHandle.current().pid()
+  // Under the JVM's own scratch root, so two JVMs on the same scale
+  // factor (sbt test alongside Verify/Bench) never race on the same
+  // overwrite-write + read-back dirs, and nothing outlives the JVM.
   private[packs] def tmpPath(kind: String, d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_${pid}_${kind}_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+    graft.Scratch.path(s"${kind}_${d.replaceAll("[^A-Za-z0-9]", "_")}")
 
   /** Once-per-JVM fixture writes: a query's *setup* I/O (writing the
     * nested-JSON fixture, bucketed tables) runs at most once per process,
     * so a prewarmed Bench times the read/flatten path, not fixture
-    * creation. Safe because tmpPath/table targets are pid-unique and the
+    * creation. Safe because tmpPath/table targets are JVM-unique and the
     * written content is deterministic in (kind, sfDir). NOT used where
     * re-execution is the semantics under test (e.g. k3's append). */
   private val fixtureDone = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -971,7 +971,7 @@ object SinksPack {
     // the shape that lets 1000 executors each pull a key range instead
     // of one task streaming the whole table).
     "q_k3_jdbc_roundtrip" -> { (s, d) =>
-      System.setProperty("derby.stream.error.file", s"${sys.props("java.io.tmpdir")}/graft_derby.log")
+      System.setProperty("derby.stream.error.file", graft.Scratch.path("derby.log"))
       val url = s"jdbc:derby:${tmpPath("derbydb", d)};create=true"
       val table = "GRAFT_JDBC_ORDERS"
       val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"))

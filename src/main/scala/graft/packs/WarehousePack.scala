@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Num
-import graft.operators.Warehouse
+import graft.operators.{Rank, Warehouse}
 
 /** `x_`-prefixed analytical superset (SURVEY.md §2.13 / §7.2): the joins,
   * group-bys, windows and set ops the reference's warehouse schema exists
@@ -155,7 +155,7 @@ object WarehousePack {
 
     // Window ranking: top-3 parts per brand by price (total order).
     "q_x_window_rank" -> { (s, d) =>
-      Warehouse.topKPerGroup(
+      Rank.perGroup(
           Tables.part(s, d), Seq("p_brand"),
           Seq(col("p_retailprice").desc, col("p_partkey").asc), 3)
         .select(col("p_brand"), col("rn"), col("p_partkey"), col("p_retailprice"))
@@ -167,7 +167,7 @@ object WarehousePack {
       val totals = Tables.events(s, d)
         .groupBy(col("event_type"), col("user_id"))
         .agg(Num.dsum(col("value")).as("total"))
-      Warehouse.topKPerGroup(
+      Rank.perGroup(
           totals, Seq("event_type"),
           Seq(col("total").desc, col("user_id").asc), 5)
         .select(col("event_type"), col("rn"), col("user_id"), col("total"))
@@ -244,7 +244,7 @@ object WarehousePack {
       val counts = Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("word"))
         .groupBy("word").agg(count(lit(1)).as("n"))
-      graft.operators.Similarity.heapTopKWords(counts, "n", "word", 20)
+      Rank.global(counts, "n", "word", 20, Rank.CountDescWordAsc)
         .select(col("rn"), col("word"), col("n"))
         .orderBy("rn")
     },

@@ -246,9 +246,10 @@ private[sources] case class PageInputPartition(file: String, page: Long,
                                                strict: Boolean = true)
     extends InputPartition
 
-/** One `listStatus` of the page layout: (page number, part file),
-  * sorted by page — shared by the batch planner and the micro-batch
-  * stream (whose offset is a position in exactly this ordering). */
+/** One `listStatus` of the page layout, sorted by page, and the
+  * token-chained partitions planned from it — shared by the batch
+  * scans and the micro-batch stream (whose offset is a position in
+  * exactly this ordering). */
 private[sources] object PagedLayout {
   /** Listings performed since JVM start — observability for the
     * "metadata round-trips per trigger" contract (PagedStreamSpec pins
@@ -256,8 +257,8 @@ private[sources] object PagedLayout {
     * listing per trigger is a real cost). */
   val listings = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** [[listPages]] plus each part file's byte length — ONE listing
-    * feeding both the batch planner and the size statistic
+  /** (page number, part file, byte length), sorted by page — ONE
+    * listing feeding both the batch planner and the size statistic
     * ([[PagedScan]] caches it in a lazy val, so join planning's
     * `estimateStatistics` and `planInputPartitions` never re-list the
     * layout; at a million-page mirror the repeated listing IS a cost). */
@@ -278,22 +279,15 @@ private[sources] object PagedLayout {
       }
   }
 
-  def listPages(path: String): Array[(Long, String)] = {
-    listings.incrementAndGet()
-    val root = new HPath(path)
-    val fs: FileSystem =
-      root.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
-    fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("page="))
-      .map(s => (s.getPath.getName.stripPrefix("page=").toLong, s.getPath))
-      .sortBy(_._1)
-      .map { case (pg, dir) =>
-        val file = fs.listStatus(dir)
-          .filter(f => f.isFile && f.getPath.getName.startsWith("part-") && f.getLen > 0)
-          .head.getPath.toString
-        (pg, file)
-      }
-  }
+  /** One partition per page of `layout(from until until)`, each paired
+    * with the token it must carry: the next page in the layout, or none
+    * for the last. Metadata only — executors read the payloads. */
+  def partitions(layout: Array[(Long, String, Long)], from: Int, until: Int,
+                 strict: Boolean): Array[InputPartition] =
+    (from until until).map { i =>
+      val expected = if (i + 1 < layout.length) s"tok_${layout(i + 1)._1}" else null
+      PageInputPartition(layout(i)._2, layout(i)._1, expected, strict): InputPartition
+    }.toArray
 }
 
 class PagedScan(path: String, val pushed: Array[Filter],
@@ -350,16 +344,8 @@ class PagedScan(path: String, val pushed: Array[Filter],
         s" PushedTopN: ORDER BY [$keys] LIMIT $n"
       }.getOrElse("")
 
-  /** Metadata-only planning: list `page=N` directories (one FS call),
-    * sort, and pair each page with the token it must carry (the next
-    * page in the layout, or none for the last). Payloads are read only
-    * by the executors. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    layout.zipWithIndex.map { case ((pg, file, _), i) =>
-      val expected = if (i + 1 < layout.length) s"tok_${layout(i + 1)._1}" else null
-      PageInputPartition(file, pg, expected): InputPartition
-    }
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    PagedLayout.partitions(layout, 0, layout.length, strict = true)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PagedReaderFactory(pushed, schema, runtimeKeys, pushedLimit, pushedTopN)
@@ -493,11 +479,7 @@ private[sources] class PagedMicroBatchStream(path: String, pushed: Array[Filter]
     // before any latestOffset call)
     val cached = cachedLayout
     val pages = if (cached.length >= e0) cached else refreshLayout()
-    (s0 until math.min(e0, pages.length)).map { i =>
-      val expected = if (i + 1 < pages.length) s"tok_${pages(i + 1)._1}" else null
-      PageInputPartition(pages(i)._2, pages(i)._1, expected,
-        strict = false): InputPartition
-    }.toArray
+    PagedLayout.partitions(pages, s0, math.min(e0, pages.length), strict = false)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -522,11 +504,8 @@ private[sources] class PagedAggScan(path: String, val pushed: Array[Filter],
     s"GraftPagedJson path=$path PushedFilters: [${pushed.mkString(", ")}] " +
       s"PushedAggregates: [${readSchema().fieldNames.mkString(", ").toUpperCase}]"
   override def planInputPartitions(): Array[InputPartition] = {
-    val pages = PagedLayout.listPages(path)
-    pages.zipWithIndex.map { case ((pg, file), i) =>
-      val expected = if (i + 1 < pages.length) s"tok_${pages(i + 1)._1}" else null
-      PageInputPartition(file, pg, expected): InputPartition
-    }
+    val layout = PagedLayout.listPagesWithSize(path)
+    PagedLayout.partitions(layout, 0, layout.length, strict = true)
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new PagedAggReaderFactory(pushed, specs)
@@ -642,6 +621,23 @@ private[sources] class PagedReader(part: PageInputPartition, pushed: Array[Filte
     if (v == null || v.isNull) null else v.asText()
   }
 
+  /** A source column's value in an item: the one column → JSON path
+    * table (`id.videoId`, `snippet.*`). */
+  private def fieldOf(column: String): JsonNode => String = {
+    val (obj, key) = column match {
+      case "video_id" => ("id", "videoId")
+      case "published_at" => ("snippet", "publishedAt")
+      case "title" => ("snippet", "title")
+      case "description" => ("snippet", "description")
+      case other => throw new IllegalArgumentException(
+        s"paged_json: unknown projected column $other")
+    }
+    it => text(it.get(obj), key)
+  }
+
+  private val publishedAt = fieldOf("published_at")
+  private val videoId = fieldOf("video_id")
+
   private def passes(published: String): Boolean = pushed.forall {
     case GreaterThan("published_at", v: String) => published != null && published > v
     case GreaterThanOrEqual("published_at", v: String) => published != null && published >= v
@@ -657,14 +653,10 @@ private[sources] class PagedReader(part: PageInputPartition, pushed: Array[Filte
     * re-derived per item. */
   private val extractors: Array[JsonNode => UTF8String] =
     schema.fieldNames.map {
-      case "video_id" => (it: JsonNode) => utf8(text(it.get("id"), "videoId"))
-      case "published_at" => (it: JsonNode) => utf8(text(it.get("snippet"), "publishedAt"))
-      case "title" => (it: JsonNode) => utf8(text(it.get("snippet"), "title"))
-      case "description" => (it: JsonNode) => utf8(text(it.get("snippet"), "description"))
       case f if f.equalsIgnoreCase(GraftCsvTable.FileColumn) =>
         val const = utf8(part.file); (_: JsonNode) => const
-      case other => throw new IllegalArgumentException(
-        s"paged_json: unknown projected column $other")
+      case f =>
+        val field = fieldOf(f); (it: JsonNode) => utf8(field(it))
     }
 
   private var parsed = 0L
@@ -678,10 +670,8 @@ private[sources] class PagedReader(part: PageInputPartition, pushed: Array[Filte
     parsed += 1
     // only extracted when a pushed filter needs it; an unfiltered
     // pruned read never touches the snippet timestamp
-    val published =
-      if (pushed.isEmpty) null else text(it.get("snippet"), "publishedAt")
-    val ok = passes(published) &&
-      runtimeKeys.forall(ks => ks.contains(text(it.get("id"), "videoId")))
+    val published = if (pushed.isEmpty) null else publishedAt(it)
+    val ok = passes(published) && runtimeKeys.forall(ks => ks.contains(videoId(it)))
     if (!ok) filtered += 1
     ok
   }
@@ -690,12 +680,7 @@ private[sources] class PagedReader(part: PageInputPartition, pushed: Array[Filte
     * (the finishing sort's columns are in the projection anyway, but
     * the reader must not depend on pruning order). */
   private lazy val sortExtractors: Array[JsonNode => String] =
-    topN.get._1.map(_.field).map {
-      case "video_id" => (it: JsonNode) => text(it.get("id"), "videoId")
-      case "published_at" => (it: JsonNode) => text(it.get("snippet"), "publishedAt")
-      case "title" => (it: JsonNode) => text(it.get("snippet"), "title")
-      case "description" => (it: JsonNode) => text(it.get("snippet"), "description")
-    }
+    topN.get._1.map(k => fieldOf(k.field))
 
   /** "a sorts before b under the requested ordering" as a sign:
     * `nullsFirst` is the REQUESTED null position (already

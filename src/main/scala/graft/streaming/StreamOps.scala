@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 import graft.functions.Num
-import graft.operators.{AccumIndex, Lifecycle, Multimodal, TextAnalysis}
+import graft.operators.{AccumIndex, Lifecycle, Multimodal, Rank, TextAnalysis}
 
 /** Structured Streaming surface. The reference is batch-only (`@daily`
   * Airflow reruns, SURVEY.md §2.13); these are the streaming-idiomatic
@@ -77,13 +77,8 @@ object StreamOps {
     * (user, type) and the horizon is the hour. Ranking windows partition
     * by (user, type, hour), so no partition exceeds one key-hour. */
   def firstPerKeyHourBatch(events: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"), col("event_type"), col("h"))
-      .orderBy(col("ts"), col("event_id"))
-    events
-      .withColumn("h", date_trunc("hour", col("ts")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    Rank.perGroup(events.withColumn("h", date_trunc("hour", col("ts"))),
+        Seq("user_id", "event_type", "h"), Seq(col("ts"), col("event_id")), 1)
       .select(col("user_id"), col("event_type"),
         date_format(col("h"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
         col("event_id").as("first_event"))

@@ -90,6 +90,37 @@ class PlanHygieneSpec extends AnyFunSuite {
     }.isEmpty, "WindowExec survived alongside the top-k rewrite")
   }
 
+  /** The physical plan of every action `name`'s query function runs while
+    * it builds — the checkpoint an operator materializes before
+    * returning included, which the returned frame's plan no longer shows. */
+  private def buildPlans(name: String): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = seen.add(qe.sparkPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries(name)(spark, d)
+      org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 10000)
+    } finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  // The two rank filters of the curation_build benchmark mix, and
+  // ivfTopK's two ranks (lists and probes) read off one rank filter.
+  for (name <- Seq("q_sim_pq", "q_sim_ivf_balance", "q_sim_ivf_topk"))
+    test(s"$name: its build's rank filter plans through TopKPerGroupExec") {
+      val plans = buildPlans(name)
+      assert(plans.exists(_.collect { case e: graft.plans.TopKPerGroupExec => e }.nonEmpty),
+        s"$name built no native top-k operator:\n${plans.mkString("\n")}")
+      assert(plans.forall(_.collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }.isEmpty), s"$name planned a WindowExec:\n${plans.mkString("\n")}")
+    }
+
   test("q_s1_paged_source: publishedAfter is pushed into the V2 source, no residual filter") {
     val p = plan("q_s1_paged_source")
     val scans = p.collect {

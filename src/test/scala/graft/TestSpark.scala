@@ -17,8 +17,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .config("spark.log.level", "WARN")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-test-warehouse-${ProcessHandle.current().pid()}")
+      .config("spark.sql.warehouse.dir", Scratch.path("warehouse"))
     Tables.requiredConfs.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
