@@ -12,10 +12,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-  import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+  import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
+  import java.util.concurrent.ConcurrentHashMap
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` that infers the schema once per session
+    * and file: inference reads the footer in a Spark job (about 0.1 s a
+    * read), while a read given the schema runs none. The inferred
+    * `StructType` — nullability and metadata as inferred — is memoized
+    * per session, keyed on the absolute path, length and mtime, so a
+    * rewritten file is inferred again. Only regular files are memoized;
+    * a directory (whose parts can change without its own mtime moving)
+    * or a non-local path is inferred on every read. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val f = new java.io.File(path)
+    if (!f.isFile) spark.read.parquet(path)
+    else {
+      val perSession = schemas.synchronized(
+        schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[(String, Long, Long), StructType]()))
+      val schema = perSession.computeIfAbsent((f.getAbsolutePath, f.length, f.lastModified),
+        _ => spark.read.parquet(path).schema)
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[(String, Long, Long), StructType]]()
 
   /** All graft sessions must read nanosecond parquet timestamps
     * (events.ts) as raw longs instead of erroring (PARQUET_TYPE_ILLEGAL);

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{DotProduct, Num}
+import graft.functions.{DotProduct, NearestCentroid, Num}
 
 /** Similarity search over an embedding column (Array[Float] in parquet,
   * cast to double for engine-stable arithmetic).
@@ -65,6 +65,12 @@ object Similarity {
           transform(col("raw"), x => x / col("nrm"))).as("v"))
   }
 
+  /** The data-seeded centroids (cid, cv): the normalized vectors whose
+    * `vec_id % centStride == 0`, so an oracle replays the same set. */
+  private def seeds(e: DataFrame, centStride: Long): DataFrame =
+    e.filter(pmod(col("vec_id"), lit(centStride)) === 0)
+      .select(col("vec_id").as("cid"), col("v").as("cv"))
+
   /** Exact top-k neighbours for each query row (queries = `queryPred`),
     * ranked by rounded cosine desc with vec_id tiebreak. */
   def bruteForceTopK(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
@@ -92,9 +98,7 @@ object Similarity {
               centStride: Long): DataFrame = {
     val e = normalized(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cent = e.filter(pmod(col("vec_id"), lit(centStride)) === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val scoredCent = e.crossJoin(broadcast(cent))
+    val scoredCent = e.crossJoin(broadcast(seeds(e, centStride)))
       .select(col("vec_id"), col("cid"), expr("dotp(v, cv)").as("cd"))
     // Per-vector centroid ranking: each window partition is one vector's
     // |centroids| rows — bounded, never a corpus-wide sort.
@@ -124,30 +128,29 @@ object Similarity {
     * row: list count, vector count, min/max/avg list size, and skew =
     * max/avg (1.0 = perfectly balanced). Same data-seeded centroids and
     * assignment argmax as [[ivfTopK]], so the report describes exactly
-    * the index the query path probes. Scale: one broadcast-assignment
-    * scan + one keyed count + one tiny aggregate. */
+    * the index the query path probes. Scale: the centroid table is
+    * collected once; then one scan assigns each vector in place
+    * ([[NearestCentroid]]), one keyed count and one tiny aggregate. The
+    * frame is returned lazy: nothing is cached or checkpointed. */
   def ivfBalanceReport(emb: DataFrame, centStride: Long): DataFrame = {
     val e = normalized(emb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cent = e.filter(pmod(col("vec_id"), lit(centStride)) === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val sizes = assignToCentroids(e, cent)
+    val sizes = assignToCentroids(e, seeds(e, centStride))
       .groupBy("cid").agg(count(lit(1)).as("sz"))
-    val out = sizes.agg(
+    sizes.agg(
       count(lit(1)).as("n_lists"),
       sum(col("sz")).as("n_vectors"),
       min(col("sz")).as("min_size"),
       max(col("sz")).as("max_size"),
       round(avg(col("sz")), 6).as("avg_size"),
       round(max(col("sz")) / avg(col("sz")), 6).as("skew"))
-    Dedup.materializeThenRelease(out, e)
   }
 
   /** One Lloyd assignment round: nearest centroid by inner product
     * (vectors are normalized, so this is spherical k-means assignment),
     * deterministic cid-asc tie-break. The centroid table is bounded
-    * (data-seeded stride) and broadcast; the per-vector ranking window
-    * partitions by vec_id — |centroids| rows each, corpus-independent. */
+    * (data-seeded stride): it is collected once and each vector is
+    * searched against it in place by [[NearestCentroid]] — one narrow
+    * pass, no cross join, no shuffle, no ranking. */
   private def assignToCentroids(e: DataFrame, cent: DataFrame): DataFrame =
     assignWithSim(e, cent).select("vec_id", "cid")
 
@@ -156,12 +159,11 @@ object Similarity {
     * argmax (ordering is decided on the raw dot, so rounding cannot
     * flip an assignment) — the per-vector fit signal the staleness
     * accounting aggregates. */
-  private def assignWithSim(e: DataFrame, cent: DataFrame): DataFrame = {
-    val scored = e.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("cid"), expr("dotp(v, cv)").as("cd"))
-    Rank.perGroup(scored, Seq("vec_id"), Seq(col("cd").desc, col("cid").asc), 1)
-      .select(col("vec_id"), col("cid"), round(col("cd"), 6).as("cd"))
-  }
+  private[graft] def assignWithSim(e: DataFrame, cent: DataFrame): DataFrame =
+    e.select(col("vec_id"), explode(
+        NearestCentroid.argmaxDot(e.sparkSession, col("v"), NearestCentroid.table(cent)))
+        .as("a"))
+      .select(col("vec_id"), col("a.cid").as("cid"), col("a.d").as("cd"))
 
   // ------------------------------- incremental IVF index maintenance
 
@@ -228,8 +230,7 @@ object Similarity {
 
   def buildIvfIndex(emb: DataFrame, centStride: Long): IvfIndex = {
     val e = AccumIndex.persist(normalized(emb))
-    val cent = AccumIndex.persist(e.filter(pmod(col("vec_id"), lit(centStride)) === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv")))
+    val cent = AccumIndex.persist(seeds(e, centStride))
     // Materialize up front: the first arriving batch must not absorb the
     // corpus assignment pass. stats ← cent is one lineage chain.
     val stats = AccumIndex.persist(listStats(e, cent))
@@ -263,7 +264,7 @@ object Similarity {
     * surfaces as a row with old_size = 0 and null growth/mean_sim_old
     * — a left join would silently DROP those arrivals and the report
     * would under-count the batch. Per-batch cost: |batch|·|centroids|
-    * broadcast dots + one keyed aggregate + a |centroids|-row join —
+    * in-place dots + one keyed aggregate + a |centroids|-row join —
     * no corpus-sized work. */
   def ivfReassign(index: IvfIndex, newEmb: DataFrame): DataFrame = {
     val added = listStats(normalized(newEmb), index.centroids)
@@ -294,14 +295,13 @@ object Similarity {
     * are bit-identical on any engine and any partitioning (a raw double
     * mean would drift by ulps and could flip an argmax). Emits one row
     * per surviving centroid: member count + centroid L2 norm. Scale: per
-    * iteration one broadcast-assignment scan (n·|centroids| codegen'd
-    * dots) + one (cid, dim)-keyed map-side-combining aggregate; centroid
-    * state is O(|centroids|·dim), never corpus-sized. */
+    * iteration one in-place assignment scan (n·|centroids| primitive
+    * dots, [[NearestCentroid]]) + one (cid, dim)-keyed map-side-combining
+    * aggregate; centroid state is O(|centroids|·dim), never corpus-sized. */
   def kmeansClusters(emb: DataFrame, centStride: Long, iters: Int): DataFrame = {
     val e = normalized(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cent = e.filter(pmod(col("vec_id"), lit(centStride)) === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
+    var cent = seeds(e, centStride)
     for (i <- 0 until iters) {
       val members = assignToCentroids(e, cent).join(e, Seq("vec_id"))
       val next = members
@@ -533,8 +533,8 @@ object Similarity {
     * never forms. Centroids are data-seeded (vec_id % centStride == 0,
     * same scheme as [[ivfTopK]]/[[kmeansClusters]], so the oracle
     * replays the identical set); each vector is assigned to its nearest
-    * centroid by inner product (bounded broadcast, deterministic cid-asc
-    * tiebreak); within a cluster, a vector is DROPPED when a
+    * centroid by inner product (bounded table searched in place,
+    * deterministic cid-asc tiebreak); within a cluster, a vector is DROPPED when a
     * smaller-vec_id member sits at rounded cosine ≥ minCos (keep-lowest
     * — the deterministic stand-in for the paper's keep-farthest-from-
     * centroid policy). Emits one row per vector: (vec_id, cid, kept).
@@ -545,9 +545,7 @@ object Similarity {
   def semDedup(emb: DataFrame, centStride: Long, minCos: Double): DataFrame = {
     val e = normalized(emb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cent = e.filter(pmod(col("vec_id"), lit(centStride)) === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val assign = assignToCentroids(e, cent)
+    val assign = assignToCentroids(e, seeds(e, centStride))
     val members = assign.join(e, Seq("vec_id"))
     val a = members.select(col("cid"), col("vec_id").as("vec_a"), col("v").as("va"))
     val b = members.select(col("cid"), col("vec_id").as("vec_b"), col("v").as("vb"))
@@ -573,41 +571,41 @@ object Similarity {
     * engines) and are rounded to 6 BEFORE the argmin so an ulp can
     * never flip a code. Emits the long-form code table (vec_id, sub_no,
     * code, sq_err) — n·m rows, the PQ index a vector store ships to
-    * disk at 1/(32·sub/8)th of float32. Scale: one narrow subspace
-    * explode, a bounded codebook broadcast, one per-(vector, subspace)
-    * ranking window of |codebook| rows — no corpus-sized shuffle beyond
-    * the explode's own combine. */
+    * disk at 1/(32·sub/8)th of float32. Scale: the codebooks are
+    * collected once and each vector is encoded in place
+    * ([[NearestCentroid]]) — one narrow pass, no join, no shuffle; the
+    * frame is returned lazy. */
   def pqEncode(emb: DataFrame, centStride: Long, m: Int, dim: Int): DataFrame = {
     val e = normalized(emb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = pqArgmin(pqScored(e, centStride, m, dim / m))
-      .select(col("vec_id"), col("sub_no"), col("cid").as("code"), col("d").as("sq_err"))
-    Dedup.materializeThenRelease(out, e)
+    pqCodes(e, seeds(e, centStride), m, dim / m)
   }
 
-  /** Every (vector, subspace, codebook-entry) squared-L2 distance —
-    * shared by [[pqEncode]] and [[pqAdcTopK]] so the codes and the ADC
-    * lookup tables are byte-identical by construction. */
-  private def pqScored(e: DataFrame, centStride: Long, m: Int, sub: Int): DataFrame = {
-    def subspaces(df: DataFrame, idCol: String): DataFrame =
-      df.select(col(idCol),
+  /** (vec_id, sub_no, code, sq_err): each vector's nearest codebook
+    * entry per subspace, cid-asc tie-break — [[pqScored]]'s rows
+    * argmin'd in place by [[NearestCentroid]], with `sq_err`
+    * bit-identical to [[pqScored]]'s `d`. */
+  private[graft] def pqCodes(e: DataFrame, cent: DataFrame, m: Int, sub: Int): DataFrame =
+    e.select(col("vec_id"), posexplode(
+        NearestCentroid.pqCodes(e.sparkSession, col("v"), NearestCentroid.table(cent), m, sub)))
+      .select(col("vec_id"), col("pos").cast("long").as("sub_no"),
+        col("col.cid").as("code"), col("col.d").as("sq_err"))
+
+  /** Every (vector, subspace, codebook-entry) squared-L2 distance of the
+    * vectors `x` against the codebooks sliced from `cent` (cid, cv) —
+    * [[pqAdcTopK]]'s query-side lookup tables, and the definition
+    * [[pqCodes]] replays. */
+  private[graft] def pqScored(x: DataFrame, cent: DataFrame, m: Int, sub: Int): DataFrame = {
+    def subspaces(df: DataFrame, id: String, v: String): DataFrame =
+      df.select(col(id),
         posexplode(array((0 until m).map(s =>
-          expr(s"slice(v, ${s * sub + 1}, $sub)")): _*)))
-        .select(col(idCol), col("pos").cast("long").as("sub_no"), col("col").as("sv"))
-    val ex = subspaces(e, "vec_id")
-    val cb = subspaces(
-      e.filter(pmod(col("vec_id"), lit(centStride)) === 0)
-        .select(col("vec_id").as("cid"), col("v")), "cid")
-      .withColumnRenamed("sv", "cv")
-    ex.join(broadcast(cb), Seq("sub_no"))
+          expr(s"slice($v, ${s * sub + 1}, $sub)")): _*)))
+        .select(col(id), col("pos").cast("long").as("sub_no"), col("col").as(v))
+    subspaces(x.withColumnRenamed("v", "sv"), "vec_id", "sv")
+      .join(broadcast(subspaces(cent, "cid", "cv")), Seq("sub_no"))
       .select(col("vec_id"), col("sub_no"), col("cid"),
         round(expr("dotp(sv, sv)") + expr("dotp(cv, cv)")
           - lit(2) * expr("dotp(sv, cv)"), 6).as("d"))
   }
-
-  /** Each (vector, subspace)'s nearest codebook entry, cid-asc tie-break. */
-  private def pqArgmin(scored: DataFrame): DataFrame =
-    Rank.perGroup(scored, Seq("vec_id", "sub_no"), Seq(col("d").asc, col("cid").asc), 1)
 
   /** PQ asymmetric-distance (ADC) top-k retrieval: corpus vectors are
     * represented ONLY by their m codebook codes ([[pqEncode]]'s output);
@@ -619,28 +617,26 @@ object Similarity {
     * arithmetic ever touches a corpus vector at query time. The
     * per-subspace distances are rounded (6) before the DECIMAL-exact
     * sum, so the ADC scores — and the ranking — are engine-identical.
+    * The corpus codes are [[pqCodes]]; the lookup tables are
+    * [[pqScored]] over the query rows only, the same arithmetic.
     * Ranking goes through a rank-filter window, which the injected
     * [[graft.plans.TopKPerGroup]] rewrite compiles to the native
     * streaming top-k physical operator. */
   def pqAdcTopK(emb: DataFrame, queryPred: Column, k: Int,
                 centStride: Long, m: Int, dim: Int): DataFrame = {
     val e = normalized(emb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val scored = pqScored(e, centStride, m, dim / m)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val codes = pqArgmin(scored)
-      .select(col("vec_id"), col("sub_no"), col("cid").as("code"))
-    val dtab = scored.filter(queryPred)
+    val cent = seeds(e, centStride)
+    val codes = pqCodes(e, cent, m, dim / m).select(col("vec_id"), col("sub_no"), col("code"))
+    val dtab = pqScored(e.filter(queryPred), cent, m, dim / m)
       .select(col("vec_id").as("query_id"), col("sub_no"),
         col("cid").as("code"), col("d"))
     val adist = codes.join(dtab, Seq("sub_no", "code"))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy("query_id", "vec_id")
       .agg(round(graft.functions.Num.dsum(col("d")), 6).as("adist"))
-    val out = Rank.perGroup(adist, Seq("query_id"),
+    Rank.perGroup(adist, Seq("query_id"),
         Seq(col("adist").asc, col("vec_id").asc), k)
       .select(col("query_id"), col("rn"), col("vec_id"), col("adist"))
-    Dedup.materializeThenRelease(out, e, scored)
   }
 
   /** Recall@k of the hyperplane-LSH ANN ([[annTopK]]) against the exact

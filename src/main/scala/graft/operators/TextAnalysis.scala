@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data curation: quality scoring,
-  * token counting, marker-based language ID. All pure `Column` algebra
-  * (codegen'd, no UDFs); the fingerprint op lives in
-  * [[graft.functions.Poly31Hash]] as a native Expression.
+  * token counting, marker-based language ID. `Column` algebra plus
+  * native Expressions (no UDFs): the per-word signals of the quality
+  * scores and language ID are one [[graft.functions.WordStats]] pass,
+  * the fingerprint is [[graft.functions.Poly31Hash]].
   */
 object TextAnalysis {
 
@@ -20,19 +21,21 @@ object TextAnalysis {
     "fr" -> Seq("le", "les", "une"),
     "de" -> Seq("der", "und", "ein"))
 
-  private def countIn(words: Column, set: Seq[String]): Column =
-    size(filter(words, w => w.isin(set.map(x => x: Any): _*))).cast("long")
+  /** `docs` with its [[graft.functions.WordStats]] struct as `ws`, the
+    * word sets counted as `ws.n_in_<i>` in the order given. */
+  private def withWordStats(docs: DataFrame, sets: Seq[Seq[String]]): DataFrame =
+    docs.withColumn("ws",
+      graft.functions.WordStats.column(docs.sparkSession, col("text"), sets))
 
   /** Length / word / stopword / punctuation statistics per document. */
   def quality(docs: DataFrame): DataFrame = {
-    val words = split(col("text"), " ")
-    docs.select(
+    val nWords = col("ws.n_words")
+    withWordStats(docs, Seq(stopwords)).select(
       col("doc_id"),
       length(col("text")).cast("long").as("n_chars"),
-      size(words).cast("long").as("n_words"),
-      (length(expr("replace(text, ' ', '')")).cast("long") / size(words).cast("long"))
-        .as("avg_word_len"),
-      (countIn(words, stopwords) / size(words).cast("long")).as("stop_ratio"),
+      nWords.as("n_words"),
+      (col("ws.n_nonspace") / nWords).as("avg_word_len"),
+      (col("ws.n_in_0") / nWords).as("stop_ratio"),
       regexp_count(col("text"), lit("[0-9]")).cast("long").as("n_digits"))
   }
 
@@ -618,21 +621,21 @@ object TextAnalysis {
     * character, stopword floor, symbol-to-word ratio. Every signal is a
     * single-op IEEE division of exact integers, so both engines compute
     * bit-identical doubles and the threshold comparisons cannot diverge.
-    * Narrow (per-row, codegen'd, no shuffle) — linear in the scan at any
-    * corpus size. */
-  def gopherQuality(docs: DataFrame): DataFrame = {
-    val words = split(col("text"), " ")
-    val nWords = size(words).cast("long")
-    docs.select(
-      col("doc_id"),
-      nWords.as("n_words"),
-      (length(expr("replace(text, ' ', '')")).cast("long") / nWords)
-        .as("mean_word_len"),
-      (size(filter(words, w => w.rlike("[A-Za-z]"))).cast("long") / nWords)
-        .as("alpha_frac"),
-      countIn(words, stopwords).as("n_stop"),
-      (regexp_count(col("text"), lit(SymbolRe)).cast("long") / nWords)
-        .as("symbol_ratio"))
+    * Narrow (per-row, one [[graft.functions.WordStats]] pass, no
+    * shuffle) — linear in the scan at any corpus size. */
+  def gopherQuality(docs: DataFrame): DataFrame = gopherSignals(docs, Nil)
+
+  /** [[gopherQuality]] with `extra` columns between doc_id and the
+    * signals — the oracle's `gopherSignalsSql(extraCols)`. */
+  private def gopherSignals(docs: DataFrame, extra: Seq[Column]): DataFrame = {
+    val nWords = col("ws.n_words")
+    withWordStats(docs, Seq(stopwords)).select(
+      (col("doc_id") +: extra) ++ Seq(
+        nWords.as("n_words"),
+        (col("ws.n_nonspace") / nWords).as("mean_word_len"),
+        (col("ws.n_alpha") / nWords).as("alpha_frac"),
+        col("ws.n_in_0").as("n_stop"),
+        (col("ws.n_symbol") / nWords).as("symbol_ratio")): _*)
       .withColumn("passes",
         (col("n_words") >= GopherMinWords && col("n_words") <= GopherMaxWords &&
           col("mean_word_len") >= GopherMinWordLen &&
@@ -650,27 +653,21 @@ object TextAnalysis {
     * that domain-level curation (per-site quality priors over a crawl)
     * actually ranks by. Deterministic: the global rate is one exact
     * integer division and the shrink is a fixed double chain, shared
-    * verbatim with the oracle. Scale: one keyed aggregate over the
-    * corpus + a broadcast 1-row global — no shuffle beyond the
-    * per-source reduce. */
+    * verbatim with the oracle. Scale: one scan whose per-document
+    * signals carry `source`, one keyed aggregate + a broadcast 1-row
+    * global over it — the global rate's branch reuses the per-source
+    * shuffle (ReuseExchange), so the corpus is read once. */
   def sourceQualityEb(docs: DataFrame, k: Double): DataFrame = {
-    val sig = gopherQuality(docs).select(col("doc_id"), col("passes"))
-    // persisted: the global rate derives from the SAME per-source
-    // aggregate — without the pin, the corpus scan + groupBy execute
-    // twice (once for g, once for the final select)
-    val per = docs.select(col("doc_id"), col("source"))
-      .join(sig, Seq("doc_id"))
+    val per = gopherSignals(docs, Seq(col("source")))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("passes")).as("n_pass"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val g = broadcast(per.agg(
       (sum(col("n_pass")) / sum(col("n_docs"))).as("g_rate")))
-    val out = per.crossJoin(g).select(
+    per.crossJoin(g).select(
       col("source"), col("n_docs"), col("n_pass"),
       round(col("n_pass") / col("n_docs"), 6).as("pass_rate"),
       round((col("n_pass") + lit(k) * col("g_rate"))
         / (col("n_docs") + lit(k)), 6).as("shrunk_rate"))
-    graft.operators.Dedup.materializeThenRelease(out, per)
   }
 
   /** Corpus-level line dedup (the CCNet / RefinedWeb preprocessing step:
@@ -1012,10 +1009,9 @@ object TextAnalysis {
 
   /** Marker-word language ID with a deterministic priority cascade. */
   def langId(docs: DataFrame): DataFrame = {
-    val words = split(col("text"), " ")
-    val scored = docs.select(
+    val scored = withWordStats(docs, langMarkers.map(_._2)).select(
       (col("doc_id") +: col("lang").as("actual_lang") +:
-        langMarkers.map { case (l, ms) => countIn(words, ms).as(s"s_$l") }): _*)
+        langMarkers.indices.map(i => col(s"ws.n_in_$i").as(s"s_${langMarkers(i)._1}"))): _*)
     val Seq(en, es, fr, de) = langMarkers.map { case (l, _) => col(s"s_$l") }
     scored.withColumn("predicted_lang",
       when(en >= es && en >= fr && en >= de, "en")

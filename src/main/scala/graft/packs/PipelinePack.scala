@@ -4282,14 +4282,14 @@ object PipelinePack {
          |            ELSE round(2.0 * prec * rec / (prec + rec), 6) END AS f1
          |FROM pr ORDER BY thr""".stripMargin,
 
-    // Same Gopher pass label, aggregated per source and shrunk toward
-    // the corpus-wide rate with pseudo-count EB_K.
+    // Same Gopher pass label per document, aggregated per source and
+    // shrunk toward the corpus-wide rate with pseudo-count EB_K.
     "q_text_source_quality_eb" ->
       s"""WITH sb AS (
-         |  ${gopherSignalsSql("")}),
-         |sig AS (SELECT doc_id, CAST($gopherPassCase AS BIGINT) AS passes FROM sb),
-         |per AS (SELECT d.source, count(*) AS n_docs, sum(s.passes) AS n_pass
-         |        FROM documents d JOIN sig s USING (doc_id) GROUP BY d.source),
+         |  ${gopherSignalsSql(" source,")}),
+         |sig AS (SELECT source, CAST($gopherPassCase AS BIGINT) AS passes FROM sb),
+         |per AS (SELECT source, count(*) AS n_docs, sum(passes) AS n_pass
+         |        FROM sig GROUP BY source),
          |g AS (SELECT sum(n_pass) / CAST(sum(n_docs) AS DOUBLE) AS g_rate FROM per)
          |SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
          |       CAST(n_pass AS BIGINT) AS n_pass,

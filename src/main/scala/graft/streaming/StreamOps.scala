@@ -34,7 +34,7 @@ object StreamOps {
     * watermark requires a true `TimestampType` column, so NTZ must be
     * cast here too (session pinned UTC → value-preserving). */
   private[graft] def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val batchSchema = graft.Tables.table(spark, dir, "events").schema
     val raw = spark.readStream.schema(batchSchema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
     graft.Tables.normalizeTs(raw)

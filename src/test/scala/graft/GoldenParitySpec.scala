@@ -177,7 +177,7 @@ class GoldenParitySpec extends AnyFunSuite {
         .otherwise(transform(
           sort_array(collect_list(struct(col("n").as("n"), col("tag_value").as("t")))),
           x => x.getField("t"))).as("tags"))
-    val outDir = Files.createTempDirectory("golden_w_").toString
+    val outDir = Files.createTempDirectory(graft.Scratch.root, "golden_w_").toString
     graft.operators.Reshape
       .unpivotWithOrdinal(fixture, col("video_id"), col("tags"))
       .select(col("id").as("video_id"), col("tag_number"),
@@ -209,7 +209,7 @@ class GoldenParitySpec extends AnyFunSuite {
     Seq("Video_Tags_Table.csv", "Video_Statistics_Table.csv",
         "Video_Description_Table.csv", "Video_Comments_Table.csv")
       .foreach { name =>
-        val outDir = Files.createTempDirectory(s"golden_rt_").toString
+        val outDir = Files.createTempDirectory(graft.Scratch.root, s"golden_rt_").toString
         goldenCsv(name)
           .coalesce(1)
           .write.mode("overwrite")
@@ -249,7 +249,7 @@ object GoldenParitySpec {
   lazy val bracketFreeDir: String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val src = Paths.get("/root/reference/02_YouTube_API_Tables[Test_Run]")
-    val dst = Files.createTempDirectory("golden_csv_")
+    val dst = Files.createTempDirectory(graft.Scratch.root, "golden_csv_")
     Files.list(src).forEach { p =>
       Files.copy(p, dst.resolve(p.getFileName.toString), StandardCopyOption.REPLACE_EXISTING)
     }

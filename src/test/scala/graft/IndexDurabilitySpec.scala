@@ -14,8 +14,8 @@ class IndexDurabilitySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def tmp(tag: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_${tag}_" +
-      s"${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    graft.Scratch.path(s"graft_${tag}_" +
+      s"${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
 
   // -------------------------------------------------------------- text
 
@@ -291,8 +291,8 @@ class IndexDurabilitySpec extends AnyFunSuite {
     import graft.operators.TextAnalysis
     val target = docs.filter(col("lang") === "en")
     def wave(r: Int) = docs.filter(col("doc_id") % 3 === r)
-    val path = s"${sys.props("java.io.tmpdir")}/graft_dsiridx_" +
-      s"${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val path = graft.Scratch.path(s"graft_dsiridx_" +
+      s"${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     val idx = TextAnalysis.buildDsirIndex(target, wave(0), 512).absorb(wave(1))
       .copy(lastBatchId = 0L)
     def rows(i: TextAnalysis.DsirIndex) =
@@ -311,8 +311,8 @@ class IndexDurabilitySpec extends AnyFunSuite {
 
   test("a pre-watermark durable save still loads (missing meta/column → -1)") {
     import spark.implicits._
-    val base = s"${sys.props("java.io.tmpdir")}/graft_oldidx_" +
-      s"${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_oldidx_" +
+      s"${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     // corpus index saved WITHOUT any meta table (the pre-upgrade layout)
     val cPath = s"$base/corpus"
     Dedup.wordShingles(docs.limit(50)).write.parquet(s"$cPath/shingles")

@@ -13,8 +13,8 @@ class PagedSourceSpec extends AnyFunSuite {
   private val d = TestSpark.sf0001
 
   private def freshFixture(name: String): String = {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_pagedspec_${name}_" +
-      ProcessHandle.current().pid()
+    val path = graft.Scratch.path(s"graft_pagedspec_${name}_" +
+      ProcessHandle.current().pid())
     JsonFixtureSource.writeSearchPagesPartitioned(
       spark, Tables.orders(spark, d), path, keysPerPage = 500L)
     path

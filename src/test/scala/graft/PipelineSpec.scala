@@ -22,7 +22,7 @@ class PipelineSpec extends AnyFunSuite {
   private val sf = TestSpark.sf0001
 
   private def dir(name: String) =
-    s"${sys.props("java.io.tmpdir")}/graft_pipeline_${ProcessHandle.current().pid()}_$name"
+    graft.Scratch.path(s"graft_pipeline_${ProcessHandle.current().pid()}_$name")
 
   private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 

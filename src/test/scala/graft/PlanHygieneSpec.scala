@@ -109,16 +109,42 @@ class PlanHygieneSpec extends AnyFunSuite {
     seen.toArray(Array.empty[SparkPlan]).toSeq
   }
 
-  // The two rank filters of the curation_build benchmark mix, and
   // ivfTopK's two ranks (lists and probes) read off one rank filter.
-  for (name <- Seq("q_sim_pq", "q_sim_ivf_balance", "q_sim_ivf_topk"))
-    test(s"$name: its build's rank filter plans through TopKPerGroupExec") {
-      val plans = buildPlans(name)
-      assert(plans.exists(_.collect { case e: graft.plans.TopKPerGroupExec => e }.nonEmpty),
-        s"$name built no native top-k operator:\n${plans.mkString("\n")}")
-      assert(plans.forall(_.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec => w
-      }.isEmpty), s"$name planned a WindowExec:\n${plans.mkString("\n")}")
+  test("q_sim_ivf_topk: its build's rank filter plans through TopKPerGroupExec") {
+    val plans = buildPlans("q_sim_ivf_topk")
+    assert(plans.exists(_.collect { case e: graft.plans.TopKPerGroupExec => e }.nonEmpty),
+      s"q_sim_ivf_topk built no native top-k operator:\n${plans.mkString("\n")}")
+    assert(plans.forall(_.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }.isEmpty), s"q_sim_ivf_topk planned a WindowExec:\n${plans.mkString("\n")}")
+  }
+
+  // The two centroid assignments of the curation_build benchmark mix
+  // search each vector in place (NearestCentroid): no ranking operator,
+  // no vector × centroid join, and no shuffle between the embeddings
+  // scan and the assignment — in the build's plans or the exec plan.
+  for (name <- Seq("q_sim_pq", "q_sim_ivf_balance"))
+    test(s"$name: in-place assignment, no rank filter, pair join or shuffle") {
+      val exec = SparkEntry.queries(name)(spark, d).queryExecution.sparkPlan
+      val plans = buildPlans(name) :+ exec
+      def dump = plans.mkString("\n")
+      for (p <- plans) {
+        assert(p.collect {
+          case w: org.apache.spark.sql.execution.window.WindowExec => w
+          case t: graft.plans.TopKPerGroupExec => t
+        }.isEmpty, s"$name planned a rank filter:\n$dump")
+        assert(p.collect {
+          case c: CartesianProductExec => c
+          case b: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => b
+        }.isEmpty, s"$name planned a pair join:\n$dump")
+      }
+      val assigning = exec.collect {
+        case n if n.expressions.exists(_.exists(_.isInstanceOf[graft.functions.NearestCentroid])) => n
+      }
+      assert(assigning.nonEmpty, s"$name does not assign through NearestCentroid:\n$exec")
+      for (n <- assigning)
+        assert(n.collect { case x: ShuffleExchangeLike => x }.isEmpty,
+          s"$name shuffles between the scan and the assignment:\n$n")
     }
 
   test("q_s1_paged_source: publishedAfter is pushed into the V2 source, no residual filter") {

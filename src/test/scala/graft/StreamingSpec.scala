@@ -102,7 +102,7 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch incremental dedup over staged waves equals the batch face") {
     import org.apache.spark.sql.functions._
     import graft.operators.Dedup
-    val base = s"${sys.props("java.io.tmpdir")}/graft_incdedup_${ProcessHandle.current().pid()}"
+    val base = graft.Scratch.path(s"graft_incdedup_${ProcessHandle.current().pid()}")
     val staging = s"$base/staging"
     val outPath = s"$base/flagged"
     val corpus = Tables.documents(spark, TestSpark.sf0001)
@@ -145,7 +145,7 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch drift monitor over staged waves equals the batch twin") {
     import org.apache.spark.sql.functions._
     import graft.operators.TextAnalysis
-    val base = s"${sys.props("java.io.tmpdir")}/graft_drift_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_drift_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     val staging = s"$base/staging"
     val outPath = s"$base/kl"
     val docs = Tables.documents(spark, TestSpark.sf0001)
@@ -186,7 +186,7 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch incremental IMAGE dedup over staged waves equals the batch face") {
     import org.apache.spark.sql.functions._
     import graft.operators.Multimodal
-    val base = s"${sys.props("java.io.tmpdir")}/graft_incimg_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_incimg_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     val staging = s"$base/staging"
     val outPath = s"$base/flagged"
     val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
@@ -222,7 +222,7 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch incremental AUDIO dedup over staged waves equals the batch face") {
     import org.apache.spark.sql.functions._
     import graft.operators.Multimodal
-    val base = s"${sys.props("java.io.tmpdir")}/graft_incaud_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_incaud_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     val staging = s"$base/staging"
     val outPath = s"$base/flagged"
     val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
@@ -287,7 +287,7 @@ class StreamingSpec extends AnyFunSuite {
   test("self-accumulating image dedup stream absorbs each wave before the next") {
     import org.apache.spark.sql.functions._
     import graft.operators.Multimodal
-    val base = s"${sys.props("java.io.tmpdir")}/graft_accum_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_accum_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     val staging = s"$base/staging"
     val outPath = s"$base/flagged"
     val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
@@ -364,7 +364,7 @@ class StreamingSpec extends AnyFunSuite {
   test("self-accumulating text dedup stream absorbs each wave before the next") {
     import org.apache.spark.sql.functions._
     import graft.operators.Dedup
-    val base = s"${sys.props("java.io.tmpdir")}/graft_accumtxt_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_accumtxt_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     val staging = s"$base/staging"
     val outPath = s"$base/flagged"
     val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
@@ -410,8 +410,8 @@ class StreamingSpec extends AnyFunSuite {
   test("self-accumulating DSIR stream scores each wave against the accumulated state") {
     import org.apache.spark.sql.functions._
     import graft.operators.TextAnalysis
-    val base = s"${sys.props("java.io.tmpdir")}/graft_accumdsir_" +
-      s"${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_accumdsir_" +
+      s"${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     val staging = s"$base/staging"
     val outPath = s"$base/scores"
     val docs = Tables.documents(spark, TestSpark.sf0001)
@@ -478,7 +478,7 @@ class StreamingSpec extends AnyFunSuite {
   test("self-accumulating KMV cardinality stream equals the one-shot sketch") {
     import org.apache.spark.sql.functions._
     import graft.operators.TextAnalysis
-    val base = s"${sys.props("java.io.tmpdir")}/graft_accumkmv_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_accumkmv_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     val staging = s"$base/staging"
     val outPath = s"$base/card"
     val docs = Tables.documents(spark, TestSpark.sf0001)
@@ -537,7 +537,7 @@ class StreamingSpec extends AnyFunSuite {
   test("KMV index durable save/load preserves the card and the watermark") {
     import org.apache.spark.sql.functions._
     import graft.operators.TextAnalysis
-    val base = s"${sys.props("java.io.tmpdir")}/graft_kmvdur_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_kmvdur_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     val docs = Tables.documents(spark, TestSpark.sf0001)
       .select("doc_id", "text", "source")
     val idx = TextAnalysis.buildKmvIndex(docs.filter(col("doc_id") % 3 === 0), 128)
@@ -557,7 +557,7 @@ class StreamingSpec extends AnyFunSuite {
   test("self-accumulating audio dedup stream absorbs each wave before the next") {
     import org.apache.spark.sql.functions._
     import graft.operators.Multimodal
-    val base = s"${sys.props("java.io.tmpdir")}/graft_accumaud_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_accumaud_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     val staging = s"$base/staging"
     val outPath = s"$base/flagged"
     val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
@@ -603,7 +603,7 @@ class StreamingSpec extends AnyFunSuite {
   test("self-accumulating embedding near-dup stream absorbs each wave before the next") {
     import org.apache.spark.sql.functions._
     import graft.operators.Dedup
-    val base = s"${sys.props("java.io.tmpdir")}/graft_accumemb_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_accumemb_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     val staging = s"$base/staging"
     val outPath = s"$base/flagged"
     val emb = Tables.embeddings(spark, TestSpark.sf0001)
@@ -645,7 +645,7 @@ class StreamingSpec extends AnyFunSuite {
   test("self-accumulating IVF monitor stream absorbs each wave before the next") {
     import org.apache.spark.sql.functions._
     import graft.operators.Similarity
-    val base = s"${sys.props("java.io.tmpdir")}/graft_accumivf_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_accumivf_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     val staging = s"$base/staging"
     val outPath = s"$base/reports"
     val emb = Tables.embeddings(spark, TestSpark.sf0001)
@@ -685,7 +685,7 @@ class StreamingSpec extends AnyFunSuite {
   test("self-accumulating sketch-ANN serving stream absorbs each wave before the next") {
     import org.apache.spark.sql.functions._
     import graft.operators.Similarity
-    val base = s"${sys.props("java.io.tmpdir")}/graft_accumann_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_accumann_${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     val staging = s"$base/staging"
     val outPath = s"$base/answers"
     val emb = Tables.embeddings(spark, TestSpark.sf0001)
@@ -745,8 +745,8 @@ class StreamingSpec extends AnyFunSuite {
   private def recoveryCheck(stage: (String, Int) => Unit,
                             run: (String, String, String) => Unit,
                             rows: String => Seq[Any]): Unit = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_recov_" +
-      s"${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val base = graft.Scratch.path(s"graft_recov_" +
+      s"${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     // Reference: the uninterrupted run over all 3 waves.
     (0 until 3).foreach(stage(s"$base/ref_staging", _))
     run(s"$base/ref_staging", s"$base/ref_out", s"$base/ref_cp")
@@ -1120,8 +1120,8 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch lands the streaming aggregate in JDBC, equal to batch") {
     import org.apache.spark.sql.functions._
     System.setProperty("derby.stream.error.file",
-      s"${sys.props("java.io.tmpdir")}/graft_derby_test.log")
-    val url = s"jdbc:derby:${sys.props("java.io.tmpdir")}/graft_stream_jdbc_" +
+      graft.Scratch.path(s"graft_derby_test.log"))
+    val url = s"jdbc:derby:${graft.Scratch.root}/graft_stream_jdbc_" +
       s"${ProcessHandle.current().pid()};create=true"
     val q = StreamOps.aggToJdbcStream(spark, TestSpark.sf0001, url, "STREAM_COUNTS")
     try q.processAllAvailable() finally q.stop()

@@ -16,7 +16,7 @@ class CsvSinkSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def dir(name: String) =
-    s"${sys.props("java.io.tmpdir")}/graft_csvsink_${ProcessHandle.current().pid()}_$name"
+    graft.Scratch.path(s"graft_csvsink_${ProcessHandle.current().pid()}_$name")
 
   test("hostile values round-trip through sink + stock reader") {
     val path = dir("hostile")

@@ -15,8 +15,8 @@ class CsvStreamSinkSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def dir(name: String) =
-    s"${sys.props("java.io.tmpdir")}/graft_csvstream_${ProcessHandle.current().pid()}_" +
-      s"${java.lang.System.nanoTime()}_$name"
+    graft.Scratch.path(s"graft_csvstream_${ProcessHandle.current().pid()}_" +
+      s"${java.lang.System.nanoTime()}_$name")
 
   test("clusterBy holds on the STREAMING write path: engine shuffle, no key split") {
     import org.apache.spark.sql.functions._

@@ -18,7 +18,7 @@ class GraftCatalogSpec extends AnyFunSuite {
 
   private val cat = "graftsql"
   private lazy val wh = {
-    val p = s"${sys.props("java.io.tmpdir")}/graft_catalog_${ProcessHandle.current().pid()}"
+    val p = graft.Scratch.path(s"graft_catalog_${ProcessHandle.current().pid()}")
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", p)
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")

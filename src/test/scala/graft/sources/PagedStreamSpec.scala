@@ -16,8 +16,8 @@ class PagedStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshDir(kind: String): String = {
-    val p = s"${sys.props("java.io.tmpdir")}/paged_stream_spec_${kind}_" +
-      s"${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}"
+    val p = graft.Scratch.path(s"paged_stream_spec_${kind}_" +
+      s"${ProcessHandle.current().pid()}_${java.lang.System.nanoTime()}")
     Files.createDirectories(Paths.get(p))
     p
   }

@@ -20,7 +20,7 @@ class PartitionedCsvSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def dir(name: String) =
-    s"${sys.props("java.io.tmpdir")}/graft_csvpart_${ProcessHandle.current().pid()}_$name"
+    graft.Scratch.path(s"graft_csvpart_${ProcessHandle.current().pid()}_$name")
 
   private def writePartitioned(path: String): Unit =
     graft.Tables.orders(spark, TestSpark.sf0001)

@@ -15,7 +15,7 @@ class SearchPagesSpec extends AnyFunSuite {
 
   private lazy val orders = Tables.orders(spark, TestSpark.sf0001)
   private lazy val pages: String = {
-    val p = s"${sys.props("java.io.tmpdir")}/graft_searchpages_${ProcessHandle.current().pid()}"
+    val p = graft.Scratch.path(s"graft_searchpages_${ProcessHandle.current().pid()}")
     JsonFixtureSource.writeSearchPages(spark, orders, p)
     p
   }

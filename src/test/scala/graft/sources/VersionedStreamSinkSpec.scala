@@ -20,7 +20,7 @@ class VersionedStreamSinkSpec extends AnyFunSuite {
 
   private val cat = "graftvs"
   private lazy val wh = {
-    val p = s"${sys.props("java.io.tmpdir")}/graft_vstream_${ProcessHandle.current().pid()}"
+    val p = graft.Scratch.path(s"graft_vstream_${ProcessHandle.current().pid()}")
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", p)
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
@@ -28,8 +28,8 @@ class VersionedStreamSinkSpec extends AnyFunSuite {
   }
   private def hconf = spark.sessionState.newHadoopConf()
   private def dir(name: String) =
-    s"${sys.props("java.io.tmpdir")}/graft_vstream_${ProcessHandle.current().pid()}_" +
-      s"${java.lang.System.nanoTime()}_$name"
+    graft.Scratch.path(s"graft_vstream_${ProcessHandle.current().pid()}_" +
+      s"${java.lang.System.nanoTime()}_$name")
 
   test("each micro-batch is one manifest commit; partitioned keys land in their directories") {
     wh

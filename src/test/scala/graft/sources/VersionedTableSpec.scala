@@ -17,7 +17,7 @@ class VersionedTableSpec extends AnyFunSuite {
 
   private val cat = "graftver"
   private lazy val wh = {
-    val p = s"${sys.props("java.io.tmpdir")}/graft_versioned_${ProcessHandle.current().pid()}"
+    val p = graft.Scratch.path(s"graft_versioned_${ProcessHandle.current().pid()}")
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", p)
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
@@ -279,7 +279,7 @@ class VersionedTableSpec extends AnyFunSuite {
       "TBLPROPERTIES('versioned'='true')")
     spark.sql(s"INSERT INTO $cat.wh.vlost VALUES ('a', 1)") // v1
     spark.sql(s"INSERT INTO $cat.wh.vlost VALUES ('b', 2)") // v2
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_vlost_ckpt_${ProcessHandle.current().pid()}"
+    val ckpt = graft.Scratch.path(s"graft_vlost_ckpt_${ProcessHandle.current().pid()}")
     val hp = new HPath(ckpt)
     hp.getFileSystem(hconf).delete(hp, true)
     def drain(sink: String): Set[(String, Long)] = {
@@ -355,7 +355,7 @@ class VersionedTableSpec extends AnyFunSuite {
     }
 
     // streaming: the drained changefeed equals the batch history
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_vcdc_ckpt_${ProcessHandle.current().pid()}"
+    val ckpt = graft.Scratch.path(s"graft_vcdc_ckpt_${ProcessHandle.current().pid()}")
     val hp = new HPath(ckpt)
     hp.getFileSystem(hconf).delete(hp, true)
     val q = spark.readStream.table(s"$cat.wh.vcdc.changes")
@@ -394,7 +394,7 @@ class VersionedTableSpec extends AnyFunSuite {
     spark.sql(s"INSERT INTO $cat.wh.vmvt VALUES ('a', 1)")
     spark.sql(s"INSERT INTO $cat.wh.vmvt VALUES ('b', 2)")
     spark.sql(s"DELETE FROM $cat.wh.vmvt WHERE k = 'a'")
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_vmvt_ckpt_${ProcessHandle.current().pid()}"
+    val ckpt = graft.Scratch.path(s"graft_vmvt_ckpt_${ProcessHandle.current().pid()}")
     val hp = new HPath(ckpt)
     hp.getFileSystem(hconf).delete(hp, true)
     val batches = new java.util.concurrent.ConcurrentHashMap[Long, Set[(String, Long, String, Int)]]()
@@ -652,7 +652,7 @@ class VersionedTableSpec extends AnyFunSuite {
     spark.sql(s"CREATE TABLE $cat.wh.vstr (k STRING, v BIGINT) PARTITIONED BY (k) " +
       "TBLPROPERTIES('versioned'='true')")
     spark.sql(s"INSERT INTO $cat.wh.vstr VALUES ('a', 1), ('b', 2)")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_vstr_${ProcessHandle.current().pid()}"
+    val base = graft.Scratch.path(s"graft_vstr_${ProcessHandle.current().pid()}")
     val (ckpt, out) = (s"$base/ckpt", s"$base/out")
     val bp = new HPath(base)
     bp.getFileSystem(hconf).delete(bp, true)

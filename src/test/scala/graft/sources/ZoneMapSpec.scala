@@ -20,7 +20,7 @@ class ZoneMapSpec extends AnyFunSuite {
 
   private val cat = "graftzone"
   private lazy val wh = {
-    val p = s"${sys.props("java.io.tmpdir")}/graft_zones_${ProcessHandle.current().pid()}"
+    val p = graft.Scratch.path(s"graft_zones_${ProcessHandle.current().pid()}")
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", p)
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
@@ -177,7 +177,7 @@ class ZoneMapSpec extends AnyFunSuite {
   }
 
   test("untagged path-API writes never produce a zone sidecar (name reuse would unsound it)") {
-    val path = s"${sys.props("java.io.tmpdir")}/graft_zone_path_${ProcessHandle.current().pid()}"
+    val path = graft.Scratch.path(s"graft_zone_path_${ProcessHandle.current().pid()}")
     spark.range(0, 100).selectExpr("id AS v", "concat('x', id) AS s")
       .write.format("graft.sources.GraftCsvSink")
       .mode("overwrite").option("path", path).option("sortBy", "v").save()

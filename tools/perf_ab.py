@@ -8,7 +8,10 @@ builds and runs from its own checkout; nothing under perfbench/ is
 changed. Prints one line per run, then, for every end-to-end metric the
 change checkout's BENCHMARK.json names, each side's median and
 quartiles, the change's wins over its paired parent run, and whether
-the median gap exceeds the parent's interquartile range:
+the median gap exceeds the parent's interquartile range; then, per op,
+each side's median latency (build + exec) over the timed ops of the
+complete pairs, read from the runs' ops.jsonl, so an A/B shows which op
+moved:
 
     tools/perf_ab.py <parent-checkout> <change-checkout> --workload <w> --pairs <n>
         [--seed0 <first seed>] [--seconds <s>]
@@ -25,14 +28,35 @@ import sys
 
 
 def run_one(checkout, workload, seed, seconds):
-    """The result line of one benchmark run, or None and the error tail."""
+    """The result line of one benchmark run, or None and the error tail.
+    The line gains `op_latencies`: {op name: [latency_s of each timed,
+    error-free op]}, from the run's ops.jsonl."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
     if p.returncode != 0 or not lines:
         return None, "\n".join(p.stderr.splitlines()[-5:])
-    return json.loads(lines[-1]), ""
+    res = json.loads(lines[-1])
+    res["op_latencies"] = op_latencies(os.path.join(
+        checkout, ".bench_build", "perfbench", "runs",
+        f"{workload}-seed{seed}-trace0", "ops.jsonl"))
+    return res, ""
+
+
+def op_latencies(path):
+    """{name: [build_s + exec_s]} of the timed (pass >= 0), error-free ops
+    in one run's ops.jsonl; {} when the file cannot be read."""
+    out = {}
+    try:
+        with open(path) as fh:
+            for line in fh:
+                o = json.loads(line)
+                if o["pass"] >= 0 and not o["error"]:
+                    out.setdefault(o["name"], []).append(o["build_s"] + o["exec_s"])
+    except (OSError, ValueError, KeyError):
+        return {}
+    return out
 
 
 def quartiles(xs):
@@ -90,6 +114,21 @@ def main():
         rel = gap / q["parent"][1] if q["parent"][1] else float("nan")
         print(f"{name:<16} change wins {wins}/{len(good)}; median gap {gap:+.4g} "
               f"({rel:+.1%}); |gap| > parent IQR: {'yes' if abs(gap) > iqr else 'no'}")
+
+    lat = {s: {} for s in sides}
+    for g in good:
+        for s in sides:
+            for name, xs in g[s]["op_latencies"].items():
+                lat[s].setdefault(name, []).extend(xs)
+    names = sorted(set(lat["parent"]) | set(lat["change"]))
+    if names:
+        print(f"\n{'op median latency_s':<32} {'parent':>8} {'change':>8} {'change/parent':>14} {'n':>7}")
+    for name in names:
+        p, c = (lat[s].get(name, []) for s in ("parent", "change"))
+        pm = statistics.median(p) if p else float("nan")
+        cm = statistics.median(c) if c else float("nan")
+        ratio = cm / pm if p and c and pm else float("nan")
+        print(f"{name:<32} {pm:>8.3f} {cm:>8.3f} {ratio:>14.2f} {len(p):>3}/{len(c):<3}")
     return 0 if ok else 1
 
 
