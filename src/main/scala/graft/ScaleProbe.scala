@@ -237,7 +237,8 @@ object ScaleProbe {
           SparkEntry.queries(name)(spark, d)
             .write.format("noop").mode("overwrite").save()
           val dt = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(300) // let the listener bus drain task metrics
+          // the spill counters are fed by the listener bus: drain it
+          org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 10000)
           println(f"PROBE $d $name%-32s ${dt}%8.2f s  " +
             f"spill_mem=${(spillMem.get() - m0) / 1048576}%d MB " +
             f"spill_disk=${(spillDisk.get() - d0) / 1048576}%d MB")

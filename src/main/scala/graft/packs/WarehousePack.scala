@@ -922,31 +922,34 @@ object WarehousePack {
     // decimal(38,18)-exact mutual-reinforcement sum, an IEEE sqrt of a
     // decimal-exact sum of squares, and a round-6 normalized score —
     // identical trajectory to the Spark loop (both the distributed and
-    // the one-task path, which a spec pins to each other).
+    // the one-task path, which a spec pins to each other). `ed`, `h0`
+    // and each round's scores are marked AS MATERIALIZED: DuckDB
+    // otherwise inlines every CTE reference, and `a<i>`/`h<i>` each read
+    // their raw CTE twice, so the expansion grew fourfold per round.
     "q_x_hits" -> {
       def iter(i: Int): String =
-        s"""a${i}r AS (
+        s"""a${i}r AS MATERIALIZED (
            |  SELECT ed.dst, ${Num.dsumAtSql(s"h${i - 1}.h", 18)} AS ar
            |  FROM ed JOIN h${i - 1} ON ed.src = h${i - 1}.src
            |  GROUP BY ed.dst),
            |a${i}n AS (SELECT sqrt(${Num.dsumAtSql("ar * ar", 18)}) AS nrm
            |           FROM a${i}r),
-           |a$i AS (SELECT dst, round(ar / (SELECT nrm FROM a${i}n), 6) AS a
+           |a$i AS MATERIALIZED (SELECT dst, round(ar / (SELECT nrm FROM a${i}n), 6) AS a
            |        FROM a${i}r),
-           |h${i}r AS (
+           |h${i}r AS MATERIALIZED (
            |  SELECT ed.src, ${Num.dsumAtSql(s"a$i.a", 18)} AS hr
            |  FROM ed JOIN a$i ON ed.dst = a$i.dst
            |  GROUP BY ed.src),
            |h${i}n AS (SELECT sqrt(${Num.dsumAtSql("hr * hr", 18)}) AS nrm
            |           FROM h${i}r),
-           |h$i AS (SELECT src, round(hr / (SELECT nrm FROM h${i}n), 6) AS h
+           |h$i AS MATERIALIZED (SELECT src, round(hr / (SELECT nrm FROM h${i}n), 6) AS h
            |        FROM h${i}r)""".stripMargin
-      s"""WITH ed AS (
+      s"""WITH ed AS MATERIALIZED (
          |  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
          |                  's' || CAST(l_suppkey AS VARCHAR) AS dst
          |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
          |hn AS (SELECT count(DISTINCT src) AS n_hubs FROM ed),
-         |h0 AS (SELECT DISTINCT src,
+         |h0 AS MATERIALIZED (SELECT DISTINCT src,
          |              round(CAST(1.0 AS DOUBLE) / sqrt((SELECT n_hubs FROM hn)), 6) AS h
          |       FROM ed),
          |${(1 to HITS_ITERS).map(iter).mkString(",\n")}

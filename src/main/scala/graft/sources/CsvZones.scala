@@ -149,10 +149,7 @@ private[sources] object CsvZones {
 
   def write(root: HPath, conf: Configuration, tag: String,
             files: Seq[(String, Map[String, CsvColZone], Long)]): Unit = {
-    val live = files.filter { case (_, zones, rows) =>
-      zones.nonEmpty || rows >= 0
-    }
-    if (live.isEmpty) return
+    if (files.isEmpty) return
     val fs = root.getFileSystem(conf)
     val node = mapper.createObjectNode()
     // format marker: v2 nests each file's zones under "cols" and adds
@@ -160,9 +157,9 @@ private[sources] object CsvZones {
     // names always end in ".csv". v1 sidecars (flat col→zone maps)
     // read back unchanged via the loader's fallback.
     node.put("_v", 2)
-    live.foreach { case (rel, zones, rows) =>
+    files.foreach { case (rel, zones, rows) =>
       val f = node.putObject(rel)
-      if (rows >= 0) f.put("rows", rows)
+      f.put("rows", rows)
       val cs = f.putObject("cols")
       zones.foreach { case (col, z) =>
         val c = cs.putObject(col)

@@ -881,27 +881,30 @@ private[sources] class CsvRollingWriter(tmpDir: String, schema: StructType,
 }
 
 private[sources] object CsvRollingWriter {
-  /** The one writer choice every batch and streaming writer factory
-    * makes: a derived layout rolls per `spec` directory (full payload),
-    * an identity-keyed one per `k1=v1/…` tuple (keys stripped), and a
-    * flat table writes one file per task. */
-  def forLayout(tmpDir: String, schema: StructType, partitioned: Seq[String],
-                derivedSpec: Option[CsvDerivedSpec], partitionId: Int,
-                taskId: Long, conf: SerializableHadoopConf, stem: String,
-                trackZones: Boolean): DataWriter[InternalRow] = {
+  /** The one writer choice every batch write and streaming epoch makes
+    * (its temp dir and name stem from `w`): a derived layout rolls per
+    * `spec` directory (full payload), an identity-keyed one per
+    * `k1=v1/…` tuple (keys stripped), and a flat table writes one file
+    * per task. Tagged names are never reused, so their zone maps can
+    * never go stale against a same-named different file — only they
+    * track zones. */
+  def forLayout(w: CsvWriteDesc, epoch: Option[Long], partitionId: Int,
+                taskId: Long): DataWriter[InternalRow] = {
+    val (tmpDir, stem, trackZones) = (w.tmpDir(epoch), w.stem(epoch), w.tag(epoch).isDefined)
     def rolling(keys: Seq[String], dirOf: Array[Any] => String, strip: Boolean) =
-      new CsvRollingWriter(tmpDir, schema, keys, dirOf, strip, partitionId,
-        taskId, conf, stem, trackZones)
-    derivedSpec match {
+      new CsvRollingWriter(tmpDir, w.schema, keys, dirOf, strip, partitionId,
+        taskId, w.conf, stem, trackZones)
+    w.derived match {
       case Some(spec) =>
         rolling(Seq(spec.col.name), ks => spec.dirName(spec.rawOf(ks(0))),
           strip = false)
-      case None if partitioned.nonEmpty =>
+      case None if w.partitioned.nonEmpty =>
+        val partitioned = w.partitioned
         rolling(partitioned, ks => partitioned.indices.map(k =>
           s"${partitioned(k)}=${PartitionedCsvLayout.encode(ks(k).toString)}")
           .mkString("/"), strip = true)
       case None =>
-        new GraftCsvDataWriter(tmpDir, schema, partitionId, taskId, conf,
+        new GraftCsvDataWriter(tmpDir, w.schema, partitionId, taskId, w.conf,
           f"$stem-$partitionId%05d.csv", trackZones)
     }
   }

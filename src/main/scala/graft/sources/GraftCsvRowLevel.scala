@@ -1,9 +1,9 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expression, Expressions, NamedReference, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
@@ -21,7 +21,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    group filtering hands the scan the set of files containing
   *    matching rows — untouched files are never read, let alone
   *    rewritten), applies the assignments above the scan, and hands the
-  *    surviving rows back to [[GraftCowBatchWrite]];
+  *    surviving rows back to [[GraftCowWrite]];
   *  - commit publishes the rewritten groups as fresh tagged files, then
   *    drops exactly the replaced files. Publish-first ordering: a
   *    driver crash between the two steps leaves transient DUPLICATES
@@ -66,8 +66,15 @@ private[sources] class GraftCsvRowLevelOperation(path: String,
     new GraftCowScanBuilder(this, path, tableSchema, partCols, versioned,
       derivedSpec)
 
+  /** The rewrite is a tagged write into the same layout: rewritten
+    * groups can never collide with the files they replace. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new GraftCowWriteBuilder(this, path, info, partCols, versioned, derivedSpec)
+    new WriteBuilder {
+      override def build(): Write = new GraftCowWrite(GraftCsvRowLevelOperation.this,
+        CsvWriteDesc(path, info.schema(), info.queryId(),
+          SerializableHadoopConf.fromSession(), partCols, derivedSpec,
+          tagged = true, versioned = versioned))
+    }
 }
 
 /** Column pruning only — deliberately NO filter pushdown: the rewrite
@@ -166,112 +173,14 @@ private[sources] class GraftCowScan(op: GraftCsvRowLevelOperation,
       fileSlot = true, conf, vectorized = false, limit = None, nullFill = true)
 }
 
-/** The replace-data write: rewritten rows cluster on the partition keys
-  * (same contract as INSERT — the partitioned writer needs contiguous
-  * sorted runs, and an UPDATE may move rows across keys). */
-private[sources] class GraftCowWriteBuilder(op: GraftCsvRowLevelOperation,
-                                            path: String,
-                                            info: LogicalWriteInfo,
-                                            partCols: Seq[String],
-                                            versioned: Boolean = false,
-                                            derivedSpec: Option[CsvDerivedSpec] = None)
-    extends WriteBuilder {
-  override def build(): Write =
-    new GraftCowWrite(op, path, info, partCols, versioned, derivedSpec)
-}
-
-private[sources] class GraftCowWrite(op: GraftCsvRowLevelOperation,
-                                     path: String, info: LogicalWriteInfo,
-                                     partCols: Seq[String],
-                                     versioned: Boolean = false,
-                                     derivedSpec: Option[CsvDerivedSpec] = None)
-    extends Write with RequiresDistributionAndOrdering {
-  override def requiredDistribution(): Distribution = derivedSpec match {
-    case Some(spec) => Distributions.clustered(
-      Array(spec.transform: Expression))
-    case None =>
-      if (partCols.isEmpty) Distributions.unspecified()
-      else Distributions.clustered(
-        partCols.map(c => Expressions.column(c): Expression).toArray)
-  }
-  override def requiredOrdering(): Array[SortOrder] = derivedSpec match {
-    case Some(spec) => Array(Expressions.sort(
-      spec.transform, SortDirection.ASCENDING))
-    case None =>
-      if (partCols.isEmpty) Array.empty
-      else partCols.map(c => Expressions.sort(Expressions.column(c),
-        SortDirection.ASCENDING)).toArray
-  }
-  override def toBatch: BatchWrite =
-    new GraftCowBatchWrite(op, path, info.schema(), info.queryId(),
-      SerializableHadoopConf.fromSession(), partCols, versioned, derivedSpec)
-}
-
-private[sources] class GraftCowBatchWrite(op: GraftCsvRowLevelOperation,
-                                          path: String, schema: StructType,
-                                          queryId: String,
-                                          conf: SerializableHadoopConf,
-                                          partCols: Seq[String],
-                                          versioned: Boolean = false,
-                                          derivedSpec: Option[CsvDerivedSpec] = None)
-    extends BatchWrite {
-  private def tmpDir = new HPath(path, s"_tmp_$queryId")
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    // tagged names: rewritten groups can never collide with the files
-    // they replace (publish-first, delete-second)
-    new GraftCsvWriterFactory(path, tmpDir.toString, schema, conf, partCols,
-      appendTag = Some(queryId), derivedSpec = derivedSpec)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new HPath(path)
-    val fs = root.getFileSystem(conf.value)
-    fs.mkdirs(root)
-    // 1. publish the rewritten groups (fresh names — no collisions)
-    val files = GraftCsvCommit.files(messages)
-    GraftCsvCommit.publish(fs, root, files)
-    // rewritten groups keep their data-skipping ability: same tagged-
-    // write zone sidecar as a catalog INSERT (replaced files' entries
-    // go stale harmlessly — their names are never reused)
-    CsvZones.write(root, conf.value, queryId,
-      files.map(f => (f.finalName, f.zones, f.rows)))
-    if (versioned) {
-      // 2v. LOGICAL replace: next manifest = live − replaced + rewritten;
-      // replaced bytes stay on disk for older versions (VACUUM reclaims)
-      val replaced = {
-        val b = Set.newBuilder[String]
-        op.replacedFiles.forEach(f =>
-          b += GraftLog.relativize(root, conf.value, f))
-        b.result()
-      }
-      // conflict-checked: if a concurrent commit removed any of the
-      // groups this rewrite read, publishing would resurrect dead rows
-      // — fail loudly instead (ConcurrentWriteConflictException). The
-      // just-published rewrite files are deleted on the way out: this
-      // writer created them, no manifest names them, and tidying now
-      // beats leaving 24h-grace vacuum food behind a failed commit.
-      try GraftLog.commitReplace(root, conf.value, replaced,
-        files.map(f => GraftLog.Entry(f.finalName, math.max(0L, f.bytes))))
-      catch {
-        case e: ConcurrentWriteConflictException =>
-          files.foreach(f =>
-            fs.delete(new HPath(root, f.finalName), false))
-          fs.delete(tmpDir, true)
-          throw e
-      }
-    } else {
-      // 2. drop exactly the replaced group files
-      op.replacedFiles.forEach(f => fs.delete(new HPath(f), false))
-      // 3. prune directories the rewrite emptied (rows moved or deleted)
-      if (partCols.nonEmpty || derivedSpec.isDefined)
-        GraftCsvTable.pruneEmptyKeyDirs(fs, root)
-    }
-    fs.delete(tmpDir, true)
-    fs.create(new HPath(root, "_SUCCESS"), true).close()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new HPath(path).getFileSystem(conf.value)
-    fs.delete(tmpDir, true)
+/** The replace-data write: rewritten rows cluster on the layout's keys
+  * exactly as an INSERT's do ([[GraftCsvWrite]] with no sortBy or
+  * clusterBy — the partitioned writer needs contiguous sorted runs, and
+  * an UPDATE may move rows across keys); only the commit differs. */
+private[sources] class GraftCowWrite(op: GraftCsvRowLevelOperation, w: CsvWriteDesc)
+    extends GraftCsvWrite(w, CsvWriteMode.Append) {
+  override def toBatch: BatchWrite = new GraftCsvBatchWrite(w, CsvWriteMode.Append) {
+    override def commit(messages: Array[WriterCommitMessage]): Unit =
+      GraftCsvCommit.replace(w, op.replacedFiles.asScala, GraftCsvCommit.files(messages))
   }
 }

@@ -57,11 +57,15 @@ private[sources] object SerializableHadoopConf {
   *    publishes the file — a failed/speculative attempt leaves nothing
   *    visible, and Spark's commit coordinator guarantees one committed
   *    attempt per partition;
-  *  - the driver's `commit(messages)` renames the committed temp files
-  *    into place (rename, not copy — O(files) metadata ops), truncates
-  *    the previous contents when the write is an overwrite, drops the
-  *    temp dir, and stamps `_SUCCESS`; `abort()` removes the temp dir
-  *    so failed jobs leave the target untouched;
+  *  - the driver's `commit(messages)` runs the ONE commit sequence
+  *    ([[GraftCsvCommit]]) every batch write, streaming epoch, DELETE
+  *    and copy-on-write rewrite shares: the write mode's drop decision
+  *    ([[CsvWriteMode]] — deleted files and key directories on a plain
+  *    table, surviving manifest entries on a versioned one), the rename
+  *    of the committed temp files into place (rename, not copy —
+  *    O(files) metadata ops), the zone sidecar of tagged writes, the
+  *    temp-dir removal and, for batch commits, `_SUCCESS`; `abort()`
+  *    removes the temp dir so failed jobs leave the target untouched;
   *  - output is RFC-4180-style `;`-CSV (quote doubling, quoted
   *    embedded separators/newlines, per-file header) — exactly what the
   *    S6 reader (`sep=';', header, multiLine`) round-trips.
@@ -107,8 +111,8 @@ private[sources] object GraftCsvTable {
   val FileColumn = "_file"
 
   /** Removes `key=value` directories left empty by leaf deletes (a
-    * compound-key DELETE drops leaves; their parents may end up bare).
-    * Returns true if `dir` itself ended up (and was left) non-empty. */
+    * compound-key DELETE drops leaves; their parents may end up bare),
+    * depth first below `dir`; `dir` itself is never removed. */
   private[sources] def pruneEmptyKeyDirs(fs: FileSystem, dir: HPath): Unit = {
     fs.listStatus(dir)
       .filter(s => s.isDirectory && s.getPath.getName.contains('=') &&
@@ -118,6 +122,20 @@ private[sources] object GraftCsvTable {
         if (fs.listStatus(s.getPath).isEmpty) fs.delete(s.getPath, false)
       }
   }
+
+  /** An integer option, failing with the option's name when malformed
+    * (outside input: the check stays). */
+  def intOption(options: CaseInsensitiveStringMap, name: String): Option[Int] =
+    Option(options.get(name)).map(v => v.toIntOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"graft-csv sink: option '$name' must be an integer, got '$v'")))
+
+  /** A boolean option (`true`/`false`, any case), failing with the
+    * option's name when malformed. */
+  def boolOption(options: CaseInsensitiveStringMap, name: String): Option[Boolean] =
+    Option(options.get(name)).map(v => v.toBooleanOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"graft-csv sink: option '$name' must be true or false, got '$v'")))
 
   def listPartFiles(path: String, conf: Configuration): Array[String] =
     listPartFilesWithSize(path, conf).map(_._1)
@@ -270,28 +288,29 @@ private[sources] class GraftCsvTable(path: String, tableSchema: StructType,
       java.util.EnumSet.of(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
         TableCapability.ACCEPT_ANY_SCHEMA, TableCapability.BATCH_READ,
         TableCapability.STREAMING_WRITE)
+  /** A write into this table: its layout, and (catalog tables) tagged
+    * names — catalog INSERTs append instead of overwriting the previous
+    * write's identically-named files. The tag is the FULL queryId (a
+    * UUID, filesystem-safe) — a truncated hash could collide across
+    * INSERTs and publish() deletes-then-renames, so a collision would
+    * silently REPLACE the earlier INSERT (advice r13). */
+  private def writeDesc(schema: StructType, queryId: String): CsvWriteDesc =
+    CsvWriteDesc(path, schema, queryId, SerializableHadoopConf.fromSession(),
+      catalogPartitionCols, catalogDerived, tagged = catalogManaged,
+      versioned = catalogVersioned)
+
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     requireWritable()
-    new GraftCsvWriteBuilder(path, info, CsvWriteMode.Append,
-      defaultPartitionCols = catalogPartitionCols,
-      defaultSortCols = catalogSortCols,
-      defaultSortBuckets = catalogSortBuckets,
-      versioned = catalogVersioned,
-      // per-write file tag: catalog INSERTs append instead of
-      // overwriting the previous write's identically-named files. The
-      // FULL queryId (a UUID, filesystem-safe) — a truncated hash could
-      // collide across INSERTs and publish() deletes-then-renames, so a
-      // collision would silently REPLACE the earlier INSERT (advice r13).
-      appendTag = if (catalogManaged) Some(info.queryId()) else None,
-      derivedSpec = catalogDerived)
+    GraftCsvWriteBuilder(writeDesc(info.schema(), info.queryId()), info,
+      catalogSortCols, catalogSortBuckets)
   }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val conf = SerializableHadoopConf.fromSession()
-    val vectorized = Option(options.get("vectorized")).forall(_.toBoolean)
-    val zoneSkip = Option(options.get("zoneSkip")).forall(_.toBoolean)
+    val vectorized = GraftCsvTable.boolOption(options, "vectorized").forall(identity)
+    val zoneSkip = GraftCsvTable.boolOption(options, "zoneSkip").forall(identity)
     // streaming admission control (versioned tables): at most N commits
     // per micro-batch — see GraftLogStreamBase
-    val maxVersions = Option(options.get("maxVersionsPerTrigger")).map(_.toInt)
+    val maxVersions = GraftCsvTable.intOption(options, "maxVersionsPerTrigger")
     // catalog reads null-fill columns missing from an old part file's
     // header (schema evolution); path reads keep the loud error (a
     // user-typed schema with a typo'd column should fail, not null out).
@@ -357,73 +376,28 @@ private[sources] class GraftCsvTable(path: String, tableSchema: StructType,
   // ---- DELETE FROM (SupportsDelete) -------------------------------------
   //
   // The retention/correction DML the daily-reload warehouse implies
-  // (verdict r13 #1). Two honest shapes only:
-  //  - no predicate (or TRUE): drop every data file — a metadata op;
-  //  - key-only predicates on a PARTITIONED table: evaluate against the
-  //    directory names and delete whole `key=value/` directories —
+  // (verdict r13 #1). Two honest shapes only, both a commit of ZERO
+  // files under the write modes' one drop decision ([[CsvWriteMode]]):
+  //  - no predicate (or TRUE): Truncate — every data file goes (a
+  //    versioned table's next manifest is empty; bytes stay for time
+  //    travel until VACUUM);
+  //  - key-only predicates on a PARTITIONED table: OverwriteKeys —
+  //    whole `key=value/` directories (or their manifest entries) go;
   //    surviving directories are never listed, let alone rewritten.
   // Anything needing a row rewrite (payload predicates) reports
-  // canDeleteWhere=false and Spark raises the analysis error — honest
-  // refusal beats a silent full-table rewrite at 100 TB.
+  // canDeleteWhere=false: Spark routes it to copy-on-write
+  // ([[newRowLevelOperationBuilder]]) instead.
 
-  private def keyFields: Seq[StructField] = catalogPartitionCols.flatMap(c =>
-    tableSchema.fields.find(_.name.equalsIgnoreCase(c)))
+  private def keyFields: Seq[StructField] =
+    CsvWriteDesc.keyFields(tableSchema, catalogPartitionCols)
 
-  override def canDeleteWhere(filters: Array[Filter]): Boolean = {
-    val ks = keyFields
-    filters.forall {
-      case _: AlwaysTrue => true
-      case f =>
-        val refs = f.references
-        ks.nonEmpty && refs.nonEmpty &&
-          refs.forall(r => ks.exists(_.name.equalsIgnoreCase(r))) &&
-          CsvFilterEval.supportedBy(StructType(ks), f)
-    }
-  }
+  override def canDeleteWhere(filters: Array[Filter]): Boolean =
+    CsvWriteMode.canDropBy(keyFields, filters)
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     requireWritable()
-    val conf = SerializableHadoopConf.fromSession().value
-    val root = new HPath(path)
-    val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return
-    val keyFilters = filters.filterNot(_.isInstanceOf[AlwaysTrue])
-    if (catalogVersioned) {
-      // LOGICAL delete: the next manifest excludes the matching files;
-      // bytes stay on disk for time travel until VACUUM
-      val ks = keyFields
-      if (keyFilters.nonEmpty && ks.isEmpty)
-        throw new UnsupportedOperationException(
-          "graft-csv: predicate DELETE requires a partitioned table")
-      GraftLog.commit(root, conf, live =>
-        if (keyFilters.isEmpty) Nil
-        else live.filterNot(e => keyFilters.forall(CsvFilterEval.eval(_,
-          KeyedCsvScan.keyLookup(ks, GraftLog.rawsOf(e.rel))))))
-      return
-    }
-    if (keyFilters.isEmpty) {
-      // unconditional DELETE: every part file and key directory goes;
-      // table metadata (_graft_table.json, _SUCCESS) stays
-      fs.listStatus(root).filter { s =>
-        !s.getPath.getName.startsWith("_") &&
-          ((s.isFile && s.getPath.getName.endsWith(".csv")) ||
-            (s.isDirectory && s.getPath.getName.contains('=')))
-      }.foreach(s => fs.delete(s.getPath, true))
-      CsvZones.drop(root, conf) // every entry now describes a deleted file
-    } else {
-      val ks = keyFields
-      if (ks.isEmpty) throw new UnsupportedOperationException(
-        "graft-csv: predicate DELETE requires a partitioned table")
-      val (_, leaves) = PartitionedCsvLayout.listPartitionTree(path, conf)
-      leaves.foreach { case (raws, dir) =>
-        if (keyFilters.forall(CsvFilterEval.eval(_,
-            KeyedCsvScan.keyLookup(ks, raws))))
-          fs.delete(new HPath(dir), true) // whole-directory metadata op
-      }
-      // compound layouts: drop ancestor key dirs emptied by the leaf
-      // deletes (pure metadata walk over the surviving tree)
-      if (ks.length > 1) GraftCsvTable.pruneEmptyKeyDirs(fs, root)
-    }
+    GraftCsvCommit.commit(writeDesc(tableSchema, UUID.randomUUID().toString),
+      CsvWriteMode.byFilters(filters, keyFields), files = Nil)
   }
 }
 
@@ -733,84 +707,179 @@ private[sources] class CsvValueIterator(file: String, required: StructType,
   def close(): Unit = in.close()
 }
 
-/** What a batch write does to EXISTING table contents at commit time. */
-private[sources] sealed trait CsvWriteMode
+/** One write, described once: the table it lands in, its row schema,
+  * its layout and how it names and commits files. Built by
+  * [[GraftCsvTable]] (its `partitionedBy` overridable per write by
+  * [[GraftCsvWriteBuilder]]) or the copy-on-write operation, and
+  * threaded through the Write, the batch or streaming write, the commit
+  * and the writer factory (which ships it to executors).
+  *
+  * `tagged` writes (catalog tables) stamp a tag into every published
+  * name — the queryId, or `<queryId>-e<epoch>` for a streaming epoch —
+  * so names are never reused and a zone sidecar keyed on the tag stays
+  * sound. Untagged names (the path face) are reused: a batch write
+  * publishes `part-<partition>.csv`, a streaming epoch
+  * `part-<epoch:05d>-<partition>.csv`. */
+private[sources] case class CsvWriteDesc(path: String, schema: StructType,
+                                         queryId: String,
+                                         conf: SerializableHadoopConf,
+                                         partitioned: Seq[String] = Nil,
+                                         derived: Option[CsvDerivedSpec] = None,
+                                         tagged: Boolean = false,
+                                         versioned: Boolean = false) {
+  /** The identity-partition key fields, resolved against the schema. */
+  def keys: Seq[StructField] = CsvWriteDesc.keyFields(schema, partitioned)
+
+  /** The tag of the batch write (`None`) or of one streaming epoch. */
+  def tag(epoch: Option[Long]): Option[String] =
+    if (tagged) Some(queryId + epoch.fold("")(e => s"-e$e")) else None
+
+  /** Published names are `<stem>-<partition:05d>.csv`. */
+  def stem(epoch: Option[Long]): String =
+    tag(epoch).map(t => s"part-$t").getOrElse(epoch.fold("part")(e => f"part-$e%05d"))
+
+  /** Where the tasks' uncommitted files live until the commit publishes
+    * them (the `_` prefix hides it from every listing). */
+  def tmpDir(epoch: Option[Long]): String =
+    s"$path/_tmp_$queryId" + epoch.fold("")(e => if (tagged) s"_e$e" else s"_$e")
+}
+
+private[sources] object CsvWriteDesc {
+  def keyFields(schema: StructType, cols: Seq[String]): Seq[StructField] =
+    cols.flatMap(c => schema.fields.find(_.name.equalsIgnoreCase(c)))
+}
+
+/** What a write does to EXISTING table contents at commit time, with
+  * its two faces stated once each: which manifest entries survive
+  * ([[survivors]], versioned tables) and which files and `key=value`
+  * directories are deleted ([[drop]], plain tables). Batch writes,
+  * streaming epochs and DELETE (a commit of zero files) all go through
+  * them in [[GraftCsvCommit.commit]]. */
+private[sources] sealed trait CsvWriteMode {
+  import CsvWriteMode._
+
+  /** Versioned face: the live manifest entries this write keeps;
+    * `written` are its own published names. */
+  def survivors(live: Seq[GraftLog.Entry], written: Seq[String]): Seq[GraftLog.Entry] =
+    this match {
+      case Append => live
+      case Truncate => Nil
+      case k: OverwriteKeys => live.filterNot(e => k.matches(GraftLog.rawsOf(e.rel)))
+      case DynamicOverwrite =>
+        val touched = written.map(GraftLog.dirOf).toSet
+        live.filterNot(e => touched(GraftLog.dirOf(e.rel)))
+    }
+
+  /** Unversioned face: deletes the files and key directories this write
+    * replaces — whole directories, a metadata op; survivors are never
+    * listed below their key level. */
+  def drop(fs: FileSystem, root: HPath, conf: Configuration,
+           written: Seq[String]): Unit = this match {
+    case Append => ()
+    case Truncate =>
+      // previous contents = top-level part files AND key=value directories
+      fs.listStatus(root).filter { s =>
+        !s.getPath.getName.startsWith("_") &&
+          (s.isFile || (s.isDirectory && s.getPath.getName.contains('=')))
+      }.foreach(s => fs.delete(s.getPath, true))
+      // every previous zone entry now describes a deleted file
+      CsvZones.drop(root, conf)
+    case k: OverwriteKeys =>
+      val (_, leaves) = PartitionedCsvLayout.listPartitionTree(root.toString, conf)
+      leaves.foreach { case (raws, dir) =>
+        if (k.matches(raws)) fs.delete(new HPath(dir), true)
+      }
+      // compound layouts: drop ancestor key dirs emptied by the leaf
+      // deletes (pure metadata walk over the surviving tree)
+      if (k.keys.length > 1) GraftCsvTable.pruneEmptyKeyDirs(fs, root)
+    case DynamicOverwrite =>
+      // exactly the key directories this write publishes into —
+      // computed from the commit messages, no directory listing at all
+      written.map(GraftLog.dirOf).filter(_.nonEmpty).distinct
+        .foreach(d => fs.delete(new HPath(root, d), true))
+  }
+}
+
 private[sources] object CsvWriteMode {
   /** Keep previous files (catalog INSERT INTO publishes under a fresh
     * tag; the path API overwrites identically-named files). */
   case object Append extends CsvWriteMode
-  /** Drop everything first: path `mode("overwrite")`, `INSERT
-    * OVERWRITE` with no surviving filter, `TRUNCATE TABLE`. */
+  /** Drop everything: path `mode("overwrite")`, `INSERT OVERWRITE` with
+    * no surviving filter, `TRUNCATE TABLE`, unconditional `DELETE`,
+    * complete-mode streaming into a versioned table. */
   case object Truncate extends CsvWriteMode
-  /** Static partition overwrite (`INSERT OVERWRITE … PARTITION (k=v)`):
-    * drop exactly the key directories matching the filters — a
-    * metadata op; untouched keys are never listed. */
-  final case class OverwriteKeys(filters: Array[Filter]) extends CsvWriteMode
+  /** Static key overwrite (`writeTo(t).overwrite(k = v)`) or key-only
+    * `DELETE`: drop exactly the key directories matching the filters. */
+  final case class OverwriteKeys(filters: Array[Filter], keys: Seq[StructField])
+      extends CsvWriteMode {
+    if (keys.isEmpty) throw new UnsupportedOperationException(
+      "graft-csv: a key-filtered overwrite or DELETE requires a partitioned table")
+    def matches(raws: Seq[String]): Boolean =
+      filters.forall(CsvFilterEval.eval(_, KeyedCsvScan.keyLookup(keys, raws)))
+  }
   /** Dynamic partition overwrite (partitionOverwriteMode=dynamic): drop
     * exactly the key directories this write produces files for — the
     * daily-reload shape (re-load today's partitions, history intact). */
   case object DynamicOverwrite extends CsvWriteMode
-}
 
-private[sources] class GraftCsvWriteBuilder(path: String, info: LogicalWriteInfo,
-                                            mode: CsvWriteMode,
-                                            defaultPartitionCols: Seq[String] = Nil,
-                                            defaultSortCols: Seq[String] = Nil,
-                                            appendTag: Option[String] = None,
-                                            defaultSortBuckets: Int = 0,
-                                            versioned: Boolean = false,
-                                            derivedSpec: Option[CsvDerivedSpec] = None)
-    extends WriteBuilder with SupportsOverwrite with SupportsDynamicOverwrite {
-  private def partitionCols: Seq[String] =
-    Option(info.options().get("partitionedBy"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty).getOrElse(defaultPartitionCols)
-  private def keyFieldsOf(cols: Seq[String]): Seq[StructField] =
-    cols.flatMap(c => info.schema().fields.find(_.name.equalsIgnoreCase(c)))
-
-  override def truncate(): WriteBuilder =
-    new GraftCsvWriteBuilder(path, info, CsvWriteMode.Truncate,
-      defaultPartitionCols, defaultSortCols, appendTag, defaultSortBuckets,
-      versioned, derivedSpec)
-
-  /** Key-only overwrite filters are a pure metadata op; anything else
-    * (payload predicates) is refused — Spark raises the analysis error
-    * instead of this sink silently rewriting the table. */
-  override def canOverwrite(filters: Array[Filter]): Boolean = {
-    val ks = keyFieldsOf(partitionCols)
+  /** The one check behind `canDeleteWhere` and `canOverwrite`: every
+    * filter is TRUE or a supported predicate over key columns only, so
+    * the drop is a directory-level metadata op. Anything else (payload
+    * predicates) is refused — Spark raises the analysis error (or routes
+    * a DELETE to copy-on-write) instead of this sink silently rewriting
+    * the table. */
+  def canDropBy(keys: Seq[StructField], filters: Array[Filter]): Boolean =
     filters.forall {
       case _: AlwaysTrue => true
       case f =>
         val refs = f.references
-        ks.nonEmpty && refs.nonEmpty &&
-          refs.forall(r => ks.exists(_.name.equalsIgnoreCase(r))) &&
-          CsvFilterEval.supportedBy(StructType(ks), f)
+        keys.nonEmpty && refs.nonEmpty &&
+          refs.forall(r => keys.exists(_.name.equalsIgnoreCase(r))) &&
+          CsvFilterEval.supportedBy(StructType(keys), f)
     }
-  }
 
-  override def overwrite(filters: Array[Filter]): WriteBuilder = {
+  /** The mode an overwrite or DELETE by `filters` commits under. */
+  def byFilters(filters: Array[Filter], keys: Seq[StructField]): CsvWriteMode = {
     val real = filters.filterNot(_.isInstanceOf[AlwaysTrue])
-    val next = if (real.isEmpty) CsvWriteMode.Truncate
-      else CsvWriteMode.OverwriteKeys(real)
-    new GraftCsvWriteBuilder(path, info, next, defaultPartitionCols,
-      defaultSortCols, appendTag, defaultSortBuckets, versioned, derivedSpec)
+    if (real.isEmpty) Truncate else OverwriteKeys(real, keys)
   }
+}
+
+/** The write's builder: `table` is the table's layout, which the write's
+  * own `partitionedBy=` option overrides; `sortCols`/`sortBuckets` are
+  * the table's `write.orderBy`/`write.sortBuckets` defaults. */
+private[sources] case class GraftCsvWriteBuilder(table: CsvWriteDesc,
+                                                 info: LogicalWriteInfo,
+                                                 sortCols: Seq[String] = Nil,
+                                                 sortBuckets: Int = 0,
+                                                 mode: CsvWriteMode = CsvWriteMode.Append)
+    extends WriteBuilder with SupportsOverwrite with SupportsDynamicOverwrite {
+  private def columnsOption(name: String): Option[Seq[String]] =
+    Option(info.options().get(name))
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .filter(_.nonEmpty)
+  private def w: CsvWriteDesc =
+    columnsOption("partitionedBy").fold(table)(cs => table.copy(partitioned = cs))
+
+  override def truncate(): WriteBuilder = copy(mode = CsvWriteMode.Truncate)
+
+  override def canOverwrite(filters: Array[Filter]): Boolean =
+    CsvWriteMode.canDropBy(w.keys, filters)
+
+  override def overwrite(filters: Array[Filter]): WriteBuilder =
+    copy(mode = CsvWriteMode.byFilters(filters, w.keys))
 
   override def overwriteDynamicPartitions(): WriteBuilder = {
-    if (partitionCols.isEmpty) throw new UnsupportedOperationException(
+    if (w.partitioned.isEmpty) throw new UnsupportedOperationException(
       "graft-csv sink: dynamic partition overwrite requires a partitioned table")
-    new GraftCsvWriteBuilder(path, info, CsvWriteMode.DynamicOverwrite,
-      defaultPartitionCols, defaultSortCols, appendTag, defaultSortBuckets,
-      versioned, derivedSpec)
+    copy(mode = CsvWriteMode.DynamicOverwrite)
   }
 
   override def build(): Write = {
-    val cluster = Option(info.options().get("clusterBy"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty)
+    val schema = info.schema()
+    val cluster = columnsOption("clusterBy")
     cluster.foreach { cols =>
-      val missing = cols.filterNot(c =>
-        info.schema().fieldNames.exists(_.equalsIgnoreCase(c)))
+      val missing = cols.filterNot(c => schema.fieldNames.exists(_.equalsIgnoreCase(c)))
       if (missing.nonEmpty) throw new IllegalArgumentException(
         s"graft-csv sink: clusterBy columns not in the write schema: " +
           missing.mkString(", "))
@@ -821,16 +890,15 @@ private[sources] class GraftCsvWriteBuilder(path: String, info: LogicalWriteInfo
     // the files that intersect it (CsvZones). Hash clustering
     // (clusterBy) spreads every value range across all files, which is
     // the wrong write shape for range-sliced reads — hence exclusive.
-    val sorted = Option(info.options().get("sortBy"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty).orElse(Option(defaultSortCols).filter(_.nonEmpty))
+    val sorted = columnsOption("sortBy").orElse(Option(sortCols).filter(_.nonEmpty))
+    val partitioned = w.partitioned
     sorted.foreach { cols =>
-      if (cluster.isDefined || partitionCols.nonEmpty)
+      if (cluster.isDefined || partitioned.nonEmpty)
         throw new IllegalArgumentException(
           "graft-csv sink: sortBy (ordered distribution) and clusterBy/" +
             "partitionedBy (hash clustering) are mutually exclusive")
       cols.foreach { c =>
-        val field = info.schema().fields.find(_.name.equalsIgnoreCase(c))
+        val field = schema.fields.find(_.name.equalsIgnoreCase(c))
           .getOrElse(throw new IllegalArgumentException(
             s"graft-csv sink: sortBy column '$c' not in the write schema"))
         if (!CsvZoneTracker.eligible(field.dataType))
@@ -839,12 +907,11 @@ private[sources] class GraftCsvWriteBuilder(path: String, info: LogicalWriteInfo
               s"${field.dataType.simpleString}; sort keys must be comparable scalars")
       }
     }
-    val partitioned = partitionCols
     partitioned.foreach { col =>
       if (cluster.isDefined) throw new IllegalArgumentException(
         "graft-csv sink: partitionedBy implies clustering on the keys; " +
           "do not combine it with clusterBy")
-      val field = info.schema().fields.find(_.name.equalsIgnoreCase(col))
+      val field = schema.fields.find(_.name.equalsIgnoreCase(col))
         .getOrElse(throw new IllegalArgumentException(
           s"graft-csv sink: partitionedBy column '$col' not in the write schema"))
       if (!PartitionedCsvLayout.keyTypeOk(field.dataType))
@@ -853,20 +920,19 @@ private[sources] class GraftCsvWriteBuilder(path: String, info: LogicalWriteInfo
             s"${field.dataType.simpleString}; partition keys must be " +
             "string/integral/boolean")
     }
-    if (partitioned.nonEmpty && info.schema().length <= partitioned.length)
+    if (partitioned.nonEmpty && schema.length <= partitioned.length)
       throw new IllegalArgumentException(
         "graft-csv sink: partitionedBy requires at least one payload column")
     // sortBuckets=N pins the ordered write's partition count (N files).
     // Default 0 lets the engine decide — AQE sizes range partitions by
     // bytes, the scale-correct knob; a pinned count is for layouts that
     // must be stable across reloads (and for deterministic specs).
-    val sortBuckets = Option(info.options().get("sortBuckets")).map(_.toInt)
-      .getOrElse(defaultSortBuckets)
-    if (sortBuckets < 0 || (sortBuckets > 0 && sorted.isEmpty))
+    val buckets = GraftCsvTable.intOption(info.options(), "sortBuckets")
+      .getOrElse(sortBuckets)
+    if (buckets < 0 || (buckets > 0 && sorted.isEmpty))
       throw new IllegalArgumentException(
         "graft-csv sink: sortBuckets requires sortBy and a positive count")
-    new GraftCsvWrite(path, info, mode, cluster, partitioned, appendTag, sorted,
-      sortBuckets, versioned, derivedSpec)
+    new GraftCsvWrite(w, mode, cluster, sorted, buckets)
   }
 }
 
@@ -882,15 +948,10 @@ private[sources] class GraftCsvWriteBuilder(path: String, info: LogicalWriteInfo
   * contiguous runs, so a downstream splitter is a single pass. Without
   * the option the distribution is unspecified and planning is
   * unchanged. */
-private[sources] class GraftCsvWrite(path: String, info: LogicalWriteInfo,
-                                     mode: CsvWriteMode,
-                                     cluster: Option[Seq[String]],
-                                     partitioned: Seq[String] = Nil,
-                                     appendTag: Option[String] = None,
+private[sources] class GraftCsvWrite(w: CsvWriteDesc, mode: CsvWriteMode,
+                                     cluster: Option[Seq[String]] = None,
                                      sorted: Option[Seq[String]] = None,
-                                     sortBuckets: Int = 0,
-                                     versioned: Boolean = false,
-                                     derivedSpec: Option[CsvDerivedSpec] = None)
+                                     sortBuckets: Int = 0)
     extends Write with RequiresDistributionAndOrdering {
   /** 0 = engine's choice (AQE byte-sized range partitions); >0 pins the
     * ordered write's file count. */
@@ -898,7 +959,7 @@ private[sources] class GraftCsvWrite(path: String, info: LogicalWriteInfo,
     if (sorted.isDefined) sortBuckets else 0
   // partitionedBy IS a clustering on the keys (plus the hive layout)
   private def keys: Option[Seq[String]] =
-    if (partitioned.nonEmpty) Some(partitioned) else cluster
+    if (w.partitioned.nonEmpty) Some(w.partitioned) else cluster
   private def sortOrders(cs: Seq[String]): Array[SortOrder] =
     cs.map(c =>
       Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
@@ -910,14 +971,14 @@ private[sources] class GraftCsvWrite(path: String, info: LogicalWriteInfo,
     // TRANSFORM — Spark resolves it through the catalog's V2 function
     // and shuffles by the very function the layout stores, so each
     // task's rows arrive grouped by destination directory.
-    derivedSpec.map(spec => Distributions.clustered(
+    w.derived.map(spec => Distributions.clustered(
         Array(spec.transform: Expression)))
       .orElse(sorted.map(cs => Distributions.ordered(sortOrders(cs))))
       .orElse(keys.map(cs => Distributions.clustered(
         cs.map(c => Expressions.column(c): Expression).toArray)))
       .getOrElse(Distributions.unspecified())
   override def requiredOrdering(): Array[SortOrder] =
-    derivedSpec.map(spec => Array(Expressions.sort(
+    w.derived.map(spec => Array(Expressions.sort(
         spec.transform, SortDirection.ASCENDING)))
       .getOrElse(sorted.orElse(keys).map(sortOrders).getOrElse(Array.empty))
   /** Spark-UI observability for the WRITE side (mirrors the paged
@@ -930,46 +991,27 @@ private[sources] class GraftCsvWrite(path: String, info: LogicalWriteInfo,
     Array(new CsvRowsWrittenMetric, new CsvBytesWrittenMetric,
       new CsvFilesWrittenMetric)
 
-  override def toBatch: BatchWrite =
-    new GraftCsvBatchWrite(path, info.schema(), info.queryId(), mode,
-      SerializableHadoopConf.fromSession(), partitioned, appendTag, versioned,
-      derivedSpec)
+  override def toBatch: BatchWrite = new GraftCsvBatchWrite(w, mode)
+  /** Spark's streaming planner asks for Append, or Truncate (complete
+    * output mode) only. */
   override def toStreaming: StreamingWrite = {
-    if (versioned) {
-      // `writeStream.toTable` on a VERSIONED catalog table (r15): every
-      // epoch is one manifest commit carrying its (appId, epoch) txn
-      // record, so a checkpoint-replayed epoch is recognized and
-      // skipped — exactly-once at the COMMIT level, partitioned
-      // layouts included (the distribution contract above applies to
-      // each micro-batch like any INSERT).
-      val truncate = mode match {
-        case CsvWriteMode.Append => false
-        case CsvWriteMode.Truncate => true
-        case other => throw new UnsupportedOperationException(
-          s"graft-csv sink: streaming writes support append and complete " +
-            s"output modes only; got $other")
-      }
-      return new GraftCsvVersionedStreamingWrite(path, info.schema(),
-        info.queryId(), SerializableHadoopConf.fromSession(), partitioned,
-        truncate, derivedSpec)
-    }
-    if (partitioned.nonEmpty) throw new UnsupportedOperationException(
+    if (!w.versioned && w.partitioned.nonEmpty) throw new UnsupportedOperationException(
       "graft-csv sink: partitionedBy is batch-only on the path face (the " +
         "streaming face writes epoch-stamped flat files; partitioned " +
         "streaming needs the versioned catalog table's manifest commits)")
-    new GraftCsvStreamingWrite(path, info.schema(), info.queryId(),
-      SerializableHadoopConf.fromSession())
+    // the path face commits every epoch as an append: its epoch-stamped
+    // names sit beside the earlier epochs' (complete mode included)
+    new GraftCsvStreamingWrite(w, if (w.versioned) mode else CsvWriteMode.Append)
   }
 }
 
 /** Commit message: the temp file this task wrote, the final name it
-  * should be published under, (tagged writes only) the file's column
-  * zone map for the `_zones` sidecar, and the writer's byte count
-  * (manifest fodder for versioned tables). */
+  * should be published under, the file's column zone map (tagged
+  * writes only; else empty) for the `_zones` sidecar, and the writer's
+  * byte and row counts (manifest and sidecar fodder). */
 private[sources] case class CsvFileCommit(tempFile: String, finalName: String,
-                                          zones: Map[String, CsvColZone] = Map.empty,
-                                          bytes: Long = -1L,
-                                          rows: Long = -1L)
+                                          zones: Map[String, CsvColZone],
+                                          bytes: Long, rows: Long)
   extends WriterCommitMessage
 
 private[sources] class CsvRowsWrittenMetric
@@ -980,7 +1022,7 @@ private[sources] class CsvRowsWrittenMetric
 private[sources] class CsvBytesWrittenMetric
     extends org.apache.spark.sql.connector.metric.CustomSumMetric {
   override def name(): String = "csvBytesWritten"
-  override def description(): String = "payload bytes written"
+  override def description(): String = "bytes written (header included)"
 }
 private[sources] class CsvFilesWrittenMetric
     extends org.apache.spark.sql.connector.metric.CustomSumMetric {
@@ -988,9 +1030,24 @@ private[sources] class CsvFilesWrittenMetric
   override def description(): String = "files committed"
 }
 
-/** The commit steps shared by the batch, streaming and copy-on-write
-  * commit paths. One body so the rename/failure semantics can never
-  * drift between them. */
+/** The ONE commit sequence of batch writes, streaming epochs, DELETE
+  * and copy-on-write rewrites, so the rename/failure semantics and the
+  * crash windows can never drift between them:
+  *
+  *  - plain tables: the mode's [[CsvWriteMode.drop]], then publish;
+  *  - versioned tables: publish, then claim the next manifest (live
+  *    entries the mode's [[CsvWriteMode.survivors]] keep, plus the
+  *    fresh files) — NO physical deletes ever (replaced files stay
+  *    referenced by older versions until VACUUM). A crash between
+  *    publish and claim leaves orphans no manifest names — vacuum food,
+  *    never a manifest of missing files. A streaming epoch's claim
+  *    carries its `txn` record, and an epoch the ledger already holds
+  *    is a checkpoint replay, skipped before anything publishes;
+  *  - copy-on-write ([[replace]]): publish, then swap the replaced
+  *    groups out (conflict-checked manifest claim, or delete + prune).
+  *
+  * Every path then writes the zone sidecar (tagged writes), drops its
+  * temp dir and, for batch commits, stamps `_SUCCESS`. */
 private[sources] object GraftCsvCommit {
   /** Every file the tasks committed, flattened. */
   def files(messages: Array[WriterCommitMessage]): Seq[CsvFileCommit] =
@@ -999,8 +1056,18 @@ private[sources] object GraftCsvCommit {
       case CsvFilesCommit(fsq) => fsq // partitioned task: one file per key
     }
 
-  /** Overwrite-renames every temp file under its final name. */
-  def publish(fs: FileSystem, root: HPath, files: Seq[CsvFileCommit]): Unit =
+  private def open(w: CsvWriteDesc): (FileSystem, HPath) = {
+    val root = new HPath(w.path)
+    val fs = root.getFileSystem(w.conf.value)
+    fs.mkdirs(root)
+    (fs, root)
+  }
+
+  /** Overwrite-renames every temp file under its final name, then
+    * persists the tagged files' zone maps (one sidecar per tag; untagged
+    * writes reuse names, so theirs would be unsound). */
+  private def publish(fs: FileSystem, root: HPath, w: CsvWriteDesc,
+                      epoch: Option[Long], files: Seq[CsvFileCommit]): Unit = {
     files.foreach { f =>
       val target = new HPath(root, f.finalName)
       // partitioned finalNames live under key=value subdirectories
@@ -1009,269 +1076,169 @@ private[sources] object GraftCsvCommit {
       if (!fs.rename(new HPath(f.tempFile), target))
         throw new java.io.IOException(s"graft-csv: rename ${f.tempFile} -> $target failed")
     }
+    w.tag(epoch).foreach(t => CsvZones.write(root, w.conf.value, t,
+      files.map(f => (f.finalName, f.zones, f.rows))))
+  }
+
+  private def finish(fs: FileSystem, root: HPath, w: CsvWriteDesc,
+                     epoch: Option[Long]): Unit = {
+    fs.delete(new HPath(w.tmpDir(epoch)), true)
+    if (epoch.isEmpty) fs.create(new HPath(root, "_SUCCESS"), true).close()
+  }
+
+  private def entries(files: Seq[CsvFileCommit]): Seq[GraftLog.Entry] =
+    files.map(f => GraftLog.Entry(f.finalName, f.bytes))
+
+  /** A batch write (`epoch` None), one streaming epoch, or a DELETE (no
+    * files) under `mode`. */
+  def commit(w: CsvWriteDesc, mode: CsvWriteMode, files: Seq[CsvFileCommit],
+             epoch: Option[Long] = None): Unit = {
+    val (fs, root) = open(w)
+    val conf = w.conf.value
+    val written = files.map(_.finalName)
+    if (w.versioned) {
+      // exactly-once: an epoch the manifest ledger already records is a
+      // checkpoint replay — skip BEFORE publishing anything
+      if (epoch.exists(e => GraftLog.lastTxn(root, conf, w.queryId).exists(_ >= e))) {
+        fs.delete(new HPath(w.tmpDir(epoch)), true)
+        return
+      }
+      publish(fs, root, w, epoch, files)
+      GraftLog.commit(root, conf, live => mode.survivors(live, written) ++ entries(files),
+        txn = epoch.map(w.queryId -> _))
+    } else {
+      // A replayed epoch may plan FEWER partitions than the attempt that
+      // first committed it (shuffle-partition change across restart):
+      // overwrite-by-name alone would leave the extra files from the
+      // failed attempt behind as duplicate rows. Remove every file this
+      // epoch ever published that the replay does not re-produce, THEN
+      // publish — the epoch's final state is exactly `files`.
+      epoch.foreach { _ =>
+        val epochPrefix = w.stem(epoch) + "-"
+        fs.listStatus(root)
+          .filter(s => s.isFile && s.getPath.getName.startsWith(epochPrefix) &&
+            !written.contains(s.getPath.getName))
+          .foreach(s => fs.delete(s.getPath, false))
+      }
+      mode.drop(fs, root, conf, written)
+      publish(fs, root, w, epoch, files)
+    }
+    finish(fs, root, w, epoch)
+  }
+
+  /** Copy-on-write: publish the rewritten groups (fresh tagged names —
+    * they can never collide with the files they replace), then drop
+    * exactly the `replaced` group files (absolute paths). Publish-first
+    * ordering: a crash between the two steps leaves transient
+    * DUPLICATES (re-runnable), never data loss. */
+  def replace(w: CsvWriteDesc, replaced: Iterable[String],
+              files: Seq[CsvFileCommit]): Unit = {
+    val (fs, root) = open(w)
+    val conf = w.conf.value
+    publish(fs, root, w, None, files)
+    if (w.versioned) {
+      // LOGICAL replace: next manifest = live − replaced + rewritten;
+      // replaced bytes stay on disk for older versions (VACUUM reclaims).
+      // Conflict-checked: if a concurrent commit removed any of the
+      // groups this rewrite read, publishing would resurrect dead rows
+      // — fail loudly instead (ConcurrentWriteConflictException). The
+      // just-published rewrite files are deleted on the way out: this
+      // writer created them, no manifest names them, and tidying now
+      // beats leaving 24h-grace vacuum food behind a failed commit.
+      try GraftLog.commitReplace(root, conf,
+        replaced.map(GraftLog.relativize(root, conf, _)).toSet, entries(files))
+      catch {
+        case e: ConcurrentWriteConflictException =>
+          files.foreach(f => fs.delete(new HPath(root, f.finalName), false))
+          fs.delete(new HPath(w.tmpDir(None)), true)
+          throw e
+      }
+    } else {
+      replaced.foreach(f => fs.delete(new HPath(f), false))
+      // prune directories the rewrite emptied (rows moved or deleted)
+      if (w.partitioned.nonEmpty || w.derived.isDefined)
+        GraftCsvTable.pruneEmptyKeyDirs(fs, root)
+    }
+    finish(fs, root, w, None)
+  }
+
+  def abort(w: CsvWriteDesc, epoch: Option[Long]): Unit = {
+    val tmp = new HPath(w.tmpDir(epoch))
+    tmp.getFileSystem(w.conf.value).delete(tmp, true)
+  }
 }
 
-private[sources] class GraftCsvBatchWrite(path: String, schema: StructType,
-                                          queryId: String, mode: CsvWriteMode,
-                                          conf: SerializableHadoopConf,
-                                          partitioned: Seq[String] = Nil,
-                                          appendTag: Option[String] = None,
-                                          versioned: Boolean = false,
-                                          derivedSpec: Option[CsvDerivedSpec] = None)
+private[sources] class GraftCsvBatchWrite(w: CsvWriteDesc, mode: CsvWriteMode)
     extends BatchWrite {
-
-  private def tmpDir = new HPath(path, s"_tmp_$queryId")
-
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftCsvWriterFactory(path, tmpDir.toString, schema, conf, partitioned,
-      appendTag, derivedSpec)
-
-  /** Versioned commit: publish data files, write the zone sidecar, then
-    * claim the next manifest — NO physical deletes ever (overwritten/
-    * truncated files stay referenced by older versions until VACUUM).
-    * Crash between publish and manifest leaves orphans no manifest
-    * names — vacuum food, never a manifest of missing files. */
-  private def commitVersioned(fs: FileSystem, root: HPath,
-                              files: Seq[CsvFileCommit]): Unit = {
-    GraftCsvCommit.publish(fs, root, files)
-    appendTag.foreach { tag =>
-      CsvZones.write(root, conf.value, tag,
-        files.map(f => (f.finalName, f.zones, f.rows)))
-    }
-    val fresh = files.map(f => GraftLog.Entry(f.finalName, math.max(0L, f.bytes)))
-    val ks = partitioned.flatMap(c =>
-      schema.fields.find(_.name.equalsIgnoreCase(c)))
-    GraftLog.commit(root, conf.value, live => (mode match {
-      case CsvWriteMode.Append => live
-      case CsvWriteMode.Truncate => Nil
-      case CsvWriteMode.OverwriteKeys(filters) =>
-        live.filterNot(e => filters.forall(CsvFilterEval.eval(_,
-          KeyedCsvScan.keyLookup(ks, GraftLog.rawsOf(e.rel)))))
-      case CsvWriteMode.DynamicOverwrite =>
-        val touched = fresh.map(e => GraftLog.dirOf(e.rel)).toSet
-        live.filterNot(e => touched.contains(GraftLog.dirOf(e.rel)))
-    }) ++ fresh)
-    fs.delete(tmpDir, true)
-    fs.create(new HPath(root, "_SUCCESS"), true).close()
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new HPath(path)
-    val fs = root.getFileSystem(conf.value)
-    fs.mkdirs(root)
-    val files = GraftCsvCommit.files(messages)
-    if (versioned) { commitVersioned(fs, root, files); return }
-    mode match {
-      case CsvWriteMode.Append => ()
-      case CsvWriteMode.Truncate =>
-        // previous contents = top-level part files AND key=value directories
-        fs.listStatus(root).filter { s =>
-          !s.getPath.getName.startsWith("_") &&
-            (s.isFile || (s.isDirectory && s.getPath.getName.contains('=')))
-        }.foreach(s => fs.delete(s.getPath, true))
-        // every previous zone entry now describes a deleted file
-        CsvZones.drop(root, conf.value)
-      case CsvWriteMode.OverwriteKeys(filters) =>
-        // static partition overwrite: drop the matching leaf directories
-        // wholesale (metadata op); survivors are never listed
-        val ks = partitioned.flatMap(c =>
-          schema.fields.find(_.name.equalsIgnoreCase(c)))
-        if (ks.isEmpty) throw new UnsupportedOperationException(
-          "graft-csv sink: filtered overwrite requires a partitioned table")
-        val (_, leaves) = PartitionedCsvLayout.listPartitionTree(path, conf.value)
-        leaves.foreach { case (raws, dir) =>
-          if (filters.forall(CsvFilterEval.eval(_,
-              KeyedCsvScan.keyLookup(ks, raws))))
-            fs.delete(new HPath(dir), true)
-        }
-        if (ks.length > 1) GraftCsvTable.pruneEmptyKeyDirs(fs, root)
-      case CsvWriteMode.DynamicOverwrite =>
-        // drop exactly the key directories this write publishes into —
-        // computed from the commit messages, no directory listing at all
-        files.map(f => GraftLog.dirOf(f.finalName)).filter(_.nonEmpty)
-          .distinct.foreach(d => fs.delete(new HPath(root, d), true))
-    }
-    GraftCsvCommit.publish(fs, root, files)
-    // tagged writes persist their files' zone maps (one sidecar per
-    // commit; untagged writes reuse names, so theirs would be unsound)
-    appendTag.foreach { tag =>
-      CsvZones.write(root, conf.value, tag,
-        files.map(f => (f.finalName, f.zones, f.rows)))
-    }
-    fs.delete(tmpDir, true)
-    fs.create(new HPath(root, "_SUCCESS"), true).close()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new HPath(path).getFileSystem(conf.value)
-    fs.delete(tmpDir, true)
-  }
+    new CsvWriterFactory(w)
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    GraftCsvCommit.commit(w, mode, GraftCsvCommit.files(messages))
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    GraftCsvCommit.abort(w, None)
 }
 
 /** K1 at STREAMING cadence, natively (no foreachBatch): per micro-batch
-  * the same two-phase task commit as the batch writer, publishing into
-  * EPOCH-STAMPED final names (`part-<epoch>-<partition>.csv`). A
-  * checkpoint-replayed epoch re-derives the identical names and
-  * overwrites its own files, so delivery is exactly-once at the file
-  * level across kill/restart — the property `foreachBatch` users must
-  * hand-build with idempotent per-batch_id overwrites, provided here
-  * by the sink itself. Readers see only committed files (temp files
-  * live under a `_tmp_` prefix the lister skips). */
-private[sources] class GraftCsvStreamingWrite(path: String, schema: StructType,
-                                              queryId: String,
-                                              conf: SerializableHadoopConf)
+  * the same two-phase task commit as the batch writer.
+  *
+  * Path face: each epoch publishes into EPOCH-STAMPED final names
+  * (`part-<epoch>-<partition>.csv`). A checkpoint-replayed epoch
+  * re-derives the identical names and overwrites its own files, so
+  * delivery is exactly-once at the file level across kill/restart —
+  * the property `foreachBatch` users must hand-build with idempotent
+  * per-batch_id overwrites, provided here by the sink itself. Readers
+  * see only committed files (temp files live under a `_tmp_` prefix the
+  * lister skips).
+  *
+  * VERSIONED catalog tables (`df.writeStream.toTable("graft.wh.t")`,
+  * r15): each micro-batch commits like a batch INSERT — tagged names
+  * (tag = streaming queryId + epoch, unique forever), zone sidecars,
+  * one manifest commit — plus the manifest records the epoch as a
+  * streaming TRANSACTION (`txn: {app, epoch}`, the Delta
+  * SetTransaction/idempotent-write shape). On restart, Spark replays
+  * the last un-checkpointed epoch; [[GraftLog.lastTxn]] recognizes an
+  * epoch the log already committed and the replay becomes a no-op
+  * BEFORE any file publishes — no duplicate rows, no stray files. The
+  * appId is the streaming query's stable id (persisted in its
+  * checkpoint), so recognition survives restarts; the same query never
+  * runs two epochs concurrently, so the check-then-commit window cannot
+  * race itself, and commits from OTHER writers interleave safely (the
+  * txn ledger rides the same atomic manifest claim). Crash windows:
+  * after publish but before the manifest claim → replay re-publishes
+  * and commits; the first attempt's files are unreferenced orphans
+  * (24h-grace vacuum food). After the claim but before Spark's own
+  * checkpoint commit → replay is recognized and skipped. Partitioned
+  * layouts work (the Write's distribution contract applies to each
+  * micro-batch); complete output mode (Truncate) makes each epoch's
+  * manifest REPLACE the live set instead of appending to it. */
+private[sources] class GraftCsvStreamingWrite(w: CsvWriteDesc, mode: CsvWriteMode)
     extends StreamingWrite {
-
-  private def tmpDir(epochId: Long) = new HPath(path, s"_tmp_${queryId}_$epochId")
-
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftCsvStreamingWriterFactory(path, queryId, schema, conf)
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val root = new HPath(path)
-    val fs = root.getFileSystem(conf.value)
-    fs.mkdirs(root)
-    // A replayed epoch may plan FEWER partitions than the attempt that
-    // first committed it (shuffle-partition change across restart):
-    // overwrite-by-name alone would leave the extra files from the
-    // failed attempt behind as duplicate rows. Remove every file this
-    // epoch ever published that the replay does not re-produce, THEN
-    // publish — the epoch's final state is exactly `messages`.
-    val files = GraftCsvCommit.files(messages)
-    val finalNames = files.map(_.finalName).toSet
-    val epochPrefix = f"part-$epochId%05d-"
-    if (fs.exists(root))
-      fs.listStatus(root)
-        .filter(s => s.isFile && s.getPath.getName.startsWith(epochPrefix) &&
-          !finalNames.contains(s.getPath.getName))
-        .foreach(s => fs.delete(s.getPath, false))
-    GraftCsvCommit.publish(fs, root, files)
-    fs.delete(tmpDir(epochId), true)
-  }
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new HPath(path).getFileSystem(conf.value)
-    fs.delete(tmpDir(epochId), true)
-  }
+    new CsvWriterFactory(w)
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    GraftCsvCommit.commit(w, mode, GraftCsvCommit.files(messages), Some(epochId))
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    GraftCsvCommit.abort(w, Some(epochId))
 }
 
-private[sources] class GraftCsvStreamingWriterFactory(path: String, queryId: String,
-                                                      schema: StructType,
-                                                      conf: SerializableHadoopConf)
-    extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new GraftCsvDataWriter(s"$path/_tmp_${queryId}_$epochId", schema,
-      partitionId, taskId, conf,
-      f"part-$epochId%05d-$partitionId%05d.csv")
-}
-
-/** Streaming writes into a VERSIONED catalog table (r15):
-  * `df.writeStream.toTable("graft.wh.t")`. Each micro-batch commits
-  * like a batch INSERT — tagged file names (tag = streaming queryId +
-  * epoch, unique forever), zone sidecars, one manifest commit — plus
-  * the manifest records the epoch as a streaming TRANSACTION
-  * (`txn: {app, epoch}`, the Delta SetTransaction/idempotent-write
-  * shape). On restart, Spark replays the last un-checkpointed epoch;
-  * [[GraftLog.lastTxn]] recognizes an epoch the log already committed
-  * and the replay becomes a no-op BEFORE any file publishes — no
-  * duplicate rows, no stray files. The appId is the streaming query's
-  * stable id (persisted in its checkpoint), so recognition survives
-  * restarts; the same query never runs two epochs concurrently, so the
-  * check-then-commit window cannot race itself, and commits from OTHER
-  * writers interleave safely (the txn ledger rides the same atomic
-  * manifest claim).
-  *
-  * Crash windows, priced: after publish but before the manifest claim
-  * → replay re-publishes and commits; the first attempt's files are
-  * unreferenced orphans (24h-grace vacuum food — same story as a
-  * crashed batch INSERT). After the claim but before Spark's own
-  * checkpoint commit → replay is recognized and skipped. Downstream,
-  * each epoch's commit is an ordinary data commit: the changefeed and
-  * the appends stream serve it like any INSERT.
-  *
-  * Partitioned layouts work — the Write's distribution contract
-  * (cluster by keys) applies to each micro-batch, and the partitioned
-  * writer lands each key's rows in its `key=value/` directory.
-  * `truncate` (complete output mode): each epoch's manifest REPLACES
-  * the live set instead of appending to it. */
-private[sources] class GraftCsvVersionedStreamingWrite(
-    path: String, schema: StructType, queryId: String,
-    conf: SerializableHadoopConf, partitioned: Seq[String],
-    truncate: Boolean, derivedSpec: Option[CsvDerivedSpec] = None)
-    extends StreamingWrite {
-
-  private def tmpDir(epochId: Long) = new HPath(path, s"_tmp_${queryId}_e$epochId")
-  private def tagOf(epochId: Long) = s"$queryId-e$epochId"
-
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftCsvVersionedStreamingWriterFactory(path, queryId, schema, conf,
-      partitioned, derivedSpec)
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val root = new HPath(path)
-    val fs = root.getFileSystem(conf.value)
-    fs.mkdirs(root)
-    // exactly-once: an epoch the manifest ledger already records is a
-    // checkpoint replay — skip BEFORE publishing anything
-    if (GraftLog.lastTxn(root, conf.value, queryId).exists(_ >= epochId)) {
-      fs.delete(tmpDir(epochId), true)
-      return
-    }
-    val files = GraftCsvCommit.files(messages)
-    GraftCsvCommit.publish(fs, root, files)
-    CsvZones.write(root, conf.value, tagOf(epochId),
-      files.map(f => (f.finalName, f.zones, f.rows)))
-    val fresh = files.map(f => GraftLog.Entry(f.finalName, math.max(0L, f.bytes)))
-    GraftLog.commit(root, conf.value,
-      live => (if (truncate) Nil else live) ++ fresh,
-      txn = Some(queryId -> epochId))
-    fs.delete(tmpDir(epochId), true)
-  }
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new HPath(path).getFileSystem(conf.value)
-    fs.delete(tmpDir(epochId), true)
-  }
-}
-
-private[sources] class GraftCsvVersionedStreamingWriterFactory(
-    path: String, queryId: String, schema: StructType,
-    conf: SerializableHadoopConf, partitioned: Seq[String],
-    derivedSpec: Option[CsvDerivedSpec] = None)
-    extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    CsvRollingWriter.forLayout(s"$path/_tmp_${queryId}_e$epochId", schema,
-      partitioned, derivedSpec, partitionId, taskId, conf,
-      stem = s"part-$queryId-e$epochId", trackZones = true)
-}
-
-private[sources] class GraftCsvWriterFactory(path: String, tmpDir: String,
-                                             schema: StructType,
-                                             conf: SerializableHadoopConf,
-                                             partitioned: Seq[String] = Nil,
-                                             appendTag: Option[String] = None,
-                                             derivedSpec: Option[CsvDerivedSpec] = None)
-    extends DataWriterFactory {
-  // catalog INSERTs stamp the write tag into every published name so
-  // successive writes append instead of replacing each other's files
-  private val stem = appendTag.map(t => s"part-$t").getOrElse("part")
-  // tagged names can never be reused, so their zone maps can never go
-  // stale against a same-named different file — track them
-  private val trackZones = appendTag.isDefined
+/** The one writer factory of batch writes and streaming epochs: every
+  * task writes under the write's (or epoch's) temp dir and name stem
+  * through [[CsvRollingWriter.forLayout]]. */
+private[sources] class CsvWriterFactory(w: CsvWriteDesc)
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    CsvRollingWriter.forLayout(tmpDir, schema, partitioned, derivedSpec,
-      partitionId, taskId, conf, stem, trackZones)
+    CsvRollingWriter.forLayout(w, None, partitionId, taskId)
+  override def createWriter(partitionId: Int, taskId: Long,
+                            epochId: Long): DataWriter[InternalRow] =
+    CsvRollingWriter.forLayout(w, Some(epochId), partitionId, taskId)
 }
 
 private[sources] class GraftCsvDataWriter(tmpDir: String, schema: StructType,
                                           partitionId: Int, taskId: Long,
                                           conf: SerializableHadoopConf,
                                           finalName: String,
-                                          trackZones: Boolean = false)
+                                          trackZones: Boolean)
     extends DataWriter[InternalRow] {
 
   // zone maps ride tagged writes only (unique final names forever —

@@ -1,10 +1,13 @@
 package org.apache.spark
 
-/** Dev-tool shim: [[SparkContext.listenerBus]] is private[spark], but
-  * [[graft.Profile]] must drain it before reading its task-metric
-  * counters (a fixed sleep undercounts queries with slow metric
-  * delivery — ADVICE r15). Used only by the profiling tool, never by a
-  * query path. */
+/** Shim: [[SparkContext.listenerBus]] is private[spark], but anything
+  * that reads listener-fed state right after a query must drain it
+  * first — a fixed sleep undercounts queries with slow metric delivery
+  * (ADVICE r15). Used by the measuring tools (`graft.Profile`,
+  * `graft.ScaleProbe`, the perfbench runner) and by specs that read
+  * listener or status-store state (PlanHygieneSpec, PipelineSpec,
+  * CutoverSpec, CsvStreamSinkSpec); never by a query path. Returns
+  * quietly on timeout. */
 object GraftListenerDrain {
   def waitUntilEmpty(sc: SparkContext, timeoutMs: Long): Unit =
     try sc.listenerBus.waitUntilEmpty(timeoutMs)

@@ -331,8 +331,8 @@ class CsvSinkSpec extends AnyFunSuite {
     val path = dir("abort")
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("s", StringType)))
-    val bw = new GraftCsvBatchWrite(path, schema, "q-abort-test", CsvWriteMode.Append,
-      SerializableHadoopConf.fromSession())
+    val bw = new GraftCsvBatchWrite(CsvWriteDesc(path, schema, "q-abort-test",
+      SerializableHadoopConf.fromSession()), CsvWriteMode.Append)
     val factory = bw.createBatchWriterFactory(null)
     val w = factory.createWriter(0, 42L)
     w.write(org.apache.spark.sql.catalyst.InternalRow(
@@ -344,5 +344,45 @@ class CsvSinkSpec extends AnyFunSuite {
     assert(!Files.exists(tmp), s"$tmp must be cleaned up")
     // nothing was ever published
     assert(!Files.exists(Paths.get(path, "part-00000.csv")))
+  }
+
+  /** The message chain of a failure (planning may wrap the cause). */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  private def readWith(name: String, value: String): Throwable = {
+    val path = dir(s"badopt_$name")
+    Seq((1L, "a")).toDF("id", "s").write.format("graft.sources.GraftCsvSink")
+      .mode("overwrite").option("path", path).save()
+    intercept[Exception] {
+      spark.read.format("graft.sources.GraftCsvSink")
+        .schema(StructType(Seq(StructField("id", LongType), StructField("s", StringType))))
+        .option("path", path).option(name, value).load().collect()
+    }
+  }
+
+  test("malformed sink option sortBuckets fails naming the option") {
+    val e = intercept[Exception] {
+      Seq((1L, "a")).toDF("id", "s").write.format("graft.sources.GraftCsvSink")
+        .mode("overwrite").option("path", dir("badopt_sortBuckets"))
+        .option("sortBy", "id").option("sortBuckets", "four").save()
+    }
+    assert(messages(e).contains("graft-csv sink: option 'sortBuckets' must be an integer, got 'four'"),
+      messages(e))
+  }
+
+  test("malformed sink option maxVersionsPerTrigger fails naming the option") {
+    val m = messages(readWith("maxVersionsPerTrigger", "1.5"))
+    assert(m.contains("graft-csv sink: option 'maxVersionsPerTrigger' must be an integer, got '1.5'"), m)
+  }
+
+  test("malformed sink option vectorized fails naming the option") {
+    val m = messages(readWith("vectorized", "yes"))
+    assert(m.contains("graft-csv sink: option 'vectorized' must be true or false, got 'yes'"), m)
+  }
+
+  test("malformed sink option zoneSkip fails naming the option") {
+    val m = messages(readWith("zoneSkip", "0"))
+    assert(m.contains("graft-csv sink: option 'zoneSkip' must be true or false, got '0'"), m)
   }
 }

@@ -37,7 +37,7 @@ class CsvStreamSinkSpec extends AnyFunSuite {
     q.awaitTermination()
     // the micro-batch write plan carries the sink-demanded clustering
     // exchange (RequiresDistributionAndOrdering honored in streaming)
-    Thread.sleep(2000)
+    org.apache.spark.GraftListenerDrain.waitUntilEmpty(spark.sparkContext, 10000)
     val plans = spark.sharedState.statusStore.executionsList()
       .map(_.physicalPlanDescription)
       .filter(p => p.contains("GraftCsvStreamingWrite"))
@@ -97,7 +97,8 @@ class CsvStreamSinkSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType)))
     val conf = SerializableHadoopConf.fromSession()
-    val sw = new GraftCsvStreamingWrite(out, schema, "qtest", conf)
+    val sw = new GraftCsvStreamingWrite(CsvWriteDesc(out, schema, "qtest", conf),
+      CsvWriteMode.Append)
     val factory = sw.createStreamingWriterFactory(null)
 
     def writeEpoch(epoch: Long, ids: Seq[Long]) = {
