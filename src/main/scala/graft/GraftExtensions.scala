@@ -53,6 +53,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // LogicalPlan + optimizer Rule + SparkStrategy + SparkPlan.
     ext.injectOptimizerRule(_ => new graft.plans.TopKPerGroupRewrite)
     ext.injectPlannerStrategy(_ => new graft.plans.TopKPerGroupStrategy)
+    // Global sorts whose range split cannot pay for its sampling job
+    // (small settled input, or one input task) plan one range partition.
+    ext.injectQueryStagePrepRule(_ => graft.plans.SmallRangeSort)
     // DSV2 ViewCatalog SQL path (stock 4.1 ships the interface but no
     // analyzer/planner wiring): CREATE/DROP/SHOW/RENAME VIEW against a
     // graft catalog, plus definition substitution on read. Hint-phase —

@@ -328,13 +328,21 @@ object TextAnalysis {
   }
 
   /** Curation gate: keep documents passing the quality thresholds — the
-    * filtering step a training-data pipeline runs after scoring. */
+    * filtering step a training-data pipeline runs after scoring. One
+    * `word_stats` call per row: a filter over a projected struct is
+    * pushed below the projection with the struct's definition copied
+    * into every conjunct (four kernel calls, then a fifth above), but
+    * a struct a generator emits cannot be copied, so the filter stays
+    * above the one call. */
   def qualityFilter(docs: DataFrame, minWords: Long, maxWords: Long,
-                    maxStopRatio: Double): DataFrame =
-    quality(docs)
+                    maxStopRatio: Double): DataFrame = {
+    val stopRatio = col("n_in_0") / col("n_words")
+    withWordStats(docs, Seq(stopwords))
+      .select(col("doc_id"), inline(array(col("ws"))))
       .filter(col("n_words") >= minWords && col("n_words") <= maxWords &&
-        col("stop_ratio") <= maxStopRatio)
-      .select(col("doc_id"), col("n_words"), col("stop_ratio"))
+        stopRatio <= maxStopRatio)
+      .select(col("doc_id"), col("n_words"), stopRatio.as("stop_ratio"))
+  }
 
   /** Per-document top-k TF-IDF terms: tf from one word-explode groupBy,
     * df from a second (both map-side-combining), idf = ln((N+1)/(df+1)),

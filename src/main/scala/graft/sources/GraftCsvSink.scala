@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.expressions.{Expression, Expressions, Sort
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.sources.{AlwaysTrue, And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or}
+import org.apache.spark.sql.sources.{AlwaysTrue, And, EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -423,9 +423,13 @@ private[sources] object CsvFilterEval {
 
   /** A filter this source can evaluate itself: a supported shape over a
     * comparable column with a scalar literal, closed under NOT/AND/OR
-    * (three-valued — see [[eval3]]). */
+    * (three-valued — see [[eval3]]). A null-safe `k <=> v` with a
+    * non-null literal is `k = v` that is FALSE, not unknown, on a null
+    * `k` — the shape Spark hands a sink for `INSERT OVERWRITE t
+    * PARTITION (k = v)`. */
   def supportedBy(schema: StructType, f: Filter): Boolean = f match {
     case EqualTo(a, v) => typeOf(schema, a).exists(Comparable) && litOk(v)
+    case EqualNullSafe(a, v) => typeOf(schema, a).exists(Comparable) && litOk(v)
     case GreaterThan(a, v) => typeOf(schema, a).exists(Comparable) && litOk(v)
     case GreaterThanOrEqual(a, v) => typeOf(schema, a).exists(Comparable) && litOk(v)
     case LessThan(a, v) => typeOf(schema, a).exists(Comparable) && litOk(v)
@@ -501,6 +505,7 @@ private[sources] object CsvFilterEval {
       case IsNotNull(a) => Some(valueOf(a) != null)
       case IsNull(a) => Some(valueOf(a) == null)
       case EqualTo(a, v) => c(a, v)(_ == 0)
+      case EqualNullSafe(a, v) => Some(c(a, v)(_ == 0).contains(true))
       case GreaterThan(a, v) => c(a, v)(_ > 0)
       case GreaterThanOrEqual(a, v) => c(a, v)(_ >= 0)
       case LessThan(a, v) => c(a, v)(_ < 0)
@@ -770,6 +775,14 @@ private[sources] sealed trait CsvWriteMode {
         live.filterNot(e => touched(GraftLog.dirOf(e.rel)))
     }
 
+  /** Whether [[drop]] runs after the publish instead of before it: a
+    * complete-mode streaming epoch (Truncate) replaces the earlier
+    * epochs' files only once its own are in place, so no reader lists
+    * an empty table in between. Its drop spares its own published names
+    * and removes every file of a wider earlier attempt of the epoch. */
+  def dropsAfterPublish(epoch: Option[Long]): Boolean =
+    epoch.isDefined && this == Truncate
+
   /** Unversioned face: deletes the files and key directories this write
     * replaces — whole directories, a metadata op; survivors are never
     * listed below their key level. */
@@ -778,9 +791,13 @@ private[sources] sealed trait CsvWriteMode {
     case Append => ()
     case Truncate =>
       // previous contents = top-level part files AND key=value directories
+      // (`written` are already in place when the drop runs after the
+      // publish, see dropsAfterPublish)
+      val own = written.toSet
       fs.listStatus(root).filter { s =>
-        !s.getPath.getName.startsWith("_") &&
-          (s.isFile || (s.isDirectory && s.getPath.getName.contains('=')))
+        val name = s.getPath.getName
+        !name.startsWith("_") && !own(name) &&
+          (s.isFile || (s.isDirectory && name.contains('=')))
       }.foreach(s => fs.delete(s.getPath, true))
       // every previous zone entry now describes a deleted file
       CsvZones.drop(root, conf)
@@ -806,7 +823,7 @@ private[sources] object CsvWriteMode {
   case object Append extends CsvWriteMode
   /** Drop everything: path `mode("overwrite")`, `INSERT OVERWRITE` with
     * no surviving filter, `TRUNCATE TABLE`, unconditional `DELETE`,
-    * complete-mode streaming into a versioned table. */
+    * complete-mode streaming (each epoch replaces the earlier ones). */
   case object Truncate extends CsvWriteMode
   /** Static key overwrite (`writeTo(t).overwrite(k = v)`) or key-only
     * `DELETE`: drop exactly the key directories matching the filters. */
@@ -999,9 +1016,7 @@ private[sources] class GraftCsvWrite(w: CsvWriteDesc, mode: CsvWriteMode,
       "graft-csv sink: partitionedBy is batch-only on the path face (the " +
         "streaming face writes epoch-stamped flat files; partitioned " +
         "streaming needs the versioned catalog table's manifest commits)")
-    // the path face commits every epoch as an append: its epoch-stamped
-    // names sit beside the earlier epochs' (complete mode included)
-    new GraftCsvStreamingWrite(w, if (w.versioned) mode else CsvWriteMode.Append)
+    new GraftCsvStreamingWrite(w, mode)
   }
 }
 
@@ -1034,7 +1049,8 @@ private[sources] class CsvFilesWrittenMetric
   * and copy-on-write rewrites, so the rename/failure semantics and the
   * crash windows can never drift between them:
   *
-  *  - plain tables: the mode's [[CsvWriteMode.drop]], then publish;
+  *  - plain tables: the mode's [[CsvWriteMode.drop]], then publish (a
+  *    complete-mode streaming epoch publishes, then drops);
   *  - versioned tables: publish, then claim the next manifest (live
   *    entries the mode's [[CsvWriteMode.survivors]] keep, plus the
   *    fresh files) — NO physical deletes ever (replaced files stay
@@ -1068,6 +1084,11 @@ private[sources] object GraftCsvCommit {
     * writes reuse names, so theirs would be unsound). */
   private def publish(fs: FileSystem, root: HPath, w: CsvWriteDesc,
                       epoch: Option[Long], files: Seq[CsvFileCommit]): Unit = {
+    rename(fs, root, files)
+    writeZones(root, w, epoch, files)
+  }
+
+  private def rename(fs: FileSystem, root: HPath, files: Seq[CsvFileCommit]): Unit =
     files.foreach { f =>
       val target = new HPath(root, f.finalName)
       // partitioned finalNames live under key=value subdirectories
@@ -1076,9 +1097,11 @@ private[sources] object GraftCsvCommit {
       if (!fs.rename(new HPath(f.tempFile), target))
         throw new java.io.IOException(s"graft-csv: rename ${f.tempFile} -> $target failed")
     }
+
+  private def writeZones(root: HPath, w: CsvWriteDesc, epoch: Option[Long],
+                         files: Seq[CsvFileCommit]): Unit =
     w.tag(epoch).foreach(t => CsvZones.write(root, w.conf.value, t,
       files.map(f => (f.finalName, f.zones, f.rows))))
-  }
 
   private def finish(fs: FileSystem, root: HPath, w: CsvWriteDesc,
                      epoch: Option[Long]): Unit = {
@@ -1107,21 +1130,25 @@ private[sources] object GraftCsvCommit {
       GraftLog.commit(root, conf, live => mode.survivors(live, written) ++ entries(files),
         txn = epoch.map(w.queryId -> _))
     } else {
+      val dropLast = mode.dropsAfterPublish(epoch)
       // A replayed epoch may plan FEWER partitions than the attempt that
       // first committed it (shuffle-partition change across restart):
       // overwrite-by-name alone would leave the extra files from the
       // failed attempt behind as duplicate rows. Remove every file this
       // epoch ever published that the replay does not re-produce, THEN
-      // publish — the epoch's final state is exactly `files`.
-      epoch.foreach { _ =>
+      // publish — the epoch's final state is exactly `files`. (A drop
+      // after the publish removes them itself.)
+      if (!dropLast) epoch.foreach { _ =>
         val epochPrefix = w.stem(epoch) + "-"
         fs.listStatus(root)
           .filter(s => s.isFile && s.getPath.getName.startsWith(epochPrefix) &&
             !written.contains(s.getPath.getName))
           .foreach(s => fs.delete(s.getPath, false))
       }
-      mode.drop(fs, root, conf, written)
-      publish(fs, root, w, epoch, files)
+      if (!dropLast) mode.drop(fs, root, conf, written)
+      rename(fs, root, files)
+      if (dropLast) mode.drop(fs, root, conf, written)
+      writeZones(root, w, epoch, files)
     }
     finish(fs, root, w, epoch)
   }
@@ -1188,7 +1215,8 @@ private[sources] class GraftCsvBatchWrite(w: CsvWriteDesc, mode: CsvWriteMode)
   * the property `foreachBatch` users must hand-build with idempotent
   * per-batch_id overwrites, provided here by the sink itself. Readers
   * see only committed files (temp files live under a `_tmp_` prefix the
-  * lister skips).
+  * lister skips). In complete output mode an epoch's files replace the
+  * earlier epochs' files once they are published.
   *
   * VERSIONED catalog tables (`df.writeStream.toTable("graft.wh.t")`,
   * r15): each micro-batch commits like a batch INSERT — tagged names

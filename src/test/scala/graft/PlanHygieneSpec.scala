@@ -147,6 +147,18 @@ class PlanHygieneSpec extends AnyFunSuite {
           s"$name shuffles between the scan and the assignment:\n$n")
     }
 
+  // Each word_stats node in an operator's expressions is one kernel
+  // evaluation per row that reaches the operator (no subexpression
+  // elimination spans a Filter and the Project above it), so the count
+  // of nodes over the plan is the count of evaluations per row.
+  test("q_text_quality_filter: word_stats is evaluated once per row") {
+    val p = plan("q_text_quality_filter")
+    val calls = p.collect { case op =>
+      op.expressions.map(_.collect { case w: graft.functions.WordStats => w }.size).sum
+    }.sum
+    assert(calls == 1, s"q_text_quality_filter evaluates word_stats $calls times per row:\n$p")
+  }
+
   test("q_s1_paged_source: publishedAfter is pushed into the V2 source, no residual filter") {
     val p = plan("q_s1_paged_source")
     val scans = p.collect {

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The write modes' drop decision, face by face: a static key
-  * overwrite (`writeTo(t).overwrite(k = v)`) replaces exactly that key's
+  * overwrite (`writeTo(t).overwrite(k = v)`, or `INSERT OVERWRITE t
+  * PARTITION (k = v)` in SQL) replaces exactly that key's
   * files (unversioned: the directory; versioned: the manifest entries,
   * the prior version still readable AS OF), a dynamic overwrite on a
   * versioned table replaces exactly the keys it writes, and a
@@ -63,6 +64,19 @@ class CommitModeSpec extends AnyFunSuite {
     // one file, and it is not the one it held before
     assert(keyFiles("so_u", "a") == a && keyFiles("so_u", "c") == c)
     val bAfter = keyFiles("so_u", "b")
+    assert(bAfter.size == 1 && bAfter.keySet != b.keySet)
+  }
+
+  test("static key overwrite in SQL, INSERT OVERWRITE t PARTITION (g = v): only that key's files are replaced") {
+    // Spark hands the sink the null-safe `g <=> 'b'` for this form
+    createLoaded("so_sql", versioned = false)
+    val a = keyFiles("so_sql", "a"); val b = keyFiles("so_sql", "b")
+    val c = keyFiles("so_sql", "c")
+    spark.sql(s"INSERT OVERWRITE $cat.wh.so_sql PARTITION (g = 'b') SELECT 20L AS v")
+    assert(rows(s"SELECT g, v FROM $cat.wh.so_sql ORDER BY g, v") ==
+      Seq(("a", 1L), ("b", 20L), ("c", 3L)))
+    assert(keyFiles("so_sql", "a") == a && keyFiles("so_sql", "c") == c)
+    val bAfter = keyFiles("so_sql", "b")
     assert(bAfter.size == 1 && bAfter.keySet != b.keySet)
   }
 

@@ -139,4 +139,34 @@ class CsvStreamSinkSpec extends AnyFunSuite {
     assert(epoch2.toSeq == Seq("part-00002-00000.csv"),
       s"narrower replay must clean the wider attempt's files: ${epoch2.mkString(",")}")
   }
+
+  test("complete output mode on the path face: each epoch's aggregate replaces the earlier epochs'") {
+    import org.apache.spark.sql.functions.sum
+    import org.apache.spark.sql.streaming.OutputMode
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, Long)]
+    val out = dir("complete"); val ckpt = dir("complete_ckpt")
+    def drain(): Unit = mem.toDF().toDF("g", "n").groupBy("g").agg(sum("n").as("v"))
+      .writeStream.format("graft.sources.GraftCsvSink")
+      .outputMode(OutputMode.Complete())
+      .option("path", out)
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    def back(): Seq[(String, Long)] = spark.read.format("graft.sources.GraftCsvSink")
+      .schema(StructType(Seq(StructField("g", StringType), StructField("v", LongType))))
+      .option("path", out).load()
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    mem.addData(("a", 1L), ("b", 2L))
+    drain()
+    assert(back() == Seq(("a", 1L), ("b", 2L)))
+    mem.addData(("a", 10L))
+    drain()
+    // the second epoch's full aggregate alone, not both epochs' rows
+    assert(back() == Seq(("a", 11L), ("b", 2L)))
+    val parts = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("part-"))
+    assert(parts.nonEmpty && parts.forall(_.startsWith("part-00001-")),
+      s"epoch 0's files outlived epoch 1's publish: ${parts.sorted.mkString(",")}")
+  }
 }
